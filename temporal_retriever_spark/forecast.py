@@ -329,7 +329,10 @@ def forecast_with_covariate(
     exchanges are already reused by AQE), so it is off by default;
     turn it on only when the history sub-plan is expensive relative to
     its bucketed output (e.g. a wide raw scan feeding few buckets)
-    and executor memory holds the checkpoint comfortably.
+    and executor memory holds the checkpoint comfortably, or when the
+    four copies of the history plan differ (an ``explode`` below the
+    join lets each consumer push its own filters into its copy), which
+    defeats that exchange reuse.
     """
     series_cols = list(series_cols)
     if materialize_covariate:

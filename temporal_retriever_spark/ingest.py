@@ -18,6 +18,7 @@ from __future__ import annotations
 import json
 from collections.abc import Iterable
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,9 +43,16 @@ def documents_to_rows(documents: dict) -> list[tuple[str, str]]:
 
 
 def documents_df(spark: SparkSession, documents: dict) -> DataFrame:
-    """Raw observation table: (series_id, obs) — one row per observation."""
-    rows = documents_to_rows(documents)
-    return spark.createDataFrame(rows, "series_id string, obs string")
+    """Raw observation table: (series_id, obs) — one row per observation.
+
+    Built from a pandas frame: with Arrow on (``session`` default) the
+    rows cross to the JVM once as Arrow batches and the frame is a
+    JVM-local relation, so no job that scans it starts a Python worker.
+    A Python list here would become ``parallelize`` plus a Python
+    ``map``, i.e. Python tasks in every job over the request.
+    """
+    pdf = pd.DataFrame(documents_to_rows(documents), columns=["series_id", "obs"])
+    return spark.createDataFrame(pdf, "series_id string, obs string")
 
 
 def extract_series(

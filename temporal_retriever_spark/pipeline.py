@@ -28,13 +28,18 @@ correlation response dicts from already-distributed computations.
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from functools import partial
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from temporal_retriever_spark.aggregate import bucket_aggregate, date_bounds
+from temporal_retriever_spark.aggregate import (
+    bucket_aggregate,
+    date_bounds,
+    normalize_aggregation,
+)
 from temporal_retriever_spark.align import coalesce_actuals, split_forecasts
 from temporal_retriever_spark.api.models import AnalyzeRequest, Correlation
 from temporal_retriever_spark.diagnostics import (
@@ -49,26 +54,8 @@ from temporal_retriever_spark.forecast import (
     forecast_linear_seasonal,
     forecast_with_covariate,
 )
+from temporal_retriever_spark.grains import normalize_grain
 from temporal_retriever_spark.ingest import documents_df, extract_series
-
-import os as _os
-import sys as _sys
-import time as _time
-
-
-def _profiled(fn, label):
-    """Wrap a stage chain with wall-clock logging when TRS_PROFILE is set."""
-    if not _os.environ.get("TRS_PROFILE"):
-        return fn
-
-    def wrapper(*a, **kw):
-        t0 = _time.time()
-        out = fn(*a, **kw)
-        print(f"# chain {label}: {_time.time() - t0:.2f}s", file=_sys.stderr)
-        return out
-
-    return wrapper
-
 
 #: hinge count for the piecewise trend when ChangePointPriorScale is
 #: provided (Prophet defaults to 25 over much longer histories; 10 keeps
@@ -132,37 +119,41 @@ def _rename_predictions(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
-def analyze(
-    spark: SparkSession, request: AnalyzeRequest, *, lags: int | None = None
-) -> dict:
-    """``/analyze`` semantics: covariate-driven forecast per correlation.
+def _leg_key(corr: Correlation, *, cov: bool) -> tuple[str, str, str, str]:
+    """(dataset, index, grain, agg) of a correlation's covariate
+    (``cov=True``) or target leg."""
+    ds_name, idx = (
+        (corr.from_data, corr.from_index) if cov else (corr.to_data, corr.to_index)
+    )
+    return (
+        ds_name,
+        idx,
+        normalize_grain(corr.grain),
+        normalize_aggregation(corr.aggregation),
+    )
 
-    Returns {"correlations": {id: {diagnostics, autocorrelations,
-    partialAutocorrelations, regressorCoefficients, predictions}}} —
-    the reference's response shape (app.py:211-248, responses.py).
+
+def _leg_sid(leg_sids: dict[tuple, str], corr: Correlation, *, cov: bool) -> str:
+    return leg_sids[_leg_key(corr, cov=cov)]
+
+
+@contextmanager
+def _prepared_legs(spark: SparkSession, request: AnalyzeRequest):
+    """Stage 1 of both covariate endpoints: ONE plan for every distinct
+    prepared series, cached for the request. Yields ``(leg_sids,
+    prepared)`` and releases both cached frames on exit.
+
+    Distinct (dataset, index, grain, agg) legs share a series id, so
+    e.g. three correlations against the same target prepare it once.
     """
-    from temporal_retriever_spark.aggregate import normalize_aggregation
-    from temporal_retriever_spark.grains import normalize_grain
-
-    raw = documents_df(spark, request.documents)
-    raw.cache()
-    output: dict[str, Any] = {"correlations": {}}
+    raw = documents_df(spark, request.documents).cache()
     prepared = None
     try:
-        # ---- stage 1: ONE plan for every distinct prepared series -------
-        # distinct (dataset, index, grain, agg) legs share a series id, so
-        # e.g. three correlations against the same target prepare it once.
         leg_sids: dict[tuple, str] = {}
         for corr in request.correlations:
-            g = normalize_grain(corr.grain)
-            a = normalize_aggregation(corr.aggregation)
-            for ds_name, idx in (
-                (corr.from_data, corr.from_index),
-                (corr.to_data, corr.to_index),
-            ):
-                key = (ds_name, idx, g, a)
-                leg_sids.setdefault(key, f"{ds_name}.{idx}|{g}|{a}")
-        prepared = None
+            for cov in (True, False):
+                key = _leg_key(corr, cov=cov)
+                leg_sids.setdefault(key, "{}.{}|{}|{}".format(*key))
         for (ds_name, idx, g, a), sid in leg_sids.items():
             series = extract_series(
                 raw, dataset=ds_name, index_path=idx, series_id=sid
@@ -177,41 +168,92 @@ def analyze(
                 bucketed if prepared is None else prepared.unionByName(bucketed)
             )
         prepared = _size_gated(prepared, _request_rows(request.documents))
+        yield leg_sids, prepared
+    finally:
+        if prepared is not None:
+            prepared.unpersist()
+        raw.unpersist()
 
-        # ---- stage 2: one stats action over all series -------------------
-        stats = {
-            r["series_id"]: r
-            for r in _profiled(
-                prepared.groupBy("series_id")
-                .agg(
-                    F.min("ds").alias("min_ds"),
-                    F.max("ds").alias("max_ds"),
-                    F.count("y").alias("n"),
-                )
-                .collect,
-                "prepare+stats",
-            )()
-        }
-        for (ds_name, idx, g, a), sid in leg_sids.items():
-            if sid not in stats:
-                raise ValueError(
-                    f"dataset {ds_name!r} / index {idx!r} produced no observations"
-                )
 
-        def leg_sid(corr: Correlation, *, cov: bool) -> str:
-            ds_name, idx = (
-                (corr.from_data, corr.from_index)
-                if cov
-                else (corr.to_data, corr.to_index)
+def _leg_stats(
+    prepared: DataFrame, leg_sids: dict[tuple, str], *extra: Column
+) -> dict[str, Any]:
+    """ONE stats action over all series (plus ``extra`` aggregates),
+    keyed by series id; fails when a leg produced no observations."""
+    stats = {
+        r["series_id"]: r
+        for r in prepared.groupBy("series_id")
+        .agg(
+            F.min("ds").alias("min_ds"),
+            F.max("ds").alias("max_ds"),
+            F.count("y").alias("n"),
+            *extra,
+        )
+        .collect()
+    }
+    for (ds_name, idx, _, _), sid in leg_sids.items():
+        if sid not in stats:
+            raise ValueError(
+                f"dataset {ds_name!r} / index {idx!r} produced no observations"
             )
-            return leg_sids[
-                (
-                    ds_name,
-                    idx,
-                    normalize_grain(corr.grain),
-                    normalize_aggregation(corr.aggregation),
-                )
-            ]
+    return stats
+
+
+def _case_over_ids(values: dict[str, int]) -> Column:
+    """Per-correlation horizon as one CASE over ``series_id``."""
+    expr = None
+    for cid, h in values.items():
+        clause = (F.col("series_id") == cid, F.lit(int(h)))
+        expr = F.when(*clause) if expr is None else expr.when(*clause)
+    return expr.otherwise(F.col("n_buckets"))
+
+
+def _rekey(
+    prepared: DataFrame,
+    leg_sids: dict[tuple, str],
+    corrs: list[Correlation],
+    *,
+    cov: bool,
+) -> DataFrame:
+    """prepared series -> correlation-keyed ``(series_id, ds, y)``.
+
+    One map expression (leg id -> array of correlation ids) exploded per
+    row, so the rekeyed frame adds no relation and no join and scans
+    only the cached ``prepared`` relation in the JVM (a mapping frame
+    built from a Python list runs Python tasks in every job that scans
+    it). A leg shared by several correlations yields one row per
+    correlation.
+    """
+    ids_by_sid: dict[str, list[str]] = {}
+    for c in corrs:
+        ids_by_sid.setdefault(_leg_sid(leg_sids, c, cov=cov), []).append(c.id)
+    id_map = F.create_map(
+        *(
+            e
+            for sid, ids in ids_by_sid.items()
+            for e in (F.lit(sid), F.array(*map(F.lit, ids)))
+        )
+    )
+    return prepared.filter(F.col("series_id").isin(list(ids_by_sid))).select(
+        F.explode(id_map[F.col("series_id")]).alias("series_id"), "ds", "y"
+    )
+
+
+def analyze(
+    spark: SparkSession, request: AnalyzeRequest, *, lags: int | None = None
+) -> dict:
+    """``/analyze`` semantics: covariate-driven forecast per correlation.
+
+    Returns {"correlations": {id: {diagnostics, autocorrelations,
+    partialAutocorrelations, regressorCoefficients, predictions}}} —
+    the reference's response shape (app.py:211-248, responses.py).
+    """
+    output: dict[str, Any] = {"correlations": {}}
+    with _prepared_legs(spark, request) as (leg_sids, prepared):
+        # ---- stage 2: one stats action over all series -------------------
+        stats = _leg_stats(prepared, leg_sids)
+        leg_sid = partial(_leg_sid, leg_sids)
+        rekey = partial(_rekey, prepared, leg_sids)
 
         # ---- stage 3: ONE fused ACF+PACF job over all series -------------
         # both derive from the same lag-product sums; acf_pacf runs the
@@ -233,56 +275,23 @@ def analyze(
         # reference forecasts each correlation's covariate with that
         # correlation's horizon, app.py:122-134); one
         # forecast_with_covariate call per grain regresses every pairing
-        def case_over_ids(values: dict[str, int]):
-            expr = None
-            for cid, h in values.items():
-                clause = (F.col("series_id") == cid, F.lit(int(h)))
-                expr = F.when(*clause) if expr is None else expr.when(*clause)
-            return expr.otherwise(F.col("n_buckets"))
-
         prophet_corrs = [c for c in request.correlations if c.type == "prophet"]
         granger_corrs = [c for c in request.correlations if c.type == "granger"]
-
-        def rekey(corrs, *, cov: bool) -> DataFrame:
-            """prepared-series -> correlation-keyed frame via ONE broadcast
-            mapping join (a union per correlation would grow the plan
-            linearly with the correlation count)."""
-            mapping = spark.createDataFrame(
-                [(leg_sid(c, cov=cov), c.id) for c in corrs],
-                "sid string, series_id string",
-            )
-            return (
-                prepared.withColumnRenamed("series_id", "sid")
-                .join(F.broadcast(mapping), on="sid")
-                .select("series_id", "ds", "y")
-            )
 
         # fold key: (grain, changepoint scale or None). Correlations that
         # provide ChangePointPriorScale get the piecewise changepoint
         # trend (README DIVERGENCES #9); the rest share the plain linear
         # plan. Distinct scales fold into distinct plans.
-        fold_keys = {
-            (
-                normalize_grain(c.grain),
-                c.changepoint_prior_scale
-                if c.changepoint_prior_scale_provided
-                else None,
+        def fold_key(c: Correlation) -> tuple:
+            provided = c.changepoint_prior_scale_provided
+            return normalize_grain(c.grain), (
+                c.changepoint_prior_scale if provided else None
             )
-            for c in prophet_corrs
-        }
+
+        fold_keys = {fold_key(c) for c in prophet_corrs}
 
         def run_fold(g, cps) -> list:
-            corrs_g = [
-                c
-                for c in prophet_corrs
-                if normalize_grain(c.grain) == g
-                and (
-                    c.changepoint_prior_scale
-                    if c.changepoint_prior_scale_provided
-                    else None
-                )
-                == cps
-            ]
+            corrs_g = [c for c in prophet_corrs if fold_key(c) == (g, cps)]
             cov_hist = rekey(corrs_g, cov=True)
             targets = rekey(corrs_g, cov=False)
             cov_horizons = {
@@ -295,13 +304,13 @@ def analyze(
             }
             if cps is None:
                 cov_pred = forecast_linear_seasonal(
-                    cov_hist, grain=g, horizon=case_over_ids(cov_horizons)
+                    cov_hist, grain=g, horizon=_case_over_ids(cov_horizons)
                 ).select("series_id", "ds", F.col("yhat").alias("cov"))
             else:
                 cov_pred = forecast_changepoint(
                     cov_hist,
                     grain=g,
-                    horizon=case_over_ids(cov_horizons),
+                    horizon=_case_over_ids(cov_horizons),
                     n_changepoints=N_CHANGEPOINTS,
                     changepoint_prior_scale=cps,
                     include_bounds=False,
@@ -318,25 +327,27 @@ def analyze(
                     targets,
                     cov_full,
                     grain=g,
-                    horizon=case_over_ids(tgt_horizons),
+                    horizon=_case_over_ids(tgt_horizons),
                     # the covariate grid is referenced twice in the plan;
                     # truncating its (forecast sub-plan) lineage ~halves cost
                     materialize_covariate=True,
-                    # targets derive from the cached `prepared` frame via a
-                    # broadcast mapping join — an extra checkpoint job would
-                    # cost more than the recompute it saves
-                    materialize_history=False,
+                    # the fit reads the joined history four times; the
+                    # rekey's explode lets each read push its own filters
+                    # into its copy, so AQE cannot reuse their exchanges.
+                    # One checkpoint job makes them one relation again
+                    # (fewer jobs and less CPU per request than recompute)
+                    materialize_history=True,
                 )
             else:
                 pred = forecast_covariate_changepoint(
                     targets,
                     cov_full,
                     grain=g,
-                    horizon=case_over_ids(tgt_horizons),
+                    horizon=_case_over_ids(tgt_horizons),
                     n_changepoints=N_CHANGEPOINTS,
                     changepoint_prior_scale=cps,
                     materialize_covariate=True,
-                    materialize_history=False,
+                    materialize_history=True,
                 )
             return pred.orderBy("series_id", "ds").collect()
 
@@ -405,21 +416,10 @@ def analyze(
         with ThreadPoolExecutor(
             max_workers=3 + max(len(fold_keys), 1)
         ) as pool:
-            f_diag = pool.submit(_profiled(run_diagnostics, "diagnostics"))
-            f_folds = [
-                pool.submit(_profiled(run_fold, f"fold:{g}:{cps}"), g, cps)
-                for g, cps in fold_keys
-            ]
-            f_granger = (
-                pool.submit(_profiled(run_granger, "granger"))
-                if granger_corrs
-                else None
-            )
-            f_describe = (
-                pool.submit(_profiled(run_describe, "describe"))
-                if stats_corrs
-                else None
-            )
+            f_diag = pool.submit(run_diagnostics)
+            f_folds = [pool.submit(run_fold, g, cps) for g, cps in fold_keys]
+            f_granger = pool.submit(run_granger) if granger_corrs else None
+            f_describe = pool.submit(run_describe) if stats_corrs else None
             diag_rows = f_diag.result()
             pred_rows: list = []
             for f in f_folds:
@@ -520,10 +520,6 @@ def analyze(
                     "to": describe_dict(tgt_sid),
                 }
             output["correlations"][corr.id] = entry
-    finally:
-        if prepared is not None:
-            prepared.unpersist()
-        raw.unpersist()
     return output
 
 
@@ -539,65 +535,18 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
     """
     import math
 
-    from temporal_retriever_spark.aggregate import normalize_aggregation
-    from temporal_retriever_spark.grains import normalize_grain
-
-    raw = documents_df(spark, request.documents)
-    raw.cache()
     output: dict[str, Any] = {"correlations": {}}
-    prepared = None
-    try:
-        leg_sids: dict[tuple, str] = {}
-        for corr in request.correlations:
-            g = normalize_grain(corr.grain)
-            a = normalize_aggregation(corr.aggregation)
-            for ds_name, idx in (
-                (corr.from_data, corr.from_index),
-                (corr.to_data, corr.to_index),
-            ):
-                leg_sids.setdefault((ds_name, idx, g, a), f"{ds_name}.{idx}|{g}|{a}")
-        prepared = None
-        for (ds_name, idx, g, a), sid in leg_sids.items():
-            series = extract_series(raw, dataset=ds_name, index_path=idx, series_id=sid)
-            bucketed = bucket_aggregate(
-                series.filter(F.col("ds").isNotNull()),
-                grain=g,
-                agg=a,
-                series_cols=("series_id",),
-            )
-            prepared = bucketed if prepared is None else prepared.unionByName(bucketed)
-        prepared = _size_gated(prepared, _request_rows(request.documents))
-
-        stats = {
-            r["series_id"]: r
-            for r in prepared.groupBy("series_id")
-            .agg(
-                F.min("ds").alias("min_ds"),
-                F.max("ds").alias("max_ds"),
-                F.count("y").alias("n"),
-                F.min("y").alias("min_y"),
-                F.max("y").alias("max_y"),
-                F.sum("y").alias("sum_y"),
-                F.sum(F.col("y") * F.col("y")).alias("sumsq_y"),
-            )
-            .collect()
-        }
-        for (ds_name, idx, g, a), sid in leg_sids.items():
-            if sid not in stats:
-                raise ValueError(
-                    f"dataset {ds_name!r} / index {idx!r} produced no observations"
-                )
-
-        def leg_sid(corr: Correlation, *, cov: bool) -> str:
-            ds_name, idx = (
-                (corr.from_data, corr.from_index)
-                if cov
-                else (corr.to_data, corr.to_index)
-            )
-            return leg_sids[
-                (ds_name, idx, normalize_grain(corr.grain),
-                 normalize_aggregation(corr.aggregation))
-            ]
+    with _prepared_legs(spark, request) as (leg_sids, prepared):
+        stats = _leg_stats(
+            prepared,
+            leg_sids,
+            F.min("y").alias("min_y"),
+            F.max("y").alias("max_y"),
+            F.sum("y").alias("sum_y"),
+            F.sum(F.col("y") * F.col("y")).alias("sumsq_y"),
+        )
+        leg_sid = partial(_leg_sid, leg_sids)
+        rekey = partial(_rekey, prepared, leg_sids)
 
         def caps_for(sid: str, user_floor, user_ceiling) -> tuple[float, float]:
             """A4 scalars from the stats pass (app.py:354-364)."""
@@ -625,24 +574,6 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
                 cond = F.col("series_id") == cid
                 expr = F.when(cond, clamped) if expr is None else expr.when(cond, clamped)
             return expr.otherwise(col)
-
-        def case_over_ids(values: dict[str, int]) -> Column:
-            expr = None
-            for cid, h in values.items():
-                clause = (F.col("series_id") == cid, F.lit(int(h)))
-                expr = F.when(*clause) if expr is None else expr.when(*clause)
-            return expr.otherwise(F.col("n_buckets"))
-
-        def rekey(corrs, *, cov: bool) -> DataFrame:
-            mapping = spark.createDataFrame(
-                [(leg_sid(c, cov=cov), c.id) for c in corrs],
-                "sid string, series_id string",
-            )
-            return (
-                prepared.withColumnRenamed("series_id", "sid")
-                .join(F.broadcast(mapping), on="sid")
-                .select("series_id", "ds", "y")
-            )
 
         def corr_cps(c) -> float | None:
             o = c.forecast_options
@@ -688,13 +619,13 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
             }
             if cps is None:
                 cov_yhat = forecast_linear_seasonal(
-                    cov_hist, grain=g, horizon=case_over_ids(cov_horizons)
+                    cov_hist, grain=g, horizon=_case_over_ids(cov_horizons)
                 )
             else:
                 cov_yhat = forecast_changepoint(
                     cov_hist,
                     grain=g,
-                    horizon=case_over_ids(cov_horizons),
+                    horizon=_case_over_ids(cov_horizons),
                     n_changepoints=N_CHANGEPOINTS,
                     changepoint_prior_scale=cps,
                     include_bounds=False,
@@ -723,9 +654,9 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
                 targets,
                 cov_full,
                 grain=g,
-                horizon=case_over_ids(tgt_horizons),
+                horizon=_case_over_ids(tgt_horizons),
                 materialize_covariate=True,
-                materialize_history=False,
+                materialize_history=True,
             ).select(
                 "series_id", "ds",
                 clamp_case(tgt_caps, F.col("yhat")).alias("yhat"),
@@ -784,10 +715,6 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
                     ],
                 },
             }
-    finally:
-        if prepared is not None:
-            prepared.unpersist()
-        raw.unpersist()
     return output
 
 

@@ -12,6 +12,14 @@ configured for the engine's invariants:
   the JVM/Python boundary in Arrow batches.
 * **AQE on** — runtime coalescing of shuffle partitions and skew-join
   splitting; at 100 TB skewed series/keys are the norm.
+* **Codegen cache of 1000 classes** — Spark's default of 100 is smaller
+  than one request's working set: measured on a 4-core host, one
+  ``/analyze`` of 10k hourly observations generates about 265 distinct
+  classes, one ``/saturating-growth`` about 116 and one batch series
+  chain about 214. With the default every request recompiled all of
+  them in Janino (and HotSpot re-JITted them), identical repeats
+  included. The setting is static: it only applies when this factory
+  starts the JVM.
 """
 
 from __future__ import annotations
@@ -38,6 +46,8 @@ _DEFAULTS = {
     # Broadcast threshold: per-series frames and dimension tables are tiny
     # relative to fact tables; let Catalyst broadcast aggressively.
     "spark.sql.autoBroadcastJoinThreshold": "64m",
+    # compile each generated plan class once per plan shape (docstring)
+    "spark.sql.codegen.cache.maxEntries": "1000",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 
