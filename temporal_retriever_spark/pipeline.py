@@ -199,13 +199,25 @@ def _leg_stats(
     return stats
 
 
-def _case_over_ids(values: dict[str, int]) -> Column:
-    """Per-correlation horizon as one CASE over ``series_id``."""
-    expr = None
-    for cid, h in values.items():
-        clause = (F.col("series_id") == cid, F.lit(int(h)))
-        expr = F.when(*clause) if expr is None else expr.when(*clause)
-    return expr.otherwise(F.col("n_buckets"))
+def _by_id(values: dict[str, Any]) -> Column:
+    """``values[series_id]``, null for ids not in ``values``.
+
+    A map of literals folds into one map constant, which generated code
+    reads by reference. Int and double literals (e.g. a CASE per id) are
+    written into the generated source, so requests that differ only in
+    horizons or caps would compile new classes and miss the codegen
+    cache.
+    """
+    return F.create_map(
+        *(e for k, v in values.items() for e in (F.lit(k), F.lit(v)))
+    )[F.col("series_id")]
+
+
+def _horizon_by_id(values: dict[str, int]) -> Column:
+    """Per-correlation horizon, keyed by ``series_id``."""
+    return F.coalesce(
+        _by_id({k: int(h) for k, h in values.items()}), F.col("n_buckets")
+    )
 
 
 def _rekey(
@@ -304,13 +316,13 @@ def analyze(
             }
             if cps is None:
                 cov_pred = forecast_linear_seasonal(
-                    cov_hist, grain=g, horizon=_case_over_ids(cov_horizons)
+                    cov_hist, grain=g, horizon=_horizon_by_id(cov_horizons)
                 ).select("series_id", "ds", F.col("yhat").alias("cov"))
             else:
                 cov_pred = forecast_changepoint(
                     cov_hist,
                     grain=g,
-                    horizon=_case_over_ids(cov_horizons),
+                    horizon=_horizon_by_id(cov_horizons),
                     n_changepoints=N_CHANGEPOINTS,
                     changepoint_prior_scale=cps,
                     include_bounds=False,
@@ -327,7 +339,7 @@ def analyze(
                     targets,
                     cov_full,
                     grain=g,
-                    horizon=_case_over_ids(tgt_horizons),
+                    horizon=_horizon_by_id(tgt_horizons),
                     # the covariate grid is referenced twice in the plan;
                     # truncating its (forecast sub-plan) lineage ~halves cost
                     materialize_covariate=True,
@@ -343,7 +355,7 @@ def analyze(
                     targets,
                     cov_full,
                     grain=g,
-                    horizon=_case_over_ids(tgt_horizons),
+                    horizon=_horizon_by_id(tgt_horizons),
                     n_changepoints=N_CHANGEPOINTS,
                     changepoint_prior_scale=cps,
                     materialize_covariate=True,
@@ -530,8 +542,9 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
     the covariate's actuals override its predictions before the target
     leg consumes it (app.py:478-483). Folded like ``analyze``: shared
     series prep, ONE stats action (which also carries the min/max/sum
-    scalars the A4 caps need — floor/cap per correlation become plain
-    CASE literals), one forecast plan per grain, one collect.
+    scalars the A4 caps need — floor/cap per correlation become
+    constant maps keyed by correlation id), one forecast plan per grain,
+    one collect.
     """
     import math
 
@@ -567,13 +580,11 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
             )
             return float(floor), float(ceiling)
 
-        def clamp_case(values: dict[str, tuple[float, float]], col: Column) -> Column:
-            expr = None
-            for cid, (lo, hi) in values.items():
-                clamped = F.least(F.greatest(col, F.lit(lo)), F.lit(hi))
-                cond = F.col("series_id") == cid
-                expr = F.when(cond, clamped) if expr is None else expr.when(cond, clamped)
-            return expr.otherwise(col)
+        def clamp(caps: dict[str, tuple[float, float]], col: Column) -> Column:
+            # greatest/least skip nulls: ids without caps keep ``col``
+            lo = _by_id({cid: cap[0] for cid, cap in caps.items()})
+            hi = _by_id({cid: cap[1] for cid, cap in caps.items()})
+            return F.least(F.greatest(col, lo), hi)
 
         def corr_cps(c) -> float | None:
             o = c.forecast_options
@@ -619,20 +630,20 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
             }
             if cps is None:
                 cov_yhat = forecast_linear_seasonal(
-                    cov_hist, grain=g, horizon=_case_over_ids(cov_horizons)
+                    cov_hist, grain=g, horizon=_horizon_by_id(cov_horizons)
                 )
             else:
                 cov_yhat = forecast_changepoint(
                     cov_hist,
                     grain=g,
-                    horizon=_case_over_ids(cov_horizons),
+                    horizon=_horizon_by_id(cov_horizons),
                     n_changepoints=N_CHANGEPOINTS,
                     changepoint_prior_scale=cps,
                     include_bounds=False,
                 )
             cov_pred = cov_yhat.select(
                 "series_id", "ds",
-                clamp_case(cov_caps, F.col("yhat")).alias("cov"),
+                clamp(cov_caps, F.col("yhat")).alias("cov"),
             )
             cov_full = coalesce_actuals(
                 cov_pred,
@@ -654,17 +665,17 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
                 targets,
                 cov_full,
                 grain=g,
-                horizon=_case_over_ids(tgt_horizons),
+                horizon=_horizon_by_id(tgt_horizons),
                 materialize_covariate=True,
                 materialize_history=True,
             ).select(
                 "series_id", "ds",
-                clamp_case(tgt_caps, F.col("yhat")).alias("yhat"),
+                clamp(tgt_caps, F.col("yhat")).alias("yhat"),
                 # the reference's saturating response carries Prophet's
                 # interval columns clamped into the same envelope
                 # (app.py:336-352)
-                clamp_case(tgt_caps, F.col("yhat_lower")).alias("yhat_lower"),
-                clamp_case(tgt_caps, F.col("yhat_upper")).alias("yhat_upper"),
+                clamp(tgt_caps, F.col("yhat_lower")).alias("yhat_lower"),
+                clamp(tgt_caps, F.col("yhat_upper")).alias("yhat_upper"),
             )
             return pred.orderBy("series_id", "ds").collect()
 

@@ -20,6 +20,12 @@ configured for the engine's invariants:
   them in Janino (and HotSpot re-JITted them), identical repeats
   included. The setting is static: it only applies when this factory
   starts the JVM.
+* **No stage id in generated class names** — whole-stage code embeds
+  its codegen stage id in the class name by default. Adaptive execution
+  numbers stages in the order they are planned, which varies with task
+  timing, so the same stage code under another id missed the cache:
+  15-20 recompiles on a repeated request. Without the id the class
+  source depends only on the plan shape.
 """
 
 from __future__ import annotations
@@ -48,6 +54,7 @@ _DEFAULTS = {
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     # compile each generated plan class once per plan shape (docstring)
     "spark.sql.codegen.cache.maxEntries": "1000",
+    "spark.sql.codegen.useIdInClassName": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 

@@ -14,6 +14,7 @@ import sys
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from temporal_retriever_spark import pipeline as P
 from temporal_retriever_spark.api.models import (
@@ -32,11 +33,11 @@ _LEGS = {
 }
 
 
-def _body() -> dict:
+def _body(seed: int = 7, horizons: tuple[int, int] = (24, 12)) -> dict:
     """Two hourly documents; two prophet correlations share the target
     leg ``demand.load``, and the granger one shares both legs of the
     first."""
-    rng = np.random.default_rng(7)
+    rng = np.random.default_rng(seed)
     t = np.arange(N_OBS)
     day = 2 * np.pi * t / 24
     start = dt.datetime(2021, 3, 1)
@@ -63,9 +64,9 @@ def _body() -> dict:
         "analyticsOptions": {
             "correlations": [
                 {"id": "load-temp", "type": "prophet", **_LEGS,
-                 "fromIndex": "temp", "unitsToForecast": 24},
+                 "fromIndex": "temp", "unitsToForecast": horizons[0]},
                 {"id": "load-wind", "type": "prophet", **_LEGS,
-                 "fromIndex": "wind", "unitsToForecast": 12},
+                 "fromIndex": "wind", "unitsToForecast": horizons[1]},
                 {"id": "load-temp-granger", "type": "granger", **_LEGS,
                  "fromIndex": "temp"},
             ]
@@ -86,29 +87,30 @@ from temporal_retriever_spark.session import get_spark
 
 spark = get_spark("codegen-cache", **{"spark.ui.enabled": "false"})
 metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-request = parse_analyze_request(json.load(sys.stdin))
 counts = []
-for _ in range(2):
+for body in json.load(sys.stdin):
     before = metrics.METRIC_COMPILATION_TIME().getCount()
-    analyze(spark, request, lags=6)
+    analyze(spark, parse_analyze_request(body), lags=6)
     counts.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
 spark.stop()
 print(json.dumps(counts))
 """
 
 
-def test_repeat_request_reuses_generated_code():
-    """A repeated request compiles at most a tenth of the classes the
-    first one did. Spark's default 100-entry codegen cache is smaller
-    than one request's classes (about 200 here), so with it the repeat
-    recompiled nearly all. Runs in a fresh session: the cache is static
-    per JVM, and the suite's shared one is already filled by other
-    tests."""
+def test_later_requests_reuse_generated_code():
+    """A repeated request, and one with other data and other horizons,
+    each compile at most a tenth of the classes the first one did.
+    Spark's default 100-entry codegen cache is smaller than one
+    request's classes (about 150 here), so with it every request
+    recompiled nearly all; per-request numbers written into generated
+    source would make the varied request miss. Runs in a fresh session:
+    the cache is static per JVM, and the suite's shared one is already
+    filled by other tests."""
     env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
     env.pop("SPARK_GRAFT_MASTER", None)
     proc = subprocess.run(
         [sys.executable, "-c", _COMPILES],
-        input=json.dumps(_body()),
+        input=json.dumps([_body(), _body(), _body(seed=8, horizons=(36, 6))]),
         capture_output=True,
         text=True,
         env=env,
@@ -116,8 +118,39 @@ def test_repeat_request_reuses_generated_code():
         timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
-    first, second = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert second <= first // 10, (first, second)
+    first, repeat, varied = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert max(repeat, varied) <= first // 10, (first, repeat, varied)
+
+
+def _generated_code(df) -> list[str]:
+    seq = df._jdf.queryExecution().debug().codegenToSeq()
+    return [seq.apply(i)._2() for i in range(seq.size())]
+
+
+def test_per_request_numbers_stay_out_of_generated_code(spark):
+    """Horizons and caps differ per request; they must reach generated
+    code as constants read by reference, not as source text, or each
+    new request compiles new classes."""
+    frame = spark.range(4).select(
+        F.col("id").cast("string").alias("series_id"),
+        F.col("id").alias("n_buckets"),
+        F.col("id").cast("double").alias("yhat"),
+    )
+
+    def plan(h: int, lo: float, hi: float):
+        clamped = F.least(
+            F.greatest("yhat", P._by_id({"1": lo})), P._by_id({"1": hi})
+        )
+        return frame.select(
+            P._horizon_by_id({"0": h, "1": h + 1}).alias("h"), clamped.alias("y")
+        )
+
+    code = _generated_code(plan(24, 1.5, 2.5))
+    assert code and code == _generated_code(plan(36, 0.0, 9.0))
+    # ids without an entry fall back to n_buckets and keep their yhat
+    assert plan(24, 1.5, 2.5).collect() == [
+        (24, 0.0), (25, 1.5), (2, 2.0), (3, 3.0)
+    ]
 
 
 def _close(a, b, rel: float = 1e-9) -> bool:
