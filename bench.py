@@ -188,8 +188,11 @@ def build_scaling_probes(spark):
 
 
 
-def run_analyze_bench(spark):
-    """B7: end-to-end /analyze semantics on electricity_demand.json."""
+def run_analyze_bench(spark, skipped: dict[str, str]):
+    """B7: end-to-end /analyze semantics on electricity_demand.json.
+
+    Returns None, with the reason recorded in ``skipped``, when the
+    fixture is absent."""
     import json as _json
 
     from temporal_retriever_spark.api.models import parse_analyze_request
@@ -197,6 +200,7 @@ def run_analyze_bench(spark):
 
     fixture = "/root/reference/electricity_demand.json"
     if not os.path.exists(fixture):
+        skipped["B7_analyze_e2e"] = f"fixture not found: {fixture}"
         return None
     body = _json.load(open(fixture))
     req = parse_analyze_request(body)
@@ -262,6 +266,7 @@ def main() -> None:
     runs: dict[str, list[float]] = {}
     loads: dict[str, list[float]] = {}
     retries: dict[str, dict] = {}
+    skipped: dict[str, str] = {}
 
     def _timed(build):
         pre = _load1()
@@ -300,7 +305,9 @@ def main() -> None:
         loads[name] = sample_loads
         print(f"# {name}: {times[name]}s (runs: {[round(s,2) for s in samples]}, "
               f"load1: {sample_loads})", file=sys.stderr)
-    b7 = run_analyze_bench(spark)
+    b7 = run_analyze_bench(spark, skipped)
+    for name, why in skipped.items():
+        print(f"# WARNING: {name} skipped: {why}", file=sys.stderr)
     if b7 is not None:
         med, samples = b7
         times["B7_analyze_e2e"] = round(med, 3)
@@ -343,6 +350,7 @@ def main() -> None:
         "runs": runs,
         "loads": loads,
         "outlier_retries": retries,
+        "skipped": skipped,
         "loadavg": {**load_info, "load1_end": _load1()},
         "scaling": scaling,
         "sf": sf_val,

@@ -15,10 +15,11 @@ Spark-first design:
   is K lag-window products over one sort, aggregated per series: one
   shuffle for the window sort + one for the final agg, regardless of K.
   At 100 TB this is the scale path; no Python crosses the row stream.
-* **PACF needs the whole series** (Yule-Walker solves a dense Toeplitz
-  system) → grouped pandas UDF per series, numpy-only. Matches
+* **PACF is fully native too** — the Yule-Walker system is solved by
+  the Durbin-Levinson recursion over the SAME lag-product sums, as one
+  ``aggregate`` fold per series row (constant plan size in K). Matches
   statsmodels ``pacf(method='ywadjusted')``: autocovariances with the
-  *adjusted* divisor n−k, AR(k) solved per order, pacf_k = last coef.
+  *adjusted* divisor n−k, pacf_k = the order-k reflection coefficient.
 * **Granger** — per (target, covariate) pair: OLS restricted vs
   unrestricted lag regressions, ssr-based F statistic (the notebook's
   ``ssr_ftest``), numpy ``lstsq`` inside the same grouped-UDF surface.
@@ -37,7 +38,6 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -48,6 +48,32 @@ def default_nlags(n: int) -> int:
     if n <= 1:
         return 0
     return min(int(10 * math.log10(n)), n - 1)
+
+
+def _lag_product_sums(
+    df: DataFrame,
+    *,
+    lags: int,
+    series_cols: list[str],
+    ts_col: str,
+    value_col: str,
+) -> DataFrame:
+    """Shared distributed stage: (series, n, s0, s1..sk) where
+    s_k = Σ d_t·d_{t−k} with d centered by the full-series mean —
+    one window sort + one aggregation regardless of k. Every
+    correlogram operator (``acf``, ``pacf``, ``acf_pacf``,
+    ``ljung_box``, ``acf_bands``, ``detect_seasonality``) reads this
+    one frame, so a null-handling or ordering fix applies everywhere."""
+    w = Window.partitionBy(*series_cols)
+    ws = w.orderBy(ts_col)
+    d = df.withColumn("_d", F.col(value_col) - F.avg(value_col).over(w))
+    for k in range(1, lags + 1):
+        d = d.withColumn(f"_p{k}", F.col("_d") * F.lag("_d", k).over(ws))
+    return d.groupBy(*series_cols).agg(
+        F.count("_d").alias("n"),
+        F.sum(F.col("_d") * F.col("_d")).alias("s0"),
+        *[F.sum(f"_p{k}").alias(f"s{k}") for k in range(1, lags + 1)],
+    )
 
 
 def acf(
@@ -65,33 +91,17 @@ def acf(
 
     The divisors in numerator/denominator (both 1/n) cancel, so
     ``acf_k = sum(d_t * d_{t-k}) / sum(d_t^2)`` with d centered by the
-    full-series mean.
+    full-series mean. A constant series has zero variance: its acf is
+    NULL (``try_divide``; ANSI mode would throw), as statsmodels gives
+    NaN.
     """
-    series_cols = list(series_cols)
-    w = Window.partitionBy(*series_cols)
-    ws = w.orderBy(ts_col)
-    d = df.withColumn("_d", F.col(value_col) - F.avg(value_col).over(w))
-    for k in range(1, lags + 1):
-        d = d.withColumn(f"_p{k}", F.col("_d") * F.lag("_d", k).over(ws))
-    agg = d.groupBy(*series_cols).agg(
-        F.sum(F.col("_d") * F.col("_d")).alias("_c0"),
-        *[F.sum(f"_p{k}").alias(f"_s{k}") for k in range(1, lags + 1)],
-    )
-    # try_divide: a constant series has zero variance (_c0 = 0) — ANSI
-    # mode would throw; NULL acf (surfaced as NaN) matches statsmodels
-    pairs = F.array(
-        F.struct(F.lit(0).alias("lag"), F.lit(1.0).alias("acf")),
-        *[
-            F.struct(
-                F.lit(k).alias("lag"),
-                F.try_divide(F.col(f"_s{k}"), F.col("_c0")).alias("acf"),
-            )
-            for k in range(1, lags + 1)
-        ],
-    )
-    return (
-        agg.select(*series_cols, F.explode(pairs).alias("_e"))
-        .select(*series_cols, F.col("_e.lag").alias("lag"), F.col("_e.acf").alias("acf"))
+    return _correlogram(
+        df,
+        lags=lags,
+        series_cols=series_cols,
+        ts_col=ts_col,
+        value_col=value_col,
+        stats=("acf",),
     )
 
 
@@ -139,31 +149,6 @@ def chi2_sf_sql(x: str, df: int) -> str:
     return f"CASE WHEN NOT (({x}) > 0) THEN 1.0 ELSE {body} END"
 
 
-def _lag_product_sums_ud(
-    df: DataFrame,
-    *,
-    lags: int,
-    series_cols: list[str],
-    ts_col: str,
-    value_col: str,
-) -> DataFrame:
-    """Underscore-named view of ``_lag_product_sums`` (defined below,
-    shared with the PACF path): one row per series with ``_n``
-    (non-null count, double), ``_c0`` = Σd² and ``_s{k}`` =
-    Σ d·d_{−k}. One scaffold for ``ljung_box`` / ``acf_bands`` /
-    ``detect_seasonality`` so a null-handling or ordering fix applies
-    everywhere at once."""
-    agg = _lag_product_sums(
-        df, lags=lags, series_cols=series_cols, ts_col=ts_col, value_col=value_col
-    )
-    return agg.select(
-        *series_cols,
-        F.col("n").cast("double").alias("_n"),
-        F.col("s0").alias("_c0"),
-        *[F.col(f"s{k}").alias(f"_s{k}") for k in range(1, lags + 1)],
-    )
-
-
 def ljung_box(
     df: DataFrame,
     *,
@@ -191,12 +176,12 @@ def ljung_box(
     if lags < 1:
         raise ValueError(f"lags must be >= 1: {lags}")
     series_cols = list(series_cols)
-    agg = _lag_product_sums_ud(
+    agg = _lag_product_sums(
         df, lags=lags, series_cols=series_cols, ts_col=ts_col, value_col=value_col
     )
-    n = F.col("_n")
+    n = F.col("n").cast("double")
     rho2 = [
-        F.pow(F.try_divide(F.col(f"_s{k}"), F.col("_c0")), F.lit(2.0))
+        F.pow(F.try_divide(F.col(f"s{k}"), F.col("s0")), F.lit(2.0))
         for k in range(1, lags + 1)
     ]
     lb_sum = None
@@ -259,13 +244,11 @@ def acf_bands(
 
     z = norm_ppf(1.0 - alpha / 2.0)
     series_cols = list(series_cols)
-    agg = _lag_product_sums_ud(
+    agg = _lag_product_sums(
         df, lags=lags, series_cols=series_cols, ts_col=ts_col, value_col=value_col
     )
-    n = F.col("_n")
-    rho = [
-        F.try_divide(F.col(f"_s{k}"), F.col("_c0")) for k in range(1, lags + 1)
-    ]
+    n = F.col("n").cast("double")
+    rho = [F.try_divide(F.col(f"s{k}"), F.col("s0")) for k in range(1, lags + 1)]
     entries = [
         F.struct(
             F.lit(0).alias("lag"),
@@ -623,199 +606,137 @@ def pacf(
     series_cols: Iterable[str] = ("series_id",),
     ts_col: str = "ds",
     value_col: str = "y",
-    method: str = "auto",
 ) -> DataFrame:
-    """W2: partial autocorrelation per series.
+    """W2: partial autocorrelation per series, as one native fold with
+    a constant plan size in ``lags``.
 
-    ``method="native"``: the Yule-Walker solution computed by the
-    Durbin-Levinson recursion entirely in native expressions — the
-    lag-product sums are one window sort + one aggregation (identical
-    shape to ACF), the recursion is per-series scalar arithmetic on the
-    aggregated row. No Python touches the row stream AND it is
-    oracle-checkable (the same expression strings feed the DuckDB
-    oracle). Caveat: Catalyst inlines the recursion's chained
-    projections, so the expression tree grows super-linearly in
-    ``lags`` — past ~6 lags plan compilation dominates runtime.
+    The Yule-Walker solution (statsmodels ``pacf(method='ywadjusted')``,
+    reference core.py:24-27) by the Durbin-Levinson recursion: the
+    lag-product sums are one window sort + one aggregation (the same
+    shape as ``acf``), and the recursion is ``_durbin_levinson_col`` on
+    the one row per series. No Python runs. Lags infeasible for the
+    series length (k ≥ n) and every lag of a constant series are NULL.
 
-    ``method="sums_udf"``: IDENTICAL lag-product sums (one window sort
-    + one aggregation — the distributed work is unchanged), but the
-    Durbin-Levinson recursion runs in numpy over the one-row-per-series
-    aggregate via mapInPandas, with the same float64 operations in the
-    same order as the native stage strings. Python touches (lags+1)
-    doubles per series, never the row stream — this stays the 100-TB
-    shape at any lag count.
-
-    ``method="auto"`` (default): native for ``lags`` ≤ 6, sums_udf
-    above.
-
-    ``method="yw_udf"``: the original grouped-pandas formulation
-    (numpy Toeplitz solve per series) — statsmodels
-    ``pacf(method='ywadjusted')`` parity reference (core.py:24-27).
-    Emits only lags feasible for the series length (k ≤ n//2 − 1),
-    where the other paths emit NULL for infeasible lags.
+    Output: (series, lag, pacf) for lag 0..lags, lag 0 = 1.0.
     """
-    if method == "auto":
-        method = "native" if lags <= 6 else "sums_udf"
-    if method == "native":
-        return _pacf_native(
-            df, lags=lags, series_cols=series_cols, ts_col=ts_col, value_col=value_col
-        )
-    if method == "sums_udf":
-        return _pacf_from_sums(
-            df, lags=lags, series_cols=series_cols, ts_col=ts_col, value_col=value_col
-        )
-    if method != "yw_udf":
-        raise ValueError(f"unknown pacf method: {method!r}")
-    series_cols = list(series_cols)
-    schema = StructType(
-        [StructField(c, df.schema[c].dataType) for c in series_cols]
-        + [StructField("lag", IntegerType()), StructField("pacf", DoubleType())]
-    )
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        y = pdf[value_col].to_numpy(dtype=np.float64)
-        k = min(lags, max(y.size // 2 - 1, 0))
-        vals = _yule_walker_pacf(y, k) if k > 0 else np.array([1.0])
-        out = pd.DataFrame({"lag": np.arange(vals.size), "pacf": vals})
-        for c in series_cols:
-            out[c] = pdf[c].iloc[0]
-        return out[series_cols + ["lag", "pacf"]]
-
-    return df.groupBy(*series_cols).applyInPandas(compute, schema)
-
-
-def _lag_product_sums(
-    df: DataFrame,
-    *,
-    lags: int,
-    series_cols: list[str],
-    ts_col: str,
-    value_col: str,
-) -> DataFrame:
-    """Shared distributed stage: (series, n, s0, s1..sk) where
-    s_k = Σ d_t·d_{t−k} with d centered by the full-series mean —
-    one window sort + one aggregation regardless of k."""
-    w = Window.partitionBy(*series_cols)
-    ws = w.orderBy(ts_col)
-    d = df.withColumn("_d", F.col(value_col) - F.avg(value_col).over(w))
-    for k in range(1, lags + 1):
-        d = d.withColumn(f"_p{k}", F.col("_d") * F.lag("_d", k).over(ws))
-    return d.groupBy(*series_cols).agg(
-        F.count("_d").alias("n"),
-        F.sum(F.col("_d") * F.col("_d")).alias("s0"),
-        *[F.sum(f"_p{k}").alias(f"s{k}") for k in range(1, lags + 1)],
+    return _correlogram(
+        df,
+        lags=lags,
+        series_cols=series_cols,
+        ts_col=ts_col,
+        value_col=value_col,
+        stats=("pacf",),
     )
 
 
-def _pacf_native(
-    df: DataFrame,
-    *,
-    lags: int,
-    series_cols: Iterable[str],
-    ts_col: str,
-    value_col: str,
-) -> DataFrame:
-    """Durbin-Levinson PACF on lag-product sums — fully native."""
-    series_cols = list(series_cols)
-    agg = _lag_product_sums(
-        df, lags=lags, series_cols=series_cols, ts_col=ts_col, value_col=value_col
-    )
-    cur = agg
-    for name, expr in durbin_levinson_stages(lags):
-        cur = cur.withColumn(name, F.expr(expr))
-    pairs = F.array(
-        F.struct(F.lit(0).alias("lag"), F.lit(1.0).alias("pacf")),
-        *[
-            F.struct(
-                F.lit(k).alias("lag"), F.col(f"phi_{k}_{k}").alias("pacf")
+def _durbin_levinson_col(rho: Column, lags: int) -> Column:
+    """PACF lags 1..``lags`` as ONE array column, from ``rho`` (array
+    of the adjusted autocorrelations, rho_k at 1-based position k).
+
+    A Spark ``aggregate`` fold over the orders 2..lags carries the
+    order-(k−1) coefficients ``phi`` and appends each reflection
+    coefficient phi_k_k = pacf(k) to the output. Its float64 operations
+    run in the order of ``durbin_levinson_stages``: each sum left to
+    right from its j = 1 term, ``NULLIF`` on the denominator. So the
+    values are bit-identical to the stage strings and the DuckDB
+    oracle built on them, while the expression size stays constant in
+    ``lags`` (the stage chain grows quadratically).
+    """
+    if lags < 1:
+        return F.array().cast("array<double>")
+    rho_1 = F.element_at(rho, 1)
+    if lags == 1:  # sequence(2, 1) would count down to [2, 1]
+        return F.array(rho_1)
+
+    def dot(phi: Column, k: Column, rho_at) -> Column:
+        # Σ_{j<k} phi_j·rho_at(j), summed from the j = 1 term
+        def term(j):
+            return F.element_at(phi, j) * F.element_at(rho, rho_at(j))
+
+        rest = F.slice(F.sequence(F.lit(1), k - 1), 2, k)
+        return F.aggregate(rest, term(F.lit(1)), lambda acc, j: acc + term(j))
+
+    def order(acc: Column, k: Column) -> Column:
+        phi = acc["phi"]
+        num = F.element_at(rho, k) - dot(phi, k, lambda j: k - j)
+        den = F.lit(1.0) - dot(phi, k, lambda j: j)
+        phi_kk = num / F.nullif(den, F.lit(0.0))
+
+        def extend(p: Column) -> Column:
+            # phi_k_j = phi_{k-1}_j − p·phi_{k-1}_{k-j} for j < k; phi_k_k = p
+            def update(x, i):
+                return x - p * F.element_at(phi, k - 1 - i)
+
+            return F.struct(
+                F.concat(F.transform(phi, update), F.array(p)).alias("phi"),
+                F.concat(acc["pacf"], F.array(p)).alias("pacf"),
             )
-            for k in range(1, lags + 1)
-        ],
+
+        # let-binding: transform(array(phi_kk), p -> …) evaluates phi_kk
+        # once, not once per coefficient (see llm.lm char_ngrams_expr)
+        return F.transform(F.array(phi_kk), extend)[0]
+
+    init = F.struct(F.array(rho_1).alias("phi"), F.array(rho_1).alias("pacf"))
+    return F.aggregate(
+        F.sequence(F.lit(2), F.lit(lags)), init, order, lambda acc: acc["pacf"]
     )
-    return cur.select(*series_cols, F.explode(pairs).alias("_e")).select(
-        *series_cols, F.col("_e.lag").alias("lag"), F.col("_e.pacf").alias("pacf")
-    )
 
 
-def _durbin_levinson(n: int, s: "np.ndarray", lags: int) -> "np.ndarray":
-    """Durbin-Levinson over the lag-product sums, float64, with the SAME
-    operations in the SAME order as ``durbin_levinson_stages`` — the
-    sums_udf path must be numerically indistinguishable from the native
-    stage expressions."""
-    out = np.full(lags + 1, np.nan)
-    out[0] = 1.0
-    rho = np.full(lags + 1, np.nan)
-    for k in range(1, lags + 1):
-        if n > k and s[0] != 0.0:
-            rho[k] = (s[k] / float(n - k)) / (s[0] / float(n))
-    phi_prev = np.full(lags + 1, np.nan)
-    if lags >= 1:
-        phi_prev[1] = rho[1]
-        out[1] = rho[1]
-    for k in range(2, lags + 1):
-        num = rho[k]
-        acc = 0.0
-        for j in range(1, k):
-            acc = acc + phi_prev[j] * rho[k - j]
-        num = num - acc
-        den_acc = 0.0
-        for j in range(1, k):
-            den_acc = den_acc + phi_prev[j] * rho[j]
-        den = 1.0 - den_acc
-        phi_kk = num / den if den != 0.0 else np.nan
-        phi_cur = np.full(lags + 1, np.nan)
-        phi_cur[k] = phi_kk
-        for j in range(1, k):
-            phi_cur[j] = phi_prev[j] - phi_kk * phi_prev[k - j]
-        phi_prev = phi_cur
-        out[k] = phi_kk
-    return out
-
-
-def _pacf_from_sums(
+def _correlogram(
     df: DataFrame,
     *,
     lags: int,
     series_cols: Iterable[str],
     ts_col: str,
     value_col: str,
+    stats: tuple[str, ...],
 ) -> DataFrame:
-    """PACF = Durbin-Levinson in numpy over the per-series sums row.
+    """(series, lag, *stats) rows for lag 0..lags, ``stats`` drawn from
+    ("acf", "pacf"), built from ONE ``_lag_product_sums`` aggregate:
 
-    Same distributed aggregation as the native path; only the scalar
-    recursion (O(lags²) flops on lags+1 doubles per series) moves to a
-    mapInPandas over the one-row-per-series aggregate — Catalyst never
-    sees the recursion, so plan compilation stays flat in ``lags``.
+    * acf_k = s_k / s0, NULL for a constant series;
+    * rho_k = (s_k/(n−k)) / (s0/n), the ``durbin_levinson_stages``
+      guards (NULL unless n > k and s0 ≠ 0), folded into pacf by
+      ``_durbin_levinson_col``.
+
+    The sums array and rho are projected before the fold, so the fold
+    reads bound columns. Lag 0 is 1.0 for both statistics.
     """
+    if lags < 0:
+        raise ValueError(f"lags must be >= 0: {lags}")
     series_cols = list(series_cols)
     agg = _lag_product_sums(
         df, lags=lags, series_cols=series_cols, ts_col=ts_col, value_col=value_col
     )
-    schema = StructType(
-        [StructField(c, df.schema[c].dataType) for c in series_cols]
-        + [StructField("lag", IntegerType()), StructField("pacf", DoubleType())]
+    n, s0 = F.col("n"), F.col("s0")
+    agg = agg.select(
+        *series_cols,
+        n,
+        s0,
+        F.array(*[F.col(f"s{k}") for k in range(1, lags + 1)])
+        .cast("array<double>")
+        .alias("_s"),
     )
-
-    def compute(batches):
-        for pdf in batches:
-            frames = []
-            for _, row in pdf.iterrows():
-                s = np.array(
-                    [row["s0"]] + [row[f"s{k}"] for k in range(1, lags + 1)],
-                    dtype=np.float64,
-                )
-                vals = _durbin_levinson(int(row["n"]), s, lags)
-                frame = pd.DataFrame(
-                    {"lag": np.arange(lags + 1, dtype=np.int32), "pacf": vals}
-                )
-                for c in series_cols:
-                    frame[c] = row[c]
-                frames.append(frame[series_cols + ["lag", "pacf"]])
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return agg.mapInPandas(compute, schema)
+    lag_0 = F.array(F.lit(1.0))
+    arrays = []
+    if "acf" in stats:
+        acf_k = F.transform("_s", lambda s_k: F.try_divide(s_k, s0))
+        arrays.append(F.concat(lag_0, acf_k).alias("acf"))
+    if "pacf" in stats:
+        rho = F.transform(
+            "_s",
+            lambda s_k, i: F.when(
+                (n > i + 1) & (s0 != 0),
+                (s_k / (n - (i + 1)).cast("double")) / (s0 / n.cast("double")),
+            ),
+        )
+        agg = agg.withColumn("_rho", rho)
+        arrays.append(
+            F.concat(lag_0, _durbin_levinson_col(F.col("_rho"), lags)).alias("pacf")
+        )
+    return agg.select(
+        *series_cols, F.posexplode(F.arrays_zip(*arrays)).alias("lag", "_e")
+    ).select(*series_cols, "lag", *[F.col(f"_e.{c}").alias(c) for c in stats])
 
 
 def acf_pacf(
@@ -826,59 +747,26 @@ def acf_pacf(
     ts_col: str = "ds",
     value_col: str = "y",
 ) -> DataFrame:
-    """Fused W1+W2: ACF and PACF from ONE pass over the data.
+    """Fused W1+W2: ACF and PACF from ONE pass over the data, as one
+    native fold with a constant plan size in ``lags``.
 
     Both statistics are functions of the same per-series lag-product
     sums (acf_k = s_k/s0; pacf = Durbin-Levinson over the adjusted
-    autocorrelations), so the window sort + aggregation runs once and a
-    single mapInPandas over the one-row-per-series aggregate emits both
-    columns — one Spark job where the unfused ``acf``/``pacf`` pair
-    runs the identical distributed work twice. Arithmetic matches the
-    standalone operators (same float64 ops, same order).
+    autocorrelations), so the window sort + aggregation runs once and
+    both columns come from the one row per series — one Spark job where
+    the unfused ``acf``/``pacf`` pair runs the identical distributed
+    work twice. Values equal the standalone operators bit for bit.
 
     Output: (series, lag, acf, pacf), lag 0 = (1.0, 1.0).
     """
-    series_cols = list(series_cols)
-    agg = _lag_product_sums(
-        df, lags=lags, series_cols=series_cols, ts_col=ts_col, value_col=value_col
+    return _correlogram(
+        df,
+        lags=lags,
+        series_cols=series_cols,
+        ts_col=ts_col,
+        value_col=value_col,
+        stats=("acf", "pacf"),
     )
-    schema = StructType(
-        [StructField(c, df.schema[c].dataType) for c in series_cols]
-        + [
-            StructField("lag", IntegerType()),
-            StructField("acf", DoubleType()),
-            StructField("pacf", DoubleType()),
-        ]
-    )
-
-    def compute(batches):
-        for pdf in batches:
-            frames = []
-            for _, row in pdf.iterrows():
-                s = np.array(
-                    [row["s0"]] + [row[f"s{k}"] for k in range(1, lags + 1)],
-                    dtype=np.float64,
-                )
-                acf_vals = np.full(lags + 1, np.nan)
-                acf_vals[0] = 1.0
-                if s[0] != 0.0:
-                    for k in range(1, lags + 1):
-                        acf_vals[k] = s[k] / s[0]
-                pacf_vals = _durbin_levinson(int(row["n"]), s, lags)
-                frame = pd.DataFrame(
-                    {
-                        "lag": np.arange(lags + 1, dtype=np.int32),
-                        "acf": acf_vals,
-                        "pacf": pacf_vals,
-                    }
-                )
-                for c in series_cols:
-                    frame[c] = row[c]
-                frames.append(frame[series_cols + ["lag", "acf", "pacf"]])
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return agg.mapInPandas(compute, schema)
 
 
 def _safe_seq(upper: Column) -> Column:
@@ -1375,19 +1263,17 @@ def granger_native(
     target_col: str = "y",
     cov_col: str = "x",
     detrend: bool = True,
-    method: str = "auto",
 ) -> DataFrame:
-    """W10, fully native at ANY lag order: Granger ssr F-tests with
-    exact p-values, no Python anywhere.
+    """W10: Granger ssr F-tests with exact p-values, natively up to
+    6 lags.
 
-    ``method="auto"`` (default) mirrors ``pacf``'s dispatch: the
-    staged-Cholesky expression tree grows ~maxlag² (plan compile
-    dominates past ~6 lags — ~4s at maxlag=5, minutes at the
-    notebook's maxlag=14), so lags ≤ 6 run the native plan and higher
-    lags dispatch to the grouped-UDF ``granger_causality`` (identical
-    stats — cross-checked to 1e-9 in tests; the Arrow path ships whole
-    series to Python, which is the better trade above the compile
-    knee). ``method="native"`` / ``method="udf"`` force a path.
+    ``maxlag`` picks the path: the staged-Cholesky expression tree
+    grows ~maxlag² (plan compile dominates past ~6 lags — ~4s at
+    maxlag=5, minutes at the notebook's maxlag=14), so maxlag ≤ 6 runs
+    the native plan and higher lags dispatch to the grouped-UDF
+    ``granger_causality`` (identical stats — cross-checked to 1e-9 in
+    tests; the Arrow path ships whole series to Python, which is the
+    better trade above the compile knee).
 
     Same semantics as ``granger_causality`` (statsmodels ssr_ftest,
     notebook detrend, Untitled.ipynb cell 12): one window pass builds
@@ -1404,9 +1290,7 @@ def granger_native(
     narrow shuffles of scalar sums, versus the grouped-UDF path that
     ships whole series through Arrow into Python workers.
     """
-    if method == "auto":
-        method = "native" if maxlag <= 6 else "udf"
-    if method == "udf":
+    if maxlag > 6:
         return granger_causality(
             df,
             maxlag=maxlag,
@@ -1416,8 +1300,6 @@ def granger_native(
             cov_col=cov_col,
             detrend=detrend,
         )
-    if method != "native":
-        raise ValueError(f"unknown granger method: {method!r}")
     series_cols = list(series_cols)
     w = Window.partitionBy(*series_cols)
     ws = w.orderBy(ts_col)
@@ -1726,7 +1608,7 @@ def detect_seasonality(
             f"need 2 <= min_period <= max_period: ({min_period}, {max_period})"
         )
     series_cols = list(series_cols)
-    agg = _lag_product_sums_ud(
+    agg = _lag_product_sums(
         df,
         lags=max_period,
         series_cols=series_cols,
@@ -1737,9 +1619,9 @@ def detect_seasonality(
     # when-fold duplicates subtrees exponentially (2^max_period nodes)
     agg = agg.select(
         *series_cols,
-        "_n",
+        "n",
         *[
-            F.try_divide(F.col(f"_s{k}"), F.col("_c0")).alias(f"_r{k}")
+            F.try_divide(F.col(f"s{k}"), F.col("s0")).alias(f"_r{k}")
             for k in range(1, max_period + 1)
         ],
     )
@@ -1766,7 +1648,8 @@ def detect_seasonality(
     bands = F.array(
         *[
             F.sqrt(
-                (F.lit(1.0) + F.lit(2.0) * F.col(f"_acc{k - 1}")) / F.col("_n")
+                (F.lit(1.0) + F.lit(2.0) * F.col(f"_acc{k - 1}"))
+                / F.col("n").cast("double")
             )
             for k in range(1, max_period + 1)
         ]
@@ -1788,7 +1671,7 @@ def detect_seasonality(
         period.alias("period"),
         rho_best.alias("acf"),
         (F.abs(rho_best) > F.lit(z) * band_at).alias("significant"),
-        F.col("_n").cast("long").alias("n"),
+        F.col("n"),
     )
 
 

@@ -88,34 +88,48 @@ def test_pacf_udf_matches_local(spark, tables):
             assert abs(got[(et, k)] - want[k]) < 1e-10, (et, k)
 
 
-def test_pacf_sums_udf_matches_native(spark, tables):
-    # the sums_udf path must reproduce the native Durbin-Levinson stage
-    # arithmetic bit-for-bit (same sums, same float64 op order)
-    daily = _daily(tables)
-    native = {
-        (r["event_type"], r["lag"]): r["pacf"]
-        for r in pacf(
-            daily, lags=6, series_cols=("event_type",), method="native"
-        ).collect()
+@pytest.mark.parametrize("lags", [1, 5, 8])
+def test_pacf_matches_durbin_levinson_stages(spark, tables, lags):
+    # the aggregate fold must reproduce the Durbin-Levinson stage strings
+    # (the pacf_daily oracle's arithmetic) bit for bit, NULLs included:
+    # a constant series, one shorter than lags and a single observation
+    from temporal_retriever_spark.diagnostics import (
+        _lag_product_sums,
+        durbin_levinson_stages,
+    )
+
+    daily = _daily(tables).select("event_type", "ds", F.col("y").cast("double"))
+    ds = [r["ds"] for r in daily.select("ds").distinct().orderBy("ds").take(12)]
+    edge = spark.createDataFrame(
+        [("const", d, 3.0) for d in ds]
+        + [("short", d, float(i * i)) for i, d in enumerate(ds[:lags])]
+        + [("single", ds[0], 5.0)],
+        daily.schema,
+    )
+    df = daily.unionByName(edge)
+    got = {
+        (r["event_type"], r["lag"]): repr(r["pacf"])
+        for r in pacf(df, lags=lags, series_cols=("event_type",)).collect()
     }
-    sums = {
-        (r["event_type"], r["lag"]): r["pacf"]
-        for r in pacf(
-            daily, lags=6, series_cols=("event_type",), method="sums_udf"
-        ).collect()
-    }
-    assert set(native) == set(sums)
-    for key, v in native.items():
-        w = sums[key]
-        if v is None or (isinstance(v, float) and np.isnan(v)):
-            assert w is None or np.isnan(w), key
-        else:
-            assert v == w, key
+    staged = _lag_product_sums(
+        df, lags=lags, series_cols=["event_type"], ts_col="ds", value_col="y"
+    )
+    for name, expr in durbin_levinson_stages(lags):
+        staged = staged.withColumn(name, F.expr(expr))
+    want = {}
+    for r in staged.collect():
+        want[(r["event_type"], 0)] = repr(1.0)
+        for k in range(1, lags + 1):
+            want[(r["event_type"], k)] = repr(r[f"phi_{k}_{k}"])
+    assert got == want
+    assert got[("const", 1)] == got[("single", 1)] == "None"
+    assert got[("short", lags)] == "None"
 
 
 def test_pacf_auto_dispatch(spark, tables):
     daily = _daily(tables)
-    # lags>6 routes to sums_udf; values must still match yw_udf closely
+    # at 10 lags the fold still matches the statsmodels-parity
+    # Yule-Walker reference
     got = {
         (r["event_type"], r["lag"]): r["pacf"]
         for r in pacf(daily, lags=10, series_cols=("event_type",)).collect()
@@ -142,9 +156,7 @@ def test_acf_pacf_fused_matches_standalone(spark, tables):
     }
     pacf_alone = {
         (r["event_type"], r["lag"]): r["pacf"]
-        for r in pacf(
-            daily, lags=8, series_cols=("event_type",), method="sums_udf"
-        ).collect()
+        for r in pacf(daily, lags=8, series_cols=("event_type",)).collect()
     }
     assert set(fused) == set(acf_alone) == set(pacf_alone)
     for key, (a, p) in fused.items():
@@ -295,7 +307,7 @@ def test_granger_native_matches_udf_all_lags(spark, tables):
 
 
 def test_granger_auto_dispatch_high_lag(spark, tables):
-    """method="auto" above lag 6 routes granger_native to the
+    """maxlag above 6 routes granger_native to the
     grouped-UDF path: the notebook-spec maxlag=14 call completes in
     seconds (no ~maxlag² staged-Cholesky plan compile) with stats
     identical to granger_causality."""
@@ -334,21 +346,6 @@ def test_granger_auto_dispatch_high_lag(spark, tables):
         assert a["df_den"] == b["df_den"] and a["n_obs"] == b["n_obs"]
         assert same(a["f_stat"], b["f_stat"], 1e-9), lag
         assert same(a["p_value"], b["p_value"], 1e-10), lag
-
-
-def test_granger_native_bad_method(spark, tables):
-    import pytest as _pytest
-
-    from temporal_retriever_spark.diagnostics import granger_native
-
-    ev = tables["events"].select(
-        F.lit("s").alias("series_id"),
-        F.col("ts").cast("timestamp").alias("ds"),
-        F.col("value").alias("y"),
-        (F.col("value") * 2).alias("x"),
-    )
-    with _pytest.raises(ValueError, match="granger method"):
-        granger_native(ev, maxlag=2, method="bogus")
 
 
 def test_granger_native_no_python_in_plan(spark, tables):

@@ -37,7 +37,8 @@ def test_oracle_keys_subset_of_queries():
 # declared query against its oracle, so the exhaustive pytest mirror is
 # round-end evidence, not the gate (VERDICT r9 item 1 / r10 item 3).
 FAST_ORACLE_SUBSET = {
-    "align_covariate_inner", "align_covariate_left", "anomaly_zscore_daily",
+    "acf_daily", "align_covariate_inner", "align_covariate_left",
+    "anomaly_zscore_daily",
     "bootstrap_ci_value", "bucket_counts", "bucket_day_all_aggs",
     "bucket_day_mean", "bucket_hour_sum", "bucket_minute_sum",
     "bucket_month_median", "bucket_week_sum", "c4_clean", "cdc_user_state",
@@ -50,8 +51,10 @@ FAST_ORACLE_SUBSET = {
     "forecast_theta_daily", "future_grid_day", "future_grid_month",
     "gopher_filter", "html_extract", "interval_scorecard",
     "json_extract_props", "lang_id", "lineitem_returnflag_week",
+    "ljung_box_daily",
     "lm_perplexity", "mcnemar_user_halves", "media_probe",
-    "minhash_near_dups", "nb_classify_lang", "normalize_docs", "pii_scrub",
+    "minhash_near_dups", "nb_classify_lang", "normalize_docs", "pacf_daily",
+    "pii_scrub",
     "revenue_by_nation_month", "rolling_daily", "rolling_origin_daily",
     "rolling_quantile_daily", "rolling_time_window", "scd2_order_status",
     "series_bounds", "sessions_2h", "split_future", "split_historical",

@@ -86,6 +86,18 @@ def test_ljung_box_single_aggregation_no_python(spark, daily):
     assert "Python" not in plan
 
 
+@pytest.mark.parametrize("op", ["pacf", "acf_pacf"])
+def test_pacf_family_native_at_high_lags(spark, daily, op):
+    # the Durbin-Levinson fold keeps PACF in the aggregate's own plan at
+    # any lag count: no Python operator, one series-key shuffle
+    from temporal_retriever_spark import diagnostics
+
+    plan = _plan(getattr(diagnostics, op)(daily, lags=36))
+    for node in ("Python", "ArrowEval", "MapInPandas"):
+        assert node not in plan
+    assert _exchanges(plan) == 1
+
+
 def test_adf_native_no_python(spark, daily):
     from temporal_retriever_spark.diagnostics import adf
 
