@@ -178,6 +178,18 @@ def floor_ceiling(
                 [sample std, ddof=1]
     """
     series_cols = list(series_cols)
+    aggs = floor_ceiling_aggs(value_col, user_floor, user_ceiling)
+    if series_cols:
+        return df.groupBy(*series_cols).agg(*aggs)
+    return df.agg(*aggs)
+
+
+def floor_ceiling_aggs(
+    value_col: str, user_floor: float | None, user_ceiling: float | None
+) -> list[Column]:
+    """``floor_ceiling``'s aggregate columns, in this order: floor, cap,
+    min_y, max_y, std_y — for callers that fold them into their own
+    aggregation."""
     mn, mx = F.min(value_col), F.max(value_col)
     # sample std from explicit sums (≡ stddev_samp): the closed form over
     # sums is bit-reproducible across engines/re-runs, unlike the
@@ -197,16 +209,13 @@ def floor_ceiling(
         ceiling = F.greatest(default_ceiling, mx)
     else:
         ceiling = F.greatest(F.lit(float(user_ceiling)), mx)
-    aggs = [
+    return [
         floor.alias("floor"),
         ceiling.alias("cap"),
         mn.alias("min_y"),
         mx.alias("max_y"),
         sd.alias("std_y"),
     ]
-    if series_cols:
-        return df.groupBy(*series_cols).agg(*aggs)
-    return df.agg(*aggs)
 
 
 def bucket_count(

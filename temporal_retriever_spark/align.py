@@ -92,8 +92,6 @@ def future_grid(
     ``horizon`` may be a per-series Column (the A5 default horizon =
     bucket count) or a global int.
     """
-    grain = normalize_grain(grain)
-    step = F.expr(grain_interval(grain))
     n = horizon if isinstance(horizon, Column) else F.lit(int(horizon))
     start_idx = F.lit(0) if include_history_max else F.lit(1)
     maxc = F.col(max_col)
@@ -109,16 +107,25 @@ def future_grid(
     )
     idx = F.explode(seq).alias("_k")
     grid = bounds.select(*series_cols, maxc.alias("_max"), idx)
+    tick = F.expr(grid_tick_sql(grain, "_max", "_k"))
+    return grid.select(*series_cols, tick.alias(out_col))
+
+
+def grid_tick_sql(grain: str, max_sql: str, k_sql: str) -> str:
+    """SQL for the ``k``-th bucket after ``max_sql`` at ``grain``.
+
+    Shared by ``future_grid`` and the per-series array forecasts, which
+    build the same ticks inside ``transform``.
+    """
+    grain = normalize_grain(grain)
     if grain in ("D", "W"):
         days = {"D": 1, "W": 7}[grain]
-        tick = F.date_add(F.col("_max").cast("date"), F.col("_k") * days)
-    elif grain == "M":
+        return f"date_add(CAST({max_sql} AS DATE), {k_sql} * {days})"
+    if grain == "M":
         # month grain: buckets are last-days; stepping k months from the
         # last day keeps last-day-ness via last_day()
-        tick = F.last_day(F.add_months(F.col("_max").cast("date"), F.col("_k")))
-    else:
-        tick = F.col("_max") + F.col("_k") * step
-    return grid.select(*series_cols, tick.alias(out_col))
+        return f"last_day(add_months(CAST({max_sql} AS DATE), {k_sql}))"
+    return f"{max_sql} + {k_sql} * {grain_interval(grain)}"
 
 
 def split_forecasts(

@@ -8,18 +8,24 @@ coefficients (app.py:241-243), quantiles declared at app.py:54-58.
 Two backends:
 
 * **native** (default, deterministic, 100-TB path): additive
-  trend+seasonality model fit with *relational algebra only* —
+  trend+seasonality model
 
       yhat(t) = a + b·t + seasonal_mean(key(t))        [+ c·x(t)]
 
-  slope/intercept per series via ``regr_slope``/``regr_intercept``
-  (one shuffle), seasonal component = per-(series, seasonal-key) mean
-  of detrended residuals (one shuffle), uncertainty = exact empirical
-  quantiles of the de-seasonalized residuals (reference W9 computes
-  ``np.quantile`` over sample paths, Untitled.ipynb cell 13; ours are
-  residual quantiles — deterministic). Every stage is a DataFrame op:
-  Catalyst broadcasts the tiny per-series fit frames, and nothing
-  leaves the JVM. Fully DuckDB-oracle-able.
+  fit per series as ONE array program (``fit_linear_seasonal``,
+  ``forecast_linear_seasonal``, ``forecast_with_covariate``,
+  ``forecast_quantiles``): one groupBy(series) collects the series'
+  rows into a sorted array, and higher-order functions over it give
+  the OLS sums (one fold, closed form), the per-seasonal-key mean of
+  the detrended residuals, the exact empirical quantiles of the
+  de-seasonalized residuals (reference W9 computes ``np.quantile``
+  over sample paths, Untitled.ipynb cell 13; ours are residual
+  quantiles — deterministic), the future grid and the predictions,
+  which leave through one ``inline``. One shuffle, no join, no window;
+  every float sum runs in one fixed order at any partitioning, and
+  nothing leaves the JVM. Fully DuckDB-oracle-able. The changepoint
+  variants below still fit relationally and broadcast their
+  per-series fit frames.
 
 * **prophet** (optional, parity path): grouped pandas UDF, one Prophet
   fit per series — the reference's exact library. Gated behind an
@@ -40,17 +46,17 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from temporal_retriever_spark.aggregate import date_bounds, floor_ceiling
-from temporal_retriever_spark.align import future_grid
+from temporal_retriever_spark.aggregate import floor_ceiling_aggs
+from temporal_retriever_spark.align import future_grid, grid_tick_sql
 from temporal_retriever_spark.grains import normalize_grain
 
-#: grain -> seasonal key expression (None = no seasonality at that grain)
+#: grain -> seasonal key SQL over a ``ds`` expression (W: no seasonality)
 _SEASONAL_KEYS = {
-    "D": lambda c: F.dayofweek(c),
-    "W": lambda c: F.lit(0),
-    "M": lambda c: F.month(c),
-    "H": lambda c: F.hour(c),
-    "min": lambda c: F.hour(c),
+    "D": "dayofweek({})",
+    "W": "0",
+    "M": "month({})",
+    "H": "hour({})",
+    "min": "hour({})",
 }
 
 
@@ -59,9 +65,22 @@ def _time_index(col: Column) -> Column:
     return F.unix_timestamp(col.cast("timestamp")) / F.lit(86400.0)
 
 
-def seasonal_key_expr(col: Column | str, grain: str) -> Column:
-    col = F.col(col) if isinstance(col, str) else col
-    return _SEASONAL_KEYS[normalize_grain(grain)](col)
+def _time_index_sql(ds: str) -> str:
+    """``_time_index`` as SQL text. The divisor is typed ``86400D``: a
+    bare ``86400.0`` is a DECIMAL in Spark SQL and moves the last bits."""
+    return f"unix_timestamp(CAST({ds} AS TIMESTAMP)) / 86400D"
+
+
+def _seasonal_key_sql(ds: str, grain: str) -> str:
+    return _SEASONAL_KEYS[normalize_grain(grain)].format(ds)
+
+
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def seasonal_key_expr(col: str, grain: str) -> Column:
+    return F.expr(_seasonal_key_sql(_ident(col), grain))
 
 
 def quantile_col_name(q: float) -> str:
@@ -70,6 +89,175 @@ def quantile_col_name(q: float) -> str:
     if abs(pct - round(pct)) < 1e-9:
         return f"q{int(round(pct)):02d}"
     return ("q%g" % pct).replace(".", "_")
+
+
+# ---------------------------------------------------------------------------
+# Per-series array programs. The native fits below run as ONE groupBy per
+# series that collects the rows into a sorted array; every later step is a
+# higher-order function over that array, and the predictions leave through
+# one ``inline``. The plan holds one exchange and no join or window, so a
+# forecast is one shuffle and one job, and Catalyst analyses a handful of
+# projections instead of several copies of the history. The programs are
+# SQL text: lambdas built through the Python Column API cost thousands of
+# py4j round trips per call. Memory is bounded by the largest series,
+# whose rows one task holds as one array.
+# ---------------------------------------------------------------------------
+
+
+def _sum_sql(acc: str, term: str) -> str:
+    """One update of Spark's ``Sum``: starts from NULL, skips NULL terms."""
+    return f"coalesce(coalesce({acc}, 0D) + {term}, {acc})"
+
+
+def _seasonal_means_sql(resid: str) -> str:
+    """array<struct<_skey, s_mean>> over ``resid`` (array of struct(k, r)).
+
+    Each key's sum runs in array order with ``Sum``'s update, then is
+    divided by the key's non-null count, as ``SUM(r) / COUNT(r)``."""
+    return (
+        f"transform(array_sort(array_distinct(transform({resid}, e -> e.k))), "
+        f"k -> named_struct('_skey', k, 's_mean', "
+        f"aggregate(filter({resid}, e -> e.k = k), CAST(NULL AS DOUBLE), "
+        f"(s, e) -> {_sum_sql('s', 'e.r')}) / "
+        f"CAST(size(filter({resid}, e -> e.k = k AND e.r IS NOT NULL)) AS DOUBLE)))"
+    )
+
+
+def _quantiles_sql(sorted_values: str, quantiles: Iterable[float]) -> str:
+    """Exact quantiles of the ascending, null-free ``sorted_values``, with
+    Spark ``percentile``'s formula: position (n-1)·q, linear between the
+    values at its floor and ceiling unless those coincide; NULL when
+    there are no values."""
+    v = sorted_values
+    qs = ", ".join(f"{float(q)!r}D" for q in quantiles)
+    return (
+        f"transform(array({qs}), q -> transform(array((size({v}) - 1) * q), pos -> "
+        f"CASE WHEN size({v}) = 0 THEN NULL "
+        f"WHEN floor(pos) = ceil(pos) OR {v}[floor(pos)] = {v}[ceil(pos)] "
+        f"THEN {v}[floor(pos)] "
+        f"ELSE (ceil(pos) - pos) * {v}[floor(pos)] + (pos - floor(pos)) * {v}[ceil(pos)] "
+        f"END)[0])"
+    )
+
+
+def _season_and_quantiles(frame: DataFrame, quantiles: Iterable[float] | None) -> DataFrame:
+    """Add ``_seasonal`` (per-key residual means) and its lookup map
+    ``_smap`` from the residual array ``_r``, and, unless ``quantiles``
+    is None, ``_q``: quantiles of the de-seasonalized residuals."""
+    out = frame.selectExpr("*", f"{_seasonal_means_sql('_r')} AS _seasonal").selectExpr(
+        "*", "map_from_entries(filter(_seasonal, s -> s._skey IS NOT NULL)) AS _smap"
+    )
+    if quantiles is None:
+        return out
+    return out.selectExpr(
+        "*",
+        "array_sort(filter(transform(_r, e -> e.r - _smap[e.k]), v -> v IS NOT NULL)) AS _v",
+    ).selectExpr("*", f"{_quantiles_sql('_v', quantiles)} AS _q")
+
+
+def _future_ds_sql(grain: str, ds_type: str) -> str:
+    """The ``_h`` buckets after ``max_ds``, cast to the history's type."""
+    h = "CAST(_h AS INT)"
+    return (
+        f"transform(CASE WHEN {h} >= 1 THEN sequence(1, {h}) "
+        f"ELSE CAST(array() AS ARRAY<INT>) END, "
+        f"k -> CAST({grid_tick_sql(grain, 'max_ds', 'k')} AS {ds_type}))"
+    )
+
+
+def _with_horizon(frame: DataFrame, horizon: int | None | Column) -> DataFrame:
+    """``_h`` per series: a Column sees the series columns and
+    ``n_buckets``; None is the reference default, the bucket count."""
+    if isinstance(horizon, Column):
+        return frame.withColumn("_h", horizon)
+    if horizon is not None:
+        return frame.withColumn("_h", F.lit(int(horizon)))
+    return frame.withColumn("_h", F.col("n_buckets"))
+
+
+def _inline_predictions(
+    frame: DataFrame,
+    *,
+    series_cols: list[str],
+    ts_col: str,
+    rows_sql: str,
+    point_sql: str,
+    bands: Iterable[str],
+    extra: Iterable[str] = (),
+    clamp: bool = False,
+) -> DataFrame:
+    """One output row per element ``e`` of ``rows_sql``: ``ts_col`` from
+    ``e.ds``, yhat = ``point_sql`` and band i = yhat + ``_q[i]``
+    (missing quantiles count 0), clamped into [floor, cap] when asked."""
+    c = (lambda x: f"least(greatest({x}, `floor`), `cap`)") if clamp else (lambda x: x)
+    name = ts_col.replace("'", "\\'")
+    fields = [f"'{name}', e.ds", f"'yhat', {c('_y')}"]
+    fields += [
+        f"'{b}', {c(f'_y + coalesce(_q[{i}], 0D)')}" for i, b in enumerate(bands)
+    ]
+    fields += [f"'{x}', {x}" for x in extra]
+    return frame.selectExpr(
+        *map(_ident, series_cols),
+        f"inline(transform({rows_sql}, e -> transform(array({point_sql}), "
+        f"_y -> named_struct({', '.join(fields)}))[0]))",
+    )
+
+
+def _linear_seasonal_program(
+    df: DataFrame,
+    *,
+    grain: str,
+    series_cols: list[str],
+    ts_col: str,
+    value_col: str,
+    quantiles: Iterable[float],
+    extra_aggs: Iterable[Column] = (),
+) -> DataFrame:
+    """One row per series: ``n_buckets``, ``max_ds``, the centered trend
+    (``b``, ``my``, ``mt``), the (t, y, ds)-sorted rows ``_p``, the
+    seasonal means ``_seasonal``/``_smap`` and the residual quantiles
+    ``_q`` — the whole ``fit_linear_seasonal`` as one aggregation."""
+    ds, y = _ident(ts_col), _ident(value_col)
+    n = "CAST(n_buckets AS DOUBLE)"
+    # OLS from explicit sums rather than regr_slope/regr_intercept: the
+    # closed form over sums is reproducible bit for bit across engines
+    # and re-runs, which the oracle checks rely on. The sums fold over
+    # the SORTED collected rows: partial sums merge in task-scheduling
+    # order, and that last-ulp drift once flipped 6-decimal grid values
+    # across runs. A NULL term adds +0.0 where SUM skipped the row, and
+    # n_buckets counts non-null y only.
+    grouped = df.groupBy(*series_cols).agg(
+        F.expr(
+            f"sort_array(collect_list(struct({_time_index_sql(ds)} AS t, "
+            f"CAST({y} AS DOUBLE) AS y, {ds} AS ds)))"
+        ).alias("_p"),
+        F.count(value_col).alias("n_buckets"),
+        F.max(ts_col).alias("max_ds"),
+        *extra_aggs,
+    )
+    gram = grouped.selectExpr(
+        "*",
+        "aggregate(_p, named_struct('sty', 0D, 'st', 0D, 'sy', 0D, 'stt', 0D), "
+        "(a, r) -> named_struct("
+        "'sty', a.sty + coalesce(r.t * r.y, 0D), 'st', a.st + coalesce(r.t, 0D), "
+        "'sy', a.sy + coalesce(r.y, 0D), 'stt', a.stt + coalesce(r.t * r.t, 0D))) AS _g",
+    )
+    # centered parameterization yhat = my + b·(t − mt): epoch-day t is
+    # ~2e4, so the uncentered intercept a = my − b·mt cancels
+    # catastrophically and amplifies last-ulp noise ~1e6×
+    den = f"_g.stt - _g.st * _g.st / {n}"
+    trend = gram.selectExpr(
+        "*",
+        f"CASE WHEN {den} = 0 THEN 0D "
+        f"ELSE (_g.sty - _g.st * _g.sy / {n}) / ({den}) END AS b",
+        f"_g.sy / {n} AS my",
+        f"_g.st / {n} AS mt",
+    ).selectExpr(
+        "*",
+        f"transform(_p, r -> named_struct('k', {_seasonal_key_sql('r.ds', grain)}, "
+        f"'r', r.y - (my + b * (r.t - mt)))) AS _r",
+    )
+    return _season_and_quantiles(trend, quantiles)
 
 
 def fit_linear_seasonal(
@@ -83,122 +271,77 @@ def fit_linear_seasonal(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Fit the native model; returns (trend, seasonal, residual_q) frames.
 
-    trend:      series, my (mean y), mt (mean t), b (slope), max_ds, n_buckets
+    trend:      series, b (slope), my (mean y), mt (mean t), max_ds, n_buckets
                 — centered form: yhat_trend(t) = my + b·(t − mt)
-    seasonal:   series, skey, s_mean
+    seasonal:   series, _skey, s_mean
     residual_q: series, q05, q50, q95  (de-seasonalized residual quantiles)
 
     Degenerate series (single bucket / zero time variance) get slope 0
-    and intercept = mean(y).
+    and intercept = mean(y). The three frames are projections of one
+    per-series program (``_linear_seasonal_program``).
     """
     series_cols = list(series_cols)
-    t = _time_index(F.col(ts_col))
-    hist = df.withColumn("_t", t).withColumn(
-        "_skey", seasonal_key_expr(ts_col, grain)
+    fit = _linear_seasonal_program(
+        df,
+        grain=grain,
+        series_cols=series_cols,
+        ts_col=ts_col,
+        value_col=value_col,
+        quantiles=quantiles,
     )
-    # OLS from explicit sums rather than regr_slope/regr_intercept: the
-    # arithmetic (sums -> closed form) is reproducible bit-for-bit across
-    # engines and cluster re-runs, which the reference-style oracle checks
-    # rely on; regr_* use engine-specific incremental update formulas.
-    # r10 (VERDICT r9 item 4): the Gram sums fold over a SORTED
-    # collected array instead of F.sum partials — partial-sum merge
-    # order follows task scheduling, and the resulting last-ulp drift
-    # flipped 6-decimal grid values on conformal_daily /
-    # interval_scorecard across runs. collect_list partials concatenate
-    # in arbitrary order too, but sort_array then fixes one (t, y)
-    # order, so the sequential fold is hash-stable at ANY partitioning.
-    # Plan shape is unchanged (one hash aggregation, same exchange);
-    # per-series arrays are bucket-sized (daily ≈ hundreds of rows).
-    # Null handling mirrors the old sums exactly: a null product/term
-    # contributes +0.0 (IEEE identity) where SUM skipped the row, and
-    # n_buckets still counts non-null y only.
-    y = F.col(value_col)
-    pairs = F.sort_array(
-        F.collect_list(
-            F.struct(F.col("_t").alias("t"), y.cast("double").alias("y"))
-        )
-    )
-
-    def _fold(term):
-        return F.aggregate(
-            F.col("_p"),
-            F.lit(0.0),
-            lambda acc, r: acc + F.coalesce(term(r), F.lit(0.0)),
-        )
-
-    sums = (
-        hist.groupBy(*series_cols)
-        .agg(
-            pairs.alias("_p"),
-            F.count(value_col).alias("n_buckets"),
-            F.max(ts_col).alias("max_ds"),
-        )
-        .select(
-            *series_cols,
-            _fold(lambda r: r["t"] * r["y"]).alias("_sty"),
-            _fold(lambda r: r["t"]).alias("_st"),
-            _fold(lambda r: r["y"]).alias("_sy"),
-            _fold(lambda r: r["t"] * r["t"]).alias("_stt"),
-            "n_buckets",
-            "max_ds",
-        )
-    )
-    n = F.col("n_buckets").cast("double")
-    den = F.col("_stt") - F.col("_st") * F.col("_st") / n
-    num = F.col("_sty") - F.col("_st") * F.col("_sy") / n
-    b = F.when(den == 0, F.lit(0.0)).otherwise(num / den)
-    # centered parameterization yhat = my + b·(t − mt): epoch-day t is
-    # ~2e4, so the uncentered intercept a = my − b·mt cancels
-    # catastrophically and amplifies last-ulp noise ~1e6×
-    trend = sums.select(
+    trend = fit.select(*series_cols, "b", "my", "mt", "max_ds", "n_buckets")
+    seasonal = fit.select(*series_cols, F.inline("_seasonal"))
+    residual_q = fit.select(
         *series_cols,
-        b.alias("b"),
-        (F.col("_sy") / n).alias("my"),
-        (F.col("_st") / n).alias("mt"),
-        "max_ds",
-        "n_buckets",
-    )
-    # ONE traversal for seasonal means AND residual quantiles: the
-    # window shuffle hash-partitions on (series, skey), the seasonal
-    # groupBy reuses that partitioning with no exchange, and the
-    # quantile subplan shares the shuffle via Catalyst ReuseExchange —
-    # versus the former seasonal-agg + broadcast-join-back second pass.
-    # s_mean = sum/count (not F.avg) keeps the arithmetic identical to
-    # the oracle SQL's SUM(r)/COUNT(r). The explicit ds-ordered
-    # unbounded frame fixes the accumulation order (same hash-stability
-    # argument as the Gram sums above; an unordered window sums in
-    # arrival order).
-    skey_window = (
-        Window.partitionBy(*series_cols, "_skey")
-        .orderBy(F.col("_t").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    with_resid = (
-        hist.join(F.broadcast(trend), on=series_cols)
-        .withColumn(
-            "_resid",
-            F.col(value_col)
-            - (F.col("my") + F.col("b") * (F.col("_t") - F.col("mt"))),
-        )
-        .withColumn(
-            "_s_mean",
-            F.sum("_resid").over(skey_window)
-            / F.count("_resid").over(skey_window).cast("double"),
-        )
-    )
-    seasonal = with_resid.groupBy(*series_cols, "_skey").agg(
-        F.first("_s_mean").alias("s_mean")
-    )
-    deseason = with_resid.withColumn(
-        "_resid2", F.col("_resid") - F.col("_s_mean")
-    )
-    qarr = F.percentile(
-        "_resid2", F.array(*[F.lit(float(q)) for q in quantiles])
-    )
-    residual_q = deseason.groupBy(*series_cols).agg(
-        *[qarr[i].alias(quantile_col_name(q)) for i, q in enumerate(quantiles)]
+        *[F.col("_q")[i].alias(quantile_col_name(q)) for i, q in enumerate(quantiles)],
     )
     return trend, seasonal, residual_q
+
+
+def _forecast_linear_seasonal(
+    df: DataFrame,
+    *,
+    grain: str,
+    horizon: int | None | Column,
+    series_cols: Iterable[str],
+    ts_col: str,
+    value_col: str,
+    include_history: bool,
+    bands: dict[str, float],
+    caps: list[Column] | None = None,
+) -> DataFrame:
+    """yhat plus one ``yhat + residual quantile`` column per ``bands``
+    entry over history ∪ future grid, clamped into ``caps`` (floor, cap
+    aggregates) when given."""
+    series_cols = list(series_cols)
+    fit = _with_horizon(
+        _linear_seasonal_program(
+            df,
+            grain=grain,
+            series_cols=series_cols,
+            ts_col=ts_col,
+            value_col=value_col,
+            quantiles=bands.values(),
+            extra_aggs=caps or (),
+        ),
+        horizon,
+    )
+    ds_type = dict(df.dtypes)[ts_col]
+    rows = f"transform({_future_ds_sql(grain, ds_type)}, d -> named_struct('ds', d))"
+    if include_history:
+        rows = f"concat(transform(_p, r -> named_struct('ds', r.ds)), {rows})"
+    return _inline_predictions(
+        fit,
+        series_cols=series_cols,
+        ts_col=ts_col,
+        rows_sql=rows,
+        point_sql=(
+            f"my + b * ({_time_index_sql('e.ds')} - mt) "
+            f"+ coalesce(_smap[{_seasonal_key_sql('e.ds', grain)}], 0D)"
+        ),
+        bands=bands,
+        clamp=caps is not None,
+    )
 
 
 def forecast_linear_seasonal(
@@ -220,64 +363,62 @@ def forecast_linear_seasonal(
 
     ``horizon=None`` applies the reference default: horizon = number of
     history buckets (app.py:91), per series via the A5 count. A Column
-    horizon is evaluated against the per-series trend frame (columns:
-    series cols, ``n_buckets``) — lets callers give each series its own
+    horizon is evaluated on the per-series fit row (columns: series
+    cols, ``n_buckets``) — lets callers give each series its own
     horizon in one plan. ``saturating=True`` clamps into the A4
-    floor/cap envelope (W5).
+    floor/cap envelope (W5), whose aggregates join the fit's one
+    aggregation.
     """
-    series_cols = list(series_cols)
-    trend, seasonal, residual_q = fit_linear_seasonal(
-        df, grain=grain, series_cols=series_cols, ts_col=ts_col, value_col=value_col
-    )
-    if isinstance(horizon, Column):
-        horizon_col = horizon
-    elif horizon is not None:
-        horizon_col = F.lit(int(horizon))
-    else:
-        horizon_col = F.col("n_buckets")
-    grid = future_grid(
-        trend,
-        grain=grain,
-        horizon=horizon_col,
-        series_cols=series_cols,
-        max_col="max_ds",
-    )
-    ds_type = dict(df.dtypes)[ts_col]
-    grid = grid.select(*series_cols, F.col(ts_col).cast(ds_type).alias(ts_col))
-    if include_history:
-        grid = df.select(*series_cols, ts_col).unionByName(grid)
-    pred = (
-        grid.withColumn("_t", _time_index(F.col(ts_col)))
-        .withColumn("_skey", seasonal_key_expr(ts_col, grain))
-        .join(F.broadcast(trend.drop("max_ds", "n_buckets")), on=series_cols)
-        .join(F.broadcast(seasonal), on=[*series_cols, "_skey"], how="left")
-        .join(F.broadcast(residual_q), on=series_cols, how="left")
-    )
-    base = (
-        F.col("my")
-        + F.col("b") * (F.col("_t") - F.col("mt"))
-        + F.coalesce(F.col("s_mean"), F.lit(0.0))
-    )
-    yhat = base
-    lower = base + F.coalesce(F.col("q05"), F.lit(0.0))
-    upper = base + F.coalesce(F.col("q95"), F.lit(0.0))
+    caps = None
     if saturating:
-        caps = floor_ceiling(
-            df,
-            value_col=value_col,
-            series_cols=series_cols,
-            user_floor=user_floor,
-            user_ceiling=user_ceiling,
-        ).select(*series_cols, "floor", "cap")
-        pred = pred.join(F.broadcast(caps), on=series_cols)
-        clamp = lambda c: F.least(F.greatest(c, F.col("floor")), F.col("cap"))
-        yhat, lower, upper = clamp(yhat), clamp(lower), clamp(upper)
-    return pred.select(
-        *series_cols,
-        ts_col,
-        yhat.alias("yhat"),
-        lower.alias("yhat_lower"),
-        upper.alias("yhat_upper"),
+        caps = floor_ceiling_aggs(value_col, user_floor, user_ceiling)[:2]
+    return _forecast_linear_seasonal(
+        df,
+        grain=grain,
+        horizon=horizon,
+        series_cols=series_cols,
+        ts_col=ts_col,
+        value_col=value_col,
+        include_history=include_history,
+        bands={"yhat_lower": 0.05, "yhat_upper": 0.95},
+        caps=caps,
+    )
+
+
+def _match_bounds_sql(keys: str, ref: str) -> str:
+    """For each element of the ascending, null-free ``keys``: the
+    0-based range [lo, hi) of the ascending ``ref`` elements equal to
+    it. lo counts the ``ref`` elements below the key and hi those up to
+    it, each read off one sort of both arrays, so this costs
+    O((n+m) log(n+m)) where a search per key would cost O(n·m)."""
+
+    def count_below(side: int) -> str:
+        # ``ref`` entries sort before the keys at equal value when
+        # side < 1, after them when side > 1; a key's position minus
+        # its own index is then the number of ``ref`` entries before it
+        return (
+            f"transform(filter(transform(array_sort(concat("
+            f"transform({ref}, r -> named_struct('k', r, 's', {side}, 'i', 0)), "
+            f"transform({keys}, (k, i) -> named_struct('k', k, 's', 1, 'i', i)))), "
+            f"(m, p) -> named_struct('s', m.s, 'n', p - m.i)), m -> m.s = 1), m -> m.n)"
+        )
+
+    return (
+        f"zip_with({count_below(2)}, {count_below(0)}, "
+        f"(lo, hi) -> named_struct('lo', lo, 'hi', hi))"
+    )
+
+
+def _equi_join_sql(keys: str, bounds: str, row_sql: str) -> str:
+    """Inner equi-join of ``keys`` with the ``ds``-sorted ``_cv``:
+    ``row_sql`` once per (element ``d`` at index ``i``, covariate ``c``
+    with a matching date) pair, repeats multiplying as in SQL.
+    ``bounds`` is ``_match_bounds_sql`` of the elements' dates against
+    ``_cv``'s."""
+    return (
+        f"flatten(transform({keys}, (d, i) -> transform("
+        f"slice(_cv, {bounds}[i].lo + 1, {bounds}[i].hi - {bounds}[i].lo), "
+        f"c -> {row_sql})))"
     )
 
 
@@ -303,10 +444,11 @@ def forecast_with_covariate(
         y(t) = a + b·t + c·x(t) + seasonal_mean(key(t))
 
     where c comes from the OLS partial fit of the detrended target on
-    the detrended covariate (single-regressor exact solution via
-    ``regr_slope`` on residuals). ``covariate_pred`` must cover the
-    future grid (J3: the reference inner-joins future × covariate
-    predictions, app.py:180-188) with column ``cov_col``.
+    the detrended covariate (Frisch-Waugh: the single-regressor exact
+    solution, from one fold of raw moments). ``covariate_pred`` must
+    cover the future grid (J3: the reference inner-joins future ×
+    covariate predictions, app.py:180-188) with column ``cov_col``;
+    its ``ts_col`` is read as the target's type.
 
     Output: series, ds, yhat, yhat_lower, yhat_upper, plus ``coef``
     the regressor coefficient (W8, reference regressor_coefficients
@@ -318,163 +460,121 @@ def forecast_with_covariate(
     ``include_bounds=False`` restores the bare yhat frame (Prophet
     ``uncertainty_samples=0`` semantics: no interval columns).
 
-    ``materialize_covariate=True`` localCheckpoints the covariate frame
-    first: it is referenced twice in the plan (history join + future
-    grid join), and when it is itself a forecast sub-plan, truncating
-    the lineage roughly halves execution. ``materialize_history``
-    (default False) does the same for the joined history frame, which
-    the fit/residual/seasonal/quantile stages reference four times.
-    Measured at sf0.1 the eager checkpoint job costs MORE than the
-    recomputation it avoids (~1s vs ~0.2s: the shuffled history
-    exchanges are already reused by AQE), so it is off by default;
-    turn it on only when the history sub-plan is expensive relative to
-    its bucketed output (e.g. a wide raw scan feeding few buckets)
-    and executor memory holds the checkpoint comfortably, or when the
-    four copies of the history plan differ (an ``explode`` below the
-    join lets each consumer push its own filters into its copy), which
-    defeats that exchange reuse.
+    Plan: the target and covariate rows are unioned and grouped ONCE
+    per series; the history × covariate and future-grid × covariate
+    inner joins run inside that row as sorted-array merges, so the
+    whole forecast is one exchange over its inputs.
+    ``materialize_covariate=True`` / ``materialize_history=True``
+    localCheckpoint the covariate / target frame first. Each input is
+    read once, so a checkpoint only pays when that input's own plan is
+    expensive to re-plan or re-run relative to one eager job (a
+    forecast sub-plan of many rows, or a wide raw scan feeding few
+    buckets) and executor memory holds it comfortably.
     """
     series_cols = list(series_cols)
     if materialize_covariate:
         covariate_pred = covariate_pred.localCheckpoint(eager=True)
-    joined = target.join(
-        covariate_pred.select(*series_cols, ts_col, cov_col),
-        on=[*series_cols, ts_col],
-        how="inner",
-    )
     if materialize_history:
-        joined = joined.localCheckpoint(eager=True)
-    t = _time_index(F.col(ts_col))
-    hist = joined.withColumn("_t", t)
-
-    # Frisch-Waugh partial regression from ONE moments aggregation.
-    # The detrended-residual regression coef expands algebraically into
-    # centered raw moments (Σ_rx·ry = Sxy_c − by·Sxt_c − bx·Syt_c +
-    # bx·by·Stt_c, Σ_rx² = Sxx_c − 2bx·Sxt_c + bx²·Stt_c), so the fit
-    # needs a single traversal of history instead of the former
-    # two-pass fit (trend slopes, then a residual re-scan for the
-    # coef). The oracle SQL mirrors this exact expression tree.
-    y, x, tt = F.col(value_col), F.col(cov_col), F.col("_t")
-    moments = hist.groupBy(*series_cols).agg(
-        F.count(value_col).alias("n_buckets"),
-        F.sum("_t").alias("_st"),
-        F.sum(value_col).alias("_sy"),
-        F.sum(cov_col).alias("_sx"),
-        F.sum(tt * tt).alias("_stt"),
-        F.sum(tt * y).alias("_sty"),
-        F.sum(tt * x).alias("_stx"),
-        F.sum(x * x).alias("_sxx"),
-        F.sum(x * y).alias("_sxy"),
-        F.max(ts_col).alias("max_ds"),
-    )
-    n = F.col("n_buckets").cast("double")
-    stt_c = F.col("_stt") - F.col("_st") * F.col("_st") / n
-    by = F.when(stt_c == 0, F.lit(0.0)).otherwise(
-        (F.col("_sty") - F.col("_st") * F.col("_sy") / n) / stt_c
-    )
-    bx = F.when(stt_c == 0, F.lit(0.0)).otherwise(
-        (F.col("_stx") - F.col("_st") * F.col("_sx") / n) / stt_c
-    )
-    sxy_c = F.col("_sxy") - F.col("_sx") * F.col("_sy") / n
-    sxt_c = F.col("_stx") - F.col("_sx") * F.col("_st") / n
-    syt_c = F.col("_sty") - F.col("_sy") * F.col("_st") / n
-    coef_num = sxy_c - by * sxt_c - bx * syt_c + bx * by * stt_c
-    coef_den = sxx_c = (
-        F.col("_sxx") - F.col("_sx") * F.col("_sx") / n
-    ) - 2 * bx * sxt_c + bx * bx * stt_c
-    params = moments.select(
-        *series_cols,
-        by.alias("by"),
-        bx.alias("bx"),
-        (F.col("_sy") / n).alias("my"),
-        (F.col("_sx") / n).alias("mx"),
-        (F.col("_st") / n).alias("mt"),
-        F.when(coef_den == 0, F.lit(0.0))
-        .otherwise(coef_num / coef_den)
-        .alias("coef"),
-        "max_ds",
-        "n_buckets",
-    )
-    # seasonal on the residual after trend + covariate effect; the
-    # (series, skey) window shuffle serves both the seasonal means and
-    # the residual quantiles (ReuseExchange), one traversal not two
-    grain_key = lambda df_: df_.withColumn("_skey", seasonal_key_expr(ts_col, grain))
-    skey_window = Window.partitionBy(*series_cols, "_skey")
-    full_resid = grain_key(
-        hist.join(F.broadcast(params), on=series_cols).withColumn(
-            "_r",
-            F.col(value_col)
-            - (
-                F.col("my")
-                + F.col("by") * (F.col("_t") - F.col("mt"))
-                + F.col("coef")
-                * (F.col(cov_col) - (F.col("mx") + F.col("bx") * (F.col("_t") - F.col("mt"))))
-            ),
-        )
-    ).withColumn(
-        "_s_mean",
-        F.sum("_r").over(skey_window)
-        / F.count("_r").over(skey_window).cast("double"),
-    )
-    seasonal = full_resid.groupBy(*series_cols, "_skey").agg(
-        F.first("_s_mean").alias("s_mean")
-    )
-    residual_q = None
-    if include_bounds:
-        lo_q, hi_q = quantiles
-        deseason = full_resid.withColumn("_r2", F.col("_r") - F.col("_s_mean"))
-        qarr = F.percentile(
-            "_r2", F.array(F.lit(float(lo_q)), F.lit(float(hi_q)))
-        )
-        residual_q = deseason.groupBy(*series_cols).agg(
-            qarr[0].alias("_qlo"), qarr[1].alias("_qhi")
-        )
-    if isinstance(horizon, Column):
-        horizon_col = horizon
-    elif horizon is not None:
-        horizon_col = F.lit(int(horizon))
-    else:
-        horizon_col = F.col("n_buckets")
-    grid = future_grid(
-        params,
-        grain=grain,
-        horizon=horizon_col,
-        series_cols=series_cols,
-        max_col="max_ds",
-    )
+        target = target.localCheckpoint(eager=True)
+    ds, y, x = _ident(ts_col), _ident(value_col), _ident(cov_col)
     ds_type = dict(target.dtypes)[ts_col]
-    grid = grid.select(*series_cols, F.col(ts_col).cast(ds_type).alias(ts_col))
-    all_ds = target.select(*series_cols, ts_col).unionByName(grid)
-    # J3: future grid needs covariate values -> inner join vs cov preds
-    with_cov = all_ds.join(
-        covariate_pred.select(*series_cols, ts_col, cov_col),
-        on=[*series_cols, ts_col],
-        how="inner",
-    )
-    pred = (
-        grain_key(with_cov.withColumn("_t", t))
-        .join(F.broadcast(params.drop("max_ds", "n_buckets")), on=series_cols)
-        .join(F.broadcast(seasonal), on=[*series_cols, "_skey"], how="left")
-    )
-    yhat = (
-        F.col("my")
-        + F.col("by") * (F.col("_t") - F.col("mt"))
-        + F.col("coef")
-        * (F.col(cov_col) - (F.col("mx") + F.col("bx") * (F.col("_t") - F.col("mt"))))
-        + F.coalesce(F.col("s_mean"), F.lit(0.0))
-    )
-    if not include_bounds:
-        return pred.select(
-            *series_cols, ts_col, yhat.alias("yhat"), F.col("coef").alias("coef")
+    series = [_ident(c) for c in series_cols]
+    # NULL keys never match in the inner joins
+    keyed = " AND ".join(f"{c} IS NOT NULL" for c in [*series, ds])
+    sides = target.where(keyed).selectExpr(
+        *series,
+        f"named_struct('ds', {ds}, 'y', CAST({y} AS DOUBLE)) AS _tg",
+        f"CAST(NULL AS STRUCT<ds: {ds_type}, cov: DOUBLE>) AS _cv",
+    ).unionByName(
+        covariate_pred.where(keyed).selectExpr(
+            *series,
+            f"CAST(NULL AS STRUCT<ds: {ds_type}, y: DOUBLE>) AS _tg",
+            f"named_struct('ds', CAST({ds} AS {ds_type}), 'cov', CAST({x} AS DOUBLE)) AS _cv",
         )
-    pred = pred.join(F.broadcast(residual_q), on=series_cols, how="left")
-    return pred.select(
-        *series_cols,
-        ts_col,
-        yhat.alias("yhat"),
-        (yhat + F.coalesce(F.col("_qlo"), F.lit(0.0))).alias("yhat_lower"),
-        (yhat + F.coalesce(F.col("_qhi"), F.lit(0.0))).alias("yhat_upper"),
-        F.col("coef").alias("coef"),
+    )
+    grouped = sides.groupBy(*series_cols).agg(
+        F.expr("sort_array(collect_list(_tg))").alias("_tg"),
+        F.expr("sort_array(collect_list(_cv))").alias("_cv"),
+    )
+    tg_ds, cv_ds = "transform(_tg, e -> e.ds)", "transform(_cv, c -> c.ds)"
+    # the joined history, sorted so the moment fold has one order
+    joined = grouped.selectExpr(
+        "*", f"{_match_bounds_sql(tg_ds, cv_ds)} AS _jb"
+    ).selectExpr(
+        "*",
+        "array_sort("
+        + _equi_join_sql(
+            "_tg",
+            "_jb",
+            f"named_struct('t', {_time_index_sql('d.ds')}, 'y', d.y, 'x', c.cov, 'ds', d.ds)",
+        )
+        + ") AS _j",
+    )
+    # Frisch-Waugh partial regression from ONE fold of raw moments: the
+    # detrended-residual coef expands into centered moments
+    # (Σ_rx·ry = Sxy_c − by·Sxt_c − bx·Syt_c + bx·by·Stt_c,
+    # Σ_rx² = Sxx_c − 2bx·Sxt_c + bx²·Stt_c). The oracle SQL mirrors
+    # this expression tree.
+    terms = {
+        "st": "e.t", "sy": "e.y", "sx": "e.x", "stt": "e.t * e.t",
+        "sty": "e.t * e.y", "stx": "e.t * e.x", "sxx": "e.x * e.x", "sxy": "e.x * e.y",
+    }
+    zero = ", ".join(f"'{k}', CAST(NULL AS DOUBLE)" for k in terms)
+    step = ", ".join(f"'{k}', {_sum_sql(f'a.{k}', v)}" for k, v in terms.items())
+    moments = joined.selectExpr(
+        "*",
+        f"aggregate(_j, named_struct({zero}), (a, e) -> named_struct({step})) AS _m",
+        "CAST(size(filter(_j, e -> e.y IS NOT NULL)) AS BIGINT) AS n_buckets",
+        "array_max(transform(_j, e -> e.ds)) AS max_ds",
+    )
+    n = "CAST(n_buckets AS DOUBLE)"
+    stt_c = f"(_m.stt - _m.st * _m.st / {n})"
+    sxt_c = f"(_m.stx - _m.sx * _m.st / {n})"
+    syt_c = f"(_m.sty - _m.sy * _m.st / {n})"
+    slopes = moments.selectExpr(
+        "*",
+        f"CASE WHEN {stt_c} = 0 THEN 0D ELSE (_m.sty - _m.st * _m.sy / {n}) / {stt_c} END AS b_y",
+        f"CASE WHEN {stt_c} = 0 THEN 0D ELSE (_m.stx - _m.st * _m.sx / {n}) / {stt_c} END AS b_x",
+        f"_m.sy / {n} AS my",
+        f"_m.sx / {n} AS mx",
+        f"_m.st / {n} AS mt",
+    )
+    coef_num = (
+        f"(_m.sxy - _m.sx * _m.sy / {n}) - b_y * {sxt_c} - b_x * {syt_c} "
+        f"+ b_x * b_y * {stt_c}"
+    )
+    coef_den = f"(_m.sxx - _m.sx * _m.sx / {n}) - 2 * b_x * {sxt_c} + b_x * b_x * {stt_c}"
+    model = "my + b_y * ({t} - mt) + coef * ({x} - (mx + b_x * ({t} - mt)))"
+    fit = slopes.selectExpr(
+        "*",
+        f"CASE WHEN {coef_den} = 0 THEN 0D ELSE ({coef_num}) / ({coef_den}) END AS coef",
+    ).selectExpr(
+        "*",
+        f"transform(_j, e -> named_struct('k', {_seasonal_key_sql('e.ds', grain)}, "
+        f"'r', e.y - ({model.format(t='e.t', x='e.x')}))) AS _r",
+    )
+    fit = _with_horizon(
+        _season_and_quantiles(fit, quantiles if include_bounds else None), horizon
+    ).selectExpr("*", f"{_future_ds_sql(grain, ds_type)} AS _fk")
+    # J3: the future grid takes its covariate values by inner join too
+    future = fit.selectExpr("*", f"{_match_bounds_sql('_fk', cv_ds)} AS _fb")
+    rows = (
+        "concat(transform(_j, e -> named_struct('ds', e.ds, 'x', e.x)), "
+        + _equi_join_sql("_fk", "_fb", "named_struct('ds', d, 'x', c.cov)")
+        + ")"
+    )
+    t = _time_index_sql("e.ds")
+    return _inline_predictions(
+        future,
+        series_cols=series_cols,
+        ts_col=ts_col,
+        rows_sql=rows,
+        point_sql=(
+            f"{model.format(t=t, x='e.x')} "
+            f"+ coalesce(_smap[{_seasonal_key_sql('e.ds', grain)}], 0D)"
+        ),
+        bands=("yhat_lower", "yhat_upper") if include_bounds else (),
+        extra=("coef",),
     )
 
 
@@ -498,43 +598,16 @@ def forecast_quantiles(
     residuals). Output: series, ds, yhat, plus one column per quantile
     (``q05``...``q95``).
     """
-    series_cols = list(series_cols)
-    trend, seasonal, residual_q = fit_linear_seasonal(
+    return _forecast_linear_seasonal(
         df,
         grain=grain,
+        horizon=horizon,
         series_cols=series_cols,
         ts_col=ts_col,
         value_col=value_col,
-        quantiles=quantiles,
+        include_history=include_history,
+        bands={quantile_col_name(q): q for q in quantiles},
     )
-    horizon_col = F.lit(int(horizon)) if horizon is not None else F.col("n_buckets")
-    grid = future_grid(
-        trend, grain=grain, horizon=horizon_col, series_cols=series_cols,
-        max_col="max_ds",
-    )
-    ds_type = dict(df.dtypes)[ts_col]
-    grid = grid.select(*series_cols, F.col(ts_col).cast(ds_type).alias(ts_col))
-    if include_history:
-        grid = df.select(*series_cols, ts_col).unionByName(grid)
-    pred = (
-        grid.withColumn("_t", _time_index(F.col(ts_col)))
-        .withColumn("_skey", seasonal_key_expr(ts_col, grain))
-        .join(F.broadcast(trend.drop("max_ds", "n_buckets")), on=series_cols)
-        .join(F.broadcast(seasonal), on=[*series_cols, "_skey"], how="left")
-        .join(F.broadcast(residual_q), on=series_cols, how="left")
-    )
-    base = (
-        F.col("my")
-        + F.col("b") * (F.col("_t") - F.col("mt"))
-        + F.coalesce(F.col("s_mean"), F.lit(0.0))
-    )
-    qcols = [
-        (base + F.coalesce(F.col(quantile_col_name(q)), F.lit(0.0))).alias(
-            quantile_col_name(q)
-        )
-        for q in quantiles
-    ]
-    return pred.select(*series_cols, ts_col, base.alias("yhat"), *qcols)
 
 
 # ---------------------------------------------------------------------------
@@ -1125,8 +1198,7 @@ def forecast_theta(
     so the approximation cannot drift cross-engine; the dropped tail
     is below double rounding at the default). Plan: one window pass
     (moments + reverse row index) + ONE aggregation per series + a
-    sequence-explode future grid — no Python, same shape as
-    ``forecast_linear_seasonal``.
+    sequence-explode future grid — no Python.
     """
     if horizon < 1:
         raise ValueError(f"horizon must be >= 1: {horizon}")

@@ -335,20 +335,13 @@ def analyze(
                 out_col="cov",
             )
             if cps is None:
+                # one per-series program reads each input once: no
+                # checkpoint job pays for itself here
                 pred = forecast_with_covariate(
                     targets,
                     cov_full,
                     grain=g,
                     horizon=_horizon_by_id(tgt_horizons),
-                    # the covariate grid is referenced twice in the plan;
-                    # truncating its (forecast sub-plan) lineage ~halves cost
-                    materialize_covariate=True,
-                    # the fit reads the joined history four times; the
-                    # rekey's explode lets each read push its own filters
-                    # into its copy, so AQE cannot reuse their exchanges.
-                    # One checkpoint job makes them one relation again
-                    # (fewer jobs and less CPU per request than recompute)
-                    materialize_history=True,
                 )
             else:
                 pred = forecast_covariate_changepoint(
@@ -358,6 +351,11 @@ def analyze(
                     horizon=_horizon_by_id(tgt_horizons),
                     n_changepoints=N_CHANGEPOINTS,
                     changepoint_prior_scale=cps,
+                    # the covariate grid is referenced twice in the plan
+                    # and the fit reads the joined history four times;
+                    # the rekey's explode lets each read push its own
+                    # filters into its copy, so AQE cannot reuse their
+                    # exchanges. The checkpoints make them one relation
                     materialize_covariate=True,
                     materialize_history=True,
                 )
@@ -659,6 +657,10 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
                     forecast_covariate_changepoint,
                     n_changepoints=N_CHANGEPOINTS,
                     changepoint_prior_scale=cps,
+                    # as in ``analyze``: the relational changepoint fit
+                    # reads its inputs several times
+                    materialize_covariate=True,
+                    materialize_history=True,
                 )
             )
             pred = forecaster(
@@ -666,8 +668,6 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
                 cov_full,
                 grain=g,
                 horizon=_horizon_by_id(tgt_horizons),
-                materialize_covariate=True,
-                materialize_history=True,
             ).select(
                 "series_id", "ds",
                 clamp(tgt_caps, F.col("yhat")).alias("yhat"),

@@ -103,6 +103,124 @@ def test_covariate_coefficient_exact(spark):
         assert abs(got[d] - y) < 1e-6
 
 
+def test_covariate_joins_keep_duplicate_dates(spark):
+    # the history and future-grid covariate lookups are inner equi-joins:
+    # a date the covariate repeats gives one row per repeat, a date it
+    # lacks gives none
+    base = datetime.date(2024, 1, 1)
+    day = lambda i: base + datetime.timedelta(days=i)
+    target = spark.createDataFrame(
+        [("s", day(i), float(i % 4) + 0.1 * i) for i in range(10)],
+        "series_id string, ds date, y double",
+    )
+    cov_days = [i for i in range(12) if i != 3] + [5, 11]
+    cov = spark.createDataFrame(
+        [("s", day(i), float(i * i % 7) + 0.01 * n) for n, i in enumerate(cov_days)],
+        "series_id string, ds date, cov double",
+    )
+    got = forecast_with_covariate(target, cov, grain="D", horizon=2).collect()
+    want = [day(i) for i in (0, 1, 2, 4, 5, 5, 6, 7, 8, 9, 10, 11, 11)]
+    assert sorted(r["ds"] for r in got) == want
+    assert all(r["yhat_lower"] <= r["yhat"] <= r["yhat_upper"] for r in got)
+
+
+def _noisy_daily(spark, n_series=3, n_days=200, horizon=14):
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    base = datetime.date(2023, 6, 1)
+    rows, cov_rows = [], []
+    for s in range(n_series):
+        for i in range(n_days + horizon):
+            d = base + datetime.timedelta(days=i)
+            x = float(rng.normal(10.0, 3.0))
+            cov_rows.append((f"s{s}", d, x))
+            if i < n_days:
+                rows.append((f"s{s}", d, 0.37 * i + 1.3 * x + float(rng.normal())))
+    return (
+        spark.createDataFrame(rows, "series_id string, ds date, y double"),
+        spark.createDataFrame(cov_rows, "series_id string, ds date, cov double"),
+    )
+
+
+@pytest.mark.parametrize("op", ["linear", "covariate"])
+def test_forecast_independent_of_partitioning(spark, op):
+    # every float sum folds over one sorted per-series array, so the
+    # output bits do not depend on how the input is split or on how
+    # many partitions the shuffle uses
+    target, cov = _noisy_daily(spark)
+
+    def run(parts: int, shuffle_parts: str) -> list[str]:
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle_parts)
+        t = target.repartition(parts)
+        if op == "linear":
+            got = forecast_linear_seasonal(t, grain="D", horizon=14)
+        else:
+            got = forecast_with_covariate(
+                t, cov.repartition(parts), grain="D", horizon=14
+            )
+        return sorted(map(repr, got.collect()))
+
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        one, many = run(1, "3"), run(7, "13")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
+    assert one == many
+
+
+def test_long_hourly_history_matches_numpy(spark):
+    """Two years of hourly buckets in ONE series (17,520 rows) plus a
+    covariate, against closed-form numpy references within 1e-9.
+
+    The native forecasts collect each series into one array that one
+    task holds, so the longest series bounds their memory; this is the
+    size the bound is checked at."""
+    import numpy as np
+    import pandas as pd
+
+    n, h = 2 * 365 * 24, 24
+    rng = np.random.default_rng(11)
+    ts = pd.date_range("2022-01-01", periods=n + h, freq="h")
+    t = (ts - pd.Timestamp("1970-01-01")).total_seconds().values / 86400.0
+    hour = ts.hour.values
+    x = 50 + 10 * np.sin(2 * np.pi * hour / 24) + rng.normal(size=n + h)
+    y = 3 + 0.01 * (t - t[0]) + 0.5 * x + 2 * np.cos(2 * np.pi * hour / 24)
+    y = (y + rng.normal(size=n + h))[:n]
+    target = spark.createDataFrame(
+        pd.DataFrame({"series_id": "s", "ds": ts[:n], "y": y})
+    )
+    cov = spark.createDataFrame(pd.DataFrame({"series_id": "s", "ds": ts, "cov": x}))
+
+    def bands(fitted_hist, fitted_all):
+        # seasonal = per-hour mean residual, bands = linear-interpolated
+        # percentiles of the de-seasonalized residual (np.percentile)
+        r = y - fitted_hist
+        s_mean = np.array([r[hour[:n] == k].mean() for k in range(24)])
+        q05, q95 = np.percentile(r - s_mean[hour[:n]], [5, 95])
+        yhat = fitted_all + s_mean[hour]
+        return np.column_stack([yhat, yhat + q05, yhat + q95])
+
+    def got_matrix(df):
+        pdf = df.toPandas().sort_values("ds")
+        assert len(pdf) == n + h
+        return pdf[["yhat", "yhat_lower", "yhat_upper"]].to_numpy()
+
+    tc = t - t[:n].mean()
+    b = np.dot(tc[:n], y - y.mean()) / np.dot(tc[:n], tc[:n])
+    want = bands(y.mean() + b * tc[:n], y.mean() + b * tc)
+    got = forecast_linear_seasonal(target, grain="H", horizon=h)
+    np.testing.assert_allclose(got_matrix(got), want, rtol=1e-9)
+
+    xc = x - x[:n].mean()
+    a = np.column_stack([np.ones(n), tc[:n], xc[:n]])
+    beta = np.linalg.lstsq(a, y, rcond=None)[0]
+    fitted = beta[0] + beta[1] * tc + beta[2] * xc
+    got = forecast_with_covariate(target, cov, grain="H", horizon=h)
+    np.testing.assert_allclose(got_matrix(got), bands(fitted[:n], fitted), rtol=1e-9)
+    assert got.first()["coef"] == pytest.approx(beta[2], rel=1e-9)
+
+
 FORECAST_ORACLE = """
 WITH s AS (
     SELECT event_type, CAST(ts AS DATE) AS ds, SUM(value) AS y

@@ -114,6 +114,27 @@ def test_quality_prune_scores_ride_the_scan(spark, docs):
     assert "Python" not in plan
 
 
+@pytest.mark.parametrize("op", ["linear", "covariate"])
+def test_native_forecast_is_one_array_program(spark, daily, op):
+    # one groupBy(series) collects the rows; the fit, seasonal means,
+    # quantiles, future grid and (covariate) joins are array functions
+    # over that row, so the collect shuffle is the only exchange
+    from temporal_retriever_spark.forecast import (
+        forecast_linear_seasonal,
+        forecast_with_covariate,
+    )
+
+    if op == "linear":
+        got = forecast_linear_seasonal(daily, grain="D", horizon=7)
+    else:
+        cov = daily.select("series_id", "ds", (F.col("y") * 2.0).alias("cov"))
+        got = forecast_with_covariate(daily, cov, grain="D", horizon=7)
+    plan = _plan(got)
+    assert _exchanges(plan) == 1
+    for node in ("Window", "Python", "Join", "CartesianProduct"):
+        assert node not in plan
+
+
 def test_theta_and_baselines_no_python(spark, daily):
     from temporal_retriever_spark.forecast import forecast_baseline, forecast_theta
 
@@ -424,14 +445,45 @@ def bench_queries(spark):
 
 def test_b6_covariate_forecast_plan(bench_queries):
     plan = _plan(bench_queries["B6_forecast_covariate"]())
-    # no Python in the hot path (Frisch-Waugh moments are native aggs),
-    # no CartesianProduct (scalar/grid joins must broadcast), and the
-    # exchange count stays at the audited ceiling (16 at r6: the legs'
-    # daily buckets + moments + future-grid assembly)
+    # no Python in the hot path and no join: the history and future-grid
+    # covariate joins run inside the per-series array program. After
+    # the covariate checkpoint two exchanges remain: the target's daily
+    # buckets and the forecast's one collect
     assert "Python" not in plan
+    assert "Join" not in plan
     assert "CartesianProduct" not in plan
-    assert "BroadcastExchange" in plan
-    assert _exchanges(plan) <= 16
+    assert _exchanges(plan) <= 2
+
+
+def _stages_run(spark, build) -> int:
+    """Stages that ran tasks while ``build()`` made its frame (eager
+    checkpoints included) and the noop sink wrote it."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"stages-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        build().write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stage_ids = {
+        s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds
+    }
+    infos = [tracker.getStageInfo(s) for s in stage_ids]
+    return sum(1 for i in infos if i is not None and i.numCompletedTasks > 0)
+
+
+@pytest.mark.parametrize(
+    "name, ceiling", [("B5_forecast_univariate", 6), ("B6_forecast_covariate", 12)]
+)
+def test_forecast_bench_stage_counts(spark, bench_queries, name, ceiling):
+    # stages launched while building and writing each bench row, the B6
+    # covariate checkpoint included
+    assert _stages_run(spark, bench_queries[name]) <= ceiling
 
 
 def test_b9_minhash_plan(bench_queries):
