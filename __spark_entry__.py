@@ -566,9 +566,11 @@ def q_forecast_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_forecast_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3 changepoint variant: piecewise ridge trend (solver='stages' —
-    the same Cramer expression strings the DuckDB oracle chains, so the
-    two engines do identical arithmetic downstream of the Gram sums)."""
+    """W3 changepoint variant: piecewise ridge trend, one changepoint.
+    The engine solves the ridge system by Cholesky inside its
+    per-series array program; the DuckDB oracle chains the closed-form
+    Cramer strings of ``changepoint1_stages`` over the same Gram sums.
+    The two agree far below the 3-decimal rounding."""
     out = forecast_changepoint(
         _events_daily_all(spark, sf_dir),
         grain="D",
@@ -577,7 +579,6 @@ def q_forecast_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         changepoint_prior_scale=0.5,
         series_cols=("event_type",),
         include_bounds=False,
-        solver="stages",
     )
     return out.select(
         "event_type",
@@ -12766,211 +12767,21 @@ FROM b GROUP BY 1
 """
 
 
-# Driver-green evidence ledger: every key below earned a rows+schema+hash
-# match in some CORRECTNESS_r0N.json (cumulative r1..r6 union, 157 names).
-# queries() demotes these to the back of the dict so the driver's first-50
-# sample window is composed entirely of never-driver-checked entries.
-# MAINTENANCE RULE (enforced by tests/test_rotation.py): after each round,
-# append that round's newly-green names here — r6 lost 45 of its 50 window
-# slots to re-verification because the r5 names were never appended.
-_DRIVER_GREEN = (
-    "ks_dow_fdr", "jsd_tokens_src", "collocations_pmi", "pii_scan",
-    "km_survival", "rp_project", "html_extract", "domain_cap_docs",
-    "bootstrap_ci_value", "snapshot_diff_docs", "allpairs_jaccard_05",
-    "pagerank_nations", "logreg_quality", "rolling_daily", "ewma_daily",
-    "anomaly_zscore_daily", "gap_fill_linear", "asof_join_daily",
-    "sessions_2h", "decompose_weekly", "cusum_shift", "rolling_corr_pair",
-    "binseg_daily", "corpus_prep_near", "token_topk",
-    "corpus_sketch_stats", "lm_perplexity", "pq_cosine_topk",
-    "semantic_dedup_gate", "bpe_roundtrip", "kalman_level_daily",
-    "nb_classify_lang", "verbatim_spans", "media_decode_png",
-    "garch_vol_daily", "fuzzy_source_pairs", "packed_sequences",
-    "ljung_box_daily", "scd2_order_status", "funnel_conversion",
-    "impute_event_values", "event_transitions", "multi_grain_rollup",
-    "forecast_accuracy_daily", "target_encode_source",
-    "dq_checks_lineitem", "mixture_plan", "bm25_topk",
-    "sessions_2h_streamed", "interval_join_streamed",
-    "media_decode_roundtrip", "corpus_prep", "granger_click_view",
-    "granger_lag1", "ccf_click_view", "acf_daily", "pacf_daily",
-    "describe_series", "forecast_linear_daily",
-    "forecast_saturating_daily", "forecast_quantiles",
-    "forecast_changepoint", "forecast_covariate", "forecast_exp_smoothing",
-    "dedup_exact_groups", "text_stats", "text_quality_by_source",
-    "doc_fingerprints", "lang_id", "ngram_jaccard_pairs", "dup_clusters",
-    "dup_clusters_lsh", "minhash_near_dups", "simhash_pairs",
-    "cosine_topk", "lsh_cosine_topk", "ivf_cosine_topk",
-    "embedding_near_dups", "embedding_near_dups_lsh", "media_features",
-    "media_resize", "media_frames", "revenue_by_nation_month",
-    "segment_daily_series", "lineitem_returnflag_week", "bucket_hour_sum",
-    "bucket_day_mean", "bucket_minute_sum", "bucket_week_sum",
-    "bucket_month_median", "bucket_day_all_aggs", "series_bounds",
-    "floor_cap", "bucket_counts", "align_covariate_left",
-    "align_covariate_inner", "coalesce_actuals", "future_grid_day",
-    "future_grid_month", "json_extract_props", "split_historical",
-    "split_future",
-    # -- r5-green window (CORRECTNESS_r05) --
-    "hits_nations", "zorder_events", "isotonic_lang", "triangles_nations",
-    "forecast_arma_daily", "poisson_rate_daily", "stump_events",
-    "gbt_stumps_events", "forest_stumps_events", "huber_value",
-    "ridge_value", "mi_features_lang", "ratio_ttest_ctr", "did_click_value",
-    "psm_att_click", "interval_scorecard", "conformal_daily", "cox_churn",
-    "rfm_users", "kcore_brands", "sp_nations", "readability_docs",
-    "tsb_error_hourly", "pca_embeddings", "dbscan_embeddings",
-    "forecast_arima_daily", "assoc_rules_brands", "anova_value_event_dow",
-    "logrank_click_view", "quantreg_value", "lpa_brands",
-    "als_brand_factors", "forecast_var_daily", "periodogram_daily",
-    "croston_error_hourly", "demand_class_hourly", "attribution_purchase",
-    "path_ngrams_events", "hilbert_events", "benford_prices",
-    "entity_resolution_parts", "mmr_rerank", "rmst_event_types",
-    "abc_brands_revenue", "hard_negatives", "dsir_select_src0",
-    "corpus_sample_uniform", "media_decode_jpeg", "dedup_streamed",
-    "heavy_hitters_streamed",
-    # -- r6-green window (CORRECTNESS_r06) --
-    "lm_perplexity_kn", "lm_perplexity_streamed", "media_decode_tiff",
-    "markov_stationary_events", "markov_absorption_events",
-    # -- r7-green window (CORRECTNESS_r07) --
-    "cms_user_counts", "bloom_probe_customers", "hll_distinct_users",
-    "hist_quantiles_prices", "profile_orders", "calendar_features_days",
-    "mann_kendall_daily", "seasonal_mann_kendall_daily", "normalize_docs",
-    "prophet_map_forecast", "skew_salted_agg", "media_decode_gif",
-    "media_decode_flac", "dtw_daily", "matrix_profile_daily", "gmm_value",
-    "hmm_regimes_daily", "haar_daily", "sax_daily", "lof_embeddings",
-    "friedman_user_event", "fisher_exact_clicks", "keyness_by_source",
-    "trend_test_daily", "wilcoxon_user_halves", "mantel_haenszel_users",
-    "spearman_docs", "mcnemar_user_halves", "residual_dw_jb",
-    "decomp_strength", "reconcile_topdown", "kendall_docs", "gains_table",
-    "pii_redact", "anomaly_seasonal_weekly", "cohort_retention_weekly",
-    "lag_features_daily", "rolling_distinct_users", "contamination_5gram",
-    "forecast_theta_daily", "sq8_codes", "media_probe",
-    "ks_click_view_dow", "mwu_chars_en_de", "chi2_event_dow",
-    "prop_ztest_dow", "psi_value_purchase_error", "welch_click_view_dow",
-    "kw_value_event_dow", "cuped_user_halves",
-    # -- r8-green window (CORRECTNESS_r08) — the final 50 first-timers;
-    # the fresh pool is now exhausted, so the r9 window re-verifies the
-    # _REVERIFY_PRIORITY gates first, then other green rows in order --
-    "acf_bartlett_daily", "adf_daily", "anomaly_robust_daily",
-    "asof_join_forward", "backtest_daily", "boxcox_value",
-    "bucket_hour_streamed", "c4_clean", "cdc_user_state",
-    "classifier_eval", "containment_pairs", "corpus_sample_k",
-    "corpus_sample_stratified", "corpus_split",
-    "detect_seasonality_daily", "doc_chunks", "embedding_outliers",
-    "forecast_ar_daily", "forecast_baselines_daily",
-    "forecast_ensemble_daily", "forecast_hw_daily",
-    "garch_forecast_daily", "gini_concentration", "gopher_filter",
-    "gopher_repetition", "hurst_hourly", "hybrid_rrf_topk",
-    "interval_join_hours", "ivfpq_cosine_topk", "kalman_forecast_daily",
-    "kappa_lang_raters", "key_skew_events", "kpss_daily",
-    "lm_perplexity_prune", "media_audio_spectrum", "media_exif",
-    "mixture_apply", "pii_scrub", "pool_embeddings", "quality_prune",
-    "residual_whiteness", "rolling_origin_daily",
-    "rolling_quantile_daily", "rolling_time_window",
-    "seq_patterns_events", "series_corr_daily", "tfidf_topk",
-    "ts_features_daily", "winsorize_daily", "woe_iv_events",
-)
-
-# Names whose engine contract AND oracle were rewritten in r7 (anchored
-# soundness+recall gate forms) after their driver-green rows were recorded
-# against the old contracts (ADVICE r7 item 1).  They stay in
-# _DRIVER_GREEN — the rotation-guard invariant is "every recorded-green
-# name is in the ledger" — but queries() sorts them FIRST within the green
-# section, so the moment the fresh pool is exhausted (expected r9, after
-# CORRECTNESS_r08 lands the final 50 first-timers) the driver window
-# re-verifies the rewritten gate forms before any other green row.
-_REVERIFY_PRIORITY = (
-    "minhash_near_dups", "simhash_pairs", "dup_clusters_lsh",
-    "embedding_near_dups_lsh", "corpus_prep_near", "semantic_dedup_gate",
-    # r9 contract conversions (VERDICT r8 item 2): the three
-    # O(n²)-by-contract rows rewritten as anchored linear forms.
-    "embedding_near_dups", "dbscan_embeddings", "lof_embeddings",
-)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDERING NOTE: the driver's correctness run samples the FIRST 50
-    # entries, so ordering is evidence rotation, not cosmetics. Queries
-    # that have never earned a driver-green row sort first: the r3
-    # additions the r3 sample missed, the 7 new round-4 operators
-    # (LM ×2, SemDeDup, BPE, Kalman ×2 — inserted where the r2-green
-    # pair used to sit), then the round-4 additions. Family variants
-    # whose sibling already holds an in-window slot (stratified vs
-    # uniform sampling, forward vs backward as-of, residual_whiteness
-    # vs ljung_box, gopher_repetition vs gopher_filter) yield their
-    # slot and sort just below the window for the r5 rotation. The
-    # bucket grains / grids / splits sort last: multiple green rows
-    # already.
-    #
-    # R5 ROTATION PLAN: once CORRECTNESS_r04 lands green rows for the
-    # current window, rotate those out and promote (in order) the
-    # late-round-4 additions directly below the window (hits_nations
-    # .. dbscan_embeddings — new families, zero driver rows), the
-    # continuation-session families (assoc_rules_brands,
-    # anova_value_event_dow, logrank_click_view, quantreg_value,
-    # lpa_brands, als_brand_factors, forecast_var_daily,
-    # periodogram_daily, croston_error_hourly, demand_class_hourly,
-    # attribution_purchase, path_ngrams_events, hilbert_events,
-    # benford_prices, entity_resolution_parts, mmr_rerank,
-    # rmst_event_types, abc_brands_revenue, hard_negatives), plus
-    # dsir_select_src0 / corpus_sample_uniform, then the remaining
-    # family variants.
-    base = {
-        # -- new this round-half: hypothesis tests + PMI. Three
-        # representatives take in-window slots (one keyed two-sample
-        # test, one categorical-drift score, one text-mining op); the
-        # four family siblings (mwu/chi2/prop/psi) sort just below the
-        # window for the r5 rotation — evidence diversity beats four
-        # more rows from the same family, and the slots they'd burn
-        # belong to the streaming-replay / retrieval / decontamination
-        # rows that have never had a driver row at all --
+    return {
         "ks_dow_fdr": q_ks_dow_fdr,
         "jsd_tokens_src": q_jsd_tokens_src,
         "collocations_pmi": q_collocations_pmi,
-        # -- new this session: PII scrubbing (llm/pii.py). The scan
-        # row (counts + native Luhn) takes the in-window slot;
-        # byte-parity redaction is its family sibling below the
-        # window. media_probe yields its slot (media family keeps
-        # media_decode_png in-window). --
         "pii_scan": q_pii_scan,
-        # -- new this session: Kaplan-Meier retention (survival.py).
-        # forecast_theta_daily yields its slot (the forecast family
-        # already holds driver-green rows from r3 plus
-        # forecast_accuracy_daily in-window). --
         "km_survival": q_km_survival,
-        # -- new this session: JL random projection (value-exact).
-        # sq8_codes yields its slot (compression family keeps
-        # pq_cosine_topk in-window). --
         "rp_project": q_rp_project,
-        # -- new this session: HTML->text extraction (byte-parity).
-        # anomaly_seasonal_weekly yields its slot (anomaly family
-        # keeps anomaly_zscore_daily in-window). --
         "html_extract": q_html_extract,
-        # -- new this session: per-domain caps (llm/urls.py).
-        # cohort_retention_weekly yields its slot (funnel family
-        # keeps funnel_conversion + event_transitions in-window). --
         "domain_cap_docs": q_domain_cap_docs,
-        # -- new this session: Poisson-bootstrap CI (the scale-native
-        # uncertainty operator). lag_features_daily yields its slot
-        # (feature-prep family keeps target_encode_source +
-        # impute_event_values in-window). --
         "bootstrap_ci_value": q_bootstrap_ci_value,
-        # -- new this session: snapshot versioning diff.
-        # rolling_distinct_users yields its slot (rolling family
-        # keeps rolling_daily/ewma/rolling_corr_pair in-window). --
         "snapshot_diff_docs": q_snapshot_diff_docs,
-        # -- new this session: exact all-pairs similarity (prefix
-        # filtering). contamination_5gram yields its slot
-        # (containment family keeps verbatim_spans in-window). --
         "allpairs_jaccard_05": q_allpairs_jaccard,
-        # -- new this session: PageRank link authority (graph.py).
-        # Takes an in-window slot; dsir_select_src0 yields (the
-        # corpus-selection family keeps corpus_sketch_stats and the
-        # sampling rows in-window). --
         "pagerank_nations": q_pagerank_nations,
-        # -- new this session: trainable LR quality classifier
-        # (llm.classify.logreg_train). corpus_sample_uniform yields
-        # its slot (the corpus-selection family keeps corpus_prep_near
-        # + corpus_sketch_stats in-window; sampling rotates in r5). --
         "logreg_quality": q_logreg_quality,
-        # -- never driver-checked (r3 additions; local-oracle green) --
         "rolling_daily": q_rolling_daily,
         "ewma_daily": q_ewma_daily,
         "anomaly_zscore_daily": q_anomaly_zscore_daily,
@@ -12984,9 +12795,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_prep_near": q_corpus_prep_near,
         "token_topk": q_token_topk,
         "corpus_sketch_stats": q_corpus_sketch_stats,
-        # -- new this round: n-gram LM perplexity (llm/lm.py) --
-        # (take the two in-window slots of the r2-green pair below,
-        # which already hold historical driver rows from round 2)
         "lm_perplexity": q_lm_perplexity,
         "lm_perplexity_kn": q_lm_perplexity_kn,
         "lm_perplexity_streamed": q_lm_perplexity_streamed,
@@ -12996,8 +12804,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kalman_level_daily": q_kalman_level_daily,
         "nb_classify_lang": q_nb_classify,
         "verbatim_spans": q_verbatim_spans,
-        # -- round-4 additions --
-        # (inserted here so they get driver rows on their first round)
         "media_decode_png": q_media_decode_png,
         "media_decode_tiff": q_media_decode_tiff,
         "garch_vol_daily": q_garch_vol_daily,
@@ -13018,17 +12824,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_topk": q_bm25_topk,
         "sessions_2h_streamed": q_sessions_2h_streamed,
         "interval_join_streamed": q_interval_join_streamed,
-        # (dsir / uniform-sampling yielded their in-window slots to
-        # pagerank_nations / logreg_quality; first candidates to
-        # rotate in for r5)
         "dsir_select_src0": q_dsir_select,
         "corpus_sample_uniform": q_corpus_sample_uniform,
-        # -- round-4 late-session additions (all local-oracle green in
-        # the full 179-query vanilla-session sweep, BASELINE.md note):
-        # FIRST candidates to rotate into the r5 window — none has a
-        # driver row yet and each opens a new family (graph ×3, layout,
-        # calibration, GLM ×2, trees ×3, ARMA, survival-regression,
-        # feature-ranking, readability, density clustering) --
         "hits_nations": q_hits_nations,
         "zorder_events": q_zorder_events,
         "isotonic_lang": q_isotonic_lang,
@@ -13152,7 +12949,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rolling_origin_daily": q_rolling_origin_daily,
         "backtest_daily": q_backtest_daily,
         "pool_embeddings": q_pool_embeddings,
-        # -- r3 driver-green --
         "granger_click_view": q_granger_click_view,
         "granger_lag1": q_granger_lag1,
         "ccf_click_view": q_ccf_click_view,
@@ -13216,10 +13012,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bloom_probe_customers": q_bloom_probe_customers,
         "haar_daily": q_haar_daily,
         "seq_patterns_events": q_seq_patterns_events,
-        # -- round-5 continuation: series-characterization battery
-        # (tsfeatures.py) + Box-Cox grid. Literal order puts these
-        # after the 50-entry r5 window: they queue for the r6
-        # rotation with the other post-window first-timers. --
         "sax_daily": q_sax_daily,
         "ts_features_daily": q_ts_features_daily,
         "hurst_hourly": q_hurst_hourly,
@@ -13235,33 +13027,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "media_decode_gif": q_media_decode_gif,
         "media_decode_flac": q_media_decode_flac,
     }
-    # Rotation: demote keys that already hold driver-green rows so the
-    # first 50 entries (the driver's sample window) are all first-timers.
-    green_set = set(_DRIVER_GREEN)
-    # Contract-rewritten gates lead the green section so they re-earn
-    # driver evidence first once the fresh pool is exhausted (ADVICE r7).
-    reverify = [k for k in _REVERIFY_PRIORITY if k in base and k in green_set]
-    green = reverify + [
-        k for k in base if k in green_set and k not in set(reverify)
-    ]
-    fresh = [k for k in base if k not in green_set]
-    # r7 priority promotion (VERDICT r6 item 1): whole families with zero
-    # driver evidence — sketches, profiling, trend tests, prophet MAP,
-    # skew salting, DTW/matrix profile, GMM/HMM, wavelets/SAX, LOF,
-    # GIF/FLAC codecs — jump the queue ahead of family siblings of
-    # already-green rows.
-    priority = [k for k in (
-        "cms_user_counts", "bloom_probe_customers", "hll_distinct_users",
-        "hist_quantiles_prices", "profile_orders", "calendar_features_days",
-        "mann_kendall_daily", "seasonal_mann_kendall_daily",
-        "normalize_docs", "prophet_map_forecast", "skew_salted_agg",
-        "media_decode_gif", "media_decode_flac", "dtw_daily",
-        "matrix_profile_daily", "gmm_value", "hmm_regimes_daily",
-        "haar_daily", "sax_daily", "lof_embeddings", "friedman_user_event",
-        "fisher_exact_clicks",
-    ) if k in fresh]
-    rest = [k for k in fresh if k not in set(priority)]
-    return {k: base[k] for k in priority + rest + green}
 
 
 _QUANTILE_FORECAST_ORACLE = f"""

@@ -188,22 +188,14 @@ def build_scaling_probes(spark):
 
 
 
-def run_analyze_bench(spark, skipped: dict[str, str]):
-    """B7: end-to-end /analyze semantics on electricity_demand.json.
-
-    Returns None, with the reason recorded in ``skipped``, when the
-    fixture is absent."""
-    import json as _json
-
+def run_analyze_bench(spark):
+    """B7: end-to-end /analyze semantics on the electricity request
+    (``tests/fixture_requests``: 5000 hourly rows, three correlations)."""
     from temporal_retriever_spark.api.models import parse_analyze_request
     from temporal_retriever_spark.pipeline import analyze
+    from tests.fixture_requests import electricity_body
 
-    fixture = "/root/reference/electricity_demand.json"
-    if not os.path.exists(fixture):
-        skipped["B7_analyze_e2e"] = f"fixture not found: {fixture}"
-        return None
-    body = _json.load(open(fixture))
-    req = parse_analyze_request(body)
+    req = parse_analyze_request(electricity_body())
     # one untimed warm-up (Python-worker spin-up + plan compile dominate
     # the cold run), then median of RUNS like every other query
     analyze(spark, req, lags=10)
@@ -266,7 +258,6 @@ def main() -> None:
     runs: dict[str, list[float]] = {}
     loads: dict[str, list[float]] = {}
     retries: dict[str, dict] = {}
-    skipped: dict[str, str] = {}
 
     def _timed(build):
         pre = _load1()
@@ -305,15 +296,11 @@ def main() -> None:
         loads[name] = sample_loads
         print(f"# {name}: {times[name]}s (runs: {[round(s,2) for s in samples]}, "
               f"load1: {sample_loads})", file=sys.stderr)
-    b7 = run_analyze_bench(spark, skipped)
-    for name, why in skipped.items():
-        print(f"# WARNING: {name} skipped: {why}", file=sys.stderr)
-    if b7 is not None:
-        med, samples = b7
-        times["B7_analyze_e2e"] = round(med, 3)
-        runs["B7_analyze_e2e"] = [round(s, 3) for s in samples]
-        print(f"# B7_analyze_e2e: {times['B7_analyze_e2e']}s "
-              f"(runs: {[round(s,2) for s in samples]})", file=sys.stderr)
+    med, samples = run_analyze_bench(spark)
+    times["B7_analyze_e2e"] = round(med, 3)
+    runs["B7_analyze_e2e"] = [round(s, 3) for s in samples]
+    print(f"# B7_analyze_e2e: {times['B7_analyze_e2e']}s "
+          f"(runs: {[round(s,2) for s in samples]})", file=sys.stderr)
     # CPU-scaling probes: separate section, never in "queries" / "value"
     # (the driver contract forbids renaming/removing entries and compares
     # totals round-over-round; these exist so the c8/c32 artifact pair has
@@ -350,7 +337,6 @@ def main() -> None:
         "runs": runs,
         "loads": loads,
         "outlier_retries": retries,
-        "skipped": skipped,
         "loadavg": {**load_info, "load1_end": _load1()},
         "scaling": scaling,
         "sf": sf_val,

@@ -24,8 +24,10 @@ Two backends:
   which leave through one ``inline``. One shuffle, no join, no window;
   every float sum runs in one fixed order at any partitioning, and
   nothing leaves the JVM. Fully DuckDB-oracle-able. The changepoint
-  variants below still fit relationally and broadcast their
-  per-series fit frames.
+  variants (``fit_changepoint_trend``, ``forecast_changepoint``,
+  ``forecast_covariate_changepoint``) are the same program with a
+  piecewise ridge trend: one fold builds its Gram matrix and
+  ``_spd_solve_sql`` solves it by Cholesky in SQL.
 
 * **prophet** (optional, parity path): grouped pandas UDF, one Prophet
   fit per series — the reference's exact library. Gated behind an
@@ -47,7 +49,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from temporal_retriever_spark.aggregate import floor_ceiling_aggs
-from temporal_retriever_spark.align import future_grid, grid_tick_sql
+from temporal_retriever_spark.align import grid_tick_sql
 from temporal_retriever_spark.grains import normalize_grain
 
 #: grain -> seasonal key SQL over a ``ds`` expression (W: no seasonality)
@@ -180,14 +182,16 @@ def _inline_predictions(
     *,
     series_cols: list[str],
     ts_col: str,
+    grain: str,
     rows_sql: str,
-    point_sql: str,
+    fitted_sql: str,
     bands: Iterable[str],
     extra: Iterable[str] = (),
     clamp: bool = False,
 ) -> DataFrame:
     """One output row per element ``e`` of ``rows_sql``: ``ts_col`` from
-    ``e.ds``, yhat = ``point_sql`` and band i = yhat + ``_q[i]``
+    ``e.ds``, yhat = ``fitted_sql`` plus the seasonal mean of ``e.ds``'s
+    key (0 when the key has none), and band i = yhat + ``_q[i]``
     (missing quantiles count 0), clamped into [floor, cap] when asked."""
     c = (lambda x: f"least(greatest({x}, `floor`), `cap`)") if clamp else (lambda x: x)
     name = ts_col.replace("'", "\\'")
@@ -196,10 +200,54 @@ def _inline_predictions(
         f"'{b}', {c(f'_y + coalesce(_q[{i}], 0D)')}" for i, b in enumerate(bands)
     ]
     fields += [f"'{x}', {x}" for x in extra]
+    point = f"{fitted_sql} + coalesce(_smap[{_seasonal_key_sql('e.ds', grain)}], 0D)"
     return frame.selectExpr(
         *map(_ident, series_cols),
-        f"inline(transform({rows_sql}, e -> transform(array({point_sql}), "
+        f"inline(transform({rows_sql}, e -> transform(array({point}), "
         f"_y -> named_struct({', '.join(fields)}))[0]))",
+    )
+
+
+def _with_residuals(frame: DataFrame, rows: str, grain: str, fitted_sql: str) -> DataFrame:
+    """``_r``: (seasonal key, y − ``fitted_sql``) per element ``e`` of
+    ``rows``, the input of ``_season_and_quantiles``."""
+    return frame.selectExpr(
+        "*",
+        f"transform({rows}, e -> named_struct('k', {_seasonal_key_sql('e.ds', grain)}, "
+        f"'r', e.y - ({fitted_sql}))) AS _r",
+    )
+
+
+def _history_and_future_sql(grain: str, ds_type: str, include_history: bool) -> str:
+    """The prediction rows: the collected history ``_p`` (when asked)
+    followed by the ``_h`` future buckets."""
+    rows = f"transform({_future_ds_sql(grain, ds_type)}, d -> named_struct('ds', d))"
+    if include_history:
+        rows = f"concat(transform(_p, r -> named_struct('ds', r.ds)), {rows})"
+    return rows
+
+
+def _collect_series(
+    df: DataFrame,
+    *,
+    series_cols: list[str],
+    ts_col: str,
+    value_col: str,
+    cov_col: str | None = None,
+    extra_aggs: Iterable[Column] = (),
+) -> DataFrame:
+    """One row per series: its rows as the (t, y, ds[, x])-sorted array
+    ``_p``, ``n_buckets`` (non-null y) and ``max_ds``."""
+    ds, y = _ident(ts_col), _ident(value_col)
+    x = "" if cov_col is None else f", CAST({_ident(cov_col)} AS DOUBLE) AS x"
+    return df.groupBy(*series_cols).agg(
+        F.expr(
+            f"sort_array(collect_list(struct({_time_index_sql(ds)} AS t, "
+            f"CAST({y} AS DOUBLE) AS y, {ds} AS ds{x})))"
+        ).alias("_p"),
+        F.count(value_col).alias("n_buckets"),
+        F.max(ts_col).alias("max_ds"),
+        *extra_aggs,
     )
 
 
@@ -217,7 +265,6 @@ def _linear_seasonal_program(
     (``b``, ``my``, ``mt``), the (t, y, ds)-sorted rows ``_p``, the
     seasonal means ``_seasonal``/``_smap`` and the residual quantiles
     ``_q`` — the whole ``fit_linear_seasonal`` as one aggregation."""
-    ds, y = _ident(ts_col), _ident(value_col)
     n = "CAST(n_buckets AS DOUBLE)"
     # OLS from explicit sums rather than regr_slope/regr_intercept: the
     # closed form over sums is reproducible bit for bit across engines
@@ -226,14 +273,12 @@ def _linear_seasonal_program(
     # order, and that last-ulp drift once flipped 6-decimal grid values
     # across runs. A NULL term adds +0.0 where SUM skipped the row, and
     # n_buckets counts non-null y only.
-    grouped = df.groupBy(*series_cols).agg(
-        F.expr(
-            f"sort_array(collect_list(struct({_time_index_sql(ds)} AS t, "
-            f"CAST({y} AS DOUBLE) AS y, {ds} AS ds)))"
-        ).alias("_p"),
-        F.count(value_col).alias("n_buckets"),
-        F.max(ts_col).alias("max_ds"),
-        *extra_aggs,
+    grouped = _collect_series(
+        df,
+        series_cols=series_cols,
+        ts_col=ts_col,
+        value_col=value_col,
+        extra_aggs=extra_aggs,
     )
     gram = grouped.selectExpr(
         "*",
@@ -252,12 +297,10 @@ def _linear_seasonal_program(
         f"ELSE (_g.sty - _g.st * _g.sy / {n}) / ({den}) END AS b",
         f"_g.sy / {n} AS my",
         f"_g.st / {n} AS mt",
-    ).selectExpr(
-        "*",
-        f"transform(_p, r -> named_struct('k', {_seasonal_key_sql('r.ds', grain)}, "
-        f"'r', r.y - (my + b * (r.t - mt)))) AS _r",
     )
-    return _season_and_quantiles(trend, quantiles)
+    return _season_and_quantiles(
+        _with_residuals(trend, "_p", grain, "my + b * (e.t - mt)"), quantiles
+    )
 
 
 def fit_linear_seasonal(
@@ -326,19 +369,13 @@ def _forecast_linear_seasonal(
         ),
         horizon,
     )
-    ds_type = dict(df.dtypes)[ts_col]
-    rows = f"transform({_future_ds_sql(grain, ds_type)}, d -> named_struct('ds', d))"
-    if include_history:
-        rows = f"concat(transform(_p, r -> named_struct('ds', r.ds)), {rows})"
     return _inline_predictions(
         fit,
         series_cols=series_cols,
         ts_col=ts_col,
-        rows_sql=rows,
-        point_sql=(
-            f"my + b * ({_time_index_sql('e.ds')} - mt) "
-            f"+ coalesce(_smap[{_seasonal_key_sql('e.ds', grain)}], 0D)"
-        ),
+        grain=grain,
+        rows_sql=_history_and_future_sql(grain, dict(df.dtypes)[ts_col], include_history),
+        fitted_sql=f"my + b * ({_time_index_sql('e.ds')} - mt)",
         bands=bands,
         clamp=caps is not None,
     )
@@ -422,6 +459,77 @@ def _equi_join_sql(keys: str, bounds: str, row_sql: str) -> str:
     )
 
 
+def _covariate_history(
+    target: DataFrame,
+    covariate_pred: DataFrame,
+    *,
+    series_cols: list[str],
+    ts_col: str,
+    value_col: str,
+    cov_col: str,
+) -> DataFrame:
+    """One row per series of the target and covariate rows, unioned and
+    grouped once: the ds-sorted covariate rows ``_cv``, the history
+    inner-joined to them (J3: the reference inner-joins history ×
+    covariate, app.py:171-188) as the (t, y, x, ds)-sorted ``_j``, and
+    that history's ``n_buckets`` and ``max_ds``. The covariate ``ds`` is
+    read as the target's type."""
+    ds, y, x = _ident(ts_col), _ident(value_col), _ident(cov_col)
+    ds_type = dict(target.dtypes)[ts_col]
+    series = [_ident(c) for c in series_cols]
+    # NULL keys never match in the inner joins
+    keyed = " AND ".join(f"{c} IS NOT NULL" for c in [*series, ds])
+    sides = target.where(keyed).selectExpr(
+        *series,
+        f"named_struct('ds', {ds}, 'y', CAST({y} AS DOUBLE)) AS _tg",
+        f"CAST(NULL AS STRUCT<ds: {ds_type}, cov: DOUBLE>) AS _cv",
+    ).unionByName(
+        covariate_pred.where(keyed).selectExpr(
+            *series,
+            f"CAST(NULL AS STRUCT<ds: {ds_type}, y: DOUBLE>) AS _tg",
+            f"named_struct('ds', CAST({ds} AS {ds_type}), 'cov', CAST({x} AS DOUBLE)) AS _cv",
+        )
+    )
+    grouped = sides.groupBy(*series_cols).agg(
+        F.expr("sort_array(collect_list(_tg))").alias("_tg"),
+        F.expr("sort_array(collect_list(_cv))").alias("_cv"),
+    )
+    tg_ds, cv_ds = "transform(_tg, e -> e.ds)", "transform(_cv, c -> c.ds)"
+    # the joined history, sorted so the moment folds have one order
+    return grouped.selectExpr(
+        "*", f"{_match_bounds_sql(tg_ds, cv_ds)} AS _jb"
+    ).selectExpr(
+        "*",
+        "array_sort("
+        + _equi_join_sql(
+            "_tg",
+            "_jb",
+            f"named_struct('t', {_time_index_sql('d.ds')}, 'y', d.y, 'x', c.cov, 'ds', d.ds)",
+        )
+        + ") AS _j",
+    ).selectExpr(
+        "*",
+        "CAST(size(filter(_j, e -> e.y IS NOT NULL)) AS BIGINT) AS n_buckets",
+        "array_max(transform(_j, e -> e.ds)) AS max_ds",
+    )
+
+
+def _covariate_rows(fit: DataFrame, grain: str, ds_type: str) -> tuple[DataFrame, str]:
+    """``fit`` with the ``_h`` future buckets matched against ``_cv``
+    (J3: the future grid takes its covariate values by inner join too,
+    app.py:180-188), and the prediction rows (ds, x) it feeds: the
+    joined history, then the joined future."""
+    future = fit.selectExpr("*", f"{_future_ds_sql(grain, ds_type)} AS _fk").selectExpr(
+        "*", f"{_match_bounds_sql('_fk', 'transform(_cv, c -> c.ds)')} AS _fb"
+    )
+    rows = (
+        "concat(transform(_j, e -> named_struct('ds', e.ds, 'x', e.x)), "
+        + _equi_join_sql("_fk", "_fb", "named_struct('ds', d, 'x', c.cov)")
+        + ")"
+    )
+    return future, rows
+
+
 def forecast_with_covariate(
     target: DataFrame,
     covariate_pred: DataFrame,
@@ -462,8 +570,9 @@ def forecast_with_covariate(
 
     Plan: the target and covariate rows are unioned and grouped ONCE
     per series; the history × covariate and future-grid × covariate
-    inner joins run inside that row as sorted-array merges, so the
-    whole forecast is one exchange over its inputs.
+    inner joins run inside that row as sorted-array merges
+    (``_covariate_history``, ``_covariate_rows``), so the whole
+    forecast is one exchange over its inputs.
     ``materialize_covariate=True`` / ``materialize_history=True``
     localCheckpoint the covariate / target frame first. Each input is
     read once, so a checkpoint only pays when that input's own plan is
@@ -476,39 +585,13 @@ def forecast_with_covariate(
         covariate_pred = covariate_pred.localCheckpoint(eager=True)
     if materialize_history:
         target = target.localCheckpoint(eager=True)
-    ds, y, x = _ident(ts_col), _ident(value_col), _ident(cov_col)
-    ds_type = dict(target.dtypes)[ts_col]
-    series = [_ident(c) for c in series_cols]
-    # NULL keys never match in the inner joins
-    keyed = " AND ".join(f"{c} IS NOT NULL" for c in [*series, ds])
-    sides = target.where(keyed).selectExpr(
-        *series,
-        f"named_struct('ds', {ds}, 'y', CAST({y} AS DOUBLE)) AS _tg",
-        f"CAST(NULL AS STRUCT<ds: {ds_type}, cov: DOUBLE>) AS _cv",
-    ).unionByName(
-        covariate_pred.where(keyed).selectExpr(
-            *series,
-            f"CAST(NULL AS STRUCT<ds: {ds_type}, y: DOUBLE>) AS _tg",
-            f"named_struct('ds', CAST({ds} AS {ds_type}), 'cov', CAST({x} AS DOUBLE)) AS _cv",
-        )
-    )
-    grouped = sides.groupBy(*series_cols).agg(
-        F.expr("sort_array(collect_list(_tg))").alias("_tg"),
-        F.expr("sort_array(collect_list(_cv))").alias("_cv"),
-    )
-    tg_ds, cv_ds = "transform(_tg, e -> e.ds)", "transform(_cv, c -> c.ds)"
-    # the joined history, sorted so the moment fold has one order
-    joined = grouped.selectExpr(
-        "*", f"{_match_bounds_sql(tg_ds, cv_ds)} AS _jb"
-    ).selectExpr(
-        "*",
-        "array_sort("
-        + _equi_join_sql(
-            "_tg",
-            "_jb",
-            f"named_struct('t', {_time_index_sql('d.ds')}, 'y', d.y, 'x', c.cov, 'ds', d.ds)",
-        )
-        + ") AS _j",
+    joined = _covariate_history(
+        target,
+        covariate_pred,
+        series_cols=series_cols,
+        ts_col=ts_col,
+        value_col=value_col,
+        cov_col=cov_col,
     )
     # Frisch-Waugh partial regression from ONE fold of raw moments: the
     # detrended-residual coef expands into centered moments
@@ -524,8 +607,6 @@ def forecast_with_covariate(
     moments = joined.selectExpr(
         "*",
         f"aggregate(_j, named_struct({zero}), (a, e) -> named_struct({step})) AS _m",
-        "CAST(size(filter(_j, e -> e.y IS NOT NULL)) AS BIGINT) AS n_buckets",
-        "array_max(transform(_j, e -> e.ds)) AS max_ds",
     )
     n = "CAST(n_buckets AS DOUBLE)"
     stt_c = f"(_m.stt - _m.st * _m.st / {n})"
@@ -545,34 +626,27 @@ def forecast_with_covariate(
     )
     coef_den = f"(_m.sxx - _m.sx * _m.sx / {n}) - 2 * b_x * {sxt_c} + b_x * b_x * {stt_c}"
     model = "my + b_y * ({t} - mt) + coef * ({x} - (mx + b_x * ({t} - mt)))"
-    fit = slopes.selectExpr(
-        "*",
-        f"CASE WHEN {coef_den} = 0 THEN 0D ELSE ({coef_num}) / ({coef_den}) END AS coef",
-    ).selectExpr(
-        "*",
-        f"transform(_j, e -> named_struct('k', {_seasonal_key_sql('e.ds', grain)}, "
-        f"'r', e.y - ({model.format(t='e.t', x='e.x')}))) AS _r",
+    fit = _with_residuals(
+        slopes.selectExpr(
+            "*",
+            f"CASE WHEN {coef_den} = 0 THEN 0D ELSE ({coef_num}) / ({coef_den}) END AS coef",
+        ),
+        "_j",
+        grain,
+        model.format(t="e.t", x="e.x"),
     )
-    fit = _with_horizon(
-        _season_and_quantiles(fit, quantiles if include_bounds else None), horizon
-    ).selectExpr("*", f"{_future_ds_sql(grain, ds_type)} AS _fk")
-    # J3: the future grid takes its covariate values by inner join too
-    future = fit.selectExpr("*", f"{_match_bounds_sql('_fk', cv_ds)} AS _fb")
-    rows = (
-        "concat(transform(_j, e -> named_struct('ds', e.ds, 'x', e.x)), "
-        + _equi_join_sql("_fk", "_fb", "named_struct('ds', d, 'x', c.cov)")
-        + ")"
+    future, rows = _covariate_rows(
+        _with_horizon(_season_and_quantiles(fit, quantiles if include_bounds else None), horizon),
+        grain,
+        dict(target.dtypes)[ts_col],
     )
-    t = _time_index_sql("e.ds")
     return _inline_predictions(
         future,
         series_cols=series_cols,
         ts_col=ts_col,
+        grain=grain,
         rows_sql=rows,
-        point_sql=(
-            f"{model.format(t=t, x='e.x')} "
-            f"+ coalesce(_smap[{_seasonal_key_sql('e.ds', grain)}], 0D)"
-        ),
+        fitted_sql=model.format(t=_time_index_sql("e.ds"), x="e.x"),
         bands=("yhat_lower", "yhat_upper") if include_bounds else (),
         extra=("coef",),
     )
@@ -632,9 +706,9 @@ def changepoint1_stages(lam: float) -> list[tuple[str, str]]:
     Inputs: Gram sums ``g0_0 g0_1 g0_2 g1_1 g1_2 g2_2`` and moment
     vector ``v0 v1 v2`` for features [1, u, max(0, u − 0.8·span)].
     Ridge adds λ only to the hinge coordinate (Prophet penalizes only
-    the changepoint deltas), then Cramer's rule gives β. The same
-    strings drive the Spark plan and the DuckDB oracle, so the two
-    engines perform identical arithmetic downstream of the sums.
+    the changepoint deltas), then Cramer's rule gives β. The DuckDB
+    oracle of ``forecast_changepoint`` chains these strings; the
+    engine's ``_spd_solve_sql`` is checked against them in the tests.
     """
     return [
         ("a22", f"g2_2 + {float(lam)!r}"),
@@ -652,18 +726,110 @@ def changepoint1_stages(lam: float) -> list[tuple[str, str]]:
     ]
 
 
-def _changepoint_feature_exprs(
-    n_changepoints: int, cov_col: str | None
-) -> list[Column]:
-    """Feature columns over ``_t``/``t0``/``t1``: [1, u, hinges..., cov?]."""
-    u = F.col("_t") - F.col("t0")
-    span = F.col("t1") - F.col("t0")
-    feats = [F.lit(1.0), u]
-    for frac in changepoint_fractions(n_changepoints):
-        feats.append(F.greatest(F.lit(0.0), u - F.lit(frac) * span))
-    if cov_col is not None:
-        feats.append(F.col(cov_col))
-    return feats
+def _dot_sql(x: str, y: str) -> str:
+    """Σ x[k]·y[k] over two equal-length arrays, in index order."""
+    return f"aggregate(zip_with({x}, {y}, (l, r) -> l * r), 0D, (s, m) -> s + m)"
+
+
+def _spd_solve_sql(a: str, v: str) -> str:
+    """x with A·x = v, for ``a`` a symmetric positive-definite p×p
+    matrix as a flat row-major array<double> and ``v`` an
+    array<double> of p.
+
+    Cholesky A = L·Lᵀ, then L·z = v and Lᵀ·x = z, each ONE ``aggregate``
+    fold over ``sequence(0, p-1)`` with p read off ``size(v)``, so the
+    plan text is the same for every p. Cholesky step j rewrites column j
+    of the flat array from the columns before it; the strict upper
+    triangle keeps A's entries, which the substitutions never read.
+    NULL when a pivot is not positive and finite: A is singular or not
+    positive-definite in floating point, or holds NULL or NaN."""
+    row = lambda i, n: f"slice(L, ({i}) * p + 1, {n})"  # noqa: E731
+    chol = (
+        f"aggregate(sequence(0, p - 1), {a}, (L, j) -> transform(array("
+        f"L[j * p + j] - {_dot_sql(row('j', 'j'), row('j', 'j'))}), d -> "
+        # NaN orders above +Infinity in Spark SQL, so it fails this test
+        f"CASE WHEN d > 0D AND d < CAST('Infinity' AS DOUBLE) THEN "
+        f"transform(L, (e, i) -> CASE WHEN i % p != j OR i div p < j THEN e "
+        f"WHEN i div p = j THEN sqrt(d) "
+        f"ELSE (e - {_dot_sql(row('i div p', 'j'), row('j', 'j'))}) / sqrt(d) END) "
+        f"END)[0])"
+    )
+    forward = (
+        f"aggregate(sequence(0, p - 1), CASE WHEN L IS NOT NULL THEN {v} END, "
+        f"(z, i) -> transform(z, (e, k) -> CASE WHEN k = i "
+        f"THEN (e - {_dot_sql(row('i', 'i'), 'slice(z, 1, i)')}) / L[i * p + i] "
+        f"ELSE e END))"
+    )
+    # column i of L below the diagonal, in row order
+    below = "filter(L, (w, n) -> n % p = i AND n div p > i)"
+    back = (
+        f"aggregate(sequence(0, p - 1), z, (x, q) -> transform(array(p - 1 - q), "
+        f"i -> transform(x, (e, k) -> CASE WHEN k = i "
+        f"THEN (e - {_dot_sql(below, 'slice(x, i + 2, p - 1 - i)')}) / L[i * p + i] "
+        f"ELSE e END))[0])"
+    )
+    return (
+        f"transform(array(size({v})), p -> transform(array({chol}), "
+        f"L -> transform(array({forward}), z -> {back})[0])[0])[0]"
+    )
+
+
+def _with_ridge_trend(
+    frame: DataFrame,
+    rows: str,
+    *,
+    n_changepoints: int,
+    changepoint_prior_scale: float,
+    with_cov: bool,
+) -> DataFrame:
+    """Add the changepoint trend fit of the t-sorted ``rows`` (elements
+    with ``t``, ``y`` and, ``with_cov``, ``x``): ``t0``/``t1`` (the time
+    range over all rows), ``_c`` (the hinges' offsets from t0) and
+    ``beta``, the ridge solution over [1, u, hinges..., x?].
+
+    One fold over the rows builds the flat p×p Gram matrix and the
+    moment vector, each entry a ``Sum``: it starts from NULL and skips
+    NULL terms, so Gram terms count every row and moment terms skip
+    NULL y; ``_spd_solve_sql`` solves the system."""
+    if n_changepoints < 1:
+        raise ValueError("n_changepoints must be >= 1")
+    p = n_changepoints + 2 + int(with_cov)
+    lam = 1.0 / float(changepoint_prior_scale)
+    fracs = ", ".join(f"{f!r}D" for f in changepoint_fractions(n_changepoints))
+    feats = "concat(array(1D, u), transform(_c, c -> greatest(0D, u - c))"
+    feats += ", array(r.x))" if with_cov else ")"
+    nulls = "array_repeat(CAST(NULL AS DOUBLE), {})".format
+    gram = frame.selectExpr(
+        "*",
+        f"array_min(transform({rows}, r -> r.t)) AS t0",
+        f"array_max(transform({rows}, r -> r.t)) AS t1",
+    ).selectExpr(
+        "*", f"transform(array({fracs}), f -> f * (t1 - t0)) AS _c"
+    ).selectExpr(
+        "*",
+        f"aggregate({rows}, named_struct('g', {nulls(p * p)}, 'v', {nulls(p)}), "
+        f"(a, r) -> transform(array(r.t - t0), u -> transform(array({feats}), "
+        f"x -> named_struct("
+        f"'g', transform(a.g, (s, i) -> {_sum_sql('s', f'x[i div {p}] * x[i % {p}]')}), "
+        f"'v', transform(a.v, (s, i) -> {_sum_sql('s', 'x[i] * r.y')})))[0])[0]) AS _g",
+    )
+    # Prophet penalizes only the changepoint deltas: λ = 1/τ on the
+    # hinges' diagonal, the intercept, slope and covariate stay free
+    ridge = (
+        f"transform(_g.g, (s, i) -> CASE WHEN i div {p} = i % {p} "
+        f"AND i % {p} BETWEEN 2 AND {n_changepoints + 1} THEN s + {lam!r}D ELSE s END)"
+    )
+    return gram.selectExpr("*", f"{_spd_solve_sql(ridge, '_g.v')} AS beta")
+
+
+def _ridge_trend_sql(t: str) -> str:
+    """The fitted trend at time index ``t``: β0 + β1·u + Σ δ_j·max(0,
+    u − c_j) with u = t − t0, summed left to right; NULL without a
+    fit."""
+    return (
+        f"transform(array({t} - t0), u -> aggregate(sequence(0, size(_c) - 1), "
+        f"beta[0] + beta[1] * u, (s, j) -> s + beta[j + 2] * greatest(0D, u - _c[j])))[0]"
+    )
 
 
 def fit_changepoint_trend(
@@ -675,7 +841,6 @@ def fit_changepoint_trend(
     ts_col: str = "ds",
     value_col: str = "y",
     cov_col: str | None = None,
-    solver: str = "numpy",
 ) -> DataFrame:
     """Piecewise-linear trend fit — the native Prophet-trend analog.
 
@@ -691,97 +856,26 @@ def fit_changepoint_trend(
     ``changepoint_prior_scale`` ⇒ weaker penalty ⇒ more flexible trend.
     β0, β1 and the optional covariate coefficient are unpenalized.
 
-    Distributed shape: ONE aggregation computes the per-series Gram
-    matrix + moment vector (p(p+3)/2 sums, p = n_changepoints + 2
-    [+1 with cov]); the p×p solve then runs on the one-row-per-series
-    aggregate — ``solver="numpy"`` via mapInPandas (Python touches p²
-    numbers per series, never the row stream), ``solver="stages"``
-    (n_changepoints=1, no cov) as native Cramer expressions shared
-    verbatim with the DuckDB oracle (``changepoint1_stages``).
+    Distributed shape: the per-series array program of
+    ``forecast_changepoint`` — one groupBy(series) collects the sorted
+    rows, one fold over them builds the p×p Gram matrix and moment
+    vector (p = n_changepoints + 2 [+1 with cov]) and ``_spd_solve_sql``
+    solves the system by Cholesky; this is a projection of it.
 
-    Output: series_cols, t0, t1, max_ds, n_buckets,
-    beta array<double> (+ ``coef`` alias of the cov coefficient).
+    Output: series_cols, t0, t1, max_ds, n_buckets, beta array<double>
+    (NULL when the penalized Gram matrix is singular, e.g. one bucket).
     """
     series_cols = list(series_cols)
-    if n_changepoints < 1:
-        raise ValueError("n_changepoints must be >= 1")
-    lam = 1.0 / float(changepoint_prior_scale)
-    base = df.withColumn("_t", _time_index(F.col(ts_col)))
-    rng = base.groupBy(*series_cols).agg(
-        F.min("_t").alias("t0"),
-        F.max("_t").alias("t1"),
-        F.max(ts_col).alias("max_ds"),
-        F.count(value_col).alias("n_buckets"),
+    fit = _with_ridge_trend(
+        _collect_series(
+            df, series_cols=series_cols, ts_col=ts_col, value_col=value_col, cov_col=cov_col
+        ),
+        "_p",
+        n_changepoints=n_changepoints,
+        changepoint_prior_scale=changepoint_prior_scale,
+        with_cov=cov_col is not None,
     )
-    b2 = base.join(F.broadcast(rng), on=series_cols)
-    feats = _changepoint_feature_exprs(n_changepoints, cov_col)
-    p = len(feats)
-    aggs = []
-    for i in range(p):
-        for j in range(i, p):
-            aggs.append(F.sum(feats[i] * feats[j]).alias(f"g{i}_{j}"))
-        aggs.append(F.sum(feats[i] * F.col(value_col)).alias(f"v{i}"))
-    gram = b2.groupBy(*series_cols, "t0", "t1", "max_ds", "n_buckets").agg(*aggs)
-
-    key_cols = [*series_cols, "t0", "t1", "max_ds", "n_buckets"]
-    if solver == "stages":
-        if n_changepoints != 1 or cov_col is not None:
-            raise ValueError(
-                "solver='stages' supports exactly one changepoint, no covariate"
-            )
-        cur = gram
-        for name, expr in changepoint1_stages(lam):
-            cur = cur.withColumn(name, F.expr(expr))
-        return cur.select(
-            *key_cols,
-            F.array(F.col("beta0"), F.col("beta1"), F.col("beta2")).alias("beta"),
-        )
-    if solver != "numpy":
-        raise ValueError(f"unknown solver: {solver!r}")
-
-    import numpy as np
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
-
-    penalty = np.zeros(p)
-    penalty[2 : 2 + n_changepoints] = lam
-    gram_schema = gram.schema
-    out_schema = StructType(
-        [gram_schema[c] for c in key_cols]
-        + [StructField("beta", ArrayType(DoubleType()))]
-    )
-
-    def solve(batches):
-        for pdf in batches:
-            betas = []
-            for _, row in pdf.iterrows():
-                a = np.empty((p, p))
-                v = np.empty(p)
-                for i in range(p):
-                    v[i] = row[f"v{i}"]
-                    for j in range(i, p):
-                        a[i, j] = a[j, i] = row[f"g{min(i, j)}_{max(i, j)}"]
-                a[np.diag_indices_from(a)] += penalty
-                try:
-                    betas.append(np.linalg.solve(a, v).tolist())
-                except np.linalg.LinAlgError:
-                    betas.append(None)
-            out = pdf[key_cols].copy()
-            out["beta"] = betas
-            yield out
-
-    return gram.mapInPandas(solve, out_schema)
-
-
-def changepoint_trend_expr(n_changepoints: int) -> Column:
-    """Trend value at ``_t`` given joined fit columns t0/t1/beta."""
-    u = F.col("_t") - F.col("t0")
-    span = F.col("t1") - F.col("t0")
-    trend = F.col("beta")[0] + F.col("beta")[1] * u
-    for j, frac in enumerate(changepoint_fractions(n_changepoints)):
-        trend = trend + F.col("beta")[2 + j] * F.greatest(
-            F.lit(0.0), u - F.lit(frac) * span
-        )
-    return trend
+    return fit.select(*series_cols, "t0", "t1", "max_ds", "n_buckets", "beta")
 
 
 def forecast_changepoint(
@@ -797,78 +891,37 @@ def forecast_changepoint(
     include_history: bool = True,
     include_bounds: bool = True,
     quantiles: tuple[float, float] = (0.05, 0.95),
-    solver: str = "numpy",
 ) -> DataFrame:
     """W3 with the piecewise changepoint trend + seasonal + bands.
 
-    Same assembly as ``forecast_linear_seasonal`` — seasonal component
-    and residual-quantile bands computed on the changepoint-detrended
-    residual; the future grid extrapolates with the final slope
-    β1 + Σδ (hinge features keep growing past the last changepoint,
-    exactly Prophet's fixed-delta future trend).
+    The ``forecast_linear_seasonal`` program with the trend of
+    ``fit_changepoint_trend``: seasonal component and residual-quantile
+    bands come from the changepoint-detrended residual; the future grid
+    extrapolates with the final slope β1 + Σδ (hinge features keep
+    growing past the last changepoint, exactly Prophet's fixed-delta
+    future trend). One exchange, no join, no Python.
+    Output: series, ds, yhat[, yhat_lower, yhat_upper].
     """
     series_cols = list(series_cols)
-    params = fit_changepoint_trend(
-        df,
+    fit = _with_ridge_trend(
+        _collect_series(df, series_cols=series_cols, ts_col=ts_col, value_col=value_col),
+        "_p",
         n_changepoints=n_changepoints,
         changepoint_prior_scale=changepoint_prior_scale,
+        with_cov=False,
+    )
+    fit = _season_and_quantiles(
+        _with_residuals(fit, "_p", grain, _ridge_trend_sql("e.t")),
+        quantiles if include_bounds else None,
+    )
+    return _inline_predictions(
+        _with_horizon(fit, horizon),
         series_cols=series_cols,
         ts_col=ts_col,
-        value_col=value_col,
-        solver=solver,
-    )
-    trend = changepoint_trend_expr(n_changepoints)
-    hist = (
-        df.withColumn("_t", _time_index(F.col(ts_col)))
-        .withColumn("_skey", seasonal_key_expr(ts_col, grain))
-        .join(F.broadcast(params.drop("max_ds", "n_buckets")), on=series_cols)
-        .withColumn("_r", F.col(value_col) - trend)
-    )
-    seasonal = hist.groupBy(*series_cols, "_skey").agg(
-        (F.sum("_r") / F.count("_r").cast("double")).alias("s_mean")
-    )
-    residual_q = None
-    if include_bounds:
-        lo_q, hi_q = quantiles
-        deseason = hist.join(
-            F.broadcast(seasonal), on=[*series_cols, "_skey"]
-        ).withColumn("_r2", F.col("_r") - F.col("s_mean"))
-        qarr = F.percentile(
-            "_r2", F.array(F.lit(float(lo_q)), F.lit(float(hi_q)))
-        )
-        residual_q = deseason.groupBy(*series_cols).agg(
-            qarr[0].alias("_qlo"), qarr[1].alias("_qhi")
-        )
-    if isinstance(horizon, Column):
-        horizon_col = horizon
-    elif horizon is not None:
-        horizon_col = F.lit(int(horizon))
-    else:
-        horizon_col = F.col("n_buckets")
-    grid = future_grid(
-        params, grain=grain, horizon=horizon_col, series_cols=series_cols,
-        max_col="max_ds",
-    )
-    ds_type = dict(df.dtypes)[ts_col]
-    grid = grid.select(*series_cols, F.col(ts_col).cast(ds_type).alias(ts_col))
-    if include_history:
-        grid = df.select(*series_cols, ts_col).unionByName(grid)
-    pred = (
-        grid.withColumn("_t", _time_index(F.col(ts_col)))
-        .withColumn("_skey", seasonal_key_expr(ts_col, grain))
-        .join(F.broadcast(params.drop("max_ds", "n_buckets")), on=series_cols)
-        .join(F.broadcast(seasonal), on=[*series_cols, "_skey"], how="left")
-    )
-    yhat = trend + F.coalesce(F.col("s_mean"), F.lit(0.0))
-    if not include_bounds:
-        return pred.select(*series_cols, ts_col, yhat.alias("yhat"))
-    pred = pred.join(F.broadcast(residual_q), on=series_cols, how="left")
-    return pred.select(
-        *series_cols,
-        ts_col,
-        yhat.alias("yhat"),
-        (yhat + F.coalesce(F.col("_qlo"), F.lit(0.0))).alias("yhat_lower"),
-        (yhat + F.coalesce(F.col("_qhi"), F.lit(0.0))).alias("yhat_upper"),
+        grain=grain,
+        rows_sql=_history_and_future_sql(grain, dict(df.dtypes)[ts_col], include_history),
+        fitted_sql=_ridge_trend_sql(_time_index_sql("e.ds")),
+        bands=("yhat_lower", "yhat_upper") if include_bounds else (),
     )
 
 
@@ -884,8 +937,6 @@ def forecast_covariate_changepoint(
     ts_col: str = "ds",
     value_col: str = "y",
     cov_col: str = "cov",
-    materialize_covariate: bool = False,
-    materialize_history: bool = False,
     include_bounds: bool = True,
     quantiles: tuple[float, float] = (0.05, 0.95),
 ) -> DataFrame:
@@ -893,86 +944,43 @@ def forecast_covariate_changepoint(
     [1, u, hinges..., cov] — the covariate coefficient is the exact
     multi-OLS coefficient of the penalized system (unpenalized itself),
     so this is the piecewise-trend generalization of the Frisch-Waugh
-    path in ``forecast_with_covariate``. Output matches it:
+    path in ``forecast_with_covariate``, whose sorted-array joins it
+    shares: one exchange, no join, no Python. Output matches it:
     series, ds, yhat[, yhat_lower, yhat_upper], coef.
     """
     series_cols = list(series_cols)
-    if materialize_covariate:
-        covariate_pred = covariate_pred.localCheckpoint(eager=True)
-    joined = target.join(
-        covariate_pred.select(*series_cols, ts_col, cov_col),
-        on=[*series_cols, ts_col],
-        how="inner",
-    )
-    if materialize_history:
-        joined = joined.localCheckpoint(eager=True)
-    params = fit_changepoint_trend(
-        joined,
-        n_changepoints=n_changepoints,
-        changepoint_prior_scale=changepoint_prior_scale,
+    joined = _covariate_history(
+        target,
+        covariate_pred,
         series_cols=series_cols,
         ts_col=ts_col,
         value_col=value_col,
         cov_col=cov_col,
     )
-    p = n_changepoints + 3  # [1, u, hinges..., cov]
-    trend = changepoint_trend_expr(n_changepoints)
-    coef = F.col("beta")[p - 1]
-    model = trend + coef * F.col(cov_col)
-    hist = (
-        joined.withColumn("_t", _time_index(F.col(ts_col)))
-        .withColumn("_skey", seasonal_key_expr(ts_col, grain))
-        .join(F.broadcast(params.drop("max_ds", "n_buckets")), on=series_cols)
-        .withColumn("_r", F.col(value_col) - model)
+    fit = _with_ridge_trend(
+        joined,
+        "_j",
+        n_changepoints=n_changepoints,
+        changepoint_prior_scale=changepoint_prior_scale,
+        with_cov=True,
+    ).selectExpr("*", f"beta[{n_changepoints + 2}] AS coef")
+    model = "{trend} + coef * {x}"
+    fit = _with_residuals(fit, "_j", grain, model.format(trend=_ridge_trend_sql("e.t"), x="e.x"))
+    future, rows = _covariate_rows(
+        _with_horizon(_season_and_quantiles(fit, quantiles if include_bounds else None), horizon),
+        grain,
+        dict(target.dtypes)[ts_col],
     )
-    seasonal = hist.groupBy(*series_cols, "_skey").agg(
-        (F.sum("_r") / F.count("_r").cast("double")).alias("s_mean")
+    return _inline_predictions(
+        future,
+        series_cols=series_cols,
+        ts_col=ts_col,
+        grain=grain,
+        rows_sql=rows,
+        fitted_sql=model.format(trend=_ridge_trend_sql(_time_index_sql("e.ds")), x="e.x"),
+        bands=("yhat_lower", "yhat_upper") if include_bounds else (),
+        extra=("coef",),
     )
-    residual_q = None
-    if include_bounds:
-        lo_q, hi_q = quantiles
-        deseason = hist.join(
-            F.broadcast(seasonal), on=[*series_cols, "_skey"]
-        ).withColumn("_r2", F.col("_r") - F.col("s_mean"))
-        qarr = F.percentile(
-            "_r2", F.array(F.lit(float(lo_q)), F.lit(float(hi_q)))
-        )
-        residual_q = deseason.groupBy(*series_cols).agg(
-            qarr[0].alias("_qlo"), qarr[1].alias("_qhi")
-        )
-    if isinstance(horizon, Column):
-        horizon_col = horizon
-    elif horizon is not None:
-        horizon_col = F.lit(int(horizon))
-    else:
-        horizon_col = F.col("n_buckets")
-    grid = future_grid(
-        params, grain=grain, horizon=horizon_col, series_cols=series_cols,
-        max_col="max_ds",
-    )
-    ds_type = dict(target.dtypes)[ts_col]
-    grid = grid.select(*series_cols, F.col(ts_col).cast(ds_type).alias(ts_col))
-    all_ds = target.select(*series_cols, ts_col).unionByName(grid)
-    with_cov = all_ds.join(
-        covariate_pred.select(*series_cols, ts_col, cov_col),
-        on=[*series_cols, ts_col],
-        how="inner",
-    )
-    pred = (
-        with_cov.withColumn("_t", _time_index(F.col(ts_col)))
-        .withColumn("_skey", seasonal_key_expr(ts_col, grain))
-        .join(F.broadcast(params.drop("max_ds", "n_buckets")), on=series_cols)
-        .join(F.broadcast(seasonal), on=[*series_cols, "_skey"], how="left")
-    )
-    yhat = model + F.coalesce(F.col("s_mean"), F.lit(0.0))
-    cols = [yhat.alias("yhat")]
-    if include_bounds:
-        pred = pred.join(F.broadcast(residual_q), on=series_cols, how="left")
-        cols += [
-            (yhat + F.coalesce(F.col("_qlo"), F.lit(0.0))).alias("yhat_lower"),
-            (yhat + F.coalesce(F.col("_qhi"), F.lit(0.0))).alias("yhat_upper"),
-        ]
-    return pred.select(*series_cols, ts_col, *cols, coef.alias("coef"))
 
 
 # ---------------------------------------------------------------------------

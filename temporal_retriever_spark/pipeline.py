@@ -334,31 +334,20 @@ def analyze(
                 pred_col="cov",
                 out_col="cov",
             )
-            if cps is None:
-                # one per-series program reads each input once: no
-                # checkpoint job pays for itself here
-                pred = forecast_with_covariate(
-                    targets,
-                    cov_full,
-                    grain=g,
-                    horizon=_horizon_by_id(tgt_horizons),
-                )
-            else:
-                pred = forecast_covariate_changepoint(
-                    targets,
-                    cov_full,
-                    grain=g,
-                    horizon=_horizon_by_id(tgt_horizons),
+            # one per-series program reads each input once: no
+            # checkpoint job pays for itself here
+            forecaster = (
+                forecast_with_covariate
+                if cps is None
+                else partial(
+                    forecast_covariate_changepoint,
                     n_changepoints=N_CHANGEPOINTS,
                     changepoint_prior_scale=cps,
-                    # the covariate grid is referenced twice in the plan
-                    # and the fit reads the joined history four times;
-                    # the rekey's explode lets each read push its own
-                    # filters into its copy, so AQE cannot reuse their
-                    # exchanges. The checkpoints make them one relation
-                    materialize_covariate=True,
-                    materialize_history=True,
                 )
+            )
+            pred = forecaster(
+                targets, cov_full, grain=g, horizon=_horizon_by_id(tgt_horizons)
+            )
             return pred.orderBy("series_id", "ds").collect()
 
         # ---- granger correlations: aligned pairs, ONE grouped-UDF plan ---
@@ -657,10 +646,6 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
                     forecast_covariate_changepoint,
                     n_changepoints=N_CHANGEPOINTS,
                     changepoint_prior_scale=cps,
-                    # as in ``analyze``: the relational changepoint fit
-                    # reads its inputs several times
-                    materialize_covariate=True,
-                    materialize_history=True,
                 )
             )
             pred = forecaster(

@@ -38,12 +38,77 @@ def test_changepoint_fractions_span_first_80pct():
     assert fr == pytest.approx([0.2, 0.4, 0.6, 0.8])
 
 
-def test_stages_solver_matches_numpy(spark):
+def _ridge_reference(df, n_changepoints, scale, cov=None):
+    """numpy solve of the ridge normal equations the kernel builds."""
+    import numpy as np
+
+    pdf = df.toPandas().sort_values("ds")
+    t = pdf["ds"].map(lambda d: (d - dt.date(1970, 1, 1)).days).to_numpy(float)
+    u = t - t.min()
+    span = t.max() - t.min()
+    cols = [np.ones_like(u), u]
+    cols += [np.maximum(0.0, u - f * span) for f in changepoint_fractions(n_changepoints)]
+    if cov is not None:
+        cols.append(cov)
+    x = np.column_stack(cols)
+    a = x.T @ x
+    idx = np.arange(2, 2 + n_changepoints)
+    a[idx, idx] += 1.0 / scale
+    v = x.T @ pdf["y"].to_numpy()
+    return a, v, np.linalg.solve(a, v)
+
+
+@pytest.mark.parametrize("n_changepoints,with_cov", [(1, False), (10, False), (10, True)])
+def test_kernel_beta_matches_numpy(spark, n_changepoints, with_cov):
+    # the in-SQL Cholesky solve against np.linalg.solve of the same
+    # ridge normal equations; one changepoint also against the
+    # closed-form Cramer strings the DuckDB oracle chains
+    import numpy as np
+    from pyspark.sql import functions as F
+
     df, _ = _kinked(spark)
-    kw = dict(n_changepoints=1, changepoint_prior_scale=0.5)
-    numpy_beta = fit_changepoint_trend(df, **kw).collect()[0]["beta"]
-    stage_beta = fit_changepoint_trend(df, solver="stages", **kw).collect()[0]["beta"]
-    assert numpy_beta == pytest.approx(stage_beta, abs=1e-8)
+    cov = None
+    if with_cov:
+        cov = np.cos(np.arange(80) / 3.0)
+        df = spark.createDataFrame(
+            [(r["series_id"], r["ds"], r["y"], float(c))
+             for r, c in zip(df.orderBy("ds").collect(), cov)],
+            "series_id string, ds date, y double, cov double",
+        )
+    kw = dict(n_changepoints=n_changepoints, changepoint_prior_scale=0.5)
+    got = fit_changepoint_trend(df, cov_col="cov" if with_cov else None, **kw).collect()
+    a, v, want = _ridge_reference(df, n_changepoints, 0.5, cov)
+    # near-zero entries (the exact kink has no intercept) are held to
+    # the scale of the largest coefficient
+    np.testing.assert_allclose(
+        got[0]["beta"], want, rtol=1e-7, atol=1e-9 * np.abs(want).max()
+    )
+    if n_changepoints == 1:
+        sums = {f"g{i}_{j}": float(a[i, j]) for i in range(3) for j in range(i, 3)}
+        sums["g2_2"] -= 2.0  # the stages add λ = 1/0.5 themselves
+        sums.update({f"v{i}": float(v[i]) for i in range(3)})
+        cur = spark.createDataFrame([sums])
+        for name, expr in changepoint1_stages(2.0):
+            cur = cur.withColumn(name, F.expr(expr))
+        cramer = cur.select("beta0", "beta1", "beta2").first()
+        np.testing.assert_allclose(got[0]["beta"], list(cramer), rtol=1e-9)
+
+
+def test_one_row_series_has_no_fit(spark):
+    # a single bucket leaves the slope unidentified: no beta and a NULL
+    # yhat, while the other series still forecast
+    df, base = _kinked(spark, n=20)
+    one = spark.createDataFrame([("s2", base, 3.0)], df.schema)
+    both = df.unionByName(one)
+    fit = {r["series_id"]: r for r in fit_changepoint_trend(both, n_changepoints=2).collect()}
+    assert fit["s2"]["beta"] is None and fit["s2"]["n_buckets"] == 1
+    assert fit["s1"]["beta"] is not None
+    out = forecast_changepoint(
+        both, grain="D", horizon=2, n_changepoints=2, include_bounds=False
+    ).collect()
+    lone = [r for r in out if r["series_id"] == "s2"]
+    assert len(lone) == 3 and all(r["yhat"] is None for r in lone)
+    assert all(r["yhat"] is not None for r in out if r["series_id"] == "s1")
 
 
 def test_prior_scale_controls_flexibility(spark):
@@ -122,7 +187,3 @@ def test_invalid_args(spark):
     df, _ = _kinked(spark, n=10)
     with pytest.raises(ValueError):
         fit_changepoint_trend(df, n_changepoints=0)
-    with pytest.raises(ValueError):
-        fit_changepoint_trend(df, n_changepoints=2, solver="stages")
-    with pytest.raises(ValueError):
-        fit_changepoint_trend(df, n_changepoints=1, solver="bogus")

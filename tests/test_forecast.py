@@ -7,6 +7,9 @@ from pyspark.sql import functions as F
 
 from temporal_retriever_spark.aggregate import bucket_aggregate
 from temporal_retriever_spark.forecast import (
+    changepoint_fractions,
+    forecast_changepoint,
+    forecast_covariate_changepoint,
     forecast_linear_seasonal,
     forecast_with_covariate,
     fit_linear_seasonal,
@@ -143,7 +146,9 @@ def _noisy_daily(spark, n_series=3, n_days=200, horizon=14):
     )
 
 
-@pytest.mark.parametrize("op", ["linear", "covariate"])
+@pytest.mark.parametrize(
+    "op", ["linear", "covariate", "changepoint", "covariate_changepoint"]
+)
 def test_forecast_independent_of_partitioning(spark, op):
     # every float sum folds over one sorted per-series array, so the
     # output bits do not depend on how the input is split or on how
@@ -152,13 +157,15 @@ def test_forecast_independent_of_partitioning(spark, op):
 
     def run(parts: int, shuffle_parts: str) -> list[str]:
         spark.conf.set("spark.sql.shuffle.partitions", shuffle_parts)
-        t = target.repartition(parts)
-        if op == "linear":
-            got = forecast_linear_seasonal(t, grain="D", horizon=14)
-        else:
-            got = forecast_with_covariate(
-                t, cov.repartition(parts), grain="D", horizon=14
-            )
+        t, c = target.repartition(parts), cov.repartition(parts)
+        got = {
+            "linear": lambda: forecast_linear_seasonal(t, grain="D", horizon=14),
+            "covariate": lambda: forecast_with_covariate(t, c, grain="D", horizon=14),
+            "changepoint": lambda: forecast_changepoint(t, grain="D", horizon=14),
+            "covariate_changepoint": lambda: forecast_covariate_changepoint(
+                t, c, grain="D", horizon=14
+            ),
+        }[op]()
         return sorted(map(repr, got.collect()))
 
     prior = spark.conf.get("spark.sql.shuffle.partitions")
@@ -171,7 +178,8 @@ def test_forecast_independent_of_partitioning(spark, op):
 
 def test_long_hourly_history_matches_numpy(spark):
     """Two years of hourly buckets in ONE series (17,520 rows) plus a
-    covariate, against closed-form numpy references within 1e-9.
+    covariate, against closed-form numpy references within 1e-9: the
+    linear and covariate forecasts and both changepoint forecasts.
 
     The native forecasts collect each series into one array that one
     task holds, so the longest series bounds their memory; this is the
@@ -219,6 +227,24 @@ def test_long_hourly_history_matches_numpy(spark):
     got = forecast_with_covariate(target, cov, grain="H", horizon=h)
     np.testing.assert_allclose(got_matrix(got), bands(fitted[:n], fitted), rtol=1e-9)
     assert got.first()["coef"] == pytest.approx(beta[2], rel=1e-9)
+
+    # changepoint trend: np.linalg.solve of the same ridge normal
+    # equations (hinges over the first 80% of the span, λ = 1/0.5 on
+    # the hinge deltas only), with and without the covariate
+    u = t - t[0]
+    hinges = [np.maximum(0.0, u - f * u[n - 1]) for f in changepoint_fractions(10)]
+    for feats, run in (
+        ([np.ones(n + h), u, *hinges], lambda: forecast_changepoint(target, grain="H", horizon=h)),
+        ([np.ones(n + h), u, *hinges, x],
+         lambda: forecast_covariate_changepoint(target, cov, grain="H", horizon=h)),
+    ):
+        design = np.column_stack(feats)
+        gram = design[:n].T @ design[:n]
+        gram[range(2, 12), range(2, 12)] += 2.0
+        fitted = design @ np.linalg.solve(gram, design[:n].T @ y)
+        np.testing.assert_allclose(
+            got_matrix(run()), bands(fitted[:n], fitted), rtol=1e-9
+        )
 
 
 FORECAST_ORACLE = """

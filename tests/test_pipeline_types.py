@@ -7,19 +7,16 @@ runs the prophet path; granger follows the notebook prototype
 
 from __future__ import annotations
 
-import json
-
 import pytest
 
 from temporal_retriever_spark.api.models import parse_analyze_request
 from temporal_retriever_spark.pipeline import analyze
-
-ELECTRICITY = "/root/reference/electricity_demand.json"
+from tests.fixture_requests import electricity_body
 
 
 @pytest.fixture(scope="module")
 def mixed_request():
-    body = json.load(open(ELECTRICITY))
+    body = electricity_body()
     cs = body["analyticsOptions"]["correlations"]
     cs[0]["type"] = "granger"
     cs[1]["type"] = "univariateStatistics"

@@ -114,21 +114,25 @@ def test_quality_prune_scores_ride_the_scan(spark, docs):
     assert "Python" not in plan
 
 
-@pytest.mark.parametrize("op", ["linear", "covariate"])
+@pytest.mark.parametrize(
+    "op", ["linear", "covariate", "changepoint", "covariate_changepoint"]
+)
 def test_native_forecast_is_one_array_program(spark, daily, op):
-    # one groupBy(series) collects the rows; the fit, seasonal means,
-    # quantiles, future grid and (covariate) joins are array functions
-    # over that row, so the collect shuffle is the only exchange
-    from temporal_retriever_spark.forecast import (
-        forecast_linear_seasonal,
-        forecast_with_covariate,
-    )
+    # one groupBy(series) collects the rows; the fit (the changepoint
+    # ridge solve included), seasonal means, quantiles, future grid and
+    # (covariate) joins are array functions over that row, so the
+    # collect shuffle is the only exchange
+    from temporal_retriever_spark import forecast as fc
 
-    if op == "linear":
-        got = forecast_linear_seasonal(daily, grain="D", horizon=7)
-    else:
-        cov = daily.select("series_id", "ds", (F.col("y") * 2.0).alias("cov"))
-        got = forecast_with_covariate(daily, cov, grain="D", horizon=7)
+    cov = daily.select("series_id", "ds", (F.col("y") * 2.0).alias("cov"))
+    got = {
+        "linear": lambda: fc.forecast_linear_seasonal(daily, grain="D", horizon=7),
+        "covariate": lambda: fc.forecast_with_covariate(daily, cov, grain="D", horizon=7),
+        "changepoint": lambda: fc.forecast_changepoint(daily, grain="D", horizon=7),
+        "covariate_changepoint": lambda: fc.forecast_covariate_changepoint(
+            daily, cov, grain="D", horizon=7
+        ),
+    }[op]()
     plan = _plan(got)
     assert _exchanges(plan) == 1
     for node in ("Window", "Python", "Join", "CartesianProduct"):

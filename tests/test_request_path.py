@@ -199,3 +199,39 @@ def test_request_frames_run_no_python(spark, request_):
             assert "PythonRDD" not in _lineage(rekeyed)
             counts = dict(rekeyed.groupBy("series_id").count().collect())
             assert counts == {c.id: N_OBS for c in request_.correlations}
+
+
+def _changepoint_body() -> dict:
+    """``_body`` with ChangePointPriorScale on both prophet correlations:
+    they share one changepoint fold."""
+    body = _body(seed=9)
+    for corr in body["analyticsOptions"]["correlations"]:
+        if corr["type"] == "prophet":
+            corr["ChangePointPriorScale"] = 0.5
+    return body
+
+
+def test_changepoint_correlations_match_solo_and_run_no_python(spark, monkeypatch):
+    req = parse_analyze_request(_changepoint_body())
+    folds = []
+    fit = P.forecast_covariate_changepoint
+
+    def spy(*args, **kwargs):
+        folds.append(fit(*args, **kwargs))
+        return folds[-1]
+
+    monkeypatch.setattr(P, "forecast_covariate_changepoint", spy)
+    full = P.analyze(spark, req)["correlations"]
+    for corr in req.correlations:
+        solo = P.analyze(
+            spark, AnalyzeRequest(documents=req.documents, correlations=[corr])
+        )["correlations"]
+        assert _close(full[corr.id], solo[corr.id]), corr.id
+    # the fold (covariate forecast and target fit alike) plans no
+    # Python operator and its lineage holds no Python RDD
+    assert folds
+    for fold in folds:
+        plan = fold._jdf.queryExecution().executedPlan().toString()
+        for node in ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython"):
+            assert node not in plan
+        assert "PythonRDD" not in _lineage(fold)

@@ -1,9 +1,9 @@
 """e2e tests for the HTTP façade (S1-S4).
 
-POSTs the reference's own fixture bodies at a live server thread and
-checks responses against calling the pipeline directly (reference
-app.py:25-28 /health, 96-98 /analyze, 490-492 /saturating-growth,
-562-564 /saturating-growth/single)."""
+POSTs the reference-shaped fixture bodies (``tests/fixture_requests``)
+at a live server thread and checks responses against calling the
+pipeline directly (reference app.py:25-28 /health, 96-98 /analyze,
+490-492 /saturating-growth, 562-564 /saturating-growth/single)."""
 
 from __future__ import annotations
 
@@ -16,9 +16,7 @@ import pytest
 from temporal_retriever_spark.api.models import parse_analyze_request
 from temporal_retriever_spark.pipeline import analyze, saturating_growth
 from temporal_retriever_spark.server import _dumps, serve_background
-
-EXAMPLE = "/root/reference/example-timestamp.json"
-ELECTRICITY = "/root/reference/electricity_demand.json"
+from tests.fixture_requests import electricity_body, example_body
 
 
 @pytest.fixture(scope="module")
@@ -154,7 +152,7 @@ def _approx_equal(a, b, path="$"):
 
 
 def test_analyze_example_fixture_matches_pipeline(server, spark):
-    body = json.load(open(EXAMPLE))
+    body = example_body()
     status, got = _post(server, "/analyze", body)
     assert status == 200
     want = _roundtrip(analyze(spark, parse_analyze_request(body)))
@@ -171,7 +169,7 @@ def test_analyze_example_fixture_matches_pipeline(server, spark):
 
 
 def test_saturating_growth_electricity_fixture(server, spark):
-    body = json.load(open(ELECTRICITY))
+    body = electricity_body()
     status, got = _post(server, "/saturating-growth", body)
     assert status == 200
     want = _roundtrip(saturating_growth(spark, parse_analyze_request(body)))
@@ -184,7 +182,7 @@ def test_saturating_growth_electricity_fixture(server, spark):
 
 
 def test_saturating_growth_single(server):
-    body = json.load(open(ELECTRICITY))
+    body = electricity_body()
     status, got = _post(server, "/saturating-growth/single", body)
     assert status == 200
     for corr in got["correlations"].values():
@@ -200,7 +198,7 @@ def test_concurrent_requests_share_one_session(server):
     """Two POSTs in flight at once — thread-per-request over one Spark."""
     import threading
 
-    body = json.load(open(EXAMPLE))
+    body = example_body()
     results = []
 
     def hit():
@@ -222,8 +220,8 @@ def test_analyze_response_conforms_to_typed_models(server):
         validate_analytics_response,
     )
 
-    for fixture in (EXAMPLE, ELECTRICITY):
-        body = json.load(open(fixture))
+    for fixture in (example_body, electricity_body):
+        body = fixture()
         status, got = _post(server, "/analyze", body)
         assert status == 200
         model = validate_analytics_response(got)
