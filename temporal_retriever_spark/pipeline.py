@@ -19,10 +19,13 @@ Documented divergences implemented as *intent* (SURVEY §3.1/§3.2):
   (forecast.py) — Prophet isn't installed here; with prophet present
   ``backend="prophet"`` restores library parity.
 
-Each correlation is independent; at scale the engine runs them as ONE
-Spark plan per stage over the union of series (series_id keyed), not a
-Python loop per correlation — the loop here only assembles per-
-correlation response dicts from already-distributed computations.
+Each correlation is independent; the engine runs them as ONE Spark
+plan per stage over all series (series_id keyed), not a Python loop per
+correlation — the loop here only assembles per-correlation response
+dicts from already-distributed computations. Where the reference
+prepares each correlation's series with its own ``prepare_dataset``
+call (app.py:70-93, 102), one scan of the request documents and one
+aggregation bucket every distinct leg of a request (``_prepared_legs``).
 """
 
 from __future__ import annotations
@@ -36,6 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from temporal_retriever_spark.aggregate import (
+    agg_expr,
     bucket_aggregate,
     date_bounds,
     normalize_aggregation,
@@ -54,8 +58,9 @@ from temporal_retriever_spark.forecast import (
     forecast_linear_seasonal,
     forecast_with_covariate,
 )
-from temporal_retriever_spark.grains import normalize_grain
-from temporal_retriever_spark.ingest import documents_df, extract_series
+from temporal_retriever_spark.grains import bucket_expr, normalize_grain
+from temporal_retriever_spark.ingest import documents_df, dot_path_expr, extract_series
+from temporal_retriever_spark.timeparse import parse_timestamp
 
 #: hinge count for the piecewise trend when ChangePointPriorScale is
 #: provided (Prophet defaults to 25 over much longer histories; 10 keeps
@@ -139,40 +144,74 @@ def _leg_sid(leg_sids: dict[tuple, str], corr: Correlation, *, cov: bool) -> str
 
 @contextmanager
 def _prepared_legs(spark: SparkSession, request: AnalyzeRequest):
-    """Stage 1 of both covariate endpoints: ONE plan for every distinct
-    prepared series, cached for the request. Yields ``(leg_sids,
-    prepared)`` and releases both cached frames on exit.
+    """Stage 1 of both covariate endpoints: every distinct prepared
+    series from ONE scan of the request documents, cached for the
+    request. Yields ``(leg_sids, prepared)`` and releases the cached
+    frame on exit.
 
     Distinct (dataset, index, grain, agg) legs share a series id, so
     e.g. three correlations against the same target prepare it once.
+    One projection turns each observation into one row per leg of its
+    dataset: ``ds`` is parsed once per observation and each leg's dot
+    path is read only for its own dataset's rows. One
+    ``groupBy(series_id, ds)`` then buckets and aggregates every leg,
+    the truncation unit and the aggregate picked per row from map
+    constants, so the plan's shape depends only on which grains and
+    aggregations the request holds. ``ds`` is a date when every leg is
+    D, W or M and a timestamp otherwise.
     """
-    raw = documents_df(spark, request.documents).cache()
-    prepared = None
+    leg_sids: dict[tuple, str] = {}
+    for corr in request.correlations:
+        for cov in (True, False):
+            key = _leg_key(corr, cov=cov)
+            leg_sids.setdefault(key, "{}.{}|{}|{}".format(*key))
+    legs_by_dataset: dict[str, list[Column]] = {}
+    for (ds_name, idx, _, _), sid in leg_sids.items():
+        legs_by_dataset.setdefault(ds_name, []).append(
+            F.struct(
+                F.lit(sid).alias("series_id"),
+                dot_path_expr("obs", idx).cast("double").alias("y"),
+            )
+        )
+    rows = (
+        documents_df(spark, request.documents)
+        .select(
+            "series_id",
+            "obs",
+            parse_timestamp(dot_path_expr("obs", "date")).alias("ts"),
+        )
+        .filter(F.col("ts").isNotNull())
+        .select(
+            "ts",
+            F.inline(
+                _case(
+                    (F.col("series_id") == ds_name, F.array(*legs))
+                    for ds_name, legs in legs_by_dataset.items()
+                )
+            ),
+        )
+    )
+    grain = _by_id({sid: g for (_, _, g, _), sid in leg_sids.items()})
+    agg = _by_id({sid: a for (_, _, _, a), sid in leg_sids.items()})
+    grains = sorted({g for _, _, g, _ in leg_sids})
+    clock = not set(grains) <= {"D", "W", "M"}
+    bucket = _case(
+        (grain == g, bucket_expr("ts", g).cast("timestamp" if clock else "date"))
+        for g in grains
+    )
+    # each aggregate sees only its own legs' values
+    value = _case(
+        (agg == a, agg_expr(F.when(agg == a, F.col("y")), a))
+        for a in sorted({a for _, _, _, a in leg_sids})
+    )
+    prepared = _size_gated(
+        rows.groupBy("series_id", bucket.alias("ds")).agg(value.alias("y")),
+        _request_rows(request.documents),
+    )
     try:
-        leg_sids: dict[tuple, str] = {}
-        for corr in request.correlations:
-            for cov in (True, False):
-                key = _leg_key(corr, cov=cov)
-                leg_sids.setdefault(key, "{}.{}|{}|{}".format(*key))
-        for (ds_name, idx, g, a), sid in leg_sids.items():
-            series = extract_series(
-                raw, dataset=ds_name, index_path=idx, series_id=sid
-            )
-            bucketed = bucket_aggregate(
-                series.filter(F.col("ds").isNotNull()),
-                grain=g,
-                agg=a,
-                series_cols=("series_id",),
-            )
-            prepared = (
-                bucketed if prepared is None else prepared.unionByName(bucketed)
-            )
-        prepared = _size_gated(prepared, _request_rows(request.documents))
         yield leg_sids, prepared
     finally:
-        if prepared is not None:
-            prepared.unpersist()
-        raw.unpersist()
+        prepared.unpersist()
 
 
 def _leg_stats(
@@ -197,6 +236,14 @@ def _leg_stats(
                 f"dataset {ds_name!r} / index {idx!r} produced no observations"
             )
     return stats
+
+
+def _case(branches) -> Column:
+    """``CASE WHEN c1 THEN v1 WHEN c2 THEN v2 ... END`` of (c, v) pairs."""
+    out = None
+    for cond, value in branches:
+        out = (F.when if out is None else out.when)(cond, value)
+    return out
 
 
 def _by_id(values: dict[str, Any]) -> Column:
@@ -522,19 +569,39 @@ def analyze(
     return output
 
 
+def _caps(s, user_floor, user_ceiling) -> tuple[float, float]:
+    """A4 (floor, cap) of one leg from its stats row (app.py:354-364).
+
+    ``std_y`` is Spark's ``stddev_samp``, which updates central moments
+    and so stays as accurate as pandas' two-pass ``std()`` (app.py:362);
+    the closed form over the sums of y and y² cancels for legs with a
+    large mean and a small spread. It is NULL for fewer than two
+    observations, which counts as no spread.
+    """
+    std = s["std_y"] if s["std_y"] is not None else 0.0
+    floor = s["min_y"] if user_floor is None else min(user_floor, s["min_y"])
+    default_ceiling = s["max_y"] + 3.0 * std
+    # falsy check matches the reference's `ceiling or (max + 3*std)`
+    # (app.py:359-364): an explicit 0 ceiling auto-derives the cap
+    ceiling = (
+        max(default_ceiling, s["max_y"])
+        if not user_ceiling
+        else max(user_ceiling, s["max_y"])
+    )
+    return float(floor), float(ceiling)
+
+
 def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
     """``/saturating-growth`` semantics (app.py:490-559), intent version.
 
     Covariate and target both forecast with floor/cap clamping (W5);
     the covariate's actuals override its predictions before the target
     leg consumes it (app.py:478-483). Folded like ``analyze``: shared
-    series prep, ONE stats action (which also carries the min/max/sum
+    series prep, ONE stats action (which also carries the min/max/std
     scalars the A4 caps need — floor/cap per correlation become
     constant maps keyed by correlation id), one forecast plan per grain,
     one collect.
     """
-    import math
-
     output: dict[str, Any] = {"correlations": {}}
     with _prepared_legs(spark, request) as (leg_sids, prepared):
         stats = _leg_stats(
@@ -542,30 +609,10 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
             leg_sids,
             F.min("y").alias("min_y"),
             F.max("y").alias("max_y"),
-            F.sum("y").alias("sum_y"),
-            F.sum(F.col("y") * F.col("y")).alias("sumsq_y"),
+            F.stddev_samp("y").alias("std_y"),
         )
         leg_sid = partial(_leg_sid, leg_sids)
         rekey = partial(_rekey, prepared, leg_sids)
-
-        def caps_for(sid: str, user_floor, user_ceiling) -> tuple[float, float]:
-            """A4 scalars from the stats pass (app.py:354-364)."""
-            s = stats[sid]
-            n = s["n"]
-            std = 0.0
-            if n > 1:
-                var = (s["sumsq_y"] - s["sum_y"] * s["sum_y"] / float(n)) / (n - 1.0)
-                std = math.sqrt(max(var, 0.0))
-            floor = s["min_y"] if user_floor is None else min(user_floor, s["min_y"])
-            default_ceiling = s["max_y"] + 3.0 * std
-            # falsy check matches the reference's `ceiling or (max + 3*std)`
-            # (app.py:359-364): an explicit 0 ceiling auto-derives the cap
-            ceiling = (
-                max(default_ceiling, s["max_y"])
-                if not user_ceiling
-                else max(user_ceiling, s["max_y"])
-            )
-            return float(floor), float(ceiling)
 
         def clamp(caps: dict[str, tuple[float, float]], col: Column) -> Column:
             # greatest/least skip nulls: ids without caps keep ``col``
@@ -597,13 +644,13 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
                 opts = corr.forecast_options
                 from_cap = opts.from_cap if opts else None
                 to_cap = opts.to_cap if opts else None
-                cov_caps[corr.id] = caps_for(
-                    leg_sid(corr, cov=True),
+                cov_caps[corr.id] = _caps(
+                    stats[leg_sid(corr, cov=True)],
                     from_cap.floor if from_cap else 0.0,
                     from_cap.ceiling if from_cap else None,
                 )
-                tgt_caps[corr.id] = caps_for(
-                    leg_sid(corr, cov=False),
+                tgt_caps[corr.id] = _caps(
+                    stats[leg_sid(corr, cov=False)],
                     to_cap.floor if to_cap else 0.0,
                     to_cap.ceiling if to_cap else None,
                 )

@@ -13,10 +13,11 @@ configured for the engine's invariants:
 * **AQE on** — runtime coalescing of shuffle partitions and skew-join
   splitting; at 100 TB skewed series/keys are the norm.
 * **Codegen cache of 1000 classes** — Spark's default of 100 is smaller
-  than one request's working set: measured on a 4-core host, one
-  ``/analyze`` of 10k hourly observations generates about 167 distinct
-  classes, one ``/saturating-growth`` about 72 and one batch series
-  chain about 145. With the default every request recompiled all of
+  than one request's working set: measured with ``CodegenMetrics`` on
+  a 4-core host, each in a fresh JVM, one ``/analyze`` of 10k hourly
+  observations generates about 159 distinct classes, one
+  ``/saturating-growth`` about 66 and one batch series chain about
+  145. With the default every request recompiled all of
   them in Janino (and HotSpot re-JITted them), identical repeats
   included. The setting is static: it only applies when this factory
   starts the JVM.

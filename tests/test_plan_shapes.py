@@ -5,6 +5,9 @@ a native path) fails CI instead of surfacing at 100 TB."""
 
 from __future__ import annotations
 
+import uuid
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -459,26 +462,50 @@ def test_b6_covariate_forecast_plan(bench_queries):
     assert _exchanges(plan) <= 2
 
 
-def _stages_run(spark, build) -> int:
-    """Stages that ran tasks while ``build()`` made its frame (eager
-    checkpoints included) and the noop sink wrote it."""
-    import uuid
-
+@contextmanager
+def _job_group(spark):
+    """Tags the jobs launched inside the block with a fresh job group;
+    yields its id. The listener bus is drained on exit, so the status
+    tracker has seen every job."""
     sc = spark.sparkContext
     group = f"stages-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
-        build().write.format("noop").mode("overwrite").save()
+        yield group
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker = sc.statusTracker()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def _stages_run(spark, build) -> int:
+    """Stages that ran tasks while ``build()`` made its frame (eager
+    checkpoints included) and the noop sink wrote it."""
+    with _job_group(spark) as group:
+        build().write.format("noop").mode("overwrite").save()
+    tracker = spark.sparkContext.statusTracker()
     stage_ids = {
         s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds
     }
     infos = [tracker.getStageInfo(s) for s in stage_ids]
     return sum(1 for i in infos if i is not None and i.numCompletedTasks > 0)
+
+
+def test_request_prep_and_stats_run_three_jobs(spark):
+    """One scan buckets every leg of a request: preparing the
+    electricity request's five legs (hourly mean and daily sum) and
+    its stats action launch the aggregation's map stage, the stats
+    map stage and the stats result, not a job per leg."""
+    from temporal_retriever_spark import pipeline as P
+    from temporal_retriever_spark.api.models import parse_analyze_request
+    from tests.fixture_requests import electricity_body
+
+    req = parse_analyze_request(electricity_body())
+    with _job_group(spark) as group:
+        with P._prepared_legs(spark, req) as (leg_sids, prepared):
+            P._leg_stats(prepared, leg_sids)
+    assert len(leg_sids) == 5
+    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup(group)) <= 3
 
 
 @pytest.mark.parametrize(

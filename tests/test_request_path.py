@@ -1,7 +1,8 @@
 """The ``/analyze`` request path on a small in-test request: per-
 correlation results do not depend on which other correlations ride
-along, the request frames stay in the JVM, and a repeated request
-reuses its generated code."""
+along, the request frames stay in the JVM, a repeated request reuses
+its generated code, and one scan of the documents prepares every leg
+as the per-leg plans did."""
 
 from __future__ import annotations
 
@@ -17,11 +18,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from temporal_retriever_spark import pipeline as P
+from temporal_retriever_spark.aggregate import bucket_aggregate
 from temporal_retriever_spark.api.models import (
     AnalyzeRequest,
     parse_analyze_request,
 )
-from temporal_retriever_spark.ingest import documents_df
+from temporal_retriever_spark.ingest import documents_df, extract_series
 
 N_OBS = 300
 _LEGS = {
@@ -235,3 +237,159 @@ def test_changepoint_correlations_match_solo_and_run_no_python(spark, monkeypatc
         for node in ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython"):
             assert node not in plan
         assert "PythonRDD" not in _lineage(fold)
+
+
+# --- one-pass preparation ---------------------------------------------
+
+
+def _mixed_body(grains: tuple[tuple[str, str], ...], seed: int = 11) -> dict:
+    """Two documents over 100 days, one correlation per (grain, agg).
+
+    ``meter`` is observed every 50 minutes with a nested path; every
+    seventh observation lacks ``kwh`` (so some hours hold no value) and
+    two have unparseable dates. ``orders`` holds 0-4 ISO-``Z``
+    observations a day at random times."""
+    rng = np.random.default_rng(seed)
+    start = dt.datetime(2021, 1, 4)
+    meter = []
+    for i in range(100 * 24 * 60 // 50):
+        obs = {"date": (start + dt.timedelta(minutes=50 * i)).isoformat(" "),
+               "site": {"temp": float(rng.normal(10, 3))}}
+        if i % 7:
+            obs["kwh"] = float(rng.gamma(4, 2))
+        meter.append(obs)
+    meter[5]["date"] = "not a date"
+    meter[900]["date"] = None
+    orders = []
+    for day in range(100):
+        for _ in range(rng.integers(0, 5)):
+            at = start + dt.timedelta(days=day, seconds=int(rng.integers(86400)))
+            orders.append({"date": at.strftime("%Y-%m-%dT%H:%M:%SZ"),
+                           "amount": float(rng.normal(500, 80)),
+                           "items": int(rng.integers(1, 9))})
+    legs = [("meter", "site.temp", "meter", "kwh"),
+            ("orders", "items", "meter", "kwh"),
+            ("orders", "amount", "meter", "site.temp"),
+            ("meter", "kwh", "orders", "amount")]
+    corrs = [
+        {"id": f"{g}-{a}", "type": "prophet", "fromData": fd, "fromIndex": fi,
+         "toData": td, "toIndex": ti, "dataSetGranularity": g,
+         "dataAggregationType": a}
+        for (g, a), (fd, fi, td, ti) in zip(grains, legs)
+    ]
+    return {"documents": {"meter": {"data": meter}, "orders": {"data": orders}},
+            "analyticsOptions": {"correlations": corrs}}
+
+
+def _per_leg_prepared(spark, req):
+    """Reference: the preparation the one-pass plan replaced, one
+    ``extract_series`` + ``bucket_aggregate`` plan per leg over the
+    documents, unioned."""
+    raw = documents_df(spark, req.documents)
+    out = None
+    legs = {P._leg_key(c, cov=cov) for c in req.correlations for cov in (True, False)}
+    for key in sorted(legs):
+        ds_name, idx, grain, agg = key
+        series = extract_series(
+            raw, dataset=ds_name, index_path=idx,
+            series_id="{}.{}|{}|{}".format(*key),
+        )
+        bucketed = bucket_aggregate(
+            series.filter(F.col("ds").isNotNull()),
+            grain=grain, agg=agg, series_cols=("series_id",),
+        )
+        out = bucketed if out is None else out.unionByName(bucketed)
+    return out
+
+
+@pytest.mark.parametrize(
+    "grains",
+    [(("H", "mean"), ("D", "sum"), ("W", "median"), ("M", "max")),
+     (("D", "sum"), ("D", "mean"), ("D", "sum"), ("D", "median"))],
+    ids=["mixed", "daily"],
+)
+def test_one_pass_prep_matches_per_leg_union(spark, grains):
+    req = parse_analyze_request(_mixed_body(grains))
+    ref = _per_leg_prepared(spark, req)
+    with P._prepared_legs(spark, req) as (leg_sids, prepared):
+        assert prepared.schema["ds"].dataType == ref.schema["ds"].dataType
+        got = prepared.orderBy("series_id", "ds").collect()
+    want = ref.orderBy("series_id", "ds").collect()
+    # a date when every leg is D, W or M, else a timestamp (the union's
+    # widening)
+    daily = all(g == "D" for g, _ in grains)
+    assert isinstance(got[0]["ds"], dt.datetime) != daily
+    assert set(leg_sids.values()) == {r["series_id"] for r in want}
+    # an hour whose only observation lacks kwh keeps a NULL bucket
+    assert any(r["y"] is None for r in want) == (not daily)
+    assert [(r["series_id"], r["ds"]) for r in got] == [
+        (r["series_id"], r["ds"]) for r in want
+    ]
+    for g, w in zip(got, want):
+        if w["y"] is None or w["series_id"].endswith(("|min", "|max", "|median")):
+            assert g["y"] == w["y"], (g, w)
+        else:  # sums (and the sums under means) merge in another order
+            assert math.isclose(g["y"], w["y"], rel_tol=1e-12), (g, w)
+
+
+def _cached_plan(prepared) -> str:
+    """The physical plan under ``prepared``'s cache, as it ran."""
+    relation = prepared._jdf.queryExecution().optimizedPlan()
+    return relation.cachedPlan().executedPlan().toString()
+
+
+def test_one_pass_prep_scans_documents_once(spark):
+    req = parse_analyze_request(
+        _mixed_body((("H", "mean"), ("D", "sum"), ("W", "median"), ("M", "max")))
+    )
+    with P._prepared_legs(spark, req) as (leg_sids, prepared):
+        P._leg_stats(prepared, leg_sids)
+        plan = _cached_plan(prepared)
+    assert plan.count("LocalTableScan") == 1, plan
+    assert "Union" not in plan
+    # nothing is cached below the aggregation
+    assert "InMemory" not in plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Exchange" not in plan.replace("Exchange hashpartitioning", "")
+
+
+def test_missing_leg_raises(spark):
+    body = _mixed_body((("D", "sum"),))
+    body["analyticsOptions"]["correlations"][0]["fromData"] = "absent"
+    req = parse_analyze_request(body)
+    with P._prepared_legs(spark, req) as (leg_sids, prepared):
+        with pytest.raises(
+            ValueError, match="'absent' / index 'site.temp' produced no observations"
+        ):
+            P._leg_stats(prepared, leg_sids)
+
+
+def test_default_cap_survives_a_large_mean(spark, monkeypatch):
+    """The default ceiling is max + 3·(sample std) (app.py:354-364);
+    a leg at 1e9 ± 1 must not lose its spread to cancellation."""
+    body = _mixed_body((("D", "sum"),))
+    rng = np.random.default_rng(3)
+    values = 1e9 + rng.uniform(-1.0, 1.0, 60)
+    start = dt.datetime(2021, 1, 4)
+    body["documents"]["big"] = {"data": [
+        {"date": (start + dt.timedelta(days=i)).strftime("%Y-%m-%d"), "v": float(v)}
+        for i, v in enumerate(values)
+    ]}
+    corr = body["analyticsOptions"]["correlations"][0]
+    corr.update(toData="big", toIndex="v", unitsToForecast=5)
+    seen = []
+    caps = P._caps
+
+    def spy(s, floor, ceiling):
+        seen.append((s["series_id"], caps(s, floor, ceiling)))
+        return seen[-1][1]
+
+    monkeypatch.setattr(P, "_caps", spy)
+    out = P.saturating_growth(spark, parse_analyze_request(body))
+    assert out["correlations"][corr["id"]]["predictions"]["futureForecasts"]
+    (cap,) = [c for sid, (_, c) in seen if sid.startswith("big.v|")]
+    expected = values.max() + 3 * np.std(values, ddof=1)
+    assert math.isclose(cap, expected, rel_tol=1e-9), (cap, expected)
+    assert math.isclose(
+        (cap - values.max()) / 3, np.std(values, ddof=1), rel_tol=1e-6
+    )

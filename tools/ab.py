@@ -6,8 +6,15 @@ files), then runs ``perfbench/run.py`` once per side and seed, one pair
 per seed, alternating which side runs first so that drift in the host's
 CPU share falls on both sides alike. Prints, per end-to-end metric of
 ``BENCHMARK.json`` (per-layer metric with ``--trace 1``), each side's
-median with its quartiles and how many pairs the change won (ties
-count for neither), plus failed/attempted operations per side.
+median with its quartiles, how many pairs the change won (ties count
+for neither) and a verdict, plus failed/attempted operations per side:
+
+* ``gain``: the change wins at least 9 of 10 complete pairs and its
+  median beats the base's by more than the base's interquartile range;
+* ``worse``: the change's median is worse than the base's by more than
+  the metric's relative ``bound`` in ``BENCHMARK.json`` (end-to-end
+  metrics only; per-layer ones have no bound);
+* ``flat``: neither.
 
 Usage::
 
@@ -80,18 +87,35 @@ def quartiles(values: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
+def verdict(base: list[float], change: list[float], wins: int, metric: dict) -> str:
+    """``gain``, ``worse`` or ``flat`` (module docstring)."""
+    q1, mb, q3 = quartiles(base)
+    mc = quartiles(change)[1]
+    lower = metric["better"] == "lower"
+    ahead = mb - mc if lower else mc - mb
+    if wins >= 0.9 * len(base) and ahead > q3 - q1:
+        return "gain"
+    bound = metric.get("bound")
+    if bound is not None and -ahead > bound * abs(mb):
+        return "worse"
+    return "flat"
+
+
 def summarize(pairs: list[dict], metrics: list[dict]) -> None:
+    shares = {}
     for side in ("base", "change"):
         attempted = sum(p[side].get("attempted", 0) for p in pairs)
         failed = sum(p[side].get("failed", 0) for p in pairs)
         errors = sum(1 for p in pairs if "error" in p[side])
+        shares[side] = failed / attempted if attempted else 0.0
         print(f"{side}: failed {failed} of {attempted} attempted, {errors} runs errored")
+    print("failed share: " + ("worse" if shares["change"] > shares["base"] else "flat"))
     ok = [p for p in pairs if "error" not in p["base"] and "error" not in p["change"]]
     print(f"{len(ok)} complete pairs")
     if not ok:
         return
     print(f"{'metric':40s} {'base median [q1-q3]':>30s} "
-          f"{'change median [q1-q3]':>30s}  change wins")
+          f"{'change median [q1-q3]':>30s}  change wins  verdict")
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         if name not in ok[0]["base"]["metrics"]:
@@ -101,7 +125,8 @@ def summarize(pairs: list[dict], metrics: list[dict]) -> None:
         wins = sum(1 for b, c in zip(base, change) if (c < b if lower else c > b))
         qb, qc = quartiles(base), quartiles(change)
         fmt = lambda q: f"{q[1]:.4g} [{q[0]:.4g}-{q[2]:.4g}]"
-        print(f"{name:40s} {fmt(qb):>30s} {fmt(qc):>30s}  {wins}/{len(ok)}")
+        print(f"{name:40s} {fmt(qb):>30s} {fmt(qc):>30s}  {wins:>5d}/{len(ok):<5d}"
+              f"  {verdict(base, change, wins, m)}")
 
 
 def main() -> int:
