@@ -65,14 +65,18 @@ def _lag_product_sums(
     ``ljung_box``, ``acf_bands``, ``detect_seasonality``) reads this
     one frame, so a null-handling or ordering fix applies everywhere."""
     w = Window.partitionBy(*series_cols)
-    ws = w.orderBy(ts_col)
     d = df.withColumn("_d", F.col(value_col) - F.avg(value_col).over(w))
-    for k in range(1, lags + 1):
-        d = d.withColumn(f"_p{k}", F.col("_d") * F.lag("_d", k).over(ws))
+    # every lag product in one projection of SQL text: one Window node
+    # and one analysis at any lag count, and no per-lag Column objects
+    # built over py4j (a dozen round trips each)
+    q = lambda c: "`" + c.replace("`", "``") + "`"  # noqa: E731
+    ws = f"PARTITION BY {', '.join(map(q, series_cols))} ORDER BY {q(ts_col)}"
+    lagged = range(1, lags + 1)
+    d = d.selectExpr("*", *[f"_d * lag(_d, {k}) OVER ({ws}) AS _p{k}" for k in lagged])
     return d.groupBy(*series_cols).agg(
         F.count("_d").alias("n"),
         F.sum(F.col("_d") * F.col("_d")).alias("s0"),
-        *[F.sum(f"_p{k}").alias(f"s{k}") for k in range(1, lags + 1)],
+        *[F.expr(f"sum(_p{k})").alias(f"s{k}") for k in lagged],
     )
 
 

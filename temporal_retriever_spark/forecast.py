@@ -28,6 +28,10 @@ Two backends:
   ``forecast_covariate_changepoint``) are the same program with a
   piecewise ridge trend: one fold builds its Gram matrix and
   ``_spd_solve_sql`` solves it by Cholesky in SQL.
+  ``forecast_covariate_chain`` runs the request path's whole chain —
+  covariate forecast, actuals override, covariate regression — as one
+  such program, from the same pieces (collect, fit, in-row join,
+  regression), with each series' grain read from its row.
 
 * **prophet** (optional, parity path): grouped pandas UDF, one Prophet
   fit per series — the reference's exact library. Gated behind an
@@ -50,7 +54,7 @@ from pyspark.sql import functions as F
 
 from temporal_retriever_spark.aggregate import floor_ceiling_aggs
 from temporal_retriever_spark.align import grid_tick_sql
-from temporal_retriever_spark.grains import normalize_grain
+from temporal_retriever_spark.grains import GRAINS, normalize_grain
 
 #: grain -> seasonal key SQL over a ``ds`` expression (W: no seasonality)
 _SEASONAL_KEYS = {
@@ -73,8 +77,19 @@ def _time_index_sql(ds: str) -> str:
     return f"unix_timestamp(CAST({ds} AS TIMESTAMP)) / 86400D"
 
 
-def _seasonal_key_sql(ds: str, grain: str) -> str:
-    return _SEASONAL_KEYS[normalize_grain(grain)].format(ds)
+def _by_grain(grain: str | Column, sql) -> str:
+    """``sql(g)`` at ``grain``. A Column grain is the series' own, bound
+    once per series row as ``_grain`` (``forecast_covariate_chain``);
+    the SQL is then a CASE over the five grains, so one program serves
+    series of every grain."""
+    if isinstance(grain, Column):
+        branches = " ".join(f"WHEN '{g}' THEN {sql(g)}" for g in GRAINS)
+        return f"CASE _grain {branches} END"
+    return sql(normalize_grain(grain))
+
+
+def _seasonal_key_sql(ds: str, grain: str | Column) -> str:
+    return _by_grain(grain, lambda g: _SEASONAL_KEYS[g].format(ds))
 
 
 def _ident(name: str) -> str:
@@ -157,13 +172,13 @@ def _season_and_quantiles(frame: DataFrame, quantiles: Iterable[float] | None) -
     ).selectExpr("*", f"{_quantiles_sql('_v', quantiles)} AS _q")
 
 
-def _future_ds_sql(grain: str, ds_type: str) -> str:
+def _future_ds_sql(grain: str | Column, ds_type: str) -> str:
     """The ``_h`` buckets after ``max_ds``, cast to the history's type."""
     h = "CAST(_h AS INT)"
+    tick = _by_grain(grain, lambda g: f"CAST({grid_tick_sql(g, 'max_ds', 'k')} AS {ds_type})")
     return (
         f"transform(CASE WHEN {h} >= 1 THEN sequence(1, {h}) "
-        f"ELSE CAST(array() AS ARRAY<INT>) END, "
-        f"k -> CAST({grid_tick_sql(grain, 'max_ds', 'k')} AS {ds_type}))"
+        f"ELSE CAST(array() AS ARRAY<INT>) END, k -> {tick})"
     )
 
 
@@ -182,7 +197,7 @@ def _inline_predictions(
     *,
     series_cols: list[str],
     ts_col: str,
-    grain: str,
+    grain: str | Column,
     rows_sql: str,
     fitted_sql: str,
     bands: Iterable[str],
@@ -208,7 +223,9 @@ def _inline_predictions(
     )
 
 
-def _with_residuals(frame: DataFrame, rows: str, grain: str, fitted_sql: str) -> DataFrame:
+def _with_residuals(
+    frame: DataFrame, rows: str, grain: str | Column, fitted_sql: str
+) -> DataFrame:
     """``_r``: (seasonal key, y − ``fitted_sql``) per element ``e`` of
     ``rows``, the input of ``_season_and_quantiles``."""
     return frame.selectExpr(
@@ -252,19 +269,12 @@ def _collect_series(
 
 
 def _linear_seasonal_program(
-    df: DataFrame,
-    *,
-    grain: str,
-    series_cols: list[str],
-    ts_col: str,
-    value_col: str,
-    quantiles: Iterable[float],
-    extra_aggs: Iterable[Column] = (),
+    grouped: DataFrame, *, grain: str | Column, quantiles: Iterable[float] | None
 ) -> DataFrame:
-    """One row per series: ``n_buckets``, ``max_ds``, the centered trend
-    (``b``, ``my``, ``mt``), the (t, y, ds)-sorted rows ``_p``, the
-    seasonal means ``_seasonal``/``_smap`` and the residual quantiles
-    ``_q`` — the whole ``fit_linear_seasonal`` as one aggregation."""
+    """The ``fit_linear_seasonal`` fit from the collected row on
+    (``_collect_series``): adds the centered trend (``b``, ``my``,
+    ``mt``), the seasonal means ``_seasonal``/``_smap`` and, unless
+    ``quantiles`` is None, the residual quantiles ``_q``."""
     n = "CAST(n_buckets AS DOUBLE)"
     # OLS from explicit sums rather than regr_slope/regr_intercept: the
     # closed form over sums is reproducible bit for bit across engines
@@ -273,13 +283,6 @@ def _linear_seasonal_program(
     # order, and that last-ulp drift once flipped 6-decimal grid values
     # across runs. A NULL term adds +0.0 where SUM skipped the row, and
     # n_buckets counts non-null y only.
-    grouped = _collect_series(
-        df,
-        series_cols=series_cols,
-        ts_col=ts_col,
-        value_col=value_col,
-        extra_aggs=extra_aggs,
-    )
     gram = grouped.selectExpr(
         "*",
         "aggregate(_p, named_struct('sty', 0D, 'st', 0D, 'sy', 0D, 'stt', 0D), "
@@ -325,11 +328,8 @@ def fit_linear_seasonal(
     """
     series_cols = list(series_cols)
     fit = _linear_seasonal_program(
-        df,
+        _collect_series(df, series_cols=series_cols, ts_col=ts_col, value_col=value_col),
         grain=grain,
-        series_cols=series_cols,
-        ts_col=ts_col,
-        value_col=value_col,
         quantiles=quantiles,
     )
     trend = fit.select(*series_cols, "b", "my", "mt", "max_ds", "n_buckets")
@@ -359,13 +359,15 @@ def _forecast_linear_seasonal(
     series_cols = list(series_cols)
     fit = _with_horizon(
         _linear_seasonal_program(
-            df,
+            _collect_series(
+                df,
+                series_cols=series_cols,
+                ts_col=ts_col,
+                value_col=value_col,
+                extra_aggs=caps or (),
+            ),
             grain=grain,
-            series_cols=series_cols,
-            ts_col=ts_col,
-            value_col=value_col,
             quantiles=bands.values(),
-            extra_aggs=caps or (),
         ),
         horizon,
     )
@@ -459,41 +461,51 @@ def _equi_join_sql(keys: str, bounds: str, row_sql: str) -> str:
     )
 
 
-def _covariate_history(
+def _keyed_sql(series_cols: list[str], ts_col: str) -> str:
+    """Rows with every key set: NULL keys never match in the inner joins."""
+    return " AND ".join(f"{_ident(c)} IS NOT NULL" for c in [*series_cols, ts_col])
+
+
+def _group_with_target(
     target: DataFrame,
-    covariate_pred: DataFrame,
+    other: DataFrame,
     *,
     series_cols: list[str],
     ts_col: str,
     value_col: str,
-    cov_col: str,
+    col: str,
+    aggs: Iterable[Column] = (),
 ) -> DataFrame:
-    """One row per series of the target and covariate rows, unioned and
-    grouped once: the ds-sorted covariate rows ``_cv``, the history
-    inner-joined to them (J3: the reference inner-joins history ×
-    covariate, app.py:171-188) as the (t, y, x, ds)-sorted ``_j``, and
-    that history's ``n_buckets`` and ``max_ds``. The covariate ``ds`` is
-    read as the target's type."""
-    ds, y, x = _ident(ts_col), _ident(value_col), _ident(cov_col)
-    ds_type = dict(target.dtypes)[ts_col]
+    """One row per series of the target rows and ``other``'s struct
+    column ``col``, unioned and grouped once: the (ds, y)-sorted target
+    rows ``_tg``, the sorted ``col`` structs and ``aggs`` (which see
+    ``col`` NULL on target rows). Target rows with a NULL key are
+    dropped (``_keyed_sql``)."""
+    ds, y = _ident(ts_col), _ident(value_col)
     series = [_ident(c) for c in series_cols]
-    # NULL keys never match in the inner joins
-    keyed = " AND ".join(f"{c} IS NOT NULL" for c in [*series, ds])
-    sides = target.where(keyed).selectExpr(
+    sides = target.where(_keyed_sql(series_cols, ts_col)).selectExpr(
         *series,
         f"named_struct('ds', {ds}, 'y', CAST({y} AS DOUBLE)) AS _tg",
-        f"CAST(NULL AS STRUCT<ds: {ds_type}, cov: DOUBLE>) AS _cv",
+        f"CAST(NULL AS {dict(other.dtypes)[col]}) AS {col}",
     ).unionByName(
-        covariate_pred.where(keyed).selectExpr(
+        other.selectExpr(
             *series,
-            f"CAST(NULL AS STRUCT<ds: {ds_type}, y: DOUBLE>) AS _tg",
-            f"named_struct('ds', CAST({ds} AS {ds_type}), 'cov', CAST({x} AS DOUBLE)) AS _cv",
+            f"CAST(NULL AS STRUCT<ds: {dict(target.dtypes)[ts_col]}, y: DOUBLE>) AS _tg",
+            col,
         )
     )
-    grouped = sides.groupBy(*series_cols).agg(
+    return sides.groupBy(*series_cols).agg(
         F.expr("sort_array(collect_list(_tg))").alias("_tg"),
-        F.expr("sort_array(collect_list(_cv))").alias("_cv"),
+        F.expr(f"sort_array(collect_list({col}))").alias(col),
+        *aggs,
     )
+
+
+def _join_history(grouped: DataFrame) -> DataFrame:
+    """The target history ``_tg`` inner-joined in the row to the
+    ds-sorted covariate rows ``_cv`` (J3: the reference inner-joins
+    history × covariate, app.py:171-188), as the (t, y, x, ds)-sorted
+    ``_j``, with that history's ``n_buckets`` and ``max_ds``."""
     tg_ds, cv_ds = "transform(_tg, e -> e.ds)", "transform(_cv, c -> c.ds)"
     # the joined history, sorted so the moment folds have one order
     return grouped.selectExpr(
@@ -514,7 +526,34 @@ def _covariate_history(
     )
 
 
-def _covariate_rows(fit: DataFrame, grain: str, ds_type: str) -> tuple[DataFrame, str]:
+def _covariate_history(
+    target: DataFrame,
+    covariate_pred: DataFrame,
+    *,
+    series_cols: list[str],
+    ts_col: str,
+    value_col: str,
+    cov_col: str,
+) -> DataFrame:
+    """``_join_history`` of the target grouped with the covariate rows
+    ``_cv`` (ds, cov); the covariate ``ds`` is read as the target's
+    type."""
+    ds, x = _ident(ts_col), _ident(cov_col)
+    cv = covariate_pred.where(_keyed_sql(series_cols, ts_col)).selectExpr(
+        *map(_ident, series_cols),
+        f"named_struct('ds', CAST({ds} AS {dict(target.dtypes)[ts_col]}), "
+        f"'cov', CAST({x} AS DOUBLE)) AS _cv",
+    )
+    return _join_history(
+        _group_with_target(
+            target, cv, series_cols=series_cols, ts_col=ts_col, value_col=value_col, col="_cv"
+        )
+    )
+
+
+def _covariate_rows(
+    fit: DataFrame, grain: str | Column, ds_type: str
+) -> tuple[DataFrame, str]:
     """``fit`` with the ``_h`` future buckets matched against ``_cv``
     (J3: the future grid takes its covariate values by inner join too,
     app.py:180-188), and the prediction rows (ds, x) it feeds: the
@@ -593,52 +632,90 @@ def forecast_with_covariate(
         value_col=value_col,
         cov_col=cov_col,
     )
-    # Frisch-Waugh partial regression from ONE fold of raw moments: the
-    # detrended-residual coef expands into centered moments
-    # (Σ_rx·ry = Sxy_c − by·Sxt_c − bx·Syt_c + bx·by·Stt_c,
-    # Σ_rx² = Sxx_c − 2bx·Sxt_c + bx²·Stt_c). The oracle SQL mirrors
-    # this expression tree.
-    terms = {
-        "st": "e.t", "sy": "e.y", "sx": "e.x", "stt": "e.t * e.t",
-        "sty": "e.t * e.y", "stx": "e.t * e.x", "sxx": "e.x * e.x", "sxy": "e.x * e.y",
-    }
-    zero = ", ".join(f"'{k}', CAST(NULL AS DOUBLE)" for k in terms)
-    step = ", ".join(f"'{k}', {_sum_sql(f'a.{k}', v)}" for k, v in terms.items())
-    moments = joined.selectExpr(
-        "*",
-        f"aggregate(_j, named_struct({zero}), (a, e) -> named_struct({step})) AS _m",
+    return _covariate_regression(
+        joined,
+        grain=grain,
+        horizon=horizon,
+        ds_type=dict(target.dtypes)[ts_col],
+        series_cols=series_cols,
+        ts_col=ts_col,
+        include_bounds=include_bounds,
+        quantiles=quantiles,
     )
-    n = "CAST(n_buckets AS DOUBLE)"
-    stt_c = f"(_m.stt - _m.st * _m.st / {n})"
-    sxt_c = f"(_m.stx - _m.sx * _m.st / {n})"
-    syt_c = f"(_m.sty - _m.sy * _m.st / {n})"
-    slopes = moments.selectExpr(
-        "*",
-        f"CASE WHEN {stt_c} = 0 THEN 0D ELSE (_m.sty - _m.st * _m.sy / {n}) / {stt_c} END AS b_y",
-        f"CASE WHEN {stt_c} = 0 THEN 0D ELSE (_m.stx - _m.st * _m.sx / {n}) / {stt_c} END AS b_x",
-        f"_m.sy / {n} AS my",
-        f"_m.sx / {n} AS mx",
-        f"_m.st / {n} AS mt",
-    )
-    coef_num = (
-        f"(_m.sxy - _m.sx * _m.sy / {n}) - b_y * {sxt_c} - b_x * {syt_c} "
-        f"+ b_x * b_y * {stt_c}"
-    )
-    coef_den = f"(_m.sxx - _m.sx * _m.sx / {n}) - 2 * b_x * {sxt_c} + b_x * b_x * {stt_c}"
-    model = "my + b_y * ({t} - mt) + coef * ({x} - (mx + b_x * ({t} - mt)))"
-    fit = _with_residuals(
-        slopes.selectExpr(
+
+
+def _covariate_regression(
+    joined: DataFrame,
+    *,
+    grain: str | Column,
+    horizon: int | None | Column,
+    ds_type: str,
+    series_cols: list[str],
+    ts_col: str,
+    include_bounds: bool,
+    quantiles: tuple[float, float],
+    changepoint_prior_scale: float | None = None,
+    n_changepoints: int = 10,
+    clamp: bool = False,
+) -> DataFrame:
+    """``forecast_with_covariate`` from the joined row on
+    (``_join_history``), or ``forecast_covariate_changepoint`` when
+    ``changepoint_prior_scale`` is given: the fit, seasonal means and
+    bands over ``_j``, then the history and the future grid's matched
+    covariate rows as predictions, clamped into the row's ``floor`` and
+    ``cap`` when ``clamp``."""
+    if changepoint_prior_scale is None:
+        # Frisch-Waugh partial regression from ONE fold of raw moments:
+        # the detrended-residual coef expands into centered moments
+        # (Σ_rx·ry = Sxy_c − by·Sxt_c − bx·Syt_c + bx·by·Stt_c,
+        # Σ_rx² = Sxx_c − 2bx·Sxt_c + bx²·Stt_c). The oracle SQL mirrors
+        # this expression tree.
+        terms = {
+            "st": "e.t", "sy": "e.y", "sx": "e.x", "stt": "e.t * e.t",
+            "sty": "e.t * e.y", "stx": "e.t * e.x", "sxx": "e.x * e.x", "sxy": "e.x * e.y",
+        }
+        zero = ", ".join(f"'{k}', CAST(NULL AS DOUBLE)" for k in terms)
+        step = ", ".join(f"'{k}', {_sum_sql(f'a.{k}', v)}" for k, v in terms.items())
+        moments = joined.selectExpr(
+            "*",
+            f"aggregate(_j, named_struct({zero}), (a, e) -> named_struct({step})) AS _m",
+        )
+        n = "CAST(n_buckets AS DOUBLE)"
+        stt_c = f"(_m.stt - _m.st * _m.st / {n})"
+        sxt_c = f"(_m.stx - _m.sx * _m.st / {n})"
+        syt_c = f"(_m.sty - _m.sy * _m.st / {n})"
+        slopes = moments.selectExpr(
+            "*",
+            f"CASE WHEN {stt_c} = 0 THEN 0D ELSE (_m.sty - _m.st * _m.sy / {n}) / {stt_c} END AS b_y",
+            f"CASE WHEN {stt_c} = 0 THEN 0D ELSE (_m.stx - _m.st * _m.sx / {n}) / {stt_c} END AS b_x",
+            f"_m.sy / {n} AS my",
+            f"_m.sx / {n} AS mx",
+            f"_m.st / {n} AS mt",
+        )
+        coef_num = (
+            f"(_m.sxy - _m.sx * _m.sy / {n}) - b_y * {sxt_c} - b_x * {syt_c} "
+            f"+ b_x * b_y * {stt_c}"
+        )
+        coef_den = f"(_m.sxx - _m.sx * _m.sx / {n}) - 2 * b_x * {sxt_c} + b_x * b_x * {stt_c}"
+        fit = slopes.selectExpr(
             "*",
             f"CASE WHEN {coef_den} = 0 THEN 0D ELSE ({coef_num}) / ({coef_den}) END AS coef",
-        ),
-        "_j",
-        grain,
-        model.format(t="e.t", x="e.x"),
-    )
+        )
+        model = "my + b_y * ({t} - mt) + coef * ({x} - (mx + b_x * ({t} - mt)))".format
+    else:
+        fit = _with_ridge_trend(
+            joined,
+            "_j",
+            n_changepoints=n_changepoints,
+            changepoint_prior_scale=changepoint_prior_scale,
+            with_cov=True,
+        ).selectExpr("*", f"beta[{n_changepoints + 2}] AS coef")
+        model = lambda t, x: f"{_ridge_trend_sql(t)} + coef * {x}"  # noqa: E731
+    fit = _with_residuals(fit, "_j", grain, model(t="e.t", x="e.x"))
     future, rows = _covariate_rows(
         _with_horizon(_season_and_quantiles(fit, quantiles if include_bounds else None), horizon),
         grain,
-        dict(target.dtypes)[ts_col],
+        ds_type,
     )
     return _inline_predictions(
         future,
@@ -646,9 +723,10 @@ def forecast_with_covariate(
         ts_col=ts_col,
         grain=grain,
         rows_sql=rows,
-        fitted_sql=model.format(t=_time_index_sql("e.ds"), x="e.x"),
+        fitted_sql=model(t=_time_index_sql("e.ds"), x="e.x"),
         bands=("yhat_lower", "yhat_upper") if include_bounds else (),
         extra=("coef",),
+        clamp=clamp,
     )
 
 
@@ -832,6 +910,30 @@ def _ridge_trend_sql(t: str) -> str:
     )
 
 
+def _changepoint_program(
+    grouped: DataFrame,
+    *,
+    grain: str | Column,
+    n_changepoints: int,
+    changepoint_prior_scale: float,
+    quantiles: Iterable[float] | None,
+) -> DataFrame:
+    """``_linear_seasonal_program`` with the ridge changepoint trend:
+    from the collected row on, adds the trend fit (``_with_ridge_trend``),
+    the seasonal means of its residuals and, unless ``quantiles`` is
+    None, their quantiles ``_q``."""
+    fit = _with_ridge_trend(
+        grouped,
+        "_p",
+        n_changepoints=n_changepoints,
+        changepoint_prior_scale=changepoint_prior_scale,
+        with_cov=False,
+    )
+    return _season_and_quantiles(
+        _with_residuals(fit, "_p", grain, _ridge_trend_sql("e.t")), quantiles
+    )
+
+
 def fit_changepoint_trend(
     df: DataFrame,
     *,
@@ -903,16 +1005,12 @@ def forecast_changepoint(
     Output: series, ds, yhat[, yhat_lower, yhat_upper].
     """
     series_cols = list(series_cols)
-    fit = _with_ridge_trend(
+    fit = _changepoint_program(
         _collect_series(df, series_cols=series_cols, ts_col=ts_col, value_col=value_col),
-        "_p",
+        grain=grain,
         n_changepoints=n_changepoints,
         changepoint_prior_scale=changepoint_prior_scale,
-        with_cov=False,
-    )
-    fit = _season_and_quantiles(
-        _with_residuals(fit, "_p", grain, _ridge_trend_sql("e.t")),
-        quantiles if include_bounds else None,
+        quantiles=quantiles if include_bounds else None,
     )
     return _inline_predictions(
         _with_horizon(fit, horizon),
@@ -957,29 +1055,123 @@ def forecast_covariate_changepoint(
         value_col=value_col,
         cov_col=cov_col,
     )
-    fit = _with_ridge_trend(
+    return _covariate_regression(
         joined,
-        "_j",
-        n_changepoints=n_changepoints,
-        changepoint_prior_scale=changepoint_prior_scale,
-        with_cov=True,
-    ).selectExpr("*", f"beta[{n_changepoints + 2}] AS coef")
-    model = "{trend} + coef * {x}"
-    fit = _with_residuals(fit, "_j", grain, model.format(trend=_ridge_trend_sql("e.t"), x="e.x"))
-    future, rows = _covariate_rows(
-        _with_horizon(_season_and_quantiles(fit, quantiles if include_bounds else None), horizon),
-        grain,
-        dict(target.dtypes)[ts_col],
-    )
-    return _inline_predictions(
-        future,
+        grain=grain,
+        horizon=horizon,
+        ds_type=dict(target.dtypes)[ts_col],
         series_cols=series_cols,
         ts_col=ts_col,
+        include_bounds=include_bounds,
+        quantiles=quantiles,
+        changepoint_prior_scale=changepoint_prior_scale,
+        n_changepoints=n_changepoints,
+    )
+
+
+def forecast_covariate_chain(
+    target: DataFrame,
+    covariate: DataFrame,
+    *,
+    grain: str | Column,
+    horizon: int | None | Column = None,
+    cov_horizon: int | None | Column = None,
+    changepoint_prior_scale: float | None = None,
+    n_changepoints: int = 10,
+    caps: tuple[Column, Column] | None = None,
+    cov_caps: tuple[Column, Column] | None = None,
+    series_cols: Iterable[str] = ("series_id",),
+    ts_col: str = "ds",
+    value_col: str = "y",
+) -> DataFrame:
+    """W3 + P7 + W4 as ONE per-series program: forecast the covariate
+    from its history ``covariate``, let its actuals override that
+    forecast's history (the reference's ``y.combine_first(yhat)``,
+    app.py:144-151, 478-483), and regress the target on the result.
+
+    The output equals ``forecast_with_covariate(target, cov_full)`` with
+    ``cov_full`` the ``coalesce_actuals`` of
+    ``forecast_linear_seasonal(covariate, horizon=cov_horizon)`` over
+    ``covariate``, its yhat clamped into ``cov_caps`` (floor, cap)
+    first. With ``changepoint_prior_scale`` both fits take the ridge
+    changepoint trend, as ``forecast_changepoint(include_bounds=False)``
+    and ``forecast_covariate_changepoint`` do. ``caps`` clamps the
+    target's yhat and bands. The covariate must hold one row per
+    (series, ``ts_col``), as a bucketed series does.
+
+    ``grain`` may be a Column: each series' own grain, evaluated once
+    on its row like the Column horizons and caps (series columns; a
+    horizon also sees ``n_buckets``, the covariate's for
+    ``cov_horizon`` and the joined history's for ``horizon``), so one
+    program serves series of every grain.
+
+    Plan: the target and covariate rows are unioned and grouped once;
+    the covariate fit, its forecast with the actuals override, the
+    joins and the target fit all run in that row. One exchange, no
+    join, no window, and no residual quantiles for the covariate, whose
+    bands nothing reads.
+    """
+    series_cols = list(series_cols)
+    series = [_ident(c) for c in series_cols]
+    ds, y = _ident(ts_col), _ident(value_col)
+    ds_type, cov_type = dict(target.dtypes)[ts_col], dict(covariate.dtypes)[ts_col]
+    history = covariate.selectExpr(
+        *series,
+        f"struct({_time_index_sql(ds)} AS t, CAST({y} AS DOUBLE) AS y, {ds} AS ds) AS _p",
+    )
+    binds = {"_grain": grain} if isinstance(grain, Column) else {}
+    binds.update(zip(("_cfloor", "_ccap"), cov_caps or ()))
+    binds.update(zip(("floor", "cap"), caps or ()))
+    grouped = _group_with_target(
+        target,
+        history,
+        series_cols=series_cols,
+        ts_col=ts_col,
+        value_col=value_col,
+        col="_p",
+        aggs=(F.expr("count(_p.y)").alias("n_buckets"), F.expr("max(_p.ds)").alias("max_ds")),
+    ).select("*", *(c.alias(k) for k, c in binds.items()))
+    if changepoint_prior_scale is None:
+        fit = _linear_seasonal_program(grouped, grain=grain, quantiles=None)
+        trend = f"my + b * ({_time_index_sql('e.ds')} - mt)"
+    else:
+        fit = _changepoint_program(
+            grouped,
+            grain=grain,
+            n_changepoints=n_changepoints,
+            changepoint_prior_scale=changepoint_prior_scale,
+            quantiles=None,
+        )
+        trend = _ridge_trend_sql(_time_index_sql("e.ds"))
+    yhat = f"{trend} + coalesce(_smap[{_seasonal_key_sql('e.ds', grain)}], 0D)"
+    if cov_caps is not None:
+        yhat = f"least(greatest({yhat}, _cfloor), _ccap)"
+    # the history is t-sorted and the grid follows max_ds, so _cv is
+    # ds-sorted as _join_history needs
+    rows = (
+        "concat(transform(_p, r -> named_struct('ds', r.ds, 'y', r.y)), "
+        f"transform({_future_ds_sql(grain, cov_type)}, "
+        "d -> named_struct('ds', d, 'y', CAST(NULL AS DOUBLE))))"
+    )
+    covariate_rows = _with_horizon(fit, cov_horizon).selectExpr(
+        *series,
+        *map(_ident, binds),
+        "_tg",
+        f"transform({rows}, e -> named_struct('ds', CAST(e.ds AS {ds_type}), "
+        f"'cov', coalesce(e.y, {yhat}))) AS _cv",
+    )
+    return _covariate_regression(
+        _join_history(covariate_rows),
         grain=grain,
-        rows_sql=rows,
-        fitted_sql=model.format(trend=_ridge_trend_sql(_time_index_sql("e.ds")), x="e.x"),
-        bands=("yhat_lower", "yhat_upper") if include_bounds else (),
-        extra=("coef",),
+        horizon=horizon,
+        ds_type=ds_type,
+        series_cols=series_cols,
+        ts_col=ts_col,
+        include_bounds=True,
+        quantiles=(0.05, 0.95),
+        changepoint_prior_scale=changepoint_prior_scale,
+        n_changepoints=n_changepoints,
+        clamp=caps is not None,
     )
 
 

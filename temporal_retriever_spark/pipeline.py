@@ -44,7 +44,7 @@ from temporal_retriever_spark.aggregate import (
     date_bounds,
     normalize_aggregation,
 )
-from temporal_retriever_spark.align import coalesce_actuals, split_forecasts
+from temporal_retriever_spark.align import split_forecasts
 from temporal_retriever_spark.api.models import AnalyzeRequest, Correlation
 from temporal_retriever_spark.diagnostics import (
     acf_pacf,
@@ -53,10 +53,8 @@ from temporal_retriever_spark.diagnostics import (
     granger_causality,
 )
 from temporal_retriever_spark.forecast import (
-    forecast_changepoint,
-    forecast_covariate_changepoint,
+    forecast_covariate_chain,
     forecast_linear_seasonal,
-    forecast_with_covariate,
 )
 from temporal_retriever_spark.grains import bucket_expr, normalize_grain
 from temporal_retriever_spark.ingest import documents_df, dot_path_expr, extract_series
@@ -151,13 +149,14 @@ def _prepared_legs(spark: SparkSession, request: AnalyzeRequest):
 
     Distinct (dataset, index, grain, agg) legs share a series id, so
     e.g. three correlations against the same target prepare it once.
-    One projection turns each observation into one row per leg of its
-    dataset: ``ds`` is parsed once per observation and each leg's dot
-    path is read only for its own dataset's rows. One
-    ``groupBy(series_id, ds)`` then buckets and aggregates every leg,
-    the truncation unit and the aggregate picked per row from map
-    constants, so the plan's shape depends only on which grains and
-    aggregations the request holds. ``ds`` is a date when every leg is
+    One projection turns each observation into one row per distinct dot
+    path of its dataset, and a map constant fans each of those out to
+    one row per leg on that path: ``ds`` is parsed once per observation
+    and each path read once, however many legs (grains, aggregations)
+    share it. One ``groupBy(series_id, ds)`` then buckets and
+    aggregates every leg, the truncation unit and the aggregate picked
+    per row from map constants, so the plan's shape depends only on
+    which grains and aggregations the request holds. ``ds`` is a date when every leg is
     D, W or M and a timestamp otherwise.
     """
     leg_sids: dict[tuple, str] = {}
@@ -165,14 +164,24 @@ def _prepared_legs(spark: SparkSession, request: AnalyzeRequest):
         for cov in (True, False):
             key = _leg_key(corr, cov=cov)
             leg_sids.setdefault(key, "{}.{}|{}|{}".format(*key))
-    legs_by_dataset: dict[str, list[Column]] = {}
+    sids_by_path: dict[tuple[str, str], list[str]] = {}
     for (ds_name, idx, _, _), sid in leg_sids.items():
-        legs_by_dataset.setdefault(ds_name, []).append(
+        sids_by_path.setdefault((ds_name, idx), []).append(sid)
+    paths_by_dataset: dict[str, list[Column]] = {}
+    for i, (ds_name, idx) in enumerate(sids_by_path):
+        paths_by_dataset.setdefault(ds_name, []).append(
             F.struct(
-                F.lit(sid).alias("series_id"),
+                F.lit(i).alias("path"),
                 dot_path_expr("obs", idx).cast("double").alias("y"),
             )
         )
+    sids = F.create_map(
+        *(
+            e
+            for i, ids in enumerate(sids_by_path.values())
+            for e in (F.lit(i), F.array(*map(F.lit, ids)))
+        )
+    )
     rows = (
         documents_df(spark, request.documents)
         .select(
@@ -185,11 +194,12 @@ def _prepared_legs(spark: SparkSession, request: AnalyzeRequest):
             "ts",
             F.inline(
                 _case(
-                    (F.col("series_id") == ds_name, F.array(*legs))
-                    for ds_name, legs in legs_by_dataset.items()
+                    (F.col("series_id") == ds_name, F.array(*paths))
+                    for ds_name, paths in paths_by_dataset.items()
                 )
             ),
         )
+        .select("ts", F.explode(sids[F.col("path")]).alias("series_id"), "y")
     )
     grain = _by_id({sid: g for (_, _, g, _), sid in leg_sids.items()})
     agg = _by_id({sid: a for (_, _, _, a), sid in leg_sids.items()})
@@ -298,6 +308,40 @@ def _rekey(
     )
 
 
+def _fold_args(
+    stats: dict[str, Any],
+    leg_sids: dict[tuple, str],
+    corrs: list[Correlation],
+    cps: float | None,
+) -> dict[str, Any]:
+    """``forecast_covariate_chain``'s per-correlation grain and horizons
+    (the reference default horizon is the leg's bucket count) and the
+    fold's changepoint trend."""
+
+    def horizons(cov: bool) -> Column:
+        return _horizon_by_id(
+            {
+                c.id: c.prediction_horizon or stats[_leg_sid(leg_sids, c, cov=cov)]["n"]
+                for c in corrs
+            }
+        )
+
+    return {
+        "grain": _by_id({c.id: normalize_grain(c.grain) for c in corrs}),
+        "horizon": horizons(cov=False),
+        "cov_horizon": horizons(cov=True),
+        "changepoint_prior_scale": cps,
+        "n_changepoints": N_CHANGEPOINTS,
+    }
+
+
+def _series_ds(row) -> tuple:
+    """Sort key of a fold's collected rows. They are sorted on the
+    driver: an ``orderBy`` would add a range-partition exchange to the
+    fold's plan."""
+    return row["series_id"], row["ds"]
+
+
 def analyze(
     spark: SparkSession, request: AnalyzeRequest, *, lags: int | None = None
 ) -> dict:
@@ -306,6 +350,14 @@ def analyze(
     Returns {"correlations": {id: {diagnostics, autocorrelations,
     partialAutocorrelations, regressorCoefficients, predictions}}} —
     the reference's response shape (app.py:211-248, responses.py).
+
+    After the shared preparation and one stats action, the request runs
+    independent job chains concurrently: one ACF/PACF plan over all
+    series, one ``forecast_covariate_chain`` program per changepoint
+    setting for every prophet correlation whatever its grain (the
+    covariate forecast, its actuals override and the covariate
+    regression in one per-series program), one Granger plan and, when
+    asked, one describe.
     """
     output: dict[str, Any] = {"correlations": {}}
     with _prepared_legs(spark, request) as (leg_sids, prepared):
@@ -328,74 +380,34 @@ def analyze(
                 prepared, lags=k_max, series_cols=("series_id",)
             ).collect()
 
-        # ---- stage 4+5: all forecasts in one plan per grain --------------
+        # ---- stage 4+5: all forecasts in one program per fold ------------
         # both legs are rekeyed to the correlation id (shared PREP is one
-        # plan, but each correlation keeps its own horizons — the
-        # reference forecasts each correlation's covariate with that
+        # plan, but each correlation keeps its own horizons and grain —
+        # the reference forecasts each correlation's covariate with that
         # correlation's horizon, app.py:122-134); one
-        # forecast_with_covariate call per grain regresses every pairing
+        # forecast_covariate_chain call per fold forecasts every
+        # covariate, overrides it with its actuals and regresses every
+        # pairing, whatever the grains
         prophet_corrs = [c for c in request.correlations if c.type == "prophet"]
         granger_corrs = [c for c in request.correlations if c.type == "granger"]
 
-        # fold key: (grain, changepoint scale or None). Correlations that
+        # fold key: the changepoint scale or None. Correlations that
         # provide ChangePointPriorScale get the piecewise changepoint
         # trend (README DIVERGENCES #9); the rest share the plain linear
-        # plan. Distinct scales fold into distinct plans.
-        def fold_key(c: Correlation) -> tuple:
-            provided = c.changepoint_prior_scale_provided
-            return normalize_grain(c.grain), (
-                c.changepoint_prior_scale if provided else None
-            )
+        # program. Distinct scales fold into distinct programs.
+        def fold_key(c: Correlation) -> float | None:
+            return c.changepoint_prior_scale if c.changepoint_prior_scale_provided else None
 
         fold_keys = {fold_key(c) for c in prophet_corrs}
 
-        def run_fold(g, cps) -> list:
-            corrs_g = [c for c in prophet_corrs if fold_key(c) == (g, cps)]
-            cov_hist = rekey(corrs_g, cov=True)
-            targets = rekey(corrs_g, cov=False)
-            cov_horizons = {
-                c.id: c.prediction_horizon or stats[leg_sid(c, cov=True)]["n"]
-                for c in corrs_g
-            }
-            tgt_horizons = {
-                c.id: c.prediction_horizon or stats[leg_sid(c, cov=False)]["n"]
-                for c in corrs_g
-            }
-            if cps is None:
-                cov_pred = forecast_linear_seasonal(
-                    cov_hist, grain=g, horizon=_horizon_by_id(cov_horizons)
-                ).select("series_id", "ds", F.col("yhat").alias("cov"))
-            else:
-                cov_pred = forecast_changepoint(
-                    cov_hist,
-                    grain=g,
-                    horizon=_horizon_by_id(cov_horizons),
-                    n_changepoints=N_CHANGEPOINTS,
-                    changepoint_prior_scale=cps,
-                    include_bounds=False,
-                ).select("series_id", "ds", F.col("yhat").alias("cov"))
-            cov_full = coalesce_actuals(
-                cov_pred,
-                cov_hist.select("series_id", "ds", "y"),
-                on=("series_id", "ds"),
-                pred_col="cov",
-                out_col="cov",
+        def run_fold(cps) -> list:
+            corrs_f = [c for c in prophet_corrs if fold_key(c) == cps]
+            pred = forecast_covariate_chain(
+                rekey(corrs_f, cov=False),
+                rekey(corrs_f, cov=True),
+                **_fold_args(stats, leg_sids, corrs_f, cps),
             )
-            # one per-series program reads each input once: no
-            # checkpoint job pays for itself here
-            forecaster = (
-                forecast_with_covariate
-                if cps is None
-                else partial(
-                    forecast_covariate_changepoint,
-                    n_changepoints=N_CHANGEPOINTS,
-                    changepoint_prior_scale=cps,
-                )
-            )
-            pred = forecaster(
-                targets, cov_full, grain=g, horizon=_horizon_by_id(tgt_horizons)
-            )
-            return pred.orderBy("series_id", "ds").collect()
+            return sorted(pred.collect(), key=_series_ds)
 
         # ---- granger correlations: aligned pairs, ONE grouped-UDF plan ---
         # type="granger" is declared in the reference enum (app.py:33) but
@@ -463,7 +475,7 @@ def analyze(
             max_workers=3 + max(len(fold_keys), 1)
         ) as pool:
             f_diag = pool.submit(run_diagnostics)
-            f_folds = [pool.submit(run_fold, g, cps) for g, cps in fold_keys]
+            f_folds = [pool.submit(run_fold, cps) for cps in fold_keys]
             f_granger = pool.submit(run_granger) if granger_corrs else None
             f_describe = pool.submit(run_describe) if stats_corrs else None
             diag_rows = f_diag.result()
@@ -599,8 +611,8 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
     leg consumes it (app.py:478-483). Folded like ``analyze``: shared
     series prep, ONE stats action (which also carries the min/max/std
     scalars the A4 caps need — floor/cap per correlation become
-    constant maps keyed by correlation id), one forecast plan per grain,
-    one collect.
+    constant maps keyed by correlation id), one forecast program per
+    changepoint setting whatever the grains, one collect each.
     """
     output: dict[str, Any] = {"correlations": {}}
     with _prepared_legs(spark, request) as (leg_sids, prepared):
@@ -614,33 +626,25 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
         leg_sid = partial(_leg_sid, leg_sids)
         rekey = partial(_rekey, prepared, leg_sids)
 
-        def clamp(caps: dict[str, tuple[float, float]], col: Column) -> Column:
-            # greatest/least skip nulls: ids without caps keep ``col``
-            lo = _by_id({cid: cap[0] for cid, cap in caps.items()})
-            hi = _by_id({cid: cap[1] for cid, cap in caps.items()})
-            return F.least(F.greatest(col, lo), hi)
-
         def corr_cps(c) -> float | None:
             o = c.forecast_options
             if o is not None and o.changepoint_prior_scale_provided:
                 return o.changepoint_prior_scale
             return None
 
-        fold_keys = {
-            (normalize_grain(c.grain), corr_cps(c)) for c in request.correlations
-        }
+        fold_keys = {corr_cps(c) for c in request.correlations}
 
-        def run_fold(g, cps) -> list:
-            corrs_g = [
-                c
-                for c in request.correlations
-                if normalize_grain(c.grain) == g and corr_cps(c) == cps
-            ]
-            cov_hist = rekey(corrs_g, cov=True)
-            targets = rekey(corrs_g, cov=False)
+        def caps_by_id(caps: dict[str, tuple[float, float]]) -> tuple[Column, Column]:
+            return (
+                _by_id({cid: cap[0] for cid, cap in caps.items()}),
+                _by_id({cid: cap[1] for cid, cap in caps.items()}),
+            )
+
+        def run_fold(cps) -> list:
+            corrs_f = [c for c in request.correlations if corr_cps(c) == cps]
             cov_caps: dict[str, tuple[float, float]] = {}
             tgt_caps: dict[str, tuple[float, float]] = {}
-            for corr in corrs_g:
+            for corr in corrs_f:
                 opts = corr.forecast_options
                 from_cap = opts.from_cap if opts else None
                 to_cap = opts.to_cap if opts else None
@@ -654,69 +658,24 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
                     to_cap.floor if to_cap else 0.0,
                     to_cap.ceiling if to_cap else None,
                 )
-            cov_horizons = {
-                c.id: c.prediction_horizon or stats[leg_sid(c, cov=True)]["n"]
-                for c in corrs_g
-            }
-            tgt_horizons = {
-                c.id: c.prediction_horizon or stats[leg_sid(c, cov=False)]["n"]
-                for c in corrs_g
-            }
-            if cps is None:
-                cov_yhat = forecast_linear_seasonal(
-                    cov_hist, grain=g, horizon=_horizon_by_id(cov_horizons)
-                )
-            else:
-                cov_yhat = forecast_changepoint(
-                    cov_hist,
-                    grain=g,
-                    horizon=_horizon_by_id(cov_horizons),
-                    n_changepoints=N_CHANGEPOINTS,
-                    changepoint_prior_scale=cps,
-                    include_bounds=False,
-                )
-            cov_pred = cov_yhat.select(
-                "series_id", "ds",
-                clamp(cov_caps, F.col("yhat")).alias("cov"),
+            # the reference's saturating response carries Prophet's
+            # interval columns clamped into the same envelope
+            # (app.py:336-352)
+            pred = forecast_covariate_chain(
+                rekey(corrs_f, cov=False),
+                rekey(corrs_f, cov=True),
+                caps=caps_by_id(tgt_caps),
+                cov_caps=caps_by_id(cov_caps),
+                **_fold_args(stats, leg_sids, corrs_f, cps),
             )
-            cov_full = coalesce_actuals(
-                cov_pred,
-                cov_hist.select("series_id", "ds", "y"),
-                on=("series_id", "ds"),
-                pred_col="cov",
-                out_col="cov",
-            )
-            forecaster = (
-                forecast_with_covariate
-                if cps is None
-                else partial(
-                    forecast_covariate_changepoint,
-                    n_changepoints=N_CHANGEPOINTS,
-                    changepoint_prior_scale=cps,
-                )
-            )
-            pred = forecaster(
-                targets,
-                cov_full,
-                grain=g,
-                horizon=_horizon_by_id(tgt_horizons),
-            ).select(
-                "series_id", "ds",
-                clamp(tgt_caps, F.col("yhat")).alias("yhat"),
-                # the reference's saturating response carries Prophet's
-                # interval columns clamped into the same envelope
-                # (app.py:336-352)
-                clamp(tgt_caps, F.col("yhat_lower")).alias("yhat_lower"),
-                clamp(tgt_caps, F.col("yhat_upper")).alias("yhat_upper"),
-            )
-            return pred.orderBy("series_id", "ds").collect()
+            return sorted(pred.collect(), key=_series_ds)
 
-        # grain folds are independent job chains over the cached
-        # `prepared` frame (materialized by the stats action) — submit
-        # them concurrently, same as `analyze`
+        # folds are independent job chains over the cached `prepared`
+        # frame (materialized by the stats action) — submit them
+        # concurrently, same as `analyze`
         pred_rows: list = []
         with ThreadPoolExecutor(max_workers=max(len(fold_keys), 1)) as pool:
-            for f in [pool.submit(run_fold, g, cps) for g, cps in fold_keys]:
+            for f in [pool.submit(run_fold, cps) for cps in fold_keys]:
                 pred_rows.extend(f.result())
 
         for corr in request.correlations:
@@ -730,6 +689,7 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
             def to_record(row, *, _drop=no_bounds):
                 d = row.asDict()
                 d.pop("series_id", None)
+                d.pop("coef", None)
                 if _drop:
                     # Prophet uncertainty_samples=0: no interval columns
                     d.pop("yhat_lower", None)

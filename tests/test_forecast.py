@@ -6,9 +6,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from temporal_retriever_spark.aggregate import bucket_aggregate
+from temporal_retriever_spark.align import coalesce_actuals
 from temporal_retriever_spark.forecast import (
     changepoint_fractions,
     forecast_changepoint,
+    forecast_covariate_chain,
     forecast_covariate_changepoint,
     forecast_linear_seasonal,
     forecast_with_covariate,
@@ -174,6 +176,98 @@ def test_forecast_independent_of_partitioning(spark, op):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prior)
     assert one == many
+
+
+def _chain_series(spark):
+    """Target and covariate histories of four series, one per grain,
+    timestamp-keyed as a mixed-grain request's legs are. The covariate
+    lacks some values (its forecast fills them) and the target lacks
+    some dates."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    start = datetime.datetime(2023, 1, 1)
+    month_ends = [
+        datetime.datetime(2023 + (m + 1) // 12, (m + 1) % 12 + 1, 1) - datetime.timedelta(days=1)
+        for m in range(24)
+    ]
+    ticks = {
+        "h": [start + datetime.timedelta(hours=i) for i in range(120)],
+        "d": [start + datetime.timedelta(days=i) for i in range(70)],
+        "w": [start + datetime.timedelta(days=7 * i) for i in range(30)],
+        "m": month_ends,
+    }
+    target, cov = [], []
+    for sid, days in ticks.items():
+        for i, d in enumerate(days):
+            x = float(rng.normal(10.0, 3.0))
+            cov.append((sid, d, None if i % 9 == 4 else x))
+            if i % 11 != 7:
+                target.append((sid, d, 0.2 * i + 1.5 * x + float(rng.normal())))
+    schema = "series_id string, ds timestamp, y double"
+    return spark.createDataFrame(target, schema), spark.createDataFrame(cov, schema)
+
+
+_CHAIN_GRAINS = {"h": "H", "d": "D", "w": "W", "m": "M"}
+
+
+@pytest.mark.parametrize(
+    "cps,capped", [(None, False), (0.3, True)], ids=["linear", "changepoint-capped"]
+)
+def test_covariate_chain_equals_three_step_chain(spark, cps, capped):
+    """One program with a per-series grain gives, bit for bit, what the
+    covariate forecast, the actuals override and the covariate
+    regression give per grain."""
+    target, cov = _chain_series(spark)
+    cov_caps = (F.lit(12.0), F.lit(40.0)) if capped else None
+    caps = (F.lit(0.0), F.lit(30.0)) if capped else None
+
+    def clamp(col, bounds):
+        return F.least(F.greatest(col, bounds[0]), bounds[1]) if bounds else col
+
+    want = []
+    for sid, grain in _CHAIN_GRAINS.items():
+        t, c = (f.where(F.col("series_id") == sid) for f in (target, cov))
+        if cps is None:
+            cov_pred = forecast_linear_seasonal(c, grain=grain, horizon=9)
+            regress = forecast_with_covariate
+        else:
+            cov_pred = forecast_changepoint(
+                c, grain=grain, horizon=9, changepoint_prior_scale=cps, include_bounds=False
+            )
+            regress = lambda *a, **k: forecast_covariate_changepoint(  # noqa: E731
+                *a, changepoint_prior_scale=cps, **k
+            )
+        cov_full = coalesce_actuals(
+            cov_pred.select("series_id", "ds", clamp(F.col("yhat"), cov_caps).alias("cov")),
+            c,
+            on=("series_id", "ds"),
+            pred_col="cov",
+            out_col="cov",
+        )
+        pred = regress(t, cov_full, grain=grain, horizon=5)
+        want += pred.select(
+            "series_id",
+            "ds",
+            *(clamp(F.col(b), caps).alias(b) for b in ("yhat", "yhat_lower", "yhat_upper")),
+            "coef",
+        ).collect()
+    grain_by_id = F.create_map(
+        *(e for sid, g in _CHAIN_GRAINS.items() for e in (F.lit(sid), F.lit(g)))
+    )[F.col("series_id")]
+    got = forecast_covariate_chain(
+        target,
+        cov,
+        grain=grain_by_id,
+        horizon=5,
+        cov_horizon=9,
+        changepoint_prior_scale=cps,
+        caps=caps,
+        cov_caps=cov_caps,
+    ).collect()
+    key = lambda r: (r["series_id"], r["ds"])  # noqa: E731
+    assert {r["series_id"] for r in got} == set(_CHAIN_GRAINS)
+    assert [repr(r) for r in sorted(got, key=key)] == [repr(r) for r in sorted(want, key=key)]
 
 
 def test_long_hourly_history_matches_numpy(spark):

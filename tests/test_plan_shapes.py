@@ -89,6 +89,18 @@ def test_ljung_box_single_aggregation_no_python(spark, daily):
     assert "Python" not in plan
 
 
+def test_lag_products_share_one_window(spark, daily):
+    # every lag product is projected in one select: the analyzed plan
+    # holds the mean's Window and one Window for all 36 lags, not a
+    # Window (and an analysis) per lag
+    import re
+
+    from temporal_retriever_spark.diagnostics import acf_pacf
+
+    plan = acf_pacf(daily, lags=36)._jdf.queryExecution().analyzed().toString()
+    assert len(re.findall(r"^[\s:+|-]*Window ", plan, re.M)) <= 2, plan
+
+
 @pytest.mark.parametrize("op", ["pacf", "acf_pacf"])
 def test_pacf_family_native_at_high_lags(spark, daily, op):
     # the Durbin-Levinson fold keeps PACF in the aggregate's own plan at
@@ -118,22 +130,35 @@ def test_quality_prune_scores_ride_the_scan(spark, docs):
 
 
 @pytest.mark.parametrize(
-    "op", ["linear", "covariate", "changepoint", "covariate_changepoint"]
+    "op",
+    [
+        "linear", "covariate", "changepoint", "covariate_changepoint",
+        "linear_chain", "changepoint_chain",
+    ],
 )
 def test_native_forecast_is_one_array_program(spark, daily, op):
     # one groupBy(series) collects the rows; the fit (the changepoint
     # ridge solve included), seasonal means, quantiles, future grid and
     # (covariate) joins are array functions over that row, so the
-    # collect shuffle is the only exchange
+    # collect shuffle is the only exchange. The chains forecast the
+    # covariate, override it with its actuals and regress the target in
+    # that one row too, the changepoint one with a per-series grain.
     from temporal_retriever_spark import forecast as fc
 
     cov = daily.select("series_id", "ds", (F.col("y") * 2.0).alias("cov"))
+    hist = cov.withColumnRenamed("cov", "y")
     got = {
         "linear": lambda: fc.forecast_linear_seasonal(daily, grain="D", horizon=7),
         "covariate": lambda: fc.forecast_with_covariate(daily, cov, grain="D", horizon=7),
         "changepoint": lambda: fc.forecast_changepoint(daily, grain="D", horizon=7),
         "covariate_changepoint": lambda: fc.forecast_covariate_changepoint(
             daily, cov, grain="D", horizon=7
+        ),
+        "linear_chain": lambda: fc.forecast_covariate_chain(
+            daily, hist, grain="D", horizon=7, cov_horizon=7
+        ),
+        "changepoint_chain": lambda: fc.forecast_covariate_chain(
+            daily, hist, grain=F.lit("D"), horizon=7, cov_horizon=7, changepoint_prior_scale=0.5
         ),
     }[op]()
     plan = _plan(got)

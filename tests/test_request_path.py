@@ -1,8 +1,9 @@
 """The ``/analyze`` request path on a small in-test request: per-
 correlation results do not depend on which other correlations ride
 along, the request frames stay in the JVM, a repeated request reuses
-its generated code, and one scan of the documents prepares every leg
-as the per-leg plans did."""
+its generated code, one scan of the documents prepares every leg as
+the per-leg plans did, and one forecast program per changepoint
+setting serves correlations of every grain."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import datetime as dt
 import json
 import math
 import os
+import re
 import subprocess
 import sys
 
@@ -24,6 +26,7 @@ from temporal_retriever_spark.api.models import (
     parse_analyze_request,
 )
 from temporal_retriever_spark.ingest import documents_df, extract_series
+from tests.fixture_requests import electricity_body
 
 N_OBS = 300
 _LEGS = {
@@ -216,13 +219,13 @@ def _changepoint_body() -> dict:
 def test_changepoint_correlations_match_solo_and_run_no_python(spark, monkeypatch):
     req = parse_analyze_request(_changepoint_body())
     folds = []
-    fit = P.forecast_covariate_changepoint
+    fit = P.forecast_covariate_chain
 
     def spy(*args, **kwargs):
         folds.append(fit(*args, **kwargs))
         return folds[-1]
 
-    monkeypatch.setattr(P, "forecast_covariate_changepoint", spy)
+    monkeypatch.setattr(P, "forecast_covariate_chain", spy)
     full = P.analyze(spark, req)["correlations"]
     for corr in req.correlations:
         solo = P.analyze(
@@ -353,6 +356,20 @@ def test_one_pass_prep_scans_documents_once(spark):
     assert "Exchange" not in plan.replace("Exchange hashpartitioning", "")
 
 
+def test_prep_reads_each_dot_path_once(spark):
+    """The electricity request reads ``nat_demand`` and ``T2M_toc`` for
+    both an hourly and a daily leg: each path is parsed once per
+    observation all the same."""
+    req = parse_analyze_request(electricity_body())
+    with P._prepared_legs(spark, req) as (leg_sids, prepared):
+        P._leg_stats(prepared, leg_sids)
+        plan = _cached_plan(prepared)
+    paths = {idx for _, idx, _, _ in leg_sids}
+    assert len(paths) < len(leg_sids)
+    read = re.findall(r"get_json_object\(obs#\d+, \$\.(\w+)\)", plan)
+    assert sorted(p for p in read if p != "date") == sorted(paths), plan
+
+
 def test_missing_leg_raises(spark):
     body = _mixed_body((("D", "sum"),))
     body["analyticsOptions"]["correlations"][0]["fromData"] = "absent"
@@ -393,3 +410,76 @@ def test_default_cap_survives_a_large_mean(spark, monkeypatch):
     assert math.isclose(
         (cap - values.max()) / 3, np.std(values, ddof=1), rel_tol=1e-6
     )
+
+
+# --- one fold program per changepoint setting -------------------------
+
+_GRAINS = (("H", "mean"), ("D", "sum"), ("W", "median"), ("M", "max"))
+
+
+def _fold_body(changepoints: bool) -> dict:
+    """``_mixed_body`` over four grains. With ``changepoints`` the H and
+    W correlations give a changepoint prior scale, in each endpoint's
+    spelling, so the request holds two folds."""
+    body = _mixed_body(_GRAINS)
+    if changepoints:
+        for corr in body["analyticsOptions"]["correlations"][::2]:
+            corr["ChangePointPriorScale"] = 0.5
+            corr["ForecastingOptions"] = {"toIndex": {"changepointPriorScale": 0.5}}
+    return body
+
+
+def _datetimes(obj):
+    """``obj`` with every date read as its midnight: a request whose
+    legs are all D, W or M buckets to dates, a mixed one to timestamps."""
+    if isinstance(obj, dict):
+        return {k: _datetimes(v) for k, v in obj.items()}
+    if isinstance(obj, list):
+        return [_datetimes(v) for v in obj]
+    if isinstance(obj, dt.date) and not isinstance(obj, dt.datetime):
+        return dt.datetime.combine(obj, dt.time())
+    return obj
+
+
+@pytest.mark.parametrize(
+    "endpoint,changepoints",
+    [("analyze", False), ("analyze", True), ("saturating_growth", True)],
+)
+def test_mixed_grains_run_one_fold_per_changepoint_setting(
+    spark, monkeypatch, endpoint, changepoints
+):
+    """H, D, W and M correlations share one forecast program per
+    changepoint setting, and each still equals its solo request."""
+    req = parse_analyze_request(_fold_body(changepoints))
+    run = getattr(P, endpoint)
+    folds = []
+    chain = P.forecast_covariate_chain
+
+    def spy(*args, **kwargs):
+        folds.append(chain(*args, **kwargs))
+        return folds[-1]
+
+    monkeypatch.setattr(P, "forecast_covariate_chain", spy)
+    full = run(spark, req)["correlations"]
+    assert len(folds) == (2 if changepoints else 1)
+    for fold in folds:
+        plan = fold._jdf.queryExecution().executedPlan().toString()
+        # the union and the one groupBy: one exchange at most (none when
+        # the small request's prepared frame is one partition), and no
+        # sort's range partitioning
+        above_cache = plan.split("InMemoryTableScan")[0]
+        assert above_cache.count("Exchange") <= 1, plan
+        assert "rangepartitioning" not in above_cache, plan
+        for node in ("Join", "Window", "MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython"):
+            assert node not in plan, node
+    for corr in req.correlations:
+        solo = run(
+            spark, AnalyzeRequest(documents=req.documents, correlations=[corr])
+        )["correlations"]
+        got, want = _datetimes(full[corr.id]), _datetimes(solo[corr.id])
+        assert _close(got, want), corr.id
+        # the correlograms' sums run in an order the other series move
+        # by an ulp, which a short series' PACF amplifies; the forecast
+        # reads its own series' row only
+        for key in ("type", "diagnostics", "regressorCoefficients", "predictions"):
+            assert _close(got.get(key), want.get(key), rel=1e-12), (corr.id, key)
