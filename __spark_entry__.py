@@ -41,9 +41,6 @@ from temporal_retriever_spark.diagnostics import (
     ljung_box,
     durbin_levinson_stages,
     ccf,
-    granger_causality,
-    granger_cholesky_rounds,
-    granger_gram_exprs,
     granger_lag1,
     granger_native,
     pacf,
@@ -426,10 +423,11 @@ def q_describe_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_granger_click_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W10 at maxlag=5, fully native: staged-Cholesky F statistics and
-    finite-series p-values (diagnostics.granger_native) — the whole
-    multi-lag Granger test is oracle-backed; the grouped-UDF
-    granger_causality path is cross-checked against it in tests."""
+    """W10 at maxlag=5, fully native (diagnostics.granger_native, one
+    per-series array program): the whole multi-lag Granger test is
+    oracle-backed, against row-wise Gram sums and a staged Cholesky in
+    DuckDB; the numpy granger_causality reference is cross-checked
+    against it in tests."""
     target = _daily_series(spark, sf_dir, "click").withColumn(
         "series_id", F.lit("click~view")
     )
@@ -463,8 +461,8 @@ def q_ccf_click_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_granger_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native lag-1 Granger (explicit-sum OLS + Cramer) — the
-    SQL-mirrorable fast path of W10; the maxlag>1 UDF path stays
-    rows-only-checked (needs a dense solve + the F CDF)."""
+    SQL-mirrorable fast path of W10; the multi-lag test is
+    granger_click_view."""
     target = _daily_series(spark, sf_dir, "click").withColumn(
         "series_id", F.lit("click~view")
     )
@@ -13783,11 +13781,7 @@ def _forecast_oracle(saturating: bool) -> str:
     caps_cte = """
     fc AS (
         SELECT event_type, LEAST(0.0, MIN(y)) AS floor,
-               GREATEST(MAX(y) + 3 * COALESCE(
-                   CASE WHEN COUNT(y) > 1 THEN SQRT(GREATEST(
-                       (SUM(y * y) - SUM(y) * SUM(y) / CAST(COUNT(y) AS DOUBLE))
-                       / (CAST(COUNT(y) AS DOUBLE) - 1.0), 0.0)) END, 0),
-               MAX(y)) AS cap
+               GREATEST(MAX(y) + 3 * COALESCE(STDDEV_SAMP(y), 0), MAX(y)) AS cap
         FROM s GROUP BY 1
     ),"""
     caps_join = " JOIN fc ON fc.event_type = grid.event_type" if saturating else ""
@@ -14094,13 +14088,124 @@ def _changepoint_oracle() -> str:
     )
 
 
+# ---------------------------------------------------------------------------
+# DuckDB side of granger_click_view: staged Cholesky on conditional Gram
+# sums, an independent route to the engine's array program.
+#
+# The ssr F-test needs RSS of the restricted ([1, y-lags]) and
+# unrestricted ([1, y-lags, x-lags]) OLS fits. Ordering the regressors
+# restricted-first makes the restricted model a PREFIX of the
+# unrestricted one, so ONE Cholesky factorization + forward solve
+# yields both: RSS_r = syy − Σ_{k≤lag} w_k², RSS_u = syy − Σ_k w_k².
+# Every stage is a scalar expression over the per-series Gram sums,
+# applied as chained CTEs.
+# ---------------------------------------------------------------------------
+
+def _granger_z_sql(i: int, lag: int) -> str:
+    """SQL/Spark expression for regressor z_i of the lag-`lag` model."""
+    if i == 0:
+        return "1.0"
+    if i <= lag:
+        return f"_y{i}"
+    return f"_x{i - lag}"
+
+
+def granger_gram_exprs(maxlag: int) -> list[tuple[str, str]]:
+    """(name, SQL aggregate expr) for every conditional Gram sum.
+
+    For each lag l the valid rows are those with full lag history
+    (`_t >= l`, 0-based index after the na.drop). Names:
+    ``g{l}_m`` row count, ``g{l}_s_{i}_{j}`` = Σ z_i z_j (i ≤ j),
+    ``g{l}_t_{i}`` = Σ z_i·y, ``g{l}_q`` = Σ y².
+    """
+    out: list[tuple[str, str]] = []
+    for lag in range(1, maxlag + 1):
+        p = 2 * lag + 1
+        cond = f"_t >= {lag}"
+        out.append((f"g{lag}_m", f"SUM(CASE WHEN {cond} THEN 1.0 ELSE 0.0 END)"))
+        for i in range(p):
+            for j in range(i, p):
+                zi, zj = _granger_z_sql(i, lag), _granger_z_sql(j, lag)
+                out.append(
+                    (f"g{lag}_s_{i}_{j}",
+                     f"SUM(CASE WHEN {cond} THEN ({zi}) * ({zj}) END)")
+                )
+            out.append(
+                (f"g{lag}_t_{i}",
+                 f"SUM(CASE WHEN {cond} THEN ({_granger_z_sql(i, lag)}) * _yd END)")
+            )
+        out.append((f"g{lag}_q", f"SUM(CASE WHEN {cond} THEN _yd * _yd END)"))
+    return out
+
+
+def granger_cholesky_rounds(maxlag: int) -> list[list[tuple[str, str]]]:
+    """Staged Cholesky + forward solve over the Gram-sum names.
+
+    Returns rounds of (name, scalar SQL expr); each round references
+    only earlier rounds, so both engines apply them as chained
+    projections. Column round k emits, per lag l with k < 2l+1:
+    ``g{l}_d_{k}`` (pivot), then ``g{l}_l_{j}_{k}`` (column k of L)
+    and ``g{l}_w_{k}`` (forward-solve component).
+    """
+    rounds: list[list[tuple[str, str]]] = []
+    pmax = 2 * maxlag + 1
+    for k in range(pmax):
+        # ONE round per pivot column: the pivot d_k is inlined textually
+        # into this round's divisions (expressions in a round may only
+        # reference earlier rounds), which halves the projection-round
+        # count — the dominant plan-compile cost at high maxlag
+        rnd: list[tuple[str, str]] = []
+        for lag in range(1, maxlag + 1):
+            p = 2 * lag + 1
+            if k >= p:
+                continue
+            d_expr = " - ".join(
+                [f"g{lag}_s_{k}_{k}"]
+                + [f"g{lag}_l_{k}_{i} * g{lag}_l_{k}_{i}" for i in range(k)]
+            )
+            piv = f"sqrt({d_expr})"
+            rnd.append((f"g{lag}_l_{k}_{k}", piv))
+            for j in range(k + 1, p):
+                g_jk = f"g{lag}_s_{k}_{j}"  # Gram stored upper-triangular
+                num = " - ".join(
+                    [g_jk]
+                    + [f"g{lag}_l_{j}_{i} * g{lag}_l_{k}_{i}" for i in range(k)]
+                )
+                rnd.append((f"g{lag}_l_{j}_{k}", f"({num}) / ({piv})"))
+            wnum = " - ".join(
+                [f"g{lag}_t_{k}"]
+                + [f"g{lag}_l_{k}_{i} * g{lag}_w_{i}" for i in range(k)]
+            )
+            rnd.append((f"g{lag}_w_{k}", f"({wnum}) / ({piv})"))
+        rounds.append(rnd)
+    final: list[tuple[str, str]] = []
+    for lag in range(1, maxlag + 1):
+        p = 2 * lag + 1
+        all_w = " + ".join(f"g{lag}_w_{k} * g{lag}_w_{k}" for k in range(p))
+        r_w = " + ".join(f"g{lag}_w_{k} * g{lag}_w_{k}" for k in range(lag + 1))
+        final.append((f"g{lag}_rss_u", f"g{lag}_q - ({all_w})"))
+        final.append((f"g{lag}_rss_r", f"g{lag}_q - ({r_w})"))
+    rounds.append(final)
+    fstats: list[tuple[str, str]] = []
+    for lag in range(1, maxlag + 1):
+        dfd = f"(g{lag}_m - {2 * lag + 1})"
+        fstats.append(
+            (f"g{lag}_f",
+             f"CASE WHEN g{lag}_rss_u <= 0 THEN CAST('Infinity' AS DOUBLE) "
+             f"ELSE ((g{lag}_rss_r - g{lag}_rss_u) / {lag}.0) "
+             f"/ (g{lag}_rss_u / {dfd}) END")
+        )
+    rounds.append(fstats)
+    return rounds
+
+
 def _granger_native_oracle(maxlag: int = 5) -> str:
-    """DuckDB mirror of ``granger_native``: the same detrend CTEs as
-    the lag-1 oracle, the same conditional Gram sums
-    (``granger_gram_exprs``), the same staged Cholesky rounds
+    """DuckDB check of ``granger_native``: the same detrend CTEs as
+    the lag-1 oracle, row-wise conditional Gram sums
+    (``granger_gram_exprs``), the staged Cholesky rounds
     (``granger_cholesky_rounds``) as chained CTEs, and per-lag exact
-    p-values via the lgamma form of the same finite incomplete-beta
-    series ``f_sf_expr`` evaluates."""
+    p-values via the lgamma form of the finite incomplete-beta series
+    (A&S 26.5.6-26.5.9)."""
     import math as _math
 
     detrend = (
@@ -14175,7 +14280,7 @@ def _granger_native_oracle(maxlag: int = 5) -> str:
         "FROM tj GROUP BY lag)"
     )
     # unrolled even-lag series and odd-lag arcsin bases (build-time
-    # constants per lag, the same unrolling f_sf_expr does)
+    # constants per lag)
     even_branches = []
     for lag in range(2, maxlag + 1, 2):
         terms, c = [], "1.0"
@@ -14253,8 +14358,8 @@ def _granger_lag1_oracle() -> str:
         cur = f"g{i}"
         ctes.append(f"{cur} AS (SELECT *, {expr} AS {name} FROM {prev})")
         prev = cur
-    # exact F(1, d2) p-value: the same finite incomplete-beta series as
-    # diagnostics.f_sf_lag1_expr, coefficients via lgamma (c_j = C(2j,j)/4^j)
+    # exact F(1, d2) p-value: the finite incomplete-beta series for
+    # df_num = 1, coefficients via lgamma (c_j = C(2j,j)/4^j)
     ctes.append(
         f"pv0 AS (SELECT *, CAST(m - 3 AS BIGINT) AS d2i, "
         f"(m - 3.0) / ((m - 3.0) + f_stat) AS px FROM {prev})"

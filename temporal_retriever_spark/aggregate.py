@@ -191,15 +191,10 @@ def floor_ceiling_aggs(
     min_y, max_y, std_y — for callers that fold them into their own
     aggregation."""
     mn, mx = F.min(value_col), F.max(value_col)
-    # sample std from explicit sums (≡ stddev_samp): the closed form over
-    # sums is bit-reproducible across engines/re-runs, unlike the
-    # engine-specific incremental stddev update formulas
-    n = F.count(value_col).cast("double")
-    var = (
-        F.sum(F.col(value_col) * F.col(value_col))
-        - F.sum(value_col) * F.sum(value_col) / n
-    ) / (n - F.lit(1.0))
-    sd = F.when(n > 1, F.sqrt(F.greatest(var, F.lit(0.0)))).otherwise(F.lit(None))
+    # Spark's stddev_samp updates central moments, as accurate as
+    # pandas' two-pass std(); the closed form over Σy and Σy² cancels
+    # for a large mean with a small spread. NULL below two values.
+    sd = F.stddev_samp(value_col)
     default_ceiling = mx + F.lit(3.0) * F.coalesce(sd, F.lit(0.0))
     if user_floor is None:
         floor = mn

@@ -22,7 +22,11 @@ Spark-first design:
   *adjusted* divisor n−k, pacf_k = the order-k reflection coefficient.
 * **Granger** — per (target, covariate) pair: OLS restricted vs
   unrestricted lag regressions, ssr-based F statistic (the notebook's
-  ``ssr_ftest``), numpy ``lstsq`` inside the same grouped-UDF surface.
+  ``ssr_ftest``), natively at any maxlag: one per-series array program
+  builds every lag's Gram matrix from the pair's lag-product sums and
+  solves them with one mapped Cholesky kernel (``granger_native``).
+  ``granger_causality`` (numpy ``lstsq`` in a grouped pandas UDF) is
+  the reference it is tested against.
 """
 
 from __future__ import annotations
@@ -41,6 +45,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from temporal_retriever_spark.forecast import _dot_sql, _ident, _spd_solve_sql
 
 
 def default_nlags(n: int) -> int:
@@ -773,69 +779,89 @@ def acf_pacf(
     )
 
 
-def _safe_seq(upper: Column) -> Column:
-    """sequence(0, upper) that degrades to an EMPTY array when upper < 0
-    (Spark's sequence(0, -1) steps DOWNWARD instead) — keeps the
-    incomplete-beta folds correct for degenerate df_den."""
-    return F.when(upper >= 0, F.sequence(F.lit(0), upper)).otherwise(
-        F.array().cast("array<int>")
+def _lgamma_sql(zs: str) -> str:
+    """ln Γ(z) for each z > 0 of the array<double> ``zs``, as SQL text
+    (Spark SQL has no lgamma): the Stirling series through the z⁻⁹
+    term at w = z + k ≥ 16 (k ≥ 1), less ln(z·(z+1)···(z+k−1));
+    absolute error ~1e-15 plus rounding."""
+    stirling = (
+        "(w - 0.5D) * ln(w) - w + {!r}D + (1D / w) * (1D / 12D + r * (-1D / 360D "
+        "+ r * (1D / 1260D + r * (-1D / 1680D + r / 1188D))))"
+    ).format(0.5 * math.log(2 * math.pi))
+    return (
+        f"transform({zs}, z -> transform(array(greatest(1, 16 - CAST(least(z, 16D) AS INT))), k -> "
+        f"transform(array(z + k), w -> transform(array(1D / (w * w)), r -> {stirling})[0])[0] "
+        "- ln(aggregate(sequence(0, k - 1), 1D, (p, i) -> p * (z + i))))[0])"
     )
 
 
-def f_sf_lag1_expr(f_stat: Column, df_den: Column) -> Column:
-    """Exact F(1, d2) survival function (p-value) as a native column
-    expression — no UDF, mirrorable in ANSI SQL.
-
-    For df_num=1 the regularized incomplete beta I_x(d2/2, 1/2) at
-    x = d2/(d2 + F) telescopes into a FINITE series of d2//2 terms
-    built on the central-binomial coefficients c_j = C(2j,j)/4^j
-    (recurrence c_{j+1} = c_j·(2j+1)/(2j+2)):
-
-    * d2 even:  p = 1 − √(1−x) · Σ_{j<d2/2} c_j x^j
-    * d2 odd:   p = (2/π)·asin(√x) − √(x(1−x))/π · Σ_{j<⌊d2/2⌋} x^j/((j+½)c_j)
-
-    (standard incomplete-beta integer/half-integer reductions, cf.
-    Abramowitz & Stegun 26.5.6-26.5.9 — public formulas). The fold runs
-    as a JVM ``aggregate`` HOF over ``sequence(0, d2//2−1)``; agrees
-    with the continued-fraction ``stats.f_sf`` to ~1e-13. The DuckDB
-    oracle mirrors the same series with lgamma-based coefficients.
-
-    Only the df_num=1 case reduces this way — multi-lag Granger keeps
-    the grouped-UDF path for its p-values.
-    """
-    f = f_stat.cast("double")
-    d2 = df_den.cast("double")
-    x = d2 / (d2 + f)
-    is_even = (df_den.cast("long") % 2) == 0
-    nt = F.floor(d2 / 2).cast("integer")
-    folded = F.aggregate(
-        _safe_seq(nt - F.lit(1)),
-        F.struct(
-            F.lit(0.0).alias("s"), F.lit(1.0).alias("c"), F.lit(1.0).alias("px")
-        ),
-        lambda acc, j: F.struct(
-            (
-                acc["s"]
-                + F.when(is_even, acc["c"] * acc["px"]).otherwise(
-                    acc["px"] / ((j.cast("double") + 0.5) * acc["c"])
-                )
-            ).alias("s"),
-            (
-                acc["c"]
-                * (2 * j.cast("double") + 1)
-                / (2 * j.cast("double") + 2)
-            ).alias("c"),
-            (acc["px"] * x).alias("px"),
-        ),
-        lambda acc: acc["s"],
+def _betacf_sql(a: str, b: str, x: str) -> str:
+    """The incomplete beta continued fraction by Lentz's method, step
+    for step as ``stats._betacf``: 200 iterations of two half-steps
+    (here 400 folded steps, the coefficient picked by parity), stopping
+    once an iteration's relative step is below 3e-14."""
+    tiny = "CASE WHEN abs({0}) < 1E-300D THEN 1E-300D ELSE {0} END".format
+    aa = (
+        f"CASE WHEN k % 2 = 0 THEN m * ({b} - m) * {x} / (({a} - 1D + 2 * m) * ({a} + 2 * m)) "
+        f"ELSE -({a} + m) * ({a} + {b} + m) * {x} / (({a} + 2 * m) * ({a} + 1D + 2 * m)) END"
     )
-    p_even = F.lit(1.0) - F.sqrt(F.lit(1.0) - x) * folded
-    p_odd = (
-        F.lit(2.0 / math.pi) * F.asin(F.sqrt(x))
-        - F.sqrt(x * (F.lit(1.0) - x)) / F.lit(math.pi) * folded
+    step = (
+        f"transform(array(named_struct('d', 1D / {tiny('1D + aa * o.d')}, "
+        f"'c', {tiny('1D + aa / o.c')})), n -> named_struct('c', n.c, 'd', n.d, "
+        "'h', o.h * (n.d * n.c), 'e', CASE WHEN k % 2 = 1 THEN n.d * n.c ELSE o.e END))[0]"
     )
-    return F.when(~(f > 0), F.lit(1.0)).otherwise(
-        F.when(is_even, p_even).otherwise(p_odd)
+    start = f"1D / {tiny(f'1D - ({a} + {b}) * {x} / ({a} + 1D)')}"
+    return (
+        f"transform(array({start}), d -> aggregate(sequence(2, 401), "
+        "named_struct('c', 1D, 'd', d, 'h', d, 'e', 0D), (o, k) -> "
+        "CASE WHEN abs(o.e - 1D) < 3E-14D THEN o ELSE transform(array(k div 2), m -> "
+        f"transform(array({aa}), aa -> {step})[0])[0] END, o -> o.h))[0]"
+    )
+
+
+def f_sf_expr(f_stat: str, d1: str, d2: str) -> str:
+    """F(d1, d2) survival function (an F test's p-value) as SQL text over
+    three SQL expressions: the statistic and the degrees of freedom,
+    all read as values, so one expression serves every d1 and maps
+    over an array of tests.
+
+    The same algorithm as ``stats.f_sf``: p = I_x(d2/2, d1/2) at
+    x = d2/(d2 + d1·F), the regularized incomplete beta by its
+    continued fraction on the side of x where it converges fast, with
+    the prefactor from ln Γ (``_lgamma_sql``). Small p-values keep
+    their relative precision (a finite series in 1 − p would not).
+    1 when F is not positive or a dof is, 0 at F = +Infinity, NULL
+    when an input is NULL."""
+    lg = _lgamma_sql("array(_F.a + _F.b, _F.a, _F.b)")
+    front = (
+        f"transform(array({lg}), g -> "
+        "exp(g[0] - g[1] - g[2] + _F.a * ln(_F.x) + _F.b * ln(1D - _F.x)))[0]"
+    )
+    # the fraction converges fast below the mean x < (a+1)/(a+b+2);
+    # above it, I_x(a, b) = 1 − I_{1−x}(b, a)
+    side = (
+        "CASE WHEN _F.lo THEN named_struct('a', _F.a, 'b', _F.b, 'x', _F.x) "
+        "ELSE named_struct('a', _F.b, 'b', _F.a, 'x', 1D - _F.x) END"
+    )
+    p = (
+        "CASE WHEN NOT (_F.f > 0D) OR _F.a <= 0D OR _F.b <= 0D THEN 1D "
+        "WHEN _F.x <= 0D THEN 0D WHEN _F.x >= 1D THEN 1D "
+        f"ELSE transform(array({side}), _C -> transform(array("
+        f"{front} * {_betacf_sql('_C.a', '_C.b', '_C.x')} / _C.a), "
+        "h -> CASE WHEN _F.lo THEN h ELSE 1D - h END)[0])[0] END"
+    )
+    # I_x(a, b) with a = d2/2, b = d1/2
+    bound = (
+        f"named_struct('f', CAST({f_stat} AS DOUBLE), 'd1', CAST({d1} AS DOUBLE), "
+        f"'d2', CAST({d2} AS DOUBLE))"
+    )
+    return (
+        f"transform(array({bound}), _i -> transform(array("
+        "CASE WHEN _i.f > 0D AND _i.d1 > 0D AND _i.d2 > 0D "
+        "THEN _i.d2 / (_i.d2 + _i.d1 * _i.f) END), _x -> "
+        "transform(array(named_struct('f', _i.f, 'a', _i.d2 / 2D, 'b', _i.d1 / 2D, 'x', _x, "
+        "'lo', _x < (_i.d2 / 2D + 1D) / (_i.d2 / 2D + _i.d1 / 2D + 2D))), "
+        f"_F -> {p})[0])[0])[0]"
     )
 
 
@@ -858,9 +884,9 @@ def granger_lag1(
     lag rows (statsmodels ssr_ftest semantics). Linear detrend uses the
     0..n−1 row index like the notebook prototype (Untitled.ipynb cell
     12). Output: (series, lag=1, f_stat, p_value, df_num=1, df_den,
-    n_obs); the p-value is the exact F(1, d2) survival function via the
-    finite incomplete-beta series (``f_sf_lag1_expr``) — also native,
-    also SQL-mirrorable.
+    n_obs); the p-value is the F(1, d2) survival function
+    ``f_sf_expr`` — also native; the DuckDB oracle evaluates it as the
+    finite incomplete-beta series for df_num = 1.
     """
     series_cols = list(series_cols)
     w = Window.partitionBy(*series_cols)
@@ -912,9 +938,7 @@ def granger_lag1(
         *series_cols,
         F.lit(1).alias("lag"),
         F.col("f_stat"),
-        f_sf_lag1_expr(
-            F.col("f_stat"), (F.col("m") - 3).cast("long")
-        ).alias("p_value"),
+        F.expr(f_sf_expr("f_stat", "1", "CAST(m - 3 AS BIGINT)")).alias("p_value"),
         F.lit(1).alias("df_num"),
         (F.col("m") - 3).cast("long").alias("df_den"),
         (F.col("m") + 1).cast("long").alias("n_obs"),
@@ -1015,11 +1039,14 @@ def granger_causality(
     cov_col: str = "x",
     detrend: bool = True,
 ) -> DataFrame:
-    """W10: Granger F statistics per series pair and lag 1..maxlag.
+    """W10 reference: Granger F statistics per series pair and lag
+    1..maxlag, numpy ``lstsq`` in a grouped pandas UDF. The tests check
+    ``granger_native``, the production path, against it.
 
     Input is the aligned pair frame (ds, y, x) per series (J2 output).
     The notebook prototype removes a linear trend first and gates on
     len ≥ maxlag (Untitled.ipynb cell 12) — both reproduced here.
+    Lags without a residual degree of freedom get NaN statistics.
     """
     from temporal_retriever_spark.stats import f_sf
 
@@ -1060,202 +1087,85 @@ def granger_causality(
 
 
 # ---------------------------------------------------------------------------
-# Native multi-lag Granger: staged Cholesky on conditional Gram sums.
+# Native Granger: one per-series array program at any maxlag.
 #
-# The ssr F-test needs RSS of the restricted ([1, y-lags]) and
-# unrestricted ([1, y-lags, x-lags]) OLS fits. Ordering the regressors
-# restricted-first makes the restricted model a PREFIX of the
-# unrestricted one, so ONE Cholesky factorization + forward solve
-# yields both: RSS_r = syy − Σ_{k≤lag} w_k², RSS_u = syy − Σ_k w_k².
-# Every stage is a scalar expression over the per-series Gram sums —
-# the same strings feed the Spark plan and the DuckDB oracle CTEs
-# (the GRANGER_LAG1_STAGES / Durbin-Levinson sharing pattern).
+# Each lag l regresses y_t on z_t = [1, y_{t-1..t-l}, x_{t-1..t-l}] over
+# the rows t = l..n-1. Every Gram entry and moment Σ_{t≥l} a_{t-i}·b_{t-j}
+# is a full lag-product sum Σ_s a_{s+d}·b_s (d = |i − j|, one ``zip_with``
+# dot per (a, b, d), shared by every lag) less its edge terms: the rows
+# t < l and the products that run past the end, at most 2·maxlag of
+# them, read from the head and tail of the arrays. So the O(n) work is
+# O(n·maxlag) in all, and only the small per-lag algebra grows with l.
 # ---------------------------------------------------------------------------
 
-def _granger_z_sql(i: int, lag: int) -> str:
-    """SQL/Spark expression for regressor z_i of the lag-`lag` model."""
-    if i == 0:
-        return "1.0"
-    if i <= lag:
-        return f"_y{i}"
-    return f"_x{i - lag}"
+
+def _detrended_sql(v: str) -> str:
+    """The array<double> ``v`` of a series' ``_n`` sorted values less its
+    OLS line over the 0..n−1 index (the notebook's detrend,
+    Untitled.ipynb cell 12); less its mean only when the line has no
+    slope (one value). Sums run in array order; Σt and Σt² are exact
+    integers."""
+    stats = (
+        "named_struct('n', CAST(_n AS DOUBLE), 'st', CAST(_n AS DOUBLE) * (_n - 1) / 2D, "
+        "'stt', CAST(CAST(_n AS BIGINT) * (_n - 1) * (2 * _n - 1) div 6 AS DOUBLE), "
+        f"'sv', aggregate({v}, 0D, (s, e) -> s + e), "
+        f"'stv', aggregate(transform({v}, (e, t) -> t * e), 0D, (s, m) -> s + m))"
+    )
+    slope = "coalesce(try_divide(w.stv - w.st * w.sv / w.n, w.stt - w.st * w.st / w.n), 0D)"
+    return (
+        f"transform(array({stats}), w -> transform(array({slope}), b -> "
+        f"transform({v}, (e, t) -> e - (w.sv / w.n + b * (t - w.st / w.n))))[0])[0]"
+    )
 
 
-def granger_gram_exprs(maxlag: int) -> list[tuple[str, str]]:
-    """(name, SQL aggregate expr) for every conditional Gram sum.
+def _granger_gram_sql() -> str:
+    """Per valid lag ``l``: the lower triangle (all the Cholesky kernel
+    reads; the rest is 0) of the augmented Gram matrix ``G`` (flat,
+    P = 2l+2) of [1, y lags 1..l, x lags 1..l, y],
+    split into the restricted system ``r`` (the leading l+1 regressors),
+    the unrestricted system ``u`` (all 2l+1) and ``q`` = Σ y_t².
 
-    For each lag l the valid rows are those with full lag history
-    (`_t >= l`, 0-based index after the na.drop). Names:
-    ``g{l}_m`` row count, ``g{l}_s_{i}_{j}`` = Σ z_i z_j (i ≤ j),
-    ``g{l}_t_{i}`` = Σ z_i·y, ``g{l}_q`` = Σ y².
-    """
-    out: list[tuple[str, str]] = []
-    for lag in range(1, maxlag + 1):
-        p = 2 * lag + 1
-        cond = f"_t >= {lag}"
-        out.append((f"g{lag}_m", f"SUM(CASE WHEN {cond} THEN 1.0 ELSE 0.0 END)"))
-        for i in range(p):
-            for j in range(i, p):
-                zi, zj = _granger_z_sql(i, lag), _granger_z_sql(j, lag)
-                out.append(
-                    (f"g{lag}_s_{i}_{j}",
-                     f"SUM(CASE WHEN {cond} THEN ({zi}) * ({zj}) END)")
-                )
-            out.append(
-                (f"g{lag}_t_{i}",
-                 f"SUM(CASE WHEN {cond} THEN ({_granger_z_sql(i, lag)}) * _yd END)")
-            )
-        out.append((f"g{lag}_q", f"SUM(CASE WHEN {cond} THEN _yd * _yd END)"))
-    return out
-
-
-def granger_cholesky_rounds(maxlag: int) -> list[list[tuple[str, str]]]:
-    """Staged Cholesky + forward solve over the Gram-sum names.
-
-    Returns rounds of (name, scalar SQL expr); each round references
-    only earlier rounds, so both engines apply them as chained
-    projections. Column round k emits, per lag l with k < 2l+1:
-    ``g{l}_d_{k}`` (pivot), then ``g{l}_l_{j}_{k}`` (column k of L)
-    and ``g{l}_w_{k}`` (forward-solve component).
-    """
-    rounds: list[list[tuple[str, str]]] = []
-    pmax = 2 * maxlag + 1
-    for k in range(pmax):
-        # ONE round per pivot column: the pivot d_k is inlined textually
-        # into this round's divisions (expressions in a round may only
-        # reference earlier rounds), which halves the projection-round
-        # count — the dominant plan-compile cost at high maxlag
-        rnd: list[tuple[str, str]] = []
-        for lag in range(1, maxlag + 1):
-            p = 2 * lag + 1
-            if k >= p:
-                continue
-            d_expr = " - ".join(
-                [f"g{lag}_s_{k}_{k}"]
-                + [f"g{lag}_l_{k}_{i} * g{lag}_l_{k}_{i}" for i in range(k)]
-            )
-            piv = f"sqrt({d_expr})"
-            rnd.append((f"g{lag}_l_{k}_{k}", piv))
-            for j in range(k + 1, p):
-                g_jk = f"g{lag}_s_{k}_{j}"  # Gram stored upper-triangular
-                num = " - ".join(
-                    [g_jk]
-                    + [f"g{lag}_l_{j}_{i} * g{lag}_l_{k}_{i}" for i in range(k)]
-                )
-                rnd.append((f"g{lag}_l_{j}_{k}", f"({num}) / ({piv})"))
-            wnum = " - ".join(
-                [f"g{lag}_t_{k}"]
-                + [f"g{lag}_l_{k}_{i} * g{lag}_w_{i}" for i in range(k)]
-            )
-            rnd.append((f"g{lag}_w_{k}", f"({wnum}) / ({piv})"))
-        rounds.append(rnd)
-    final: list[tuple[str, str]] = []
-    for lag in range(1, maxlag + 1):
-        p = 2 * lag + 1
-        all_w = " + ".join(f"g{lag}_w_{k} * g{lag}_w_{k}" for k in range(p))
-        r_w = " + ".join(f"g{lag}_w_{k} * g{lag}_w_{k}" for k in range(lag + 1))
-        final.append((f"g{lag}_rss_u", f"g{lag}_q - ({all_w})"))
-        final.append((f"g{lag}_rss_r", f"g{lag}_q - ({r_w})"))
-    rounds.append(final)
-    fstats: list[tuple[str, str]] = []
-    for lag in range(1, maxlag + 1):
-        dfd = f"(g{lag}_m - {2 * lag + 1})"
-        fstats.append(
-            (f"g{lag}_f",
-             f"CASE WHEN g{lag}_rss_u <= 0 THEN CAST('Infinity' AS DOUBLE) "
-             f"ELSE ((g{lag}_rss_r - g{lag}_rss_u) / {lag}.0) "
-             f"/ (g{lag}_rss_u / {dfd}) END")
-        )
-    rounds.append(fstats)
-    return rounds
-
-
-def f_sf_expr(f_stat: Column, d1: int, df_den: Column) -> Column:
-    """Exact F(d1, d2) survival function as a native column expression
-    for a *build-time* small integer ``d1`` (the lag order).
-
-    The regularized incomplete beta reduces to finite series in all
-    parity cases (A&S 26.5.6-26.5.9):
-
-    * d1 even:            p = x^{d2/2} Σ_{j<d1/2} c_j (1−x)^j,
-                          c_{j+1} = c_j·(d2/2+j)/(j+1)
-    * d1 odd, d2 even:    p = 1 − (1−x)^{d1/2} Σ_{j<d2/2} c_j x^j,
-                          c_{j+1} = c_j·(d1/2+j)/(j+1)
-    * both odd:           arcsin base + ≤(d1−1)/2 unrolled b-raise
-                          terms − a-raise fold of d2//2 terms with the
-                          beta-function recurrence carried in the
-                          accumulator
-
-    where x = d2/(d2 + d1·F). Agrees with ``stats.f_sf`` to ~1e-13;
-    the DuckDB oracle mirrors each case with lgamma-based terms.
-    """
-    f = f_stat.cast("double")
-    d2 = df_den.cast("double")
-    x = d2 / (d2 + F.lit(float(d1)) * f)
-    if d1 % 2 == 0:
-        # small fold: d1//2 terms, recurrence carries (s, c, pz)
-        folded = F.aggregate(
-            F.sequence(F.lit(0), F.lit(d1 // 2 - 1)),
-            F.struct(
-                F.lit(0.0).alias("s"), F.lit(1.0).alias("c"),
-                F.lit(1.0).alias("pz"),
-            ),
-            lambda acc, j: F.struct(
-                (acc["s"] + acc["c"] * acc["pz"]).alias("s"),
-                (acc["c"] * (d2 / 2 + j.cast("double")) / (j.cast("double") + 1)).alias("c"),
-                (acc["pz"] * (F.lit(1.0) - x)).alias("pz"),
-            ),
-            lambda acc: acc["s"],
-        )
-        p = F.pow(x, d2 / 2) * folded
-    else:
-        # d2-even branch: fold of d2//2 terms
-        even_fold = F.aggregate(
-            _safe_seq((F.floor(d2 / 2) - 1).cast("integer")),
-            F.struct(
-                F.lit(0.0).alias("s"), F.lit(1.0).alias("c"),
-                F.lit(1.0).alias("px"),
-            ),
-            lambda acc, j: F.struct(
-                (acc["s"] + acc["c"] * acc["px"]).alias("s"),
-                (acc["c"] * (F.lit(d1 / 2.0) + j.cast("double")) / (j.cast("double") + 1)).alias("c"),
-                (acc["px"] * x).alias("px"),
-            ),
-            lambda acc: acc["s"],
-        )
-        p_even = F.lit(1.0) - F.pow(F.lit(1.0) - x, F.lit(d1 / 2.0)) * even_fold
-        # both-odd branch: arcsin base + unrolled b-raise, then a-raise fold
-        base = F.lit(2.0 / math.pi) * F.asin(F.sqrt(x))
-        bval, Bval = 0.5, math.pi  # b, B(1/2, b)
-        for _ in range(d1 // 2):
-            base = base + F.sqrt(x) * F.pow(F.lit(1.0) - x, F.lit(bval)) / F.lit(
-                bval * Bval
-            )
-            Bval *= bval / (bval + 0.5)
-            bval += 1.0
-        bb = d1 / 2.0  # fixed second argument; Bval == B(1/2, d1/2)
-        odd_fold = F.aggregate(
-            _safe_seq((F.floor(d2 / 2) - 1).cast("integer")),
-            F.struct(
-                F.lit(0.0).alias("s"), F.lit(0.5).alias("a"),
-                F.lit(Bval).alias("B"), F.sqrt(x).alias("pxa"),
-            ),
-            lambda acc, j: F.struct(
-                (
-                    acc["s"]
-                    + acc["pxa"] * F.pow(F.lit(1.0) - x, F.lit(bb))
-                    / (acc["a"] * acc["B"])
-                ).alias("s"),
-                (acc["a"] + 1.0).alias("a"),
-                (acc["B"] * acc["a"] / (acc["a"] + F.lit(bb))).alias("B"),
-                (acc["pxa"] * x).alias("pxa"),
-            ),
-            lambda acc: acc["s"],
-        )
-        p_odd = base - odd_fold
-        is_even_d2 = (df_den.cast("long") % 2) == 0
-        p = F.when(is_even_d2, p_even).otherwise(p_odd)
-    return F.when(~(f > 0), F.lit(1.0)).otherwise(p)
+    A regressor is (c, k): series c of ``_z`` (0 ones, 1 y, 2 x) at lag
+    k; the constant takes its partner's lag, so its products need only
+    the d = 0 row of ``_lp``. Entry (i, j) is the lag-product sum
+    ``_lp[|i−j|]`` less the edge rows t in [max(i, j), l) and
+    [n, n + min(i, j))."""
+    reg = (
+        "transform(sequence(0, P - 1), r -> named_struct("
+        "'c', CASE WHEN r = 0 THEN 0 WHEN r <= l OR r = P - 1 THEN 1 ELSE 2 END, "
+        "'k', CASE WHEN r = 0 OR r = P - 1 THEN 0 WHEN r <= l THEN r ELSE r - l END))"
+    )
+    pair = (
+        "named_struct('a', u.c, 'b', w.c, "
+        "'i', CASE WHEN u.c = 0 THEN w.k ELSE u.k END, "
+        "'j', CASE WHEN w.c = 0 THEN u.k ELSE w.k END)"
+    )
+    full = (
+        "CASE WHEN h.i <= h.j THEN _lp[h.j - h.i][h.a * 3 + h.b] "
+        "ELSE _lp[h.i - h.j][h.b * 3 + h.a] END"
+    )
+    # rows t in [max, l) then [n, n + min), as slices of each side
+    edge = _dot_sql(*(
+        f"concat(slice(_z[h.{s}], greatest(h.i, h.j) - h.{k} + 1, l - greatest(h.i, h.j)), "
+        f"slice(_z[h.{s}], _n - h.{k} + 1, least(h.i, h.j)))"
+        for s, k in (("a", "i"), ("b", "j"))
+    ))
+    entry = (
+        "CASE WHEN e div P < e % P THEN 0D "
+        f"ELSE transform(array(rg[e div P]), u -> transform(array(rg[e % P]), w -> "
+        f"transform(array({pair}), h -> {full} - {edge})[0])[0])[0] END"
+    )
+    system = (
+        "named_struct('a', filter(G, (g, k) -> k div P < {0} AND k % P < {0}), "
+        "'v', slice(G, (P - 1) * P + 1, {0}))"
+    ).format
+    return (
+        "transform(sequence(1, _L), l -> transform(array(2 * l + 2), P -> "
+        f"transform(array({reg}), rg -> "
+        f"transform(array(transform(sequence(0, P * P - 1), e -> {entry})), G -> "
+        f"named_struct('l', l, 'q', G[P * P - 1], 'r', {system('l + 1')}, "
+        f"'u', {system('P - 1')}))[0])[0])[0])"
+    )
 
 
 def granger_native(
@@ -1268,115 +1178,74 @@ def granger_native(
     cov_col: str = "x",
     detrend: bool = True,
 ) -> DataFrame:
-    """W10: Granger ssr F-tests with exact p-values, natively up to
-    6 lags.
+    """W10: Granger ssr F-tests with exact p-values per series pair and
+    lag 1..maxlag, as one per-series array program.
 
-    ``maxlag`` picks the path: the staged-Cholesky expression tree
-    grows ~maxlag² (plan compile dominates past ~6 lags — ~4s at
-    maxlag=5, minutes at the notebook's maxlag=14), so maxlag ≤ 6 runs
-    the native plan and higher lags dispatch to the grouped-UDF
-    ``granger_causality`` (identical stats — cross-checked to 1e-9 in
-    tests; the Arrow path ships whole series to Python, which is the
-    better trade above the compile knee).
+    Semantics of the notebook prototype (Untitled.ipynb cell 12,
+    statsmodels ``ssr_ftest``): rows with a NULL y or x drop, y and x
+    are detrended over the 0..n−1 index, series with fewer than
+    ``maxlag`` rows emit nothing, and lag l compares the restricted fit
+    y_t ~ 1 + y_{t−1..t−l} with the unrestricted one that adds
+    x_{t−1..t−l}: F = ((RSS_r − RSS_u)/l) / (RSS_u/(n − 3l − 1)),
+    +Infinity when RSS_u ≤ 0. Lags with fewer than one residual degree
+    of freedom have no test and are omitted. ``granger_causality`` is
+    the numpy reference.
 
-    Same semantics as ``granger_causality`` (statsmodels ssr_ftest,
-    notebook detrend, Untitled.ipynb cell 12): one window pass builds
-    the detrended lag columns, ONE aggregation computes every
-    conditional Gram sum for lags 1..maxlag, and the staged Cholesky
-    (``granger_cholesky_rounds``) factors all lag models as scalar
-    column expressions — the restricted model is a prefix of the
-    unrestricted ordering, so each lag costs one factorization.
-    P-values via the finite incomplete-beta series (``f_sf_expr``).
+    One groupBy collects each series into a ds-sorted array; the lag
+    l Gram matrices come from the shared lag-product sums less their
+    edge terms (see the section note), ONE instance of the Cholesky
+    kernel ``_spd_solve_sql`` is mapped over the 2·maxlag restricted
+    and unrestricted systems, RSS = Σy² − β·v, and ``f_sf_expr`` is
+    mapped over the lags for the p-values. The plan is one exchange, a
+    few projections and one ``inline``, the same at every maxlag, and
+    every sum runs in array order, so the output does not depend on
+    partitioning. Memory is bounded by the longest series, held as
+    one array by one task.
 
-    Output matches granger_causality: (series, lag, f_stat, p_value,
-    df_num, df_den, n_obs), lags 1..maxlag. Plan: one window shuffle +
-    one aggregation per series — at a billion series this is two
-    narrow shuffles of scalar sums, versus the grouped-UDF path that
-    ships whole series through Arrow into Python workers.
+    Output: (series, lag, f_stat, p_value, df_num, df_den, n_obs).
     """
-    if maxlag > 6:
-        return granger_causality(
-            df,
-            maxlag=maxlag,
-            series_cols=series_cols,
-            ts_col=ts_col,
-            target_col=target_col,
-            cov_col=cov_col,
-            detrend=detrend,
-        )
-    series_cols = list(series_cols)
-    w = Window.partitionBy(*series_cols)
-    ws = w.orderBy(ts_col)
-    base = df.select(*series_cols, ts_col, target_col, cov_col).na.drop(
-        subset=[target_col, cov_col]
-    )
-    base = base.withColumn(
-        "_t", (F.row_number().over(ws) - F.lit(1)).cast("double")
-    )
+    keys = [_ident(c) for c in series_cols]
+    ds, y, x = _ident(ts_col), _ident(target_col), _ident(cov_col)
+    series = "array(transform(_p, r -> r.y), transform(_p, r -> r.x))"
     if detrend:
-        for col, out in ((target_col, "_yd"), (cov_col, "_xd")):
-            n = F.count(col).over(w).cast("double")
-            st, sv = F.sum("_t").over(w), F.sum(col).over(w)
-            stt = F.sum(F.col("_t") * F.col("_t")).over(w)
-            stv = F.sum(F.col("_t") * F.col(col)).over(w)
-            slope = F.try_divide(stv - st * sv / n, stt - st * st / n)
-            base = base.withColumn(
-                out,
-                F.col(col)
-                - (sv / n + F.coalesce(slope, F.lit(0.0)) * (F.col("_t") - st / n)),
-            )
-    else:
-        base = base.withColumn("_yd", F.col(target_col)).withColumn(
-            "_xd", F.col(cov_col)
-        )
-    for k in range(1, maxlag + 1):
-        base = base.withColumn(f"_y{k}", F.lag("_yd", k).over(ws)).withColumn(
-            f"_x{k}", F.lag("_xd", k).over(ws)
-        )
-    aggs = [
-        F.expr(expr).alias(name) for name, expr in granger_gram_exprs(maxlag)
-    ]
-    n_total = F.count(F.lit(1)).alias("_n")
-    cur = base.groupBy(*series_cols).agg(n_total, *aggs)
-    for rnd in granger_cholesky_rounds(maxlag):
-        if rnd:
-            cur = cur.withColumns({name: F.expr(expr) for name, expr in rnd})
-    per_lag = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(lag).alias("lag"),
-                    F.col(f"g{lag}_f").alias("f_stat"),
-                    f_sf_expr(
-                        F.col(f"g{lag}_f"),
-                        lag,
-                        (F.col(f"g{lag}_m") - (2 * lag + 1)).cast("long"),
-                    ).alias("p_value"),
-                    (F.col(f"g{lag}_m") - (2 * lag + 1))
-                    .cast("long")
-                    .alias("df_den"),
-                )
-                for lag in range(1, maxlag + 1)
-            ]
-        )
-    ).alias("_r")
-    # notebook gate: series shorter than maxlag emit nothing (n >= maxlag)
+        series = f"transform({series}, v -> {_detrended_sql('v')})"
+    lag_products = (
+        "transform(sequence(0, _L), d -> transform(sequence(0, 8), c -> "
+        "CASE WHEN d = 0 OR (c div 3 > 0 AND c % 3 > 0) THEN "
+        f"{_dot_sql('slice(_z[c div 3], d + 1, _n - d)', 'slice(_z[c % 3], 1, _n - d)')} END))"
+    )
+    solve = (
+        "transform(flatten(transform(_sys, g -> array(g.r, g.u))), "
+        f"g -> {_spd_solve_sql('g.a', 'g.v')})"
+    )
+    test = (
+        "transform(array(named_struct("
+        f"'rr', g.q - {_dot_sql('_beta[2 * i]', 'g.r.v')}, "
+        f"'ru', g.q - {_dot_sql('_beta[2 * i + 1]', 'g.u.v')}, 'dfd', _n - 3 * g.l - 1)), o -> "
+        "transform(array(CASE WHEN o.ru <= 0D THEN CAST('Infinity' AS DOUBLE) "
+        "ELSE ((o.rr - o.ru) / g.l) / (o.ru / o.dfd) END), f -> named_struct("
+        f"'lag', g.l, 'f_stat', f, 'p_value', {f_sf_expr('f', 'g.l', 'o.dfd')}, "
+        "'df_num', g.l, 'df_den', CAST(o.dfd AS BIGINT), 'n_obs', CAST(_n AS BIGINT)))[0])[0]"
+    )
     return (
-        cur.filter(F.col("_n") >= maxlag)
-        .select(*series_cols, "_n", per_lag)
-        .select(
-            *series_cols,
-            F.col("_r.lag").alias("lag"),
-            F.col("_r.f_stat").alias("f_stat"),
-            F.col("_r.p_value").alias("p_value"),
-            F.col("_r.lag").alias("df_num"),
-            F.col("_r.df_den").alias("df_den"),
-            F.col("_n").cast("long").alias("n_obs"),
+        df.na.drop(subset=[target_col, cov_col])
+        .groupBy(*series_cols)
+        .agg(
+            F.expr(
+                f"sort_array(collect_list(struct({ds} AS ds, CAST({y} AS DOUBLE) AS y, "
+                f"CAST({x} AS DOUBLE) AS x)))"
+            ).alias("_p")
         )
-        # underdetermined models (more regressors than lag rows) have no
-        # valid F test: the Cholesky pivot goes negative and the UDF path
-        # returns NaN — omit those rows instead of emitting garbage
-        .filter(F.col("df_den") >= 1)
+        # notebook gate: series shorter than maxlag emit nothing; lags
+        # past (n - 2) / 3 leave no residual degree of freedom
+        .selectExpr(*keys, "_p", "size(_p) AS _n")
+        .selectExpr("*", f"CAST(least({int(maxlag)}, (_n - 2) div 3) AS INT) AS _L")
+        .filter(f"_n >= {int(maxlag)} AND _L >= 1")
+        .selectExpr(*keys, "_n", "_L", f"concat(array(array_repeat(1D, _n)), {series}) AS _z")
+        .selectExpr("*", f"{lag_products} AS _lp")
+        .selectExpr(*keys, "_n", f"{_granger_gram_sql()} AS _sys")
+        .selectExpr("*", f"{solve} AS _beta")
+        .selectExpr(*keys, f"inline(transform(_sys, (g, i) -> {test}))")
     )
 
 

@@ -777,10 +777,10 @@ def anova_oneway(
         F   = (SSB/(k−1)) / (SSW/(N−k))
 
     ``eta_sq = SSB/(SSB+SSW)`` is the effect size (share of variance
-    explained by the grouping). The exact F(k−1, N−k) p-value needs
-    the numerator dof at BUILD time (the same finite-series contract
-    as `diagnostics.f_sf_expr`): pass ``groups`` (the known group
-    count, asserted against the data like `kruskal_wallis`) to get it;
+    explained by the grouping). The F(k−1, N−k) p-value
+    (`diagnostics.f_sf_expr`) takes the numerator dof as a literal:
+    pass ``groups`` (the known group count, asserted against the data
+    like `kruskal_wallis`) to get it;
     without ``groups`` the p_value column is NULL and callers read
     ``f_stat``/dofs directly. F is NULL when k < 2, N ≤ k, or SSW = 0
     (the statistic is undefined, not "significant").
@@ -827,7 +827,7 @@ def anova_oneway(
 
         p = F.when(
             F.col("df_num") == int(groups) - 1,
-            f_sf_expr(F.col("f_stat"), int(groups) - 1, F.col("df_den")),
+            F.expr(f_sf_expr("f_stat", str(int(groups) - 1), "df_den")),
         ).otherwise(
             F.assert_true(F.lit(False), F.lit("group count mismatch")).cast(
                 "double"

@@ -50,7 +50,7 @@ from temporal_retriever_spark.diagnostics import (
     acf_pacf,
     default_nlags,
     describe,
-    granger_causality,
+    granger_native,
 )
 from temporal_retriever_spark.forecast import (
     forecast_covariate_chain,
@@ -409,7 +409,7 @@ def analyze(
             )
             return sorted(pred.collect(), key=_series_ds)
 
-        # ---- granger correlations: aligned pairs, ONE grouped-UDF plan ---
+        # ---- granger correlations: aligned pairs, ONE array program ------
         # type="granger" is declared in the reference enum (app.py:33) but
         # never implemented there; semantics follow the notebook prototype
         # (Untitled.ipynb cell 12): detrended ssr F-tests per lag.
@@ -417,7 +417,7 @@ def analyze(
             tgt = rekey(granger_corrs, cov=False)
             cov_leg = rekey(granger_corrs, cov=True).withColumnRenamed("y", "x")
             pair = tgt.join(cov_leg, on=["series_id", "ds"], how="inner")
-            return granger_causality(
+            return granger_native(
                 pair, maxlag=14, series_cols=("series_id",)
             ).collect()
 

@@ -114,6 +114,21 @@ def test_floor_ceiling_zero_ceiling_auto_derives(spark):
     assert row["cap"] > 10.0
 
 
+def test_floor_ceiling_std_survives_a_large_mean(spark):
+    """The default cap is max + 3·(sample std); a series at 1e9 ± 1 must
+    not lose its spread to the cancellation of Σy² − (Σy)²/n."""
+    import math
+
+    import numpy as np
+
+    values = 1e9 + np.random.default_rng(3).uniform(-1.0, 1.0, 60)
+    df = spark.createDataFrame([(float(v),) for v in values], "y double")
+    row = floor_ceiling(df).collect()[0]
+    std = np.std(values, ddof=1)
+    assert math.isclose(row["cap"], values.max() + 3 * std, rel_tol=1e-9)
+    assert math.isclose(row["std_y"], std, rel_tol=1e-6)
+
+
 def test_bucket_count(tables, duck):
     bucketed = bucket_aggregate(
         tables["events"].withColumnRenamed("ts", "ds").withColumnRenamed("value", "y"),

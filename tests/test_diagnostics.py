@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -228,24 +230,29 @@ def test_granger_short_series_empty(spark):
     assert granger_causality(df, maxlag=14).count() == 0
 
 
-def test_f_sf_lag1_expr_matches_continued_fraction(spark):
-    """The finite incomplete-beta series (native column expr) agrees
-    with stats.f_sf (Lentz continued fraction) across parities/sizes."""
-    from temporal_retriever_spark.diagnostics import f_sf_lag1_expr
+@pytest.mark.parametrize("d1", [1, 2, 3, 14, 29])
+def test_f_sf_expr_matches_continued_fraction(spark, d1):
+    """The SQL F survival function, its numerator dof read as a value,
+    agrees with stats.f_sf (Lentz continued fraction) at odd and even
+    d2, in the tail too: tiny p-values keep their relative precision."""
+    from temporal_retriever_spark.diagnostics import f_sf_expr
     from temporal_retriever_spark.stats import f_sf
 
     grid = [
         (f, d2)
-        for f in (0.001, 0.5, 1.0, 2.5, 3.84, 10.0, 50.0)
-        for d2 in (3, 4, 10, 59, 60, 146, 147)
-    ] + [(0.0, 100)]
+        for f in (0.001, 0.5, 1.0, 2.5, 3.84, 10.0, 50.0, 300.0)
+        for d2 in (3, 4, 10, 59, 60, 146, 147, 4957, 4958)
+    ] + [(0.0, 100), (-1.0, 7), (float("inf"), 30)]
     df = spark.createDataFrame(grid, "f double, d2 long")
     rows = df.select(
-        "f", "d2", f_sf_lag1_expr(F.col("f"), F.col("d2")).alias("p")
+        "f", "d2", F.expr(f_sf_expr("f", str(d1), "d2")).alias("p")
     ).collect()
     for r in rows:
-        want = f_sf(r["f"], 1.0, float(r["d2"])) if r["f"] > 0 else 1.0
+        want = f_sf(r["f"], float(d1), float(r["d2"]))
         assert abs(r["p"] - want) < 1e-11, (r["f"], r["d2"], r["p"], want)
+        assert math.isclose(r["p"], want, rel_tol=1e-9, abs_tol=1e-300), (
+            r["f"], r["d2"], r["p"], want
+        )
 
 
 def test_granger_lag1_matches_udf_path(spark, tables):
@@ -277,75 +284,84 @@ def test_granger_lag1_matches_udf_path(spark, tables):
     assert abs(native["p_value"] - udf_row["p_value"]) < 1e-10
 
 
+def _click_view_pair(tables):
+    ev = tables["events"].select(
+        "event_type", F.col("ts").cast("timestamp").alias("ds"),
+        F.col("value").alias("y"),
+    )
+    daily = ev.groupBy("event_type", F.date_trunc("day", "ds").alias("ds")).agg(
+        F.sum("y").alias("y")
+    )
+    target = daily.filter(F.col("event_type") == "click").select(
+        F.lit("s").alias("series_id"), "ds", "y"
+    )
+    cov = daily.filter(F.col("event_type") == "view").select(
+        F.lit("s").alias("series_id"), "ds", F.col("y").alias("x")
+    )
+    return target.join(cov, on=["series_id", "ds"], how="inner")
+
+
+def _assert_matches_reference(native_rows, ref_rows):
+    """granger_native rows == the numpy granger_causality rows that have
+    a test (df_den >= 1): the same (series, lag) keys, dofs and n_obs,
+    f_stat and p_value within 1e-9 relative."""
+    native = {(r["series_id"], r["lag"]): r for r in native_rows}
+    ref = {(r["series_id"], r["lag"]): r for r in ref_rows if r["df_den"] >= 1}
+    assert native and set(native) == set(ref)
+    for key, a in native.items():
+        b = ref[key]
+        assert (a["df_num"], a["df_den"], a["n_obs"]) == (b["df_num"], b["df_den"], b["n_obs"])
+        for col in ("f_stat", "p_value"):
+            assert math.isclose(a[col], b[col], rel_tol=1e-9, abs_tol=1e-300), (key, col)
+
+
 def test_granger_native_matches_udf_all_lags(spark, tables):
-    """Staged-Cholesky granger_native == numpy-lstsq granger_causality
-    at every lag (f_stat, p_value, dfs) — the multi-lag native path."""
-    from temporal_retriever_spark.diagnostics import granger_causality, granger_native
+    """The native array program == numpy-lstsq granger_causality at
+    every lag (f_stat, p_value, dfs)."""
+    from temporal_retriever_spark.diagnostics import granger_native
 
-    ev = tables["events"].select(
-        "event_type", F.col("ts").cast("timestamp").alias("ds"),
-        F.col("value").alias("y"),
-    )
-    daily = ev.groupBy("event_type", F.date_trunc("day", "ds").alias("ds")).agg(
-        F.sum("y").alias("y")
-    )
-    target = daily.filter(F.col("event_type") == "click").select(
-        F.lit("s").alias("series_id"), "ds", "y"
-    )
-    cov = daily.filter(F.col("event_type") == "view").select(
-        F.lit("s").alias("series_id"), "ds", F.col("y").alias("x")
-    )
-    pair = target.join(cov, on=["series_id", "ds"], how="inner")
-    native = {r["lag"]: r for r in granger_native(pair, maxlag=4).collect()}
-    udf = {r["lag"]: r for r in granger_causality(pair, maxlag=4).collect()}
-    assert set(native) == set(udf) == {1, 2, 3, 4}
-    for lag in native:
-        a, b = native[lag], udf[lag]
-        assert a["df_den"] == b["df_den"] and a["n_obs"] == b["n_obs"]
-        assert abs(a["f_stat"] - b["f_stat"]) < 1e-9, lag
-        assert abs(a["p_value"] - b["p_value"]) < 1e-10, lag
+    pair = _click_view_pair(tables)
+    native = granger_native(pair, maxlag=4).collect()
+    udf = granger_causality(pair, maxlag=4).collect()
+    assert sorted(r["lag"] for r in native) == [1, 2, 3, 4]
+    _assert_matches_reference(native, udf)
+    for a, b in zip(*(sorted(rows, key=lambda r: r["lag"]) for rows in (native, udf))):
+        assert abs(a["f_stat"] - b["f_stat"]) < 1e-9, a["lag"]
+        assert abs(a["p_value"] - b["p_value"]) < 1e-10, a["lag"]
 
 
-def test_granger_auto_dispatch_high_lag(spark, tables):
-    """maxlag above 6 routes granger_native to the
-    grouped-UDF path: the notebook-spec maxlag=14 call completes in
-    seconds (no ~maxlag² staged-Cholesky plan compile) with stats
-    identical to granger_causality."""
-    from temporal_retriever_spark.diagnostics import granger_causality, granger_native
+def test_granger_native_high_lag_runs_natively(spark, tables):
+    """The notebook's maxlag=14 runs as the same native program as any
+    other maxlag, with no Python node, and matches granger_causality."""
+    from temporal_retriever_spark.diagnostics import granger_native
 
-    ev = tables["events"].select(
-        "event_type", F.col("ts").cast("timestamp").alias("ds"),
-        F.col("value").alias("y"),
-    )
-    daily = ev.groupBy("event_type", F.date_trunc("day", "ds").alias("ds")).agg(
-        F.sum("y").alias("y")
-    )
-    target = daily.filter(F.col("event_type") == "click").select(
-        F.lit("s").alias("series_id"), "ds", "y"
-    )
-    cov = daily.filter(F.col("event_type") == "view").select(
-        F.lit("s").alias("series_id"), "ds", F.col("y").alias("x")
-    )
-    pair = target.join(cov, on=["series_id", "ds"], how="inner")
-    auto_df = granger_native(pair, maxlag=14)
-    # the dispatched plan is the Arrow grouped-UDF one, not the
-    # expression tree (which would take minutes to compile at lag 14)
-    plan = auto_df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan or "Python" in plan
-    auto = {r["lag"]: r for r in auto_df.collect()}
-    udf = {r["lag"]: r for r in granger_causality(pair, maxlag=14).collect()}
-    assert set(auto) == set(udf) == set(range(1, 15))
+    pair = _click_view_pair(tables)
+    got = granger_native(pair, maxlag=14)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "Python" not in plan and "ArrowEval" not in plan
+    _assert_matches_reference(got.collect(), granger_causality(pair, maxlag=14).collect())
 
-    def same(x, y, tol):
-        if x is None or y is None or x != x or y != y:
-            return (x is None or x != x) and (y is None or y != y)
-        return abs(x - y) < tol
 
-    for lag in auto:
-        a, b = auto[lag], udf[lag]
-        assert a["df_den"] == b["df_den"] and a["n_obs"] == b["n_obs"]
-        assert same(a["f_stat"], b["f_stat"], 1e-9), lag
-        assert same(a["p_value"], b["p_value"], 1e-10), lag
+def test_granger_long_hourly_history_matches_reference(spark):
+    """Two years of hourly buckets in one pair (17,520 rows) at
+    maxlag 14 against granger_causality within 1e-9: the program holds
+    each series as one array in one task, so the longest series bounds
+    its memory; this is the size the bound is checked at."""
+    import pandas as pd
+
+    from temporal_retriever_spark.diagnostics import granger_native
+
+    n = 2 * 365 * 24
+    rng = np.random.default_rng(11)
+    ts = pd.date_range("2022-01-01", periods=n, freq="h")
+    hour = ts.hour.values
+    x = 50 + 10 * np.sin(2 * np.pi * hour / 24) + rng.normal(size=n)
+    y = 3 + 0.0005 * np.arange(n) + 2 * np.cos(2 * np.pi * hour / 24) + rng.normal(size=n)
+    y[3:] += 0.05 * x[:-3]
+    pair = spark.createDataFrame(pd.DataFrame({"series_id": "s", "ds": ts, "y": y, "x": x}))
+    native = granger_native(pair, maxlag=14).collect()
+    assert sorted(r["lag"] for r in native) == list(range(1, 15))
+    _assert_matches_reference(native, granger_causality(pair, maxlag=14).collect())
 
 
 def test_granger_native_no_python_in_plan(spark, tables):

@@ -89,6 +89,28 @@ def test_saturating_clamps(spark):
     assert min(r["yhat"] for r in caps) >= 0.0 or min(r["yhat"] for r in caps) >= 10.0
 
 
+def test_saturating_cap_survives_a_large_mean(spark):
+    """The saturating forecast's default cap is max + 3·(sample std),
+    also for a series at 1e9: a trend that runs past the cap shows it
+    as the forecasts' maximum."""
+    import math
+
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    values = 1e9 + 0.05 * np.arange(60) + rng.uniform(-0.1, 0.1, 60)
+    base = datetime.date(2024, 1, 1)
+    df = spark.createDataFrame(
+        [("s", base + datetime.timedelta(days=i), float(v)) for i, v in enumerate(values)],
+        "series_id string, ds date, y double",
+    )
+    pred = forecast_linear_seasonal(df, grain="D", horizon=200, saturating=True)
+    cap = max(r["yhat"] for r in pred.collect())
+    std = np.std(values, ddof=1)
+    assert math.isclose(cap, values.max() + 3 * std, rel_tol=1e-9), (cap, values.max())
+    assert math.isclose((cap - values.max()) / 3, std, rel_tol=1e-6)
+
+
 def test_covariate_coefficient_exact(spark):
     # y = 3 + 2*x with x varying independently of time -> coef == 2
     base = datetime.date(2024, 1, 1)

@@ -167,6 +167,28 @@ def test_native_forecast_is_one_array_program(spark, daily, op):
         assert node not in plan
 
 
+def test_granger_native_plan_is_the_same_at_every_maxlag(spark, daily):
+    # one collect, a few projections over the series row and one
+    # inline: the lags are array elements, so the optimized plan has the
+    # same nodes and the same text (expression ids and the maxlag
+    # literal masked) at any maxlag, with no Window and no Python node
+    import re
+
+    from temporal_retriever_spark.diagnostics import granger_native
+
+    pair = daily.select("series_id", "ds", "y", (F.col("y") * 2.0).alias("x"))
+    shapes = set()
+    for maxlag in (3, 6, 14, 24):
+        got = granger_native(pair, maxlag=maxlag)
+        text = got._jdf.queryExecution().optimizedPlan().toString()
+        shapes.add((len(text.splitlines()), len(re.sub(r"\d+", "0", text))))
+        executed = _plan(got)
+        for node in ("Window", "Python", "ArrowEval", "MapInPandas"):
+            assert node not in executed, node
+        assert _exchanges(executed) == 1
+    assert len(shapes) == 1, shapes
+
+
 def test_theta_and_baselines_no_python(spark, daily):
     from temporal_retriever_spark.forecast import forecast_baseline, forecast_theta
 

@@ -2,8 +2,9 @@
 correlation results do not depend on which other correlations ride
 along, the request frames stay in the JVM, a repeated request reuses
 its generated code, one scan of the documents prepares every leg as
-the per-leg plans did, and one forecast program per changepoint
-setting serves correlations of every grain."""
+the per-leg plans did, one forecast program per changepoint setting
+serves correlations of every grain, and the Granger rows do not
+depend on the company they keep or on partitioning."""
 
 from __future__ import annotations
 
@@ -216,30 +217,60 @@ def _changepoint_body() -> dict:
     return body
 
 
-def test_changepoint_correlations_match_solo_and_run_no_python(spark, monkeypatch):
-    req = parse_analyze_request(_changepoint_body())
-    folds = []
-    fit = P.forecast_covariate_chain
+def _spy(monkeypatch, name: str) -> list:
+    """Record every frame ``pipeline.<name>`` returns."""
+    frames = []
+    fn = getattr(P, name)
 
     def spy(*args, **kwargs):
-        folds.append(fit(*args, **kwargs))
-        return folds[-1]
+        frames.append(fn(*args, **kwargs))
+        return frames[-1]
 
-    monkeypatch.setattr(P, "forecast_covariate_chain", spy)
+    monkeypatch.setattr(P, name, spy)
+    return frames
+
+
+def test_changepoint_correlations_match_solo_and_run_no_python(spark, monkeypatch):
+    req = parse_analyze_request(_changepoint_body())
+    folds = _spy(monkeypatch, "forecast_covariate_chain")
+    granger = _spy(monkeypatch, "granger_native")
     full = P.analyze(spark, req)["correlations"]
     for corr in req.correlations:
         solo = P.analyze(
             spark, AnalyzeRequest(documents=req.documents, correlations=[corr])
         )["correlations"]
         assert _close(full[corr.id], solo[corr.id]), corr.id
-    # the fold (covariate forecast and target fit alike) plans no
-    # Python operator and its lineage holds no Python RDD
-    assert folds
-    for fold in folds:
-        plan = fold._jdf.queryExecution().executedPlan().toString()
+    # the fold (covariate forecast and target fit alike) and the Granger
+    # program plan no Python operator and their lineage holds no Python
+    # RDD: the prophet, changepoint and granger request runs in the JVM
+    assert folds and granger
+    for frame in folds + granger:
+        plan = frame._jdf.queryExecution().executedPlan().toString()
         for node in ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython"):
             assert node not in plan
-        assert "PythonRDD" not in _lineage(fold)
+        assert "PythonRDD" not in _lineage(frame)
+
+
+def test_granger_rows_do_not_depend_on_company_or_partitioning(spark, request_):
+    """A Granger correlation's rows are bit-identical alone and inside
+    the full request, and at 1 and 32 shuffle partitions: the program
+    sums each series in its array's order."""
+    (corr,) = [c for c in request_.correlations if c.type == "granger"]
+    solo_req = AnalyzeRequest(documents=request_.documents, correlations=[corr])
+
+    def rows(req):
+        return P.analyze(spark, req)["correlations"][corr.id]["grangerCausality"]
+
+    want = rows(request_)
+    assert [r["lag"] for r in want] == list(range(1, 15))
+    assert rows(solo_req) == want
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in ("1", "32"):
+            spark.conf.set("spark.sql.shuffle.partitions", n)
+            assert rows(request_) == want, n
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 # --- one-pass preparation ---------------------------------------------
