@@ -4142,10 +4142,12 @@ FROM r
 
 
 def q_multi_grain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All grains of the D/W/M hierarchy in ONE scan + ONE shuffle via
-    GROUPING SETS (aggregate.bucket_aggregate_multi) — vs the naive
-    per-grain loop's 3 scans + 3 shuffles. Plan: Scan → Expand(×3) →
-    partial HashAggregate → one exchange → final (asserted in
+    """All grains of the D/W/M hierarchy in ONE scan, rolled up from
+    the daily buckets (aggregate.bucket_aggregate_multi) — vs the naive
+    per-grain loop's 3 scans + 3 shuffles. Plan: Scan → daily
+    HashAggregate (sum, count and a sorted value array per day) →
+    exchange → GROUPING SETS Expand(×3) over the daily rows → one
+    exchange → final, median from the merged sorted arrays (asserted in
     tests/test_multi_grain.py). The oracle is the semantic UNION ALL
     of the three per-grain aggregations."""
     from temporal_retriever_spark.aggregate import bucket_aggregate_multi

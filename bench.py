@@ -56,10 +56,12 @@ def build_queries(spark):
         )
 
     def b2():
-        # all 3 grains × 5 aggregations in ONE scan + ONE shuffle:
-        # GROUPING SETS (bucket_aggregate_multi) replaces the per-grain
-        # loop (3 scans + 3 shuffles; 2× faster at sf0.1); stack()
-        # unpivots to the long (case, ds, y) shape as a pure projection
+        # all 3 grains × 5 aggregations in ONE scan: bucket_aggregate_multi
+        # groups the rows by day once, then rolls the daily partials
+        # (and sorted value arrays, for the median) up to D/W/M with
+        # GROUPING SETS over the daily rows, replacing the per-grain
+        # loop's 3 scans + 3 shuffles; stack() unpivots to the long
+        # (case, ds, y) shape as a pure projection
         aggs = ("sum", "min", "max", "mean", "median")
         wide = bucket_aggregate_multi(orders, grains=("D", "W", "M"), aggs=aggs)
         stack_args = ", ".join(

@@ -9,9 +9,9 @@ Spark-first notes:
 * A1 is a plain ``groupBy().agg()`` — Catalyst gives partial (map-side)
   + final hash aggregation automatically; one shuffle on the bucket key.
 * ``median`` is Spark's exact ``F.median`` (matches pandas/DuckDB
-  interpolation). At 100 TB, exact median forces a sort per group —
-  ``approx=True`` switches to ``percentile_approx`` which stays in the
-  hash aggregate (documented scale path, SURVEY §2.4 A1).
+  interpolation). Its buffer holds every value of a bucket: memory per
+  bucket is bounded by the bucket's row count. ``bucket_aggregate_multi``
+  keeps that bound with one sorted array per bucket (its docstring).
 * The reference accepts the typo alias ``"meadian"`` (app.py:44-48) as
   part of its API surface — so do we.
 * std is **sample** std (pandas default ddof=1, app.py:362) →
@@ -48,7 +48,7 @@ def normalize_aggregation(agg: str) -> str:
         raise ValueError(f"unsupported aggregation: {agg!r}") from None
 
 
-def agg_expr(value: Column | str, agg: str, *, approx_median: bool = False) -> Column:
+def agg_expr(value: Column | str, agg: str) -> Column:
     col = F.col(value) if isinstance(value, str) else value
     agg = normalize_aggregation(agg)
     if agg == "sum":
@@ -60,8 +60,6 @@ def agg_expr(value: Column | str, agg: str, *, approx_median: bool = False) -> C
     if agg == "mean":
         return F.avg(col)
     if agg == "median":
-        if approx_median:
-            return F.percentile_approx(col, 0.5)
         return F.median(col)
     raise ValueError(f"unsupported aggregation: {agg!r}")  # pragma: no cover
 
@@ -75,7 +73,6 @@ def bucket_aggregate(
     agg: str = "sum",
     series_cols: Iterable[str] = (),
     extra_aggs: dict[str, tuple[str, str]] | None = None,
-    approx_median: bool = False,
 ) -> DataFrame:
     """A1: bucket ``ts_col`` to ``grain`` and collapse duplicate keys.
 
@@ -90,9 +87,9 @@ def bucket_aggregate(
     """
     out_bucket = bucket_expr(ts_col, grain).alias(ts_col)
     keys = [*series_cols, ts_col]
-    aggs = [agg_expr(value_col, agg, approx_median=approx_median).alias(value_col)]
+    aggs = [agg_expr(value_col, agg).alias(value_col)]
     for out_name, (in_col, in_agg) in (extra_aggs or {}).items():
-        aggs.append(agg_expr(in_col, in_agg, approx_median=approx_median).alias(out_name))
+        aggs.append(agg_expr(in_col, in_agg).alias(out_name))
     return (
         df.withColumn(ts_col, out_bucket)
         .groupBy(*keys)
@@ -229,6 +226,26 @@ def bucket_count(
     return df.agg(agg)
 
 
+#: grains that tile every coarser grain, finest first; W and M alone
+#: roll up from D
+_FINE_GRAINS = ("min", "H", "D")
+
+
+def _sorted_median(values: Column) -> Column:
+    """Exact median of a sorted double array, by Spark ``Percentile``'s
+    own rule: position ``0.5 * (n - 1)``, the element there when it is
+    whole, else ``(hi - pos) * a[lo] + (pos - lo) * a[hi]``. NULL for an
+    empty array."""
+    pos = (F.size(values) - 1) * F.lit(0.5)
+    lo, hi = F.floor(pos), F.ceil(pos)
+    a_lo, a_hi = F.get(values, lo.cast("int")), F.get(values, hi.cast("int"))
+    return (
+        F.when(F.size(values) == 0, F.lit(None).cast("double"))
+        .when(lo == hi, a_lo)
+        .otherwise((hi - pos) * a_lo + (pos - lo) * a_hi)
+    )
+
+
 def bucket_aggregate_multi(
     df: DataFrame,
     *,
@@ -237,21 +254,29 @@ def bucket_aggregate_multi(
     grains: Iterable[str] = ("D", "W", "M"),
     aggs: Iterable[str] = ("sum",),
     series_cols: Iterable[str] = (),
-    approx_median: bool = False,
 ) -> DataFrame:
-    """A1 at every grain of a rollup hierarchy in ONE scan + ONE
-    shuffle, via GROUPING SETS.
+    """A1 at every grain of a rollup hierarchy in one scan, rolled up
+    from the finest grain (Gray et al., "Data Cube", 1997).
 
-    The naive multi-grain loop (one ``bucket_aggregate`` per grain —
-    the reference's only option, app.py:70-93 is called per request)
-    costs |grains| scans and |grains| shuffles of the SAME input. Here
-    every grain's bucket label is a projection on the single scan and
-    Catalyst plans Scan → Expand(×|grains|) → partial HashAggregate →
-    ONE shuffle → final aggregate: the input is read once, and the
-    Expand duplication is collapsed by the map-side partial before
-    anything moves — the shuffle carries each partition's distinct
-    (set, key) rows, roughly the union of what the per-grain plans
-    would each have shuffled, in a single exchange.
+    Level 1 groups the input once by ``(*series_cols, fine bucket)``,
+    where the fine grain is the finest requested one of min < H < D
+    (D when only W and/or M are asked for): every supported grain is a
+    union of fine buckets in the session time zone. It keeps per fine
+    bucket ``sum``, ``min``, ``max`` and ``count`` of ``value_col`` and,
+    for ``median``, the bucket's values as one sorted array. Level 2 is
+    GROUPING SETS over those bucket rows, one set per grain, each coarse
+    label being ``bucket_expr`` of the fine label; its ``Expand``
+    multiplies bucket rows, not input rows. It combines the partials:
+    sum of sums, min of mins, max of maxes, mean = sum of sums / sum of
+    counts (NULL for an all-NULL bucket, as ``avg``), and the median
+    from the sorted concatenation of the fine arrays with
+    ``Percentile``'s interpolation, so it equals ``F.median``. Plan:
+    Scan → HashAggregate → exchange → HashAggregate → Expand(×|grains|)
+    → HashAggregate → exchange → HashAggregate; no ``percentile``.
+
+    Memory: with ``median``, one array of the bucket's values per coarse
+    bucket, the same bound as ``percentile``'s buffer (one map entry
+    per value); without it, the aggregates are fixed-size.
 
     Output: ``(*series_cols, grain, ds, {value_col}_{agg}...)`` with
     ``ds`` cast to timestamp so calendar grains (D/W/M: dates) and
@@ -265,24 +290,44 @@ def bucket_aggregate_multi(
     normalized_aggs = [normalize_aggregation(a) for a in aggs]
     if len(set(normalized_aggs)) != len(normalized_aggs):
         raise ValueError(f"duplicate aggs after normalization: {normalized_aggs}")
+    series_cols = list(series_cols)
+    fine = next((g for g in _FINE_GRAINS if g in gs), "D")
+    y = F.col(value_col)
+    partials = {
+        "_sum": F.sum(y),
+        "_min": F.min(y),
+        "_max": F.max(y),
+        "_n": F.count(y),
+    }
+    if "median" in normalized_aggs:
+        partials["_values"] = F.array_sort(F.collect_list(y.cast("double")))
+    fine_rows = df.groupBy(
+        *series_cols, bucket_expr(ts_col, fine).alias("_fine")
+    ).agg(*[c.alias(name) for name, c in partials.items()])
+
     bcols = {g: f"_bucket_{g}" for g in gs}
-    out = df
-    for g in gs:
-        out = out.withColumn(
-            bcols[g], bucket_expr(ts_col, g).cast("timestamp")
-        )
-    sets = [[*series_cols, bcols[g]] for g in gs]
-    agg_exprs = [
-        agg_expr(value_col, a, approx_median=approx_median).alias(
-            f"{value_col}_{a}"
-        )
-        for a in normalized_aggs
-    ]
+    labelled = fine_rows.select(
+        *series_cols,
+        *[
+            bucket_expr("_fine", g).cast("timestamp").alias(bcols[g])
+            for g in gs
+        ],
+        *partials,
+    )
+    combine = {
+        "sum": F.sum("_sum"),
+        "min": F.min("_min"),
+        "max": F.max("_max"),
+        "mean": F.try_divide(F.sum("_sum"), F.sum("_n")),
+        "median": F.array_sort(F.flatten(F.collect_list("_values"))),
+    }
     # grouping() indicators are only legal inside the aggregate list
     gflags = [F.grouping(bcols[g]).alias(f"_grouped_{g}") for g in gs]
-    grouped = out.groupingSets(
-        sets, *series_cols, *[bcols[g] for g in gs]
-    ).agg(*gflags, *agg_exprs)
+    grouped = labelled.groupingSets(
+        [[*series_cols, bcols[g]] for g in gs],
+        *series_cols,
+        *bcols.values(),
+    ).agg(*gflags, *[combine[a].alias(f"{value_col}_{a}") for a in normalized_aggs])
     grain_label = None
     for g in gs:
         cond = F.col(f"_grouped_{g}") == 0
@@ -291,11 +336,14 @@ def bucket_aggregate_multi(
             if grain_label is None
             else grain_label.when(cond, F.lit(g))
         )
+    out_cols = {a: F.col(f"{value_col}_{a}") for a in normalized_aggs}
+    if "median" in out_cols:
+        out_cols["median"] = _sorted_median(out_cols["median"])
     return grouped.select(
         *series_cols,
         grain_label.alias("grain"),
-        F.coalesce(*[F.col(bcols[g]) for g in gs]).alias(ts_col),
-        *[F.col(f"{value_col}_{a}") for a in normalized_aggs],
+        F.coalesce(*[F.col(c) for c in bcols.values()]).alias(ts_col),
+        *[c.alias(f"{value_col}_{a}") for a, c in out_cols.items()],
     )
 
 

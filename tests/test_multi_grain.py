@@ -1,7 +1,10 @@
-"""GROUPING SETS multi-grain rollup: per-grain equivalence, plan shape
-(one exchange), mixed calendar/clock grains, validation."""
+"""Two-level multi-grain rollup: per-grain equivalence (edge cases
+included), plan shape (fine buckets, then GROUPING SETS over them),
+mixed calendar/clock grains, validation."""
 
 from __future__ import annotations
+
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,50 +26,110 @@ def events(spark, sf_dir):
     return df
 
 
-def _collect_multi(got, grain):
-    return {
-        (r["event_type"], r["ds"]): (r["y_sum"], r["y_mean"], r["y_median"])
-        for r in got.filter(F.col("grain") == grain).collect()
-    }
+AGGS = ("sum", "min", "max", "mean", "median")
+
+# (sid, ds, y): even and odd bucket sizes at every grain, NULL y, NaN,
+# single-value buckets, NULL ds, week and month edges; the 02:00 hour
+# of "a" and all of "z" hold only NULL y
+_EDGE_ROWS = [
+    ("a", "2024-01-01 00:10:00", 1.0),
+    ("a", "2024-01-01 00:20:00", 2.0),
+    ("a", "2024-01-01 00:50:00", 4.0),
+    ("a", "2024-01-01 01:05:00", 3.0),
+    ("a", "2024-01-01 01:05:30", 5.0),
+    ("a", "2024-01-01 01:30:00", 7.0),
+    ("a", "2024-01-01 01:40:00", 10.0),
+    ("a", "2024-01-01 02:00:00", None),
+    ("a", "2024-01-01 02:00:10", None),
+    ("a", "2024-01-02 03:00:00", 1.5),
+    ("a", "2024-01-02 03:00:00", None),
+    ("a", "2024-01-09 12:00:00", float("nan")),
+    ("a", "2024-01-09 12:00:00", 2.0),
+    ("a", "2024-01-09 12:30:00", 8.0),
+    ("a", "2024-02-15 06:00:00", 42.0),
+    ("a", None, 9.0),
+    ("a", None, 11.0),
+    ("b", "2024-01-07 23:00:00", 3.0),
+    ("b", "2024-01-08 00:00:00", 6.0),
+    ("b", "2024-01-31 23:59:00", 2.25),
+    ("b", "2024-02-01 00:00:00", -1.0),
+    ("c", "2024-01-03 05:00:00", 0.1),
+    ("c", "2024-01-03 05:10:00", 0.2),
+    ("c", "2024-01-03 05:20:00", 0.7),
+    ("c", "2024-01-04 05:00:00", 0.3),
+    ("z", "2024-03-03 10:00:00", None),
+]
 
 
-def test_matches_per_grain_aggregates(events):
+def _same(got, want, exact: bool) -> bool:
+    if got is None or want is None:
+        return got is None and want is None
+    if math.isnan(want):
+        return math.isnan(got)
+    if exact:
+        return got == want
+    return got == pytest.approx(want, rel=1e-12)
+
+
+def _assert_matches_per_grain(df, grains, series_col):
     got = bucket_aggregate_multi(
-        events,
-        grains=("D", "W", "M"),
-        aggs=("sum", "mean", "median"),
-        series_cols=("event_type",),
-    ).cache()
-    try:
-        for grain in ("D", "W", "M"):
-            want = {
-                (r["event_type"], r["ds"]): (r["y"], r["_mean"], r["_median"])
-                for r in bucket_aggregate(
-                    events,
-                    grain=grain,
-                    agg="sum",
-                    series_cols=("event_type",),
-                    extra_aggs={"_mean": ("y", "mean"), "_median": ("y", "median")},
-                )
-                .withColumn("ds", F.col("ds").cast("timestamp"))
-                .collect()
-            }
-            have = _collect_multi(got, grain)
-            assert len(have) == len(want)
-            for k, v in want.items():
-                assert have[k] == pytest.approx(v, rel=1e-12), k
-    finally:
-        got.unpersist()
+        df, grains=grains, aggs=AGGS, series_cols=(series_col,)
+    ).collect()
+    for grain in grains:
+        have = {
+            (r[series_col], r["ds"]): r for r in got if r["grain"] == grain
+        }
+        want = (
+            bucket_aggregate(
+                df,
+                grain=grain,
+                agg="sum",
+                series_cols=(series_col,),
+                extra_aggs={f"y_{a}": ("y", a) for a in AGGS},
+            )
+            .withColumn("ds", F.col("ds").cast("timestamp"))
+            .collect()
+        )
+        assert len(have) == len(want), grain
+        for w in want:
+            h = have[(w[series_col], w["ds"])]
+            for a in AGGS:
+                exact = a in ("min", "max", "median")
+                assert _same(h[f"y_{a}"], w[f"y_{a}"], exact), (grain, w, a)
 
 
-def test_single_exchange_plan(events):
+def test_matches_per_grain_aggregates(spark, events):
+    # medians, mins and maxes equal the per-grain aggregate exactly;
+    # sums and means may differ by their summation order only
+    _assert_matches_per_grain(events, ("D", "W", "M"), "event_type")
+    edge = spark.createDataFrame(
+        _EDGE_ROWS, "sid string, ds string, y double"
+    ).withColumn("ds", F.col("ds").cast("timestamp"))
+    for grains in (("D", "W", "M"), ("W", "M"), ("H", "D", "M"), ("min", "H")):
+        _assert_matches_per_grain(edge, grains, "sid")
+    nulls = bucket_aggregate_multi(
+        edge.filter(F.col("sid") == "z"), grains=("D", "W", "M"), aggs=AGGS,
+        series_cols=("sid",),
+    ).collect()
+    assert len(nulls) == 3
+    assert all(r[f"y_{a}"] is None for r in nulls for a in AGGS)
+
+
+def test_rollup_plan_shape(events):
     got = bucket_aggregate_multi(
-        events, grains=("D", "W", "M"), aggs=("sum", "min"),
+        events, grains=("D", "W", "M"), aggs=AGGS,
         series_cols=("event_type",),
     )
     plan = got._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
-    assert "Expand" in plan
+    # one exchange per level; the Expand multiplies level-1 bucket rows
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+    lines = [line.lstrip(" +-:") for line in plan.splitlines()]
+    expands = [i for i, line in enumerate(lines) if line.startswith("Expand")]
+    assert len(expands) == 1, plan
+    assert "HashAggregate" in lines[expands[0] + 1].split("(")[0], plan
+    assert "percentile" not in plan
+    assert "Window" not in plan
+    assert "Python" not in plan
 
 
 def test_mixed_calendar_and_clock_grains(events):

@@ -355,17 +355,24 @@ def test_bm25_broadcasts_queries_and_prelimits_topk(spark, docs):
     assert "WindowGroupLimit" in plan
 
 
-def test_multi_grain_rollup_single_exchange_with_expand(spark, daily):
+def test_multi_grain_rollup_expands_bucket_rows(spark, daily):
     from temporal_retriever_spark.aggregate import bucket_aggregate_multi
 
     plan = _plan(
         bucket_aggregate_multi(
-            daily, grains=("D", "W", "M"), aggs=("sum", "mean"),
+            daily, grains=("D", "W", "M"), aggs=("sum", "mean", "median"),
             series_cols=("series_id",),
         )
     )
-    assert "Expand" in plan
-    assert _exchanges(plan) == 1
+    # level 1 buckets the rows once, level 2 rolls the bucket rows up:
+    # the Expand reads the level-1 aggregate, never the scan
+    lines = [line.lstrip(" +-:") for line in plan.splitlines()]
+    expands = [i for i, line in enumerate(lines) if line.startswith("Expand")]
+    assert len(expands) == 1, plan
+    assert "HashAggregate" in lines[expands[0] + 1].split("(")[0], plan
+    assert _exchanges(plan) == 2
+    assert "percentile" not in plan
+    assert "Window" not in plan
     assert "Python" not in plan
 
 

@@ -2,9 +2,10 @@
 
 Exports both sides with ``git archive`` into a temporary directory (the
 change defaults to the working tree: tracked and untracked, non-ignored
-files), then runs ``perfbench/run.py`` once per side and seed, one pair
-per seed, alternating which side runs first so that drift in the host's
-CPU share falls on both sides alike. Prints, per end-to-end metric of
+files, written as a tree from a temporary index), then runs
+``perfbench/run.py`` once per side and seed, one pair per seed,
+alternating which side runs first so that drift in the host's CPU share
+falls on both sides alike. Prints, per end-to-end metric of
 ``BENCHMARK.json`` (per-layer metric with ``--trace 1``), each side's
 median with its quartiles, how many pairs the change won (ties count
 for neither) and a verdict, plus failed/attempted operations per side:
@@ -42,23 +43,28 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def export(rev: str | None, dest: str) -> None:
-    """``rev`` via git archive, or the working tree when ``rev`` is None."""
+    """``rev`` via git archive, or the working tree when ``rev`` is None.
+
+    The working tree goes through ``git archive`` as well: its tracked
+    and untracked, non-ignored files are written as a tree from a
+    temporary index, so both sides are extracted alike.
+    """
     os.makedirs(dest)
     if rev is None:
-        listed = subprocess.run(
-            ["git", "ls-files", "-co", "--exclude-standard", "-z"],
-            cwd=ROOT, check=True, capture_output=True,
-        ).stdout.split(b"\0")
-        # deleted but still tracked files are listed too
-        files = [f for f in listed if f and os.path.exists(os.path.join(ROOT, os.fsdecode(f)))]
-        archive = subprocess.run(
-            ["tar", "-cf", "-", "--null", "-T", "-"],
-            cwd=ROOT, check=True, capture_output=True, input=b"\0".join(files),
-        ).stdout
-    else:
-        archive = subprocess.run(
-            ["git", "archive", rev], cwd=ROOT, check=True, capture_output=True
-        ).stdout
+        index = dest + ".index"
+        env = {**os.environ, "GIT_INDEX_FILE": index}
+        try:
+            subprocess.run(["git", "add", "-A"], cwd=ROOT, env=env, check=True)
+            rev = subprocess.run(
+                ["git", "write-tree"], cwd=ROOT, env=env, check=True,
+                capture_output=True, text=True,
+            ).stdout.strip()
+        finally:
+            if os.path.exists(index):
+                os.remove(index)
+    archive = subprocess.run(
+        ["git", "archive", rev], cwd=ROOT, check=True, capture_output=True
+    ).stdout
     subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
 
 
