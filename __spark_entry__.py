@@ -30,7 +30,6 @@ from temporal_retriever_spark.align import (
     split_forecasts,
 )
 from temporal_retriever_spark.diagnostics import (
-    GRANGER_LAG1_STAGES,
     acf,
     acf_bands,
     adf,
@@ -41,7 +40,6 @@ from temporal_retriever_spark.diagnostics import (
     ljung_box,
     durbin_levinson_stages,
     ccf,
-    granger_lag1,
     granger_native,
     pacf,
 )
@@ -309,7 +307,7 @@ def q_ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_acf_bartlett_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 + Bartlett bands: ACF with standard errors and 95% bands
     under the MA(k-1) null (diagnostics.acf_bands) — same
-    one-aggregation plan as acf, bands are scalar arithmetic."""
+    one-groupBy plan as acf, bands are scalar arithmetic."""
     got = acf_bands(
         _events_daily_all(spark, sf_dir), lags=10, series_cols=("event_type",)
     )
@@ -325,9 +323,9 @@ def q_acf_bartlett_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kpss_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1e: KPSS level-stationarity test on the daily series
-    (diagnostics.kpss, Bartlett bandwidth 12). Residual cumsum +
-    lag-product sums in one aggregation; p-value interpolates the
-    published critical table."""
+    (diagnostics.kpss, Bartlett bandwidth 12). Residual running sum +
+    lag-product sums over each series' sorted array; p-value
+    interpolates the published critical table."""
     got = kpss(
         _events_daily_all(spark, sf_dir),
         nlags=12,
@@ -460,15 +458,15 @@ def q_ccf_click_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_granger_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native lag-1 Granger (explicit-sum OLS + Cramer) — the
-    SQL-mirrorable fast path of W10; the multi-lag test is
+    """Lag-1 Granger F test (``granger_native`` at maxlag 1) against the
+    explicit-sum OLS + Cramer mirror in DuckDB; the multi-lag test is
     granger_click_view."""
     target = _daily_series(spark, sf_dir, "click").withColumn(
         "series_id", F.lit("click~view")
     )
     cov = _daily_series(spark, sf_dir, "view").withColumnRenamed("y", "x")
     pair = target.join(cov, on="ds", how="inner")
-    got = granger_lag1(pair, series_cols=("series_id",))
+    got = granger_native(pair, maxlag=1, series_cols=("series_id",))
     return got.select(
         "series_id",
         "lag",
@@ -14322,9 +14320,28 @@ def _granger_native_oracle(maxlag: int = 5) -> str:
     )
 
 
+# centered second moments, Cramer's rule, ssr F of the lag-1 Granger
+# test over the explicit sums of the lagged rows
+GRANGER_LAG1_STAGES: list[tuple[str, str]] = [
+    ("cyy", "syy - sy * sy / m"),
+    ("cy1", "sy1 - sy * s1 / m"),
+    ("cyx", "syx - sy * sx / m"),
+    ("c11", "s11 - s1 * s1 / m"),
+    ("c1x", "s1x - s1 * sx / m"),
+    ("cxx", "sxx - sx * sx / m"),
+    ("rss_r", "cyy - cy1 * cy1 / NULLIF(c11, 0.0)"),
+    ("det", "c11 * cxx - c1x * c1x"),
+    ("b1", "(cy1 * cxx - cyx * c1x) / NULLIF(det, 0.0)"),
+    ("bx", "(cyx * c11 - cy1 * c1x) / NULLIF(det, 0.0)"),
+    ("rss_u", "cyy - (b1 * cy1 + bx * cyx)"),
+    ("f_stat", "CASE WHEN m > 3 AND rss_u > 0 THEN "
+               "(rss_r - rss_u) / (rss_u / (m - 3.0)) ELSE NULL END"),
+]
+
+
 def _granger_lag1_oracle() -> str:
-    """DuckDB mirror of ``granger_lag1``: same explicit sums, same
-    ``GRANGER_LAG1_STAGES`` expressions as chained CTEs."""
+    """DuckDB lag-1 Granger test: explicit sums of the lagged rows and
+    the ``GRANGER_LAG1_STAGES`` expressions as chained CTEs."""
     detrend = (
         "{v} - (f{c}.sv / f{c}.n + COALESCE((f{c}.stv - f{c}.st * f{c}.sv / f{c}.n)"
         " / NULLIF(f{c}.stt - f{c}.st * f{c}.st / f{c}.n, 0.0), 0.0)"

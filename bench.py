@@ -88,7 +88,7 @@ def build_queries(spark):
         return coalesce_actuals(preds, target)
 
     def b4():
-        # fused: both stats from one window+agg pass (diagnostics.acf_pacf)
+        # fused: both stats from one sorted-array pass (diagnostics.acf_pacf)
         daily = bucket_aggregate(
             events, grain="D", agg="sum", series_cols=("event_type",)
         )

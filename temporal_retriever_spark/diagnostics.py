@@ -12,9 +12,12 @@ Spark-first design:
 
       acf_k = Σ_t (y_t − ȳ)(y_{t+k} − ȳ) / Σ_t (y_t − ȳ)²
 
-  is K lag-window products over one sort, aggregated per series: one
-  shuffle for the window sort + one for the final agg, regardless of K.
-  At 100 TB this is the scale path; no Python crosses the row stream.
+  K lag-product sums over each series' ds-sorted array: one groupBy
+  (one shuffle) collects the array, and ONE kernel,
+  ``_lag_products_sql``, sums every lag in array order, regardless of
+  K. The same kernel serves Ljung-Box, the Bartlett bands, seasonality
+  detection, CCF, KPSS and Granger. No Python crosses the row stream;
+  memory is bounded by the longest series, held as one array.
 * **PACF is fully native too** — the Yule-Walker system is solved by
   the Durbin-Levinson recursion over the SAME lag-product sums, as one
   ``aggregate`` fold per series row (constant plan size in K). Matches
@@ -46,7 +49,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from temporal_retriever_spark.forecast import _dot_sql, _ident, _spd_solve_sql
+from temporal_retriever_spark.forecast import _dot_sql, _ident, _spd_solve_sql, _sum_sql
 
 
 def default_nlags(n: int) -> int:
@@ -54,6 +57,55 @@ def default_nlags(n: int) -> int:
     if n <= 1:
         return 0
     return min(int(10 * math.log10(n)), n - 1)
+
+
+def _lag_products_sql(a: str, b: str, lags: int | str) -> str:
+    """Σ_t a[t]·b[t−k] for k = 0..``lags`` as an array<double>, over two
+    equal-length arrays: the one lag-product kernel behind every
+    correlogram, cross-correlation, KPSS and Granger statistic.
+
+    Each sum runs in array order with Spark ``Sum``'s update
+    (``_sum_sql``): a product with a NULL factor is skipped, and a lag
+    with no products (past the end, or all NULL) sums to NULL. On
+    null-free, non-empty slices that is a dot from 0D, bit for bit.
+    ``a`` and ``b`` are read several times: pass bound names."""
+    return (
+        f"transform(sequence(0, {lags}), _lk -> aggregate(zip_with("
+        f"slice({a}, _lk + 1, greatest(size({a}) - _lk, 0)), "
+        f"slice({b}, 1, greatest(size({b}) - _lk, 0)), (_ll, _lr) -> _ll * _lr), "
+        f"CAST(NULL AS DOUBLE), (_ls, _lm) -> {_sum_sql('_ls', '_lm')}))"
+    )
+
+
+def _sorted_arrays(
+    df: DataFrame, series_cols: Iterable[str], ts_col: str, arrays: dict[str, str]
+) -> DataFrame:
+    """(series…, _n, one array<double> per ``arrays`` entry, named by its
+    key, of the column it maps to): ONE groupBy collects each series'
+    rows sorted by ds, ties broken by value, so every sum over the
+    arrays runs in one order whatever the partitioning or the other
+    series. A NULL value keeps its slot."""
+    fields = "".join(f", CAST({_ident(c)} AS DOUBLE) AS {k}" for k, c in arrays.items())
+    rows = f"sort_array(collect_list(struct({_ident(ts_col)} AS ds{fields})))"
+    return (
+        df.groupBy(*series_cols)
+        .agg(F.expr(rows).alias("_p"))
+        .selectExpr(
+            *[_ident(c) for c in series_cols],
+            "size(_p) AS _n",
+            *[f"transform(_p, r -> r.{k}) AS {k}" for k in arrays],
+        )
+    )
+
+
+def _centered_sql(v: str) -> str:
+    """The array<double> ``v`` less the mean of its non-NULL values, as
+    Spark ``avg`` takes it (a ``Sum`` over their count), here summed in
+    array order; NULLs keep their slots."""
+    return (
+        f"transform(array(aggregate({v}, CAST(NULL AS DOUBLE), (s, e) -> {_sum_sql('s', 'e')}) "
+        f"/ size(filter({v}, e -> e IS NOT NULL))), m -> transform({v}, e -> e - m))[0]"
+    )
 
 
 def _lag_product_sums(
@@ -64,25 +116,24 @@ def _lag_product_sums(
     ts_col: str,
     value_col: str,
 ) -> DataFrame:
-    """Shared distributed stage: (series, n, s0, s1..sk) where
-    s_k = Σ d_t·d_{t−k} with d centered by the full-series mean —
-    one window sort + one aggregation regardless of k. Every
+    """Shared per-series stage: (series, n, s0, _s) with ``_s`` the
+    array s1..s_lags, s_k = Σ d_t·d_{t−k} with d centered by the mean
+    of the non-NULL values and n their count: one groupBy into the
+    ds-sorted array, then ``_lag_products_sql``. A NULL y keeps its
+    slot, so lags count rows, and its products are skipped. Every
     correlogram operator (``acf``, ``pacf``, ``acf_pacf``,
     ``ljung_box``, ``acf_bands``, ``detect_seasonality``) reads this
     one frame, so a null-handling or ordering fix applies everywhere."""
-    w = Window.partitionBy(*series_cols)
-    d = df.withColumn("_d", F.col(value_col) - F.avg(value_col).over(w))
-    # every lag product in one projection of SQL text: one Window node
-    # and one analysis at any lag count, and no per-lag Column objects
-    # built over py4j (a dozen round trips each)
-    q = lambda c: "`" + c.replace("`", "``") + "`"  # noqa: E731
-    ws = f"PARTITION BY {', '.join(map(q, series_cols))} ORDER BY {q(ts_col)}"
-    lagged = range(1, lags + 1)
-    d = d.selectExpr("*", *[f"_d * lag(_d, {k}) OVER ({ws}) AS _p{k}" for k in lagged])
-    return d.groupBy(*series_cols).agg(
-        F.count("_d").alias("n"),
-        F.sum(F.col("_d") * F.col("_d")).alias("s0"),
-        *[F.expr(f"sum(_p{k})").alias(f"s{k}") for k in lagged],
+    keys = [_ident(c) for c in series_cols]
+    return (
+        _sorted_arrays(df, series_cols, ts_col, {"_v": value_col})
+        .selectExpr(*keys, f"{_centered_sql('_v')} AS _d")
+        .selectExpr(
+            *keys,
+            "CAST(size(filter(_d, e -> e IS NOT NULL)) AS BIGINT) AS n",
+            f"{_lag_products_sql('_d', '_d', lags)} AS _lp",
+        )
+        .selectExpr(*keys, "n", "_lp[0] AS s0", f"slice(_lp, 2, {lags}) AS _s")
     )
 
 
@@ -175,13 +226,11 @@ def ljung_box(
     (statsmodels ``acorr_ljungbox`` semantics). The standard "are the
     residuals white noise?" gate after any forecast fit.
 
-    Plan shape: identical to ``acf`` — one window pass for the lag
-    products, ONE aggregation producing (n, Σd², Σ d·d_{−k}); every
-    ρ, Q and p-value is scalar arithmetic on that single row per
-    series, and the per-lag rows come from an array explode. No
-    second shuffle, no Python; p-values are native expressions
-    (``chi2_sf_sql``). At 100 TB this shuffles one short row per
-    series per partition, same as ``acf``.
+    Plan shape: identical to ``acf`` — one groupBy into each series'
+    sorted array yields (n, Σd², Σ d·d_{−k}); every ρ, Q and p-value is
+    scalar arithmetic on that single row per series, and the per-lag
+    rows come from an array explode. One shuffle, no Python; p-values
+    are native expressions (``chi2_sf_sql``).
     """
     if lags < 1:
         raise ValueError(f"lags must be >= 1: {lags}")
@@ -191,7 +240,7 @@ def ljung_box(
     )
     n = F.col("n").cast("double")
     rho2 = [
-        F.pow(F.try_divide(F.col(f"s{k}"), F.col("s0")), F.lit(2.0))
+        F.pow(F.try_divide(F.col("_s")[k - 1], F.col("s0")), F.lit(2.0))
         for k in range(1, lags + 1)
     ]
     lb_sum = None
@@ -242,9 +291,9 @@ def acf_bands(
     [1, 1]). The "which lags are significant?" overlay every
     correlogram needs.
 
-    Same single-aggregation plan as ``acf``; the cumulative Bartlett
-    sums are build-time scalar arithmetic on the one row per series,
-    exploded to per-lag rows — no second window or shuffle.
+    Same one-groupBy plan as ``acf``; the cumulative Bartlett sums are
+    build-time scalar arithmetic on the one row per series, exploded to
+    per-lag rows — no second shuffle.
     """
     if lags < 1:
         raise ValueError(f"lags must be >= 1: {lags}")
@@ -258,7 +307,7 @@ def acf_bands(
         df, lags=lags, series_cols=series_cols, ts_col=ts_col, value_col=value_col
     )
     n = F.col("n").cast("double")
-    rho = [F.try_divide(F.col(f"s{k}"), F.col("s0")) for k in range(1, lags + 1)]
+    rho = [F.try_divide(F.col("_s")[k - 1], F.col("s0")) for k in range(1, lags + 1)]
     entries = [
         F.struct(
             F.lit(0).alias("lag"),
@@ -345,55 +394,46 @@ def kpss(
     and clamp to [0.01, 0.10] outside it — report alongside the stat,
     as statsmodels does.
 
-    Plan shape: residuals come from partition-wide window aggregates
-    (level: mean; trend: OLS on the row index, both closed-form — no
-    iteration), S_t from one ordered window cumsum, then ONE
-    aggregation produces Σ S², n, and the ``nlags`` lag-product sums;
-    the statistic and p-value are scalar arithmetic on that row. One
-    hash-partition exchange per series key, same as ``acf``.
+    Plan shape: one groupBy collects each series' non-NULL values into
+    its ds-sorted array; the residuals are that array less its mean
+    (level) or its OLS line over the row index (trend,
+    ``_detrended_sql``), both closed-form; Σ S² is one fold carrying
+    the running sum, and the ``nlags`` lag-product sums come from
+    ``_lag_products_sql``. The statistic and p-value are scalar
+    arithmetic on the one row per series. One exchange, as ``acf``.
     """
     if nlags < 0:
         raise ValueError(f"nlags must be >= 0: {nlags}")
     if regression not in _KPSS_CRIT:
         raise ValueError(f"regression must be 'level' or 'trend': {regression!r}")
     series_cols = list(series_cols)
-    w = Window.partitionBy(*series_cols)
-    ws = w.orderBy(ts_col)
-    y = F.col(value_col).cast("double")
+    keys = [_ident(c) for c in series_cols]
+    resid = _centered_sql("_v") if regression == "level" else _detrended_sql("_v")
+    # Σ S_t² with S_t the running residual sum, carried by one fold
+    ss = (
+        "aggregate(_e, named_struct('s', 0D, 'ss', 0D), (a, e) -> transform("
+        "array(a.s + e), s -> named_struct('s', s, 'ss', a.ss + s * s))[0], a -> a.ss)"
+    )
     # drop null observations first so counts and moments describe the
-    # same sample (a null row would enter avg(_t)/row_number but not
-    # count(y), biasing the trend fit)
-    df = df.filter(F.col(value_col).isNotNull())
-    if regression == "level":
-        e = y - F.avg(y).over(w)
-        d = df.withColumn("_e", e)
-    else:
-        # residuals of y ~ a + b·t with t = 1..n (row index): closed
-        # form from the same partition-wide moments
-        t = F.row_number().over(ws).cast("double")
-        d = df.withColumn("_t", t)
-        n_w = F.count(value_col).over(w).cast("double")
-        mt = F.avg("_t").over(w)
-        my = F.avg(y).over(w)
-        sxy = F.sum(F.col("_t") * y).over(w) - n_w * mt * my
-        sxx = F.sum(F.col("_t") * F.col("_t")).over(w) - n_w * mt * mt
-        b = F.try_divide(sxy, sxx)
-        d = d.withColumn("_e", y - (my + b * (F.col("_t") - mt)))
-    d = d.withColumn("_S", F.sum("_e").over(ws.rowsBetween(Window.unboundedPreceding, 0)))
-    for j in range(1, nlags + 1):
-        d = d.withColumn(f"_g{j}", F.col("_e") * F.lag("_e", j).over(ws))
-    agg = d.groupBy(*series_cols).agg(
-        F.count("_e").cast("double").alias("_n"),
-        F.sum(F.col("_S") * F.col("_S")).alias("_ss"),
-        F.sum(F.col("_e") * F.col("_e")).alias("_g0"),
-        *[F.sum(f"_g{j}").alias(f"_sg{j}") for j in range(1, nlags + 1)],
+    # same sample
+    agg = (
+        _sorted_arrays(
+            df.filter(F.col(value_col).isNotNull()), series_cols, ts_col, {"_v": value_col}
+        )
+        .selectExpr(*keys, "_n", f"{resid} AS _e")
+        .selectExpr(
+            *keys,
+            "CAST(_n AS DOUBLE) AS _n",
+            f"{ss} AS _ss",
+            f"{_lag_products_sql('_e', '_e', nlags)} AS _g",
+        )
     )
     n = F.col("_n")
     eta = F.col("_ss") / (n * n)
-    lrv = F.col("_g0") / n
+    lrv = F.col("_g")[0] / n
     for j in range(1, nlags + 1):
         wgt = 1.0 - j / (nlags + 1.0)
-        lrv = lrv + F.lit(2.0 * wgt) * (F.col(f"_sg{j}") / n)
+        lrv = lrv + F.lit(2.0 * wgt) * (F.col("_g")[j] / n)
     stat = F.try_divide(eta, lrv)
     return agg.select(
         *series_cols,
@@ -622,8 +662,8 @@ def pacf(
 
     The Yule-Walker solution (statsmodels ``pacf(method='ywadjusted')``,
     reference core.py:24-27) by the Durbin-Levinson recursion: the
-    lag-product sums are one window sort + one aggregation (the same
-    shape as ``acf``), and the recursion is ``_durbin_levinson_col`` on
+    lag-product sums are one groupBy into each series' sorted array (the
+    same shape as ``acf``), and the recursion is ``_durbin_levinson_col`` on
     the one row per series. No Python runs. Lags infeasible for the
     series length (k ≥ n) and every lag of a constant series are NULL.
 
@@ -709,8 +749,8 @@ def _correlogram(
       guards (NULL unless n > k and s0 ≠ 0), folded into pacf by
       ``_durbin_levinson_col``.
 
-    The sums array and rho are projected before the fold, so the fold
-    reads bound columns. Lag 0 is 1.0 for both statistics.
+    rho is projected before the fold, so the fold reads a bound column.
+    Lag 0 is 1.0 for both statistics.
     """
     if lags < 0:
         raise ValueError(f"lags must be >= 0: {lags}")
@@ -719,14 +759,6 @@ def _correlogram(
         df, lags=lags, series_cols=series_cols, ts_col=ts_col, value_col=value_col
     )
     n, s0 = F.col("n"), F.col("s0")
-    agg = agg.select(
-        *series_cols,
-        n,
-        s0,
-        F.array(*[F.col(f"s{k}") for k in range(1, lags + 1)])
-        .cast("array<double>")
-        .alias("_s"),
-    )
     lag_0 = F.array(F.lit(1.0))
     arrays = []
     if "acf" in stats:
@@ -762,7 +794,7 @@ def acf_pacf(
 
     Both statistics are functions of the same per-series lag-product
     sums (acf_k = s_k/s0; pacf = Durbin-Levinson over the adjusted
-    autocorrelations), so the window sort + aggregation runs once and
+    autocorrelations), so the groupBy and the lag-product sums run once and
     both columns come from the one row per series — one Spark job where
     the unfused ``acf``/``pacf`` pair runs the identical distributed
     work twice. Values equal the standalone operators bit for bit.
@@ -863,109 +895,6 @@ def f_sf_expr(f_stat: str, d1: str, d2: str) -> str:
         "'lo', _x < (_i.d2 / 2D + 1D) / (_i.d2 / 2D + _i.d1 / 2D + 2D))), "
         f"_F -> {p})[0])[0])[0]"
     )
-
-
-def granger_lag1(
-    df: DataFrame,
-    *,
-    series_cols: Iterable[str] = ("series_id",),
-    ts_col: str = "ds",
-    target_col: str = "y",
-    cov_col: str = "x",
-    detrend: bool = True,
-) -> DataFrame:
-    """W10 fast path: lag-1 Granger F statistic, fully native.
-
-    The lag-1 case of ``granger_causality`` as explicit-sum OLS (the
-    unrestricted 2-regressor system solved by Cramer's rule), so the
-    whole computation stays JVM-side and every output is mirrorable in
-    ANSI SQL. Restricted: yd_t ~ 1 + yd_{t−1}; unrestricted adds
-    xd_{t−1}; F = (RSS_r − RSS_u) / (RSS_u / (m − 3)) with m = n − 1
-    lag rows (statsmodels ssr_ftest semantics). Linear detrend uses the
-    0..n−1 row index like the notebook prototype (Untitled.ipynb cell
-    12). Output: (series, lag=1, f_stat, p_value, df_num=1, df_den,
-    n_obs); the p-value is the F(1, d2) survival function
-    ``f_sf_expr`` — also native; the DuckDB oracle evaluates it as the
-    finite incomplete-beta series for df_num = 1.
-    """
-    series_cols = list(series_cols)
-    w = Window.partitionBy(*series_cols)
-    ws = w.orderBy(ts_col)
-    base = df.select(*series_cols, ts_col, target_col, cov_col).na.drop(
-        subset=[target_col, cov_col]
-    )
-    base = base.withColumn(
-        "_t", (F.row_number().over(ws) - F.lit(1)).cast("double")
-    )
-    if detrend:
-        for col, out in ((target_col, "_yd"), (cov_col, "_xd")):
-            n = F.count(col).over(w).cast("double")
-            st, sv = F.sum("_t").over(w), F.sum(col).over(w)
-            stt = F.sum(F.col("_t") * F.col("_t")).over(w)
-            stv = F.sum(F.col("_t") * F.col(col)).over(w)
-            slope = F.try_divide(stv - st * sv / n, stt - st * st / n)
-            base = base.withColumn(
-                out,
-                F.col(col)
-                - (sv / n + F.coalesce(slope, F.lit(0.0)) * (F.col("_t") - st / n)),
-            )
-    else:
-        base = base.withColumn("_yd", F.col(target_col)).withColumn(
-            "_xd", F.col(cov_col)
-        )
-    lagged = base.select(
-        *series_cols,
-        F.col("_yd").alias("_y"),
-        F.lag("_yd", 1).over(ws).alias("_y1"),
-        F.lag("_xd", 1).over(ws).alias("_x1"),
-    ).filter(F.col("_y1").isNotNull())
-    agg = lagged.groupBy(*series_cols).agg(
-        F.count("_y").cast("double").alias("m"),
-        F.sum("_y").alias("sy"),
-        F.sum("_y1").alias("s1"),
-        F.sum("_x1").alias("sx"),
-        F.sum(F.col("_y") * F.col("_y")).alias("syy"),
-        F.sum(F.col("_y") * F.col("_y1")).alias("sy1"),
-        F.sum(F.col("_y") * F.col("_x1")).alias("syx"),
-        F.sum(F.col("_y1") * F.col("_y1")).alias("s11"),
-        F.sum(F.col("_y1") * F.col("_x1")).alias("s1x"),
-        F.sum(F.col("_x1") * F.col("_x1")).alias("sxx"),
-    )
-    cur = agg
-    for name, expr in GRANGER_LAG1_STAGES:
-        cur = cur.withColumn(name, F.expr(expr))
-    return cur.select(
-        *series_cols,
-        F.lit(1).alias("lag"),
-        F.col("f_stat"),
-        F.expr(f_sf_expr("f_stat", "1", "CAST(m - 3 AS BIGINT)")).alias("p_value"),
-        F.lit(1).alias("df_num"),
-        (F.col("m") - 3).cast("long").alias("df_den"),
-        (F.col("m") + 1).cast("long").alias("n_obs"),
-    ).filter(
-        # series of <= 4 points have df_den <= 0: no valid lag-1 F test
-        F.col("df_den") >= 1
-    )
-
-
-# centered second moments, Cramer's rule, ssr F — the same strings feed
-# the Spark plan above and the DuckDB oracle (chained CTEs), so the two
-# engines perform identical arithmetic downstream of the input sums.
-GRANGER_LAG1_STAGES: list[tuple[str, str]] = [
-        ("cyy", "syy - sy * sy / m"),
-        ("cy1", "sy1 - sy * s1 / m"),
-        ("cyx", "syx - sy * sx / m"),
-        ("c11", "s11 - s1 * s1 / m"),
-        ("c1x", "s1x - s1 * sx / m"),
-        ("cxx", "sxx - sx * sx / m"),
-        ("rss_r", "cyy - cy1 * cy1 / NULLIF(c11, 0.0)"),
-        ("det", "c11 * cxx - c1x * c1x"),
-        ("b1", "(cy1 * cxx - cyx * c1x) / NULLIF(det, 0.0)"),
-        ("bx", "(cyx * c11 - cy1 * c1x) / NULLIF(det, 0.0)"),
-        ("rss_u", "cyy - (b1 * cy1 + bx * cyx)"),
-        ("f_stat", "CASE WHEN m > 3 AND rss_u > 0 THEN "
-                   "(rss_r - rss_u) / (rss_u / (m - 3.0)) ELSE NULL END"),
-]
 
 
 def describe(
@@ -1091,10 +1020,10 @@ def granger_causality(
 #
 # Each lag l regresses y_t on z_t = [1, y_{t-1..t-l}, x_{t-1..t-l}] over
 # the rows t = l..n-1. Every Gram entry and moment Σ_{t≥l} a_{t-i}·b_{t-j}
-# is a full lag-product sum Σ_s a_{s+d}·b_s (d = |i − j|, one ``zip_with``
-# dot per (a, b, d), shared by every lag) less its edge terms: the rows
-# t < l and the products that run past the end, at most 2·maxlag of
-# them, read from the head and tail of the arrays. So the O(n) work is
+# is a full lag-product sum Σ_s a_{s+d}·b_s (d = |i − j|, from
+# ``_lag_products_sql`` per (a, b), shared by every lag) less its edge
+# terms: the rows t < l and the products that run past the end, at most
+# 2·maxlag of them, read from the head and tail of the arrays. So the O(n) work is
 # O(n·maxlag) in all, and only the small per-lag algebra grows with l.
 # ---------------------------------------------------------------------------
 
@@ -1127,9 +1056,9 @@ def _granger_gram_sql() -> str:
 
     A regressor is (c, k): series c of ``_z`` (0 ones, 1 y, 2 x) at lag
     k; the constant takes its partner's lag, so its products need only
-    the d = 0 row of ``_lp``. Entry (i, j) is the lag-product sum
-    ``_lp[|i−j|]`` less the edge rows t in [max(i, j), l) and
-    [n, n + min(i, j))."""
+    d = 0, the one entry of its pairs' rows of ``_lp``. Entry (i, j) is
+    the lag-product sum ``_lp[pair][|i−j|]`` less the edge rows t in
+    [max(i, j), l) and [n, n + min(i, j))."""
     reg = (
         "transform(sequence(0, P - 1), r -> named_struct("
         "'c', CASE WHEN r = 0 THEN 0 WHEN r <= l OR r = P - 1 THEN 1 ELSE 2 END, "
@@ -1141,8 +1070,8 @@ def _granger_gram_sql() -> str:
         "'j', CASE WHEN w.c = 0 THEN u.k ELSE w.k END)"
     )
     full = (
-        "CASE WHEN h.i <= h.j THEN _lp[h.j - h.i][h.a * 3 + h.b] "
-        "ELSE _lp[h.i - h.j][h.b * 3 + h.a] END"
+        "CASE WHEN h.i <= h.j THEN _lp[h.a * 3 + h.b][h.j - h.i] "
+        "ELSE _lp[h.b * 3 + h.a][h.i - h.j] END"
     )
     # rows t in [max, l) then [n, n + min), as slices of each side
     edge = _dot_sql(*(
@@ -1192,11 +1121,12 @@ def granger_native(
     the numpy reference.
 
     One groupBy collects each series into a ds-sorted array; the lag
-    l Gram matrices come from the shared lag-product sums less their
-    edge terms (see the section note), ONE instance of the Cholesky
-    kernel ``_spd_solve_sql`` is mapped over the 2·maxlag restricted
-    and unrestricted systems, RSS = Σy² − β·v, and ``f_sf_expr`` is
-    mapped over the lags for the p-values. The plan is one exchange, a
+    l Gram matrices come from the shared lag-product sums
+    (``_lag_products_sql``) less their edge terms (see the section
+    note), ONE instance of the Cholesky kernel ``_spd_solve_sql`` is
+    mapped over the 2·maxlag restricted and unrestricted systems,
+    RSS = Σy² − β·v, and ``f_sf_expr`` is mapped over the lags for the
+    p-values. The plan is one exchange, a
     few projections and one ``inline``, the same at every maxlag, and
     every sum runs in array order, so the output does not depend on
     partitioning. Memory is bounded by the longest series, held as
@@ -1205,14 +1135,14 @@ def granger_native(
     Output: (series, lag, f_stat, p_value, df_num, df_den, n_obs).
     """
     keys = [_ident(c) for c in series_cols]
-    ds, y, x = _ident(ts_col), _ident(target_col), _ident(cov_col)
-    series = "array(transform(_p, r -> r.y), transform(_p, r -> r.x))"
+    series = "array(_y, _x)"
     if detrend:
         series = f"transform({series}, v -> {_detrended_sql('v')})"
-    lag_products = (
-        "transform(sequence(0, _L), d -> transform(sequence(0, 8), c -> "
-        "CASE WHEN d = 0 OR (c div 3 > 0 AND c % 3 > 0) THEN "
-        f"{_dot_sql('slice(_z[c div 3], d + 1, _n - d)', 'slice(_z[c % 3], 1, _n - d)')} END))"
+    # pair c = (c div 3, c % 3) of _z; a pair with the constant is read at d = 0 only
+    lag_products = "transform(sequence(0, 8), c -> {})".format(
+        _lag_products_sql(
+            "_z[c div 3]", "_z[c % 3]", "CASE WHEN c div 3 > 0 AND c % 3 > 0 THEN _L ELSE 0 END"
+        )
     )
     solve = (
         "transform(flatten(transform(_sys, g -> array(g.r, g.u))), "
@@ -1228,17 +1158,14 @@ def granger_native(
         "'df_num', g.l, 'df_den', CAST(o.dfd AS BIGINT), 'n_obs', CAST(_n AS BIGINT)))[0])[0]"
     )
     return (
-        df.na.drop(subset=[target_col, cov_col])
-        .groupBy(*series_cols)
-        .agg(
-            F.expr(
-                f"sort_array(collect_list(struct({ds} AS ds, CAST({y} AS DOUBLE) AS y, "
-                f"CAST({x} AS DOUBLE) AS x)))"
-            ).alias("_p")
+        _sorted_arrays(
+            df.na.drop(subset=[target_col, cov_col]),
+            series_cols,
+            ts_col,
+            {"_y": target_col, "_x": cov_col},
         )
         # notebook gate: series shorter than maxlag emit nothing; lags
         # past (n - 2) / 3 leave no residual degree of freedom
-        .selectExpr(*keys, "_p", "size(_p) AS _n")
         .selectExpr("*", f"CAST(least({int(maxlag)}, (_n - 2) div 3) AS INT) AS _L")
         .filter(f"_n >= {int(maxlag)} AND _L >= 1")
         .selectExpr(*keys, "_n", "_L", f"concat(array(array_repeat(1D, _n)), {series}) AS _z")
@@ -1265,27 +1192,29 @@ def ccf(
     convention: both series centered by their full-series means,
     normalized by n·σ_x·σ_y (the lag-0 value is Pearson r).
 
-    Fully native, same plan shape as ACF: one window sort for the lag
-    products + one aggregation per series — two narrow shuffles
-    regardless of lag count.
+    Fully native, same plan shape as ACF: one groupBy into each pair's
+    ds-sorted arrays, then ``_lag_products_sql`` over the centered
+    (dy, dx) — one shuffle regardless of lag count. Rows with a NULL y
+    or x drop.
 
     Output: (series, lag, ccf), lag 0..lags.
     """
     series_cols = list(series_cols)
-    w = Window.partitionBy(*series_cols)
-    ws = w.orderBy(ts_col)
-    base = df.na.drop(subset=[target_col, cov_col])
-    d = base.withColumn(
-        "_dy", F.col(target_col) - F.avg(target_col).over(w)
-    ).withColumn("_dx", F.col(cov_col) - F.avg(cov_col).over(w))
-    for k in range(lags + 1):
-        lagged = F.lag("_dx", k).over(ws) if k else F.col("_dx")
-        d = d.withColumn(f"_p{k}", F.col("_dy") * lagged)
-    agg = d.groupBy(*series_cols).agg(
-        F.count("_dy").cast("double").alias("_n"),
-        F.sum(F.col("_dy") * F.col("_dy")).alias("_syy"),
-        F.sum(F.col("_dx") * F.col("_dx")).alias("_sxx"),
-        *[F.sum(f"_p{k}").alias(f"_s{k}") for k in range(lags + 1)],
+    keys = [_ident(c) for c in series_cols]
+    agg = (
+        _sorted_arrays(
+            df.na.drop(subset=[target_col, cov_col]),
+            series_cols,
+            ts_col,
+            {"_y": target_col, "_x": cov_col},
+        )
+        .selectExpr(*keys, f"{_centered_sql('_y')} AS _dy", f"{_centered_sql('_x')} AS _dx")
+        .selectExpr(
+            *keys,
+            f"{_lag_products_sql('_dy', '_dy', 0)}[0] AS _syy",
+            f"{_lag_products_sql('_dx', '_dx', 0)}[0] AS _sxx",
+            f"{_lag_products_sql('_dy', '_dx', lags)} AS _c",
+        )
     )
     # normalizer n·σ_x·σ_y with population σ = sqrt(S/n): n·√(Sxx/n)·√(Syy/n)
     # = √(Sxx·Syy); try_divide -> NULL for constant series (ANSI-safe)
@@ -1294,7 +1223,7 @@ def ccf(
         *[
             F.struct(
                 F.lit(k).alias("lag"),
-                F.try_divide(F.col(f"_s{k}"), denom).alias("ccf"),
+                F.try_divide(F.col("_c")[k], denom).alias("ccf"),
             )
             for k in range(lags + 1)
         ]
@@ -1472,9 +1401,9 @@ def detect_seasonality(
     Output: (series, period, acf, significant, n). Ties break toward
     the SHORTER period (a harmonic's base frequency), deterministic.
 
-    Same single-aggregation plan as ``acf``: one window pass for the
-    lag products, one aggregation, then the argmax over the candidate
-    lags is a build-time fold over scalar columns — no second shuffle.
+    Same one-groupBy plan as ``acf``: the lag-product sums of each
+    series' sorted array, then the argmax over the candidate lags is a
+    build-time fold over scalar columns — no second shuffle.
     """
     if not 2 <= min_period <= max_period:
         raise ValueError(
@@ -1494,7 +1423,7 @@ def detect_seasonality(
         *series_cols,
         "n",
         *[
-            F.try_divide(F.col(f"s{k}"), F.col("s0")).alias(f"_r{k}")
+            F.try_divide(F.col("_s")[k - 1], F.col("s0")).alias(f"_r{k}")
             for k in range(1, max_period + 1)
         ],
     )

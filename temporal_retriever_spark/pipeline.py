@@ -62,7 +62,7 @@ from temporal_retriever_spark.timeparse import parse_timestamp
 
 #: hinge count for the piecewise trend when ChangePointPriorScale is
 #: provided (Prophet defaults to 25 over much longer histories; 10 keeps
-#: the Gram aggregation at 90 sum columns)
+#: the ridge fold's Gram matrix at 13×13 per series with the covariate)
 N_CHANGEPOINTS = 10
 
 ACF_DESCRIPTION = (
@@ -113,6 +113,26 @@ _RENAMES = {
     "yhat_lower": "prediction_lower_bound",
     "yhat_upper": "prediction_upper_bound",
 }
+
+
+def _no_bounds(corr: Correlation) -> bool:
+    """Prophet's uncertainty_samples=0 omits the interval columns; the
+    reference forwards the knob (app.py:124-131)."""
+    opts = corr.forecast_options
+    return opts is not None and opts.uncertainty_samples == 0
+
+
+def _to_record(row, no_bounds: bool) -> dict:
+    """A forecast row as a reply record under the response's names,
+    without the series id and the coefficient, and without the interval
+    columns when ``no_bounds``."""
+    d = row.asDict()
+    d.pop("series_id", None)
+    d.pop("coef", None)
+    if no_bounds:
+        d.pop("yhat_lower", None)
+        d.pop("yhat_upper", None)
+    return {_RENAMES.get(k, k): v for k, v in d.items()}
 
 
 def _rename_predictions(df: DataFrame) -> DataFrame:
@@ -367,8 +387,9 @@ def analyze(
         rekey = partial(_rekey, prepared, leg_sids)
 
         # ---- stage 3: ONE fused ACF+PACF job over all series -------------
-        # both derive from the same lag-product sums; acf_pacf runs the
-        # window+agg once and emits both columns in a single action
+        # both derive from the same lag-product sums; acf_pacf collects
+        # each series' sorted array once and emits both columns in a
+        # single action
         if lags is not None:
             k_by_sid = {sid: lags for sid in stats}
         else:
@@ -434,17 +455,6 @@ def analyze(
                     if r["series_id"] == sid and r["lag"] <= kk
                 }
             }
-
-        def to_record(row, *, no_bounds=False):
-            d = row.asDict()
-            d.pop("series_id", None)
-            d.pop("coef", None)
-            if no_bounds:
-                # Prophet's uncertainty_samples=0 omits interval columns;
-                # the reference forwards the knob (app.py:124-131)
-                d.pop("yhat_lower", None)
-                d.pop("yhat_upper", None)
-            return {_RENAMES.get(k, k): v for k, v in d.items()}
 
         # univariateStatistics correlations need quantile describes — one
         # extra plan only when such correlations exist
@@ -531,23 +541,16 @@ def analyze(
                 rows_c = [r for r in pred_rows if r["series_id"] == corr.id]
                 coef = rows_c[0]["coef"] if rows_c else None
                 max_hist = tgt_stats["max_ds"]
-                no_bounds = (
-                    corr.forecast_options is not None
-                    and corr.forecast_options.uncertainty_samples == 0
-                )
+                no_bounds = _no_bounds(corr)
                 entry["regressorCoefficients"] = [
                     {"regressor": f"{corr.from_data}.{corr.from_index}", "coef": coef}
                 ]
                 entry["predictions"] = {
                     "historicalForecasts": [
-                        to_record(r, no_bounds=no_bounds)
-                        for r in rows_c
-                        if r["ds"] <= max_hist
+                        _to_record(r, no_bounds) for r in rows_c if r["ds"] <= max_hist
                     ],
                     "futureForecasts": [
-                        to_record(r, no_bounds=no_bounds)
-                        for r in rows_c
-                        if r["ds"] > max_hist
+                        _to_record(r, no_bounds) for r in rows_c if r["ds"] > max_hist
                     ],
                 }
             elif corr.type == "granger":
@@ -681,21 +684,7 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
         for corr in request.correlations:
             max_hist = stats[leg_sid(corr, cov=False)]["max_ds"]
             rows_c = [r for r in pred_rows if r["series_id"] == corr.id]
-            no_bounds = (
-                corr.forecast_options is not None
-                and corr.forecast_options.uncertainty_samples == 0
-            )
-
-            def to_record(row, *, _drop=no_bounds):
-                d = row.asDict()
-                d.pop("series_id", None)
-                d.pop("coef", None)
-                if _drop:
-                    # Prophet uncertainty_samples=0: no interval columns
-                    d.pop("yhat_lower", None)
-                    d.pop("yhat_upper", None)
-                return {_RENAMES.get(k, k): v for k, v in d.items()}
-
+            no_bounds = _no_bounds(corr)
             # response wrapper per app.py:594-607: model/growth/observed
             # bounds alongside the forecast records
             opts = corr.forecast_options
@@ -711,10 +700,10 @@ def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
                 },
                 "predictions": {
                     "historicalForecasts": [
-                        to_record(r) for r in rows_c if r["ds"] <= max_hist
+                        _to_record(r, no_bounds) for r in rows_c if r["ds"] <= max_hist
                     ],
                     "futureForecasts": [
-                        to_record(r) for r in rows_c if r["ds"] > max_hist
+                        _to_record(r, no_bounds) for r in rows_c if r["ds"] > max_hist
                     ],
                 },
             }

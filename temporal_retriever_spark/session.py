@@ -8,8 +8,9 @@ configured for the engine's invariants:
   drops the tz (app.py:424-428, core.py:37); we standardize on
   parse-as-UTC / store-naive-UTC, which in Spark means
   ``spark.sql.session.timeZone=UTC``.
-* **Arrow on** — every grouped pandas UDF (forecast fits, PACF) crosses
-  the JVM/Python boundary in Arrow batches.
+* **Arrow on** — every grouped pandas UDF (the Kalman and HMM fits,
+  the numpy reference paths) crosses the JVM/Python boundary in Arrow
+  batches.
 * **AQE on** — runtime coalescing of shuffle partitions and skew-join
   splitting; at 100 TB skewed series/keys are the norm.
 * **Codegen cache of 1000 classes** — Spark's default of 100 is smaller

@@ -74,6 +74,32 @@ def test_acf_statsmodels_formula(spark):
     rows = {r["lag"]: r["acf"] for r in acf(df, lags=2).collect()}
     assert rows[0] == 1.0
     assert abs(rows[1] - expected1) < 1e-12
+    # edge inputs against a numpy reference over the same slots: a NULL y
+    # keeps its slot and its products are skipped; duplicate ds order by
+    # value; lags at or past a series' length are NULL
+    cases = {
+        "null": (list(range(8)), [1.0, 3.0, 2.0, None, 5.0, 4.0, 6.0, 2.5]),
+        "dup": ([0, 1, 2, 2, 3, 4, 5, 6], [1.0, 3.0, 7.0, 2.0, 5.0, 4.0, 6.0, 0.5]),
+        "short": ([0, 1, 2], [1.0, 4.0, 2.0]),
+    }
+    edge = spark.createDataFrame(
+        [(sid, float(t), v) for sid, (ts, ys) in cases.items() for t, v in zip(ts, ys)],
+        "series_id string, ds double, y double",
+    )
+    got = {(r["series_id"], r["lag"]): r["acf"] for r in acf(edge, lags=5).collect()}
+    for sid, (ts, ys) in cases.items():
+        order = sorted(zip(ts, ys), key=lambda p: (p[0], -math.inf if p[1] is None else p[1]))
+        y = np.array([np.nan if v is None else v for _, v in order])
+        d = y - np.nanmean(y)
+        s0 = np.nansum(d * d)
+        for k in range(1, 6):
+            prod = d[k:] * d[: max(d.size - k, 0)]
+            if np.isnan(prod).all():
+                assert got[(sid, k)] is None, (sid, k)
+            else:
+                assert math.isclose(
+                    got[(sid, k)], np.nansum(prod) / s0, rel_tol=1e-12, abs_tol=1e-15
+                ), (sid, k)
 
 
 def test_pacf_udf_matches_local(spark, tables):
@@ -115,7 +141,7 @@ def test_pacf_matches_durbin_levinson_stages(spark, tables, lags):
     }
     staged = _lag_product_sums(
         df, lags=lags, series_cols=["event_type"], ts_col="ds", value_col="y"
-    )
+    ).selectExpr("*", *[f"_s[{k - 1}] AS s{k}" for k in range(1, lags + 1)])
     for name, expr in durbin_levinson_stages(lags):
         staged = staged.withColumn(name, F.expr(expr))
     want = {}
@@ -255,35 +281,6 @@ def test_f_sf_expr_matches_continued_fraction(spark, d1):
         )
 
 
-def test_granger_lag1_matches_udf_path(spark, tables):
-    """Native lag-1 (explicit sums + series p-value) == grouped-UDF
-    granger_causality lag-1 row (numpy lstsq + continued fraction)."""
-    from temporal_retriever_spark.diagnostics import granger_causality, granger_lag1
-
-    ev = tables["events"].select(
-        "event_type", F.col("ts").cast("timestamp").alias("ds"),
-        F.col("value").alias("y"),
-    )
-    daily = ev.groupBy("event_type", F.date_trunc("day", "ds").alias("ds")).agg(
-        F.sum("y").alias("y")
-    )
-    target = daily.filter(F.col("event_type") == "click").select(
-        F.lit("s").alias("series_id"), "ds", "y"
-    )
-    cov = daily.filter(F.col("event_type") == "view").select(
-        F.lit("s").alias("series_id"), "ds", F.col("y").alias("x")
-    )
-    pair = target.join(cov, on=["series_id", "ds"], how="inner")
-    native = granger_lag1(pair).collect()[0]
-    udf_row = {
-        r["lag"]: r
-        for r in granger_causality(pair, maxlag=1).collect()
-    }[1]
-    assert native["df_den"] == udf_row["df_den"]
-    assert abs(native["f_stat"] - udf_row["f_stat"]) < 1e-8
-    assert abs(native["p_value"] - udf_row["p_value"]) < 1e-10
-
-
 def _click_view_pair(tables):
     ev = tables["events"].select(
         "event_type", F.col("ts").cast("timestamp").alias("ds"),
@@ -419,6 +416,30 @@ def test_ccf_matches_duckdb(tables, duck):
             UNION ALL {union}
         )
     """)
+    # edge inputs against numpy: a row with a NULL y drops, duplicate ds
+    # order by value, lags at or past a pair's length are NULL
+    cases = {
+        "null": (list(range(8)), [1.0, 3.0, 2.0, None, 5.0, 4.0, 6.0, 2.5],
+                 [2.0, 1.0, 4.0, 3.0, 3.5, 6.0, 5.0, 7.0]),
+        "dup": ([0, 1, 2, 2, 3, 4, 5, 6], [1.0, 3.0, 7.0, 2.0, 5.0, 4.0, 6.0, 0.5],
+                [0.5, 2.0, 1.0, 4.0, 3.0, 6.0, 2.0, 5.0]),
+        "short": ([0, 1, 2], [1.0, 4.0, 2.0], [3.0, 1.0, 2.0]),
+    }
+    edge = pair.sparkSession.createDataFrame(
+        [(sid, float(t), y, x) for sid, cols in cases.items() for t, y, x in zip(*cols)],
+        "series_id string, ds double, y double, x double",
+    )
+    got = {(r["series_id"], r["lag"]): r["ccf"] for r in ccf(edge, lags=5).collect()}
+    for sid, cols in cases.items():
+        rows = sorted((t, y, x) for t, y, x in zip(*cols) if y is not None)
+        dy = np.array([r[1] for r in rows]) - np.mean([r[1] for r in rows])
+        dx = np.array([r[2] for r in rows]) - np.mean([r[2] for r in rows])
+        for k in range(6):
+            if k >= dy.size:
+                assert got[(sid, k)] is None, (sid, k)
+            else:
+                want = (dy[k:] @ dx[: dx.size - k]) / math.sqrt((dx @ dx) * (dy @ dy))
+                assert math.isclose(got[(sid, k)], want, rel_tol=1e-12, abs_tol=1e-15), (sid, k)
 
 
 def test_ccf_detects_known_lead(spark):

@@ -50,7 +50,7 @@ FAST_ORACLE_SUBSET = {
     "forecast_ensemble_daily", "forecast_linear_daily",
     "forecast_theta_daily", "future_grid_day", "future_grid_month",
     "gopher_filter", "html_extract", "interval_scorecard",
-    "json_extract_props", "lang_id", "lineitem_returnflag_week",
+    "json_extract_props", "kpss_daily", "lang_id", "lineitem_returnflag_week",
     "ljung_box_daily",
     "lm_perplexity", "mcnemar_user_halves", "media_probe",
     "minhash_near_dups", "nb_classify_lang", "normalize_docs", "pacf_daily",

@@ -85,20 +85,33 @@ def test_ljung_box_single_aggregation_no_python(spark, daily):
     from temporal_retriever_spark.diagnostics import ljung_box
 
     plan = _plan(ljung_box(daily, lags=5))
-    assert _exchanges(plan) == 1  # one series-key shuffle for window+agg
+    assert _exchanges(plan) == 1  # one series-key shuffle for the groupBy
     assert "Python" not in plan
 
 
-def test_lag_products_share_one_window(spark, daily):
-    # every lag product is projected in one select: the analyzed plan
-    # holds the mean's Window and one Window for all 36 lags, not a
-    # Window (and an analysis) per lag
-    import re
+@pytest.mark.parametrize(
+    "op",
+    ["acf_pacf", "ljung_box", "acf_bands", "detect_seasonality", "ccf", "kpss", "kpss_trend"],
+)
+def test_lag_product_operators_are_one_array_program(spark, daily, op):
+    # one groupBy collects each series' sorted array and one kernel sums
+    # every lag: no Window node at any lag count, one exchange, no Python
+    from temporal_retriever_spark import diagnostics as D
 
-    from temporal_retriever_spark.diagnostics import acf_pacf
-
-    plan = acf_pacf(daily, lags=36)._jdf.queryExecution().analyzed().toString()
-    assert len(re.findall(r"^[\s:+|-]*Window ", plan, re.M)) <= 2, plan
+    pair = daily.withColumn("x", F.col("y") * 2 + 1)
+    build = {
+        "acf_pacf": lambda: D.acf_pacf(daily, lags=36),
+        "ljung_box": lambda: D.ljung_box(daily, lags=36),
+        "acf_bands": lambda: D.acf_bands(daily, lags=36),
+        "detect_seasonality": lambda: D.detect_seasonality(daily, max_period=36),
+        "ccf": lambda: D.ccf(pair, lags=36),
+        "kpss": lambda: D.kpss(daily, nlags=36),
+        "kpss_trend": lambda: D.kpss(daily, nlags=36, regression="trend"),
+    }
+    plan = _plan(build[op]())
+    assert "Window" not in plan, plan
+    assert _exchanges(plan) == 1, plan
+    assert "Python" not in plan, plan
 
 
 @pytest.mark.parametrize("op", ["pacf", "acf_pacf"])

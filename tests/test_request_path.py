@@ -9,6 +9,7 @@ depend on the company they keep or on partitioning."""
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 import json
 import math
 import os
@@ -252,23 +253,60 @@ def test_changepoint_correlations_match_solo_and_run_no_python(spark, monkeypatc
 
 
 def test_granger_rows_do_not_depend_on_company_or_partitioning(spark, request_):
-    """A Granger correlation's rows are bit-identical alone and inside
-    the full request, and at 1 and 32 shuffle partitions: the program
-    sums each series in its array's order."""
+    """A Granger correlation's rows, and the ACF and PACF of every
+    correlation in a four-grain request, are bit-identical at 1 and 32
+    shuffle partitions, and alone and in company: each program sums a
+    series in its sorted array's order. A correlogram may differ alone
+    only where its prepared series does: the request prep's bucket sums
+    merge partial sums at points that depend on the other legs (an
+    ObjectHashAggregate, chosen for a median leg, falls back to sorting
+    past 128 keys), which the correlogram cannot undo."""
     (corr,) = [c for c in request_.correlations if c.type == "granger"]
     solo_req = AnalyzeRequest(documents=request_.documents, correlations=[corr])
+    mixed = parse_analyze_request(_mixed_body(_GRAINS))
 
     def rows(req):
         return P.analyze(spark, req)["correlations"][corr.id]["grangerCausality"]
 
+    def correlograms(req):
+        # JSON text: a NaN lag compares equal to itself
+        return {
+            cid: json.dumps([c["autocorrelations"], c["partialAutocorrelations"]])
+            for cid, c in P.analyze(spark, req)["correlations"].items()
+        }
+
+    def prepared(req):
+        # each leg's values in ds order, by series id
+        with P._prepared_legs(spark, req) as (_, frame):
+            return {
+                sid: [repr(r["y"]) for r in sorted(group, key=lambda r: r["ds"])]
+                for sid, group in itertools.groupby(
+                    sorted(frame.collect(), key=lambda r: r["series_id"]),
+                    key=lambda r: r["series_id"],
+                )
+            }
+
     want = rows(request_)
     assert [r["lag"] for r in want] == list(range(1, 15))
     assert rows(solo_req) == want
+    want_c, want_p = correlograms(mixed), prepared(mixed)
+    assert set(want_c) == {c.id for c in mixed.correlations}
+    same_input = set()
+    for c in mixed.correlations:
+        solo = AnalyzeRequest(documents=mixed.documents, correlations=[c])
+        alone_p = prepared(solo)
+        if all(v == want_p[sid] for sid, v in alone_p.items()):
+            same_input.add(c.id)
+            assert correlograms(solo) == {c.id: want_c[c.id]}, c.id
+    # the W/median leg's PACF differed in company when the sums ran in
+    # the partition's row order
+    assert {"H-mean", "W-median", "M-max"} <= same_input, same_input
     before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         for n in ("1", "32"):
             spark.conf.set("spark.sql.shuffle.partitions", n)
             assert rows(request_) == want, n
+            assert correlograms(mixed) == want_c, n
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
 
@@ -509,8 +547,10 @@ def test_mixed_grains_run_one_fold_per_changepoint_setting(
         )["correlations"]
         got, want = _datetimes(full[corr.id]), _datetimes(solo[corr.id])
         assert _close(got, want), corr.id
-        # the correlograms' sums run in an order the other series move
-        # by an ulp, which a short series' PACF amplifies; the forecast
-        # reads its own series' row only
-        for key in ("type", "diagnostics", "regressorCoefficients", "predictions"):
+        # the forecast and the correlograms read their own series' row
+        # and array only
+        for key in (
+            "type", "diagnostics", "regressorCoefficients", "predictions",
+            "autocorrelations", "partialAutocorrelations",
+        ):
             assert _close(got.get(key), want.get(key), rel=1e-12), (corr.id, key)

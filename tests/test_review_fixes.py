@@ -113,7 +113,7 @@ def test_asof_tolerance_is_timezone_independent(spark):
 def test_granger_underdetermined_lags_are_omitted(spark):
     """Lags whose model has more regressors than rows must be omitted,
     not emitted as NaN/garbage."""
-    from temporal_retriever_spark.diagnostics import granger_lag1, granger_native
+    from temporal_retriever_spark.diagnostics import granger_native
 
     rows = [("s", float(i), float(i % 7), float((i * 3) % 5)) for i in range(12)]
     df = spark.createDataFrame(rows, "series_id string, ds double, y double, x double")
@@ -126,7 +126,7 @@ def test_granger_underdetermined_lags_are_omitted(spark):
     # lag 5 on 12 rows: 7 rows vs 11 regressors -> dropped
     assert 5 not in lags and 1 in lags
     tiny = spark.createDataFrame(rows[:4], "series_id string, ds double, y double, x double")
-    assert granger_lag1(tiny).count() == 0  # df_den = m-3 <= 0
+    assert granger_native(tiny, maxlag=1).count() == 0  # df_den = n-4 <= 0
 
 
 def test_rolling_corr_pairwise_null_handling(spark):
